@@ -7,8 +7,9 @@ trainings of unrelated models — submitting them from a small driver
 thread pool lets the next job's tasks back-fill executor cores freed
 by the current job's tail, so N small jobs cost ~max instead of ~sum.
 
-Used by the mart COW habitat (state-piece writes per epoch) and the
-ANN index builders (IVF + PQ trainings). Each thunk must own its own
+Used by the mart COW habitat (state-piece writes per epoch), the
+ANN index builders (IVF + PQ trainings) and the warehouse build (its
+independent steps). Each thunk must own its own
 persists (the :mod:`.caching` registry is thread-local); exceptions
 propagate to the caller.
 """

@@ -25,6 +25,14 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory() -> str:
+    """Half the machine's physical memory, at most 64 GiB. Local mode is
+    one JVM; with a heap ceiling above physical memory the heap grows
+    until the kernel kills the process instead of collecting."""
+    phys_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return f"{min(64, max(1, phys_gib // 2))}g"
+
+
 def get_spark(
     app_name: str = "interpro7-dw-spark",
     master: str | None = None,
@@ -48,11 +56,11 @@ def get_spark(
         return active
     builder = builder.master(master or f"local[{cpus}]")
     # local mode = single JVM: driver memory is the only heap knob and
-    # must be set before launch (static conf). Default generously —
-    # the harness box has 128 GiB.
+    # must be set before launch (static conf).
     builder = builder.config(
         "spark.driver.memory",
-        driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"),
+        driver_memory
+        or os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_memory()),
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

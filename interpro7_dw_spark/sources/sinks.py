@@ -116,7 +116,7 @@ def write_tsv(
         for r in lines:
             yield (r.value,)
 
-    framed = rows.rdd.coalesce(1).mapPartitions(frame).toDF(["value"])
+    framed = rows.rdd.coalesce(1).mapPartitions(frame).toDF("value string")
     writer = framed.write.mode("overwrite")
     if compression:
         writer = writer.option("compression", compression)
@@ -175,7 +175,7 @@ def write_tsv_ranged(
     else:
         framed = rdd.mapPartitionsWithIndex(
             frame, preservesPartitioning=True
-        ).toDF(["value"])
+        ).toDF("value string")
     writer = framed.write.mode("overwrite")
     if compression:
         writer = writer.option("compression", compression)
@@ -225,7 +225,7 @@ def write_xml(
         yield (close_tag,)
 
     framed = body.coalesce(1).mapPartitions(frame)
-    writer = framed.toDF(["value"]).write.mode("overwrite")
+    writer = framed.toDF("value string").write.mode("overwrite")
     if compression:
         writer = writer.option("compression", compression)
     writer.text(path)
@@ -282,7 +282,7 @@ def write_xml_ranged(
 
         framed = rdd.mapPartitionsWithIndex(
             frame, preservesPartitioning=True
-        ).toDF(["value"])
+        ).toDF("value string")
     writer = framed.write.mode("overwrite")
     if compression:
         writer = writer.option("compression", compression)

@@ -2,33 +2,39 @@
 
 ``build_warehouse(spark, fixtures_dir, out_dir)`` composes the
 ``domain/`` transforms into one run producing every mart family and
-flat/XML/JSON sink in dependency order — the Spark analogue of the
-reference's task DAG (reference interpro7dw/cli.py:101-986, where
-mundone wires export->xrefs->mysql/elastic/ftp tasks). Orchestration
-state is deliberately minimal: each step writes one output directory
-and a ``_done/<step>`` marker; a rerun skips completed steps
-(skip-if-exists resume, like the reference's ``--resume``), so a
-failed run continues where it stopped.
+flat/XML/JSON sink — the Spark analogue of the reference's task DAG
+(reference interpro7dw/cli.py:101-986, where mundone wires
+export->xrefs->mysql/elastic/ftp tasks and the scheduler runs the
+independent ones side by side). No step reads another step's output,
+so the selected steps are submitted together from a driver thread
+pool (``parallel.run_parallel``) and Spark interleaves their
+jobs. Orchestration state is deliberately minimal: each step writes
+one output directory and, as soon as it succeeds, a ``_done/<step>``
+marker; a rerun skips completed steps (skip-if-exists resume, like the
+reference's ``--resume``), so a failed run continues where it stopped.
 
 Scale notes: the composition adds nothing beyond the transforms it
 calls — every step is the already-audited plan (broadcast dims, one
 shuffle per grain, no driver loops over fact rows). Shared
-intermediates (classified matches, the merge mart, the taxonomy
-closure) are computed once per run and reused by reference, so Spark
-reuses their shuffle outputs across steps within a stage where
-possible; on a cluster run, persist() the two hottest
-(``classified``, ``merged``) or point them at the parquet mart the
-earlier step just wrote.
+intermediates (classified matches, the merge mart, the domain
+organisations) are built once per run and reused by reference: each
+step declares the ones it reads, and the build resolves them on the
+calling thread before dispatch, so the merge mart's persist belongs to
+the build's own cache scope and outlives every step that reads it.
 """
 
 from __future__ import annotations
 
 import datetime
 import os
+import threading
+from contextlib import suppress
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .caching import engine_cache_scope
 from .domain import flatfiles
 from .domain.documents import ida_documents, relationship_documents
 from .domain.ebisearch import entry_documents, export_ebisearch
@@ -50,7 +56,6 @@ from .domain.xmldocs import (
     interpro_entries_xml,
     release_dbinfo_xml,
 )
-from .operators.graph import transitive_closure
 from .sources.sinks import (
     write_json_batches,
     write_lookup_mart,
@@ -60,6 +65,7 @@ from .sources.sinks import (
     write_xml,
     write_xml_ranged,
 )
+from .parallel import run_parallel
 
 RELEASE_VERSION = "105.0"
 RELEASE_DATE = datetime.date(2026, 1, 15)
@@ -67,24 +73,26 @@ RELEASE_DATE = datetime.date(2026, 1, 15)
 
 class _Inputs:
     """Fixture tables + shared derived intermediates, computed once
-    per run and memoized (several marts consume the same spine)."""
+    per run and memoized (several marts consume the same spine).
+    Steps read them from pool threads, so lookups take a re-entrant
+    lock (memos nest: ``merged`` builds ``ipr_entries``)."""
 
     def __init__(self, spark: SparkSession, fixtures_dir: str) -> None:
         self.spark = spark
         self.dir = fixtures_dir
         self._cache: dict[str, DataFrame] = {}
+        self._lock = threading.RLock()
 
     def table(self, name: str) -> DataFrame:
-        if name not in self._cache:
-            self._cache[name] = self.spark.read.parquet(
-                os.path.join(self.dir, name)
-            )
-        return self._cache[name]
+        return self._memo(name, lambda: self.spark.read.parquet(
+            os.path.join(self.dir, name)
+        ))
 
     def _memo(self, key: str, make) -> DataFrame:
-        if key not in self._cache:
-            self._cache[key] = make()
-        return self._cache[key]
+        with self._lock:
+            if key not in self._cache:
+                self._cache[key] = make()
+            return self._cache[key]
 
     # --- derived intermediates -------------------------------------
     def ipr_entries(self) -> DataFrame:
@@ -154,17 +162,6 @@ class _Inputs:
             .distinct()
         ))
 
-    def taxon_ancestors(self) -> DataFrame:
-        """(tax_id, ancestor) incl. self via the taxonomy closure."""
-        return self._memo("taxon_ancestors", lambda: transitive_closure(
-            self.table("taxonomy")
-            .filter(F.col("parent_id").isNotNull())
-            .select(
-                F.col("tax_id").alias("child"),
-                F.col("parent_id").alias("parent"),
-            )
-        ).select(F.col("node").alias("tax_id"), F.col("anc").alias("ancestor")))
-
     def domorgs(self) -> DataFrame:
         """Per-protein domain organisation from the Pfam matches
         (reference interpro/xrefs/domorgs.py: elements are the Pfam
@@ -232,13 +229,22 @@ class _Inputs:
 
 
 def _steps(inp: _Inputs, out_dir: str, ranged_files: int | None = None):
-    """Ordered (name, runner) list — dependency order.
+    """(name, reads, runner) triples in DAG order; ``reads`` names the
+    shared :class:`_Inputs` intermediates the runner consumes, which
+    :func:`build_warehouse` resolves before dispatching the runners.
 
     ``ranged_files`` switches the flat/XML single-stream sinks to
     their range-split variants (that many part files per export whose
     name-order concatenation is the identical byte stream) — the
     cluster-scale shape with no single-task write stage."""
     p = lambda *parts: os.path.join(out_dir, *parts)  # noqa: E731
+    steps = []
+
+    def step(name: str, *reads: str):
+        def register(run):
+            steps.append((name, reads, run))
+            return run
+        return register
 
     def tsv(rows, path, sort_cols, out_cols=None, **kw):
         if ranged_files is None:
@@ -247,13 +253,16 @@ def _steps(inp: _Inputs, out_dir: str, ranged_files: int | None = None):
             write_tsv_ranged(rows, path, sort_cols=sort_cols,
                              num_files=ranged_files, out_cols=out_cols, **kw)
 
+    @step("merged_matches", "merged")
     def merged_matches() -> None:
         write_mart(inp.merged(), p("merged_matches"),
                    sort_cols=["protein_acc", "accession"])
 
+    @step("lookup_matches", "merged")
     def lookup_matches() -> None:
         write_lookup_mart(inp.merged(), p("lookup_matches"), "protein_acc")
 
+    @step("mart_entry", "protein_entries", "domorgs", "entry_structures")
     def mart_entry() -> None:
         prot = inp.table("protein")
         af = inp.table("alphafold").withColumn("in_af", F.lit(True))
@@ -278,6 +287,7 @@ def _steps(inp: _Inputs, out_dir: str, ranged_files: int | None = None):
         )
         write_mart(df, p("mart_entry"), sort_cols=[df.columns[0]])
 
+    @step("mart_taxonomy", "protein_structures", "protein_db_matches")
     def mart_taxonomy() -> None:
         prot = inp.table("protein")
         base = prot.join(inp.table("protein_proteome"), "protein_acc", "left") \
@@ -299,6 +309,7 @@ def _steps(inp: _Inputs, out_dir: str, ranged_files: int | None = None):
         write_mart(per_db, p("mart_taxonomy", "per_db"),
                    ["tax_id", "source_database"])
 
+    @step("mart_proteome", "protein_structures", "protein_db_matches")
     def mart_proteome() -> None:
         base = inp.table("protein").join(
             inp.table("protein_proteome"), "protein_acc", "left"
@@ -320,6 +331,7 @@ def _steps(inp: _Inputs, out_dir: str, ranged_files: int | None = None):
         write_mart(per_e, p("mart_proteome", "per_entry"))
         write_mart(per_db, p("mart_proteome", "per_db"))
 
+    @step("mart_set", "domorgs", "sig_matches", "protein_structures")
     def mart_set() -> None:
         domorg_members = (
             inp.domorgs()
@@ -342,6 +354,7 @@ def _steps(inp: _Inputs, out_dir: str, ranged_files: int | None = None):
         )
         write_mart(df, p("mart_set"), [df.columns[0]])
 
+    @step("mart_structure", "sig_matches", "protein_structures", "domorgs")
     def mart_structure() -> None:
         segs = inp.table("protein_segments")
         pdb_matches = (
@@ -367,6 +380,7 @@ def _steps(inp: _Inputs, out_dir: str, ranged_files: int | None = None):
         )
         write_mart(df, p("mart_structure"), [df.columns[0]])
 
+    @step("mart_entry_xrefs", "protein_entries", "protein_structures")
     def mart_entry_xrefs() -> None:
         df = entry_xrefs_mart(
             inp.protein_entries(),
@@ -377,6 +391,7 @@ def _steps(inp: _Inputs, out_dir: str, ranged_files: int | None = None):
         )
         write_mart(df, p("mart_entry_xrefs"), ["entry_acc"])
 
+    @step("search_documents", "protein_entries", "ipr_entries")
     def search_documents() -> None:
         segs = inp.table("protein_segments")
         chains = segs.select(
@@ -393,11 +408,13 @@ def _steps(inp: _Inputs, out_dir: str, ranged_files: int | None = None):
         )
         write_json_batches(docs, p("search_documents"), 500)
 
+    @step("ida_documents", "domorgs")
     def ida_docs() -> None:
         names = inp.table("entry_dim").select("entry_acc", "short_name")
         df = ida_documents(inp.domorgs(), names)
         write_mart(df, p("ida_documents"), ["ida_id"])
 
+    @step("ebisearch", "protein_entries", "entry_structures")
     def ebisearch() -> None:
         e = inp.table("entry_dim").filter(
             F.col("public") & F.col("deletion_date").isNull()
@@ -436,6 +453,7 @@ def _steps(inp: _Inputs, out_dir: str, ranged_files: int | None = None):
         export_ebisearch(docs, p("ebisearch"), RELEASE_VERSION,
                          RELEASE_DATE.isoformat(), fields_per_file=200)
 
+    @step("flat_files", "ipr_entries", "classified")
     def flat_files() -> None:
         e = inp.ipr_entries()
         tsv(flatfiles.entry_list_rows(e), p("flat", "entry.list"),
@@ -467,6 +485,7 @@ def _steps(inp: _Inputs, out_dir: str, ranged_files: int | None = None):
             include_header=False, compression="gzip",
         )
 
+    @step("match_complete_xml", "classified", "merged", "ipr_entries")
     def match_complete() -> None:
         prot = inp.table("protein").select(
             "protein_acc",
@@ -492,6 +511,7 @@ def _steps(inp: _Inputs, out_dir: str, ranged_files: int | None = None):
             num_files=ranged_files,
         )
 
+    @step("interpro_xml", "ipr_entries", "protein_entries", "classified")
     def interpro_xml() -> None:
         e = inp.ipr_entries().withColumn(
             "abstract", F.concat(F.lit("Abstract for "), F.col("name"))
@@ -525,6 +545,7 @@ def _steps(inp: _Inputs, out_dir: str, ranged_files: int | None = None):
                       lambda r: r.xml, "interprodb",
                       header=hdr, prolog=prolog, compression="gzip")
 
+    @step("release_notes", "protein_db_matches")
     def release_notes() -> None:
         dim = inp.table("entry_dim").withColumn(
             "deleted", F.col("deletion_date").isNotNull()
@@ -562,23 +583,19 @@ def _steps(inp: _Inputs, out_dir: str, ranged_files: int | None = None):
         )
         export_release_notes(text, p("notes"))
 
-    return [
-        ("merged_matches", merged_matches),
-        ("lookup_matches", lookup_matches),
-        ("mart_entry", mart_entry),
-        ("mart_taxonomy", mart_taxonomy),
-        ("mart_proteome", mart_proteome),
-        ("mart_set", mart_set),
-        ("mart_structure", mart_structure),
-        ("mart_entry_xrefs", mart_entry_xrefs),
-        ("search_documents", search_documents),
-        ("ida_documents", ida_docs),
-        ("ebisearch", ebisearch),
-        ("flat_files", flat_files),
-        ("match_complete_xml", match_complete),
-        ("interpro_xml", interpro_xml),
-        ("release_notes", release_notes),
-    ]
+    return steps
+
+
+def _run_step(run, marker: str) -> None:
+    """One step on a pool thread: the persists it takes are released
+    when it returns, and its resume marker lands only once it has
+    succeeded (a stale marker from an earlier run is dropped first)."""
+    with suppress(FileNotFoundError):
+        os.remove(marker)
+    with engine_cache_scope():
+        run()
+    with open(marker, "w") as fh:
+        fh.write("done\n")
 
 
 def build_warehouse(
@@ -589,28 +606,41 @@ def build_warehouse(
     overwrite: bool = False,
     ranged_files: int | None = None,
 ) -> dict[str, str]:
-    """Run the full warehouse build; returns {step: 'built'|'skipped'}.
+    """Run the warehouse build; returns {step: 'built'|'skipped'} in
+    DAG order.
 
-    ``steps`` restricts the run to a subset (still in DAG order);
-    ``overwrite`` ignores the resume markers and rebuilds;
-    ``ranged_files`` switches flat/XML exports to the range-split
-    multi-file sinks (cluster scale — no single-task write stage).
+    The selected steps that are not done yet run concurrently (they
+    read only the fixtures and the shared intermediates, never each
+    other's output); each one's ``_done/<step>`` marker is written as
+    soon as it succeeds. If a step raises, the first exception (in DAG
+    order) is re-raised once every running step has finished, and a
+    rerun builds just the steps without a marker.
+
+    ``steps`` restricts the run to a subset; ``overwrite`` ignores the
+    resume markers and rebuilds; ``ranged_files`` switches flat/XML
+    exports to the range-split multi-file sinks (cluster scale — no
+    single-task write stage).
     """
     inp = _Inputs(spark, fixtures_dir)
     marker_dir = os.path.join(out_dir, "_done")
     os.makedirs(marker_dir, exist_ok=True)
     status: dict[str, str] = {}
-    for name, run in _steps(inp, out_dir, ranged_files=ranged_files):
+    todo = []
+    for name, reads, run in _steps(inp, out_dir, ranged_files=ranged_files):
         if steps is not None and name not in steps:
             continue
         marker = os.path.join(marker_dir, name)
         if os.path.exists(marker) and not overwrite:
             status[name] = "skipped"
             continue
-        run()
-        with open(marker, "w") as fh:
-            fh.write("done\n")
         status[name] = "built"
+        todo.append((reads, run, marker))
+    # shared intermediates are resolved here, on the calling thread, so
+    # their persists belong to this scope and outlive every step
+    with engine_cache_scope():
+        for key in dict.fromkeys(r for reads, _, _ in todo for r in reads):
+            getattr(inp, key)()
+        run_parallel([partial(_run_step, run, marker) for _, run, marker in todo])
     return status
 
 
@@ -628,7 +658,7 @@ def _main() -> None:
     ap.add_argument("fixtures_dir")
     ap.add_argument("out_dir")
     ap.add_argument("--steps", default=None,
-                    help="comma-separated subset, still run in DAG order")
+                    help="comma-separated subset of the steps")
     ap.add_argument("--overwrite", action="store_true",
                     help="ignore resume markers and rebuild")
     ap.add_argument("--ranged", type=int, default=None, metavar="N",

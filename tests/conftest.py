@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
@@ -52,11 +53,26 @@ SLOW_TESTS = {
 }
 
 
+@pytest.hookimpl(tryfirst=True)
 def pytest_collection_modifyitems(config, items):
+    """Mark the SLOW_TESTS items. Runs before ``-m``/``-k`` deselection
+    so it sees every collected item: an entry naming no test of a file
+    collected in full is stale (a renamed or deleted test) and would
+    let its successor drop silently into the default tier, so it stops
+    the run."""
+    collected = set()
     for item in items:
         suffix = item.nodeid.split("tests/")[-1]
+        collected.add(suffix)
         if suffix in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+    narrowed = {os.path.basename(a.split("::")[0]) for a in config.args if "::" in a}
+    full_files = {s.split("::")[0] for s in collected} - narrowed
+    stale = sorted(e for e in SLOW_TESTS
+                   if e.split("::")[0] in full_files and e not in collected)
+    if stale:
+        raise pytest.UsageError(
+            "SLOW_TESTS entries match no collected test: " + ", ".join(stale))
 
 
 @pytest.fixture(scope="session")

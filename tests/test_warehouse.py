@@ -1,8 +1,10 @@
 """End-to-end warehouse build over the InterPro-shaped fixtures
 (interpro7_dw_spark/warehouse.py — the Spark analogue of the
 reference's mundone task DAG, cli.py:101-986): every mart family plus
-flat/XML/JSON sinks in one dependency-ordered run, with
-skip-if-exists resume, snapshot-compared as a directory tree."""
+flat/XML/JSON sinks in one run whose independent steps execute
+concurrently, with skip-if-exists resume (per-step markers, a failed
+step left unmarked) and no cached plan outliving the build,
+snapshot-compared as a directory tree."""
 
 from __future__ import annotations
 
@@ -11,9 +13,14 @@ import gzip
 import json
 import os
 import re
+import sys
+import threading
+import time
 
 import pytest
 
+from interpro7_dw_spark import warehouse as wh
+from interpro7_dw_spark.caching import engine_cache_scope
 from interpro7_dw_spark.fixtures import write_warehouse_fixtures
 from interpro7_dw_spark.warehouse import build_warehouse
 
@@ -95,6 +102,95 @@ def test_resume_skips_everything(warehouse):
     third = build_warehouse(spark, fx, out, steps=["release_notes"],
                             overwrite=True)
     assert third == {"release_notes": "built"}
+
+
+def test_failed_step_gets_no_marker_and_resume_builds_it(
+    warehouse, tmp_path, monkeypatch
+):
+    """The first step raises during an overwrite rebuild; the build
+    re-raises only after the other steps have finished, they keep
+    their markers, the failed step loses the one an earlier run left,
+    and a resume run builds just that step."""
+    spark, fx, _, _ = warehouse
+    out = str(tmp_path / "wh")
+    steps = ["lookup_matches", "ida_documents", "release_notes"]
+    os.makedirs(os.path.join(out, "_done"))
+    open(os.path.join(out, "_done", "lookup_matches"), "w").close()
+
+    def boom(*_args, **_kwargs):
+        raise RuntimeError("lookup sink down")
+
+    monkeypatch.setattr(wh, "write_lookup_mart", boom)
+    with pytest.raises(RuntimeError, match="lookup sink down"):
+        build_warehouse(spark, fx, out, steps=steps, overwrite=True)
+    assert sorted(os.listdir(os.path.join(out, "_done"))) == [
+        "ida_documents", "release_notes"]
+    monkeypatch.undo()
+    assert build_warehouse(spark, fx, out, steps=steps) == {
+        "lookup_matches": "built", "ida_documents": "skipped",
+        "release_notes": "skipped",
+    }
+
+
+def test_build_releases_its_cached_plans(warehouse, tmp_path, monkeypatch):
+    """The merge mart is persisted while its readers run and released
+    by the build itself: the CacheManager holds as many plans after
+    the build as before, already inside the caller's scope."""
+    spark, fx, _, _ = warehouse
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    during = []
+    write_lookup_mart = wh.write_lookup_mart
+
+    def counting(*args, **kwargs):
+        during.append(cache.numCachedEntries())
+        write_lookup_mart(*args, **kwargs)
+
+    monkeypatch.setattr(wh, "write_lookup_mart", counting)
+    with engine_cache_scope():
+        build_warehouse(spark, fx, str(tmp_path / "wh"),
+                        steps=["merged_matches", "lookup_matches"])
+        assert during and during[0] > before
+        assert cache.numCachedEntries() == before
+    assert cache.numCachedEntries() == before
+
+
+def test_inputs_memo_builds_each_intermediate_once():
+    """Threads racing on nested memos (as ``merged`` builds
+    ``ipr_entries``) all get the one object built per key: a lost
+    check-then-act would build a key twice, a non-reentrant lock would
+    deadlock the nested lookup."""
+    inp = wh._Inputs(None, "unused")
+    built, got = [], []
+
+    def make(key):
+        built.append(key)
+        time.sleep(0.001)
+        return object()
+
+    def outer():
+        inp._memo("inner", lambda: make("inner"))
+        return make("outer")
+
+    def worker():
+        for _ in range(20):
+            got.append(inp._memo("outer", outer))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, daemon=True)
+                   for _ in range(16)]
+        for t in threads:
+            t.start()
+        deadline = time.monotonic() + 30
+        for t in threads:
+            t.join(timeout=max(0.0, deadline - time.monotonic()))
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert sorted(built) == ["inner", "outer"]
+    assert len(got) == 16 * 20 and all(g is got[0] for g in got)
 
 
 def test_mart_contents(warehouse):
