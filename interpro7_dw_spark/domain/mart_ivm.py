@@ -217,9 +217,9 @@ def derive_level2(
     """The level-2 support AS IMPLIED BY a level-1 support's live rows
     — every live level-1 key is one 'enter' transition, so folding
     +1-transitions through the rollup (transform included) into an
-    empty level 2 IS the full derivation. Used at seed time and as the
-    upgrade-path fallback for states whose stored mart versions
-    predate the level-2 supports (r14 ADVICE)."""
+    empty level 2 IS the full derivation. Used at seed time only
+    (:func:`seed_level2`); afterwards level 2 maintains from
+    level-1 transitions."""
     trans = l1_support.select(
         *rollup.trans_keys, F.lit(1).cast("long").alias("s")
     )

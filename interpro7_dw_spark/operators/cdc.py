@@ -173,112 +173,6 @@ def scd2_history(
     )
 
 
-def incremental_agg_update(
-    old: DataFrame,
-    new: DataFrame,
-    row_keys: list[str],
-    group_cols: list[str],
-    value_col: str,
-) -> DataFrame:
-    """Incremental view maintenance for the canonical rollup
-    ``groupBy(group_cols).agg(count(*), sum(value))``: produce the NEW
-    snapshot's aggregate by applying the old->new row delta to the old
-    aggregate — the reason CDC primitives exist. Instead of
-    re-aggregating 100 TB, the plan re-aggregates only changed rows:
-    the same fingerprint full-outer join as :func:`snapshot_diff`
-    yields per-row contributions (-1 x old row where it vanished or
-    changed, +1 x new row where it appeared or changed — a row whose
-    GROUP moved contributes to both groups), which collapse into a
-    delta table merged with the old aggregate by one outer join.
-
-    Sums run in DECIMAL(18,4) so "old aggregate + delta" is EXACTLY
-    "re-aggregate the new snapshot" — float sums would drift between
-    the two derivations and break idempotent re-application. Groups
-    whose count reaches zero are dropped; group keys must be non-null
-    (null-keyed groups would not merge across the outer join).
-    Assumes ``value_col`` nulls contribute only to counts, matching
-    SQL ``sum`` semantics; the reported sum is coalesced to 0 for
-    all-null groups.
-
-    Returns (*group_cols, n_rows, sum_value) with ``sum_value``
-    DOUBLE (decimal-exact internally).
-
-    Scale: one fingerprint-carrying full-outer join on the row key
-    (32 bytes a side beyond keys and the touched columns), one hash
-    aggregate over CHANGED rows only, one group-grain outer join.
-    The old aggregate is group-cardinality-sized; at 100 TB it is the
-    stored materialized view, not a recompute (here it is derived
-    inline so the operator stays self-contained).
-    """
-    relevant = group_cols + [value_col]
-    o = old.select(
-        *[F.col(k).alias(f"__ok_{k}") for k in row_keys],
-        *[F.col(c).alias(f"__o_{c}") for c in relevant],
-    ).withColumn("__oh", _row_hash(relevant, "__o_"))
-    n = new.select(
-        *[F.col(k).alias(f"__nk_{k}") for k in row_keys],
-        *[F.col(c).alias(f"__n_{c}") for c in relevant],
-    ).withColumn("__nh", _row_hash(relevant, "__n_"))
-    on = F.col(f"__ok_{row_keys[0]}") == F.col(f"__nk_{row_keys[0]}")
-    for k in row_keys[1:]:
-        on = on & (F.col(f"__ok_{k}") == F.col(f"__nk_{k}"))
-    joined = o.join(n, on=on, how="full_outer")
-    in_old = F.col(f"__ok_{row_keys[0]}").isNotNull()
-    in_new = F.col(f"__nk_{row_keys[0]}").isNotNull()
-    changed = joined.filter(
-        ~in_old | ~in_new | (F.col("__oh") != F.col("__nh"))
-    )
-    dec = "decimal(18,4)"
-    neg = F.struct(
-        F.lit(-1).alias("sign"),
-        *[F.col(f"__o_{g}").alias(g) for g in group_cols],
-        F.col(f"__o_{value_col}").cast(dec).alias("__v"),
-    )
-    pos = F.struct(
-        F.lit(1).alias("sign"),
-        *[F.col(f"__n_{g}").alias(g) for g in group_cols],
-        F.col(f"__n_{value_col}").cast(dec).alias("__v"),
-    )
-    deltas = (
-        changed.select(
-            F.explode(
-                F.filter(
-                    F.array(
-                        F.when(in_old, neg),
-                        F.when(in_new, pos),
-                    ),
-                    lambda x: x.isNotNull(),
-                )
-            ).alias("d")
-        )
-        .select("d.*")
-        .groupBy(*group_cols)
-        .agg(
-            F.sum("sign").cast("long").alias("__dn"),
-            F.sum(F.col("sign") * F.col("__v")).cast(dec).alias("__ds"),
-        )
-    )
-    base_agg = old.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).cast("long").alias("__n0"),
-        F.sum(F.col(value_col).cast(dec)).cast(dec).alias("__s0"),
-    )
-    zero = F.lit(0).cast(dec)
-    return (
-        base_agg.join(deltas, list(group_cols), "full_outer")
-        .select(
-            *group_cols,
-            (F.coalesce("__n0", F.lit(0)) + F.coalesce("__dn", F.lit(0)))
-            .cast("long")
-            .alias("n_rows"),
-            (F.coalesce("__s0", zero) + F.coalesce("__ds", zero))
-            .cast(dec)
-            .cast("double")
-            .alias("sum_value"),
-        )
-        .filter(F.col("n_rows") > 0)
-    )
-
-
 def snapshot_delta_rows(
     old: DataFrame,
     new: DataFrame,

@@ -73,11 +73,6 @@ def language_scores(docs: DataFrame, id_col: str = "doc_id", text_col: str = "te
     return out.withColumn("pred_lang", pred).drop(text_col)
 
 
-def token_count(docs: DataFrame, text_col: str = "text") -> Column:
-    """Whitespace token count column (BPE-ish regex variant below)."""
-    return F.size(_tokens(text_col))
-
-
 def bpe_ish_token_count(text_col: str = "text") -> Column:
     """Sub-word-ish token count: words + digits + punctuation runs,
     the usual cheap proxy for tokenizer cost."""

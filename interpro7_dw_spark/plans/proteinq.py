@@ -140,12 +140,8 @@ def synth_domorgs(spark: SparkSession, sf: str, matches=None):
 # facts while the persisted relation spills to local disk at worst —
 # so the toggle is SCALE-CONDITIONAL on the backing scan's on-disk
 # bytes (r15 verdict item 6). Local benches (<= a few hundred MB)
-# keep the measured-faster recompute path; env-tunable for clusters.
-_SHARED_SCAN_BYTES = int(
-    __import__("os").environ.get(
-        "SPARK_GRAFT_SHARED_SCAN_BYTES", str(1 << 30)
-    )
-)
+# keep the measured-faster recompute path.
+_SHARED_SCAN_BYTES = 1 << 30
 
 
 def _table_bytes(sf: str, name: str) -> int:

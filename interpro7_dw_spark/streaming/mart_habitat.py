@@ -42,21 +42,20 @@ vacuum and the COW machinery are shared with :mod:`.ivm_stream` /
 on the same total changelog, which equals the full rebuild of the
 final snapshot (each mart's catalog spec oracles exactly that).
 
-Upgrade path: mart versions written before the level-2 supports
-existed (pre-r14 states) lack ``mart/v*/<level2>`` directories — both
-the epoch advance and the reader re-derive the level-2 support from
-the level-1 relation at that version (:func:`..domain.mart_ivm.
-derive_level2`), mirroring the ``dims/`` and ``_schema.json``
-fallbacks, instead of failing on a missing path.
+The layout above is the only one the readers accept: a missing piece
+of it raises instead of reading as empty.
 """
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable, Mapping
 from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..caching import engine_cache_scope
 from ..parallel import run_parallel
@@ -64,7 +63,6 @@ from ..domain.mart_ivm import (
     MartPyramid,
     apply_count_delta,
     apply_count_delta_with_transitions,
-    derive_level2,
 )
 from .ivm_stream import (
     _fs,
@@ -195,17 +193,6 @@ def _prof(label: str, t0: float) -> None:
               file=sys.stderr, flush=True)
 
 
-def _run_parallel(thunks, max_workers: int = 8) -> None:
-    """Run independent Spark ACTIONS (writes of different state
-    pieces) concurrently from a small driver thread pool — guide §2.6:
-    the scheduler back-fills executor cores freed by one job's tail
-    with the next job's tasks, so N tiny jobs cost ~max instead of
-    ~sum. Each thunk owns its own engine_cache_scope when it persists
-    (the registry is thread-local); exceptions propagate to the
-    caller, failing the epoch before its commit marker is written."""
-    run_parallel(thunks, max_workers)
-
-
 # ------------------------------------------------------------ unify
 
 
@@ -323,40 +310,39 @@ def _read_static_dim(
     """The bucketed static dim pruned to ``buckets`` — correct for any
     delta join keyed by protein, because the pruned set is a superset
     of the delta's proteins (rows outside them are dropped by the join
-    anyway). States seeded before the dim stores existed fall back to
-    the caller-passed whole relation (the pre-r14 behavior)."""
+    anyway). No rows in those buckets serve ``fallback``'s typed empty
+    relation; a missing dim store raises."""
     dim_dir = f"{state_dir}/dims/{name}"
-    fs, _r, jp = _fs(spark, dim_dir)
-    if not fs.exists(jp(f"{dim_dir}/v0")):
-        return fallback
     df = _read_sources(
         spark, dim_dir, _bucket_sources(spark, dim_dir, 0, buckets)
     )
     return df if df is not None else fallback.limit(0)
 
 
-def _write_schema_artifact(spark: SparkSession, sup_dir: str, schema) -> None:
-    """Persist a COW store's logical schema (keys + count, WITHOUT the
-    ``__b`` partition column) beside its version directories: the
-    empty-store read fallback derives its served schema from this
-    artifact instead of guessing column types."""
+def _write_schema_artifact(
+    spark: SparkSession, sup_dir: str, schema, supports=None
+) -> None:
+    """Persist a store's logical schema (WITHOUT its partition column)
+    beside its data as ``_schema.json``: an emptied store, which has
+    no files to infer from, serves this schema. The agg store's
+    artifact also lists the ``supports`` its version wrote."""
+    art = schema.jsonValue()
+    if supports is not None:
+        art["supports"] = sorted(supports)
     fs, _root, jp = _fs(spark, sup_dir)
     out = fs.create(jp(f"{sup_dir}/_schema.json"), True)
-    out.write(bytearray(schema.json().encode("utf-8")))
+    out.write(bytearray(json.dumps(art).encode("utf-8")))
     out.close()
 
 
-def _read_schema_artifact(spark: SparkSession, sup_dir: str):
-    """The stored schema of :func:`_write_schema_artifact`, or None
-    for stores seeded before the artifact existed."""
-    import json as _json
-
-    from pyspark.sql.types import StructType
-
+def _read_schema_artifact(spark: SparkSession, sup_dir: str) -> dict:
+    """The JSON written by :func:`_write_schema_artifact` (a
+    ``StructType`` JSON, plus ``supports`` for an agg store); raises
+    when the store has none."""
     fs, _root, jp = _fs(spark, sup_dir)
     p = jp(f"{sup_dir}/_schema.json")
     if not fs.exists(p):
-        return None
+        raise FileNotFoundError(f"missing schema artifact {sup_dir}/_schema.json")
     stream = fs.open(p)
     try:
         text = spark._jvm.org.apache.commons.io.IOUtils.toString(
@@ -364,7 +350,7 @@ def _read_schema_artifact(spark: SparkSession, sup_dir: str):
         )
     finally:
         stream.close()
-    return StructType.fromJson(_json.loads(text))
+    return json.loads(text)
 
 
 def _seed_support_thunks(
@@ -380,11 +366,9 @@ def _seed_support_thunks(
     per LEVEL-2 support (plain parquet under the mart version root),
     plus ONE thunk writing every plain level-1 support through the
     discriminated ``mart/v0/agg`` union (r16 — one action instead of
-    one per support; level 2 stays per-name so a version can still
-    distinguish "absent, derive from level 1" from "legitimately
-    empty"). The caller runs them (concurrently — they write disjoint
-    paths) and writes the mart root ``_SUCCESS`` LAST to commit
-    all."""
+    one per support). The caller runs them (concurrently — they write
+    disjoint paths) and writes the mart root ``_SUCCESS`` LAST to
+    commit all."""
     def bucketed(name: str) -> None:
         sup_dir = f"{state_dir}/sup_cow/{name}"
         sup[name].withColumn(
@@ -455,7 +439,7 @@ def seed_state(
     thunks += _seed_support_thunks(
         spark, state_dir, supports, habitat.pyramid, n_buckets
     )
-    _run_parallel(thunks)
+    run_parallel(thunks)
     _commit_marker(spark, f"{state_dir}/mart/v0")
 
 
@@ -623,11 +607,7 @@ def cow_write_merged(
 
 
 def _read_cow_support(
-    spark: SparkSession,
-    state_dir: str,
-    name: str,
-    ver: int,
-    keys: list[str],
+    spark: SparkSession, state_dir: str, name: str, ver: int
 ) -> DataFrame:
     """A facts-scale support resolved per bucket from its COW store at
     a version number (a bucket not rewritten at v_n is served by the
@@ -637,12 +617,8 @@ def _read_cow_support(
     sup_dir = f"{state_dir}/sup_cow/{name}"
     df = _read_sources(spark, sup_dir, _bucket_sources(spark, sup_dir, ver))
     if df is None:
-        schema = _read_schema_artifact(spark, sup_dir)
-        if schema is None:
-            # a store seeded before the artifact existed falls back to
-            # the historical all-string-keys derivation
-            schema = ", ".join(f"{k} string" for k in keys) + ", n long"
-        df = spark.createDataFrame([], schema)
+        art = _read_schema_artifact(spark, sup_dir)
+        df = spark.createDataFrame([], StructType.fromJson(art))
     return df
 
 
@@ -655,18 +631,15 @@ def _read_cow_support(
 # standing queries' warm epochs at bench scale (r15 phase profile:
 # ~5.4 s/epoch of planning + per-state-piece commit against
 # millisecond data), and at cluster scale fewer commits is strictly
-# less driver work. Level-2 supports stay per-name: inside the agg
-# union an absent ``__sup`` partition is indistinguishable from a
-# legitimately emptied support, and the level-2 upgrade fallback
-# (absent ⇒ derive from level 1) needs that distinction — for plain
-# level-1 supports absent ⇒ empty IS the correct reading, because
-# every version writes all of them through the one union action.
-# Readers resolve the new layout first and fall back to the per-name
-# directories of states written by earlier rounds (the same upgrade
-# discipline as the dims/ and level-2 fallbacks); the union pads each
-# support to the superset schema with typed NULLs and a reader
-# re-projects exactly the support's own ``keys + n``, so the
-# round-trip is column-identical to the per-name files.
+# less driver work. Level-2 supports stay per-name: each is written by
+# its own pooled thunk, concurrently with the COW writes whose
+# transitions feed it (see :func:`_advance_supports`). Inside the
+# union an emptied support has no ``__sup`` partition, so the store's
+# ``_schema.json`` lists the supports the version wrote and a reader
+# raises on a name outside that list instead of serving it as empty.
+# The union pads each support to the superset schema with typed NULLs
+# and a reader re-projects exactly the support's own ``keys + n``, so
+# the round-trip is column-identical to the per-name files.
 
 
 def _agg_union(dfs: "dict[str, DataFrame]") -> DataFrame:
@@ -702,45 +675,19 @@ def _write_agg_supports(
     spark: SparkSession, vdir: str, dfs: "dict[str, DataFrame]"
 ) -> None:
     """ONE write action for every aggregate-sized support of a version
-    (``{vdir}/agg/__sup=<name>/``), plus the schema artifact that lets
-    an all-empty version still serve typed empty supports."""
+    (``{vdir}/agg/__sup=<name>/``), plus the schema artifact that
+    lists the written supports and lets an all-empty version still
+    serve typed empty supports."""
     if not dfs:
         return
     u = _agg_union(dfs)
     u.write.partitionBy("__sup").mode("overwrite").parquet(f"{vdir}/agg")
-    _write_schema_artifact(spark, f"{vdir}/agg", u.drop("__sup").schema)
+    _write_schema_artifact(
+        spark, f"{vdir}/agg", u.drop("__sup").schema, supports=list(dfs)
+    )
 
 
-def _read_agg_support(
-    spark: SparkSession,
-    state_dir: str,
-    version_name: str,
-    name: str,
-    keys: list[str],
-) -> DataFrame | None:
-    """The aggregate-sized support ``name`` at a version from the
-    unioned agg store (partition-pruned on ``__sup``, re-projected to
-    the support's own columns) — or None when that version predates
-    the agg layout (the caller falls back to the per-name path)."""
-    agg = f"{state_dir}/mart/{version_name}/agg"
-    fs, _r, jp = _fs(spark, agg)
-    if not fs.exists(jp(agg)):
-        return None
-    try:
-        df = spark.read.parquet(agg)
-    except Exception:
-        # a version whose every support emptied: partitionBy wrote no
-        # files — serve the typed empty relation from the artifact
-        schema = _read_schema_artifact(spark, agg)
-        if schema is None:
-            raise
-        df = spark.createDataFrame([], schema).withColumn(
-            "__sup", F.lit(None).cast("string")
-        )
-    return df.filter(F.col("__sup") == name).select(*keys, "n")
-
-
-def _read_plain_l1_supports(
+def _read_agg_supports(
     spark: SparkSession,
     state_dir: str,
     pyramid: MartPyramid,
@@ -749,82 +696,29 @@ def _read_plain_l1_supports(
 ) -> dict[str, DataFrame]:
     """Every requested plain level-1 support at a version through ONE
     read of the version's agg store (one file listing + footer pass,
-    then per-name partition-pruned filters off the same relation) —
-    or, for versions predating the agg layout, the per-name
-    directories."""
-    out: dict[str, DataFrame] = {}
+    then per-name partition-pruned filters off the same relation). A
+    name the version's artifact does not list raises."""
     if not names:
-        return out
+        return {}
     agg = f"{state_dir}/mart/{version_name}/agg"
-    fs, _r, jp = _fs(spark, agg)
-    if fs.exists(jp(agg)):
-        try:
-            df = spark.read.parquet(agg)
-        except Exception:
-            # every plain support emptied at this version: partitionBy
-            # wrote no files — serve typed empties from the artifact
-            schema = _read_schema_artifact(spark, agg)
-            if schema is None:
-                raise
-            df = spark.createDataFrame([], schema).withColumn(
-                "__sup", F.lit(None).cast("string")
-            )
-        for name in names:
-            out[name] = df.filter(F.col("__sup") == name).select(
-                *pyramid.support_keys[name], "n"
-            )
-        return out
-    for name in names:
-        out[name] = spark.read.parquet(
-            f"{state_dir}/mart/{version_name}/{name}"
+    art = _read_schema_artifact(spark, agg)
+    missing = sorted(set(names) - set(art["supports"]))
+    if missing:
+        raise KeyError(f"{agg} holds no support {missing}")
+    try:
+        df = spark.read.parquet(agg)
+    except AnalysisException:
+        # every support emptied at this version: partitionBy wrote no
+        # files — serve typed empties from the artifact
+        df = spark.createDataFrame([], StructType.fromJson(art)).withColumn(
+            "__sup", F.lit(None).cast("string")
         )
-    return out
-
-
-def _read_level1_at(
-    spark: SparkSession,
-    state_dir: str,
-    pyramid: MartPyramid,
-    name: str,
-    ver: int,
-    version_name: str,
-) -> DataFrame:
-    if name in pyramid.bucketed:
-        return _read_cow_support(
-            spark, state_dir, name, ver, pyramid.support_keys[name]
+    return {
+        name: df.filter(F.col("__sup") == name).select(
+            *pyramid.support_keys[name], "n"
         )
-    df = _read_agg_support(
-        spark, state_dir, version_name, name, pyramid.support_keys[name]
-    )
-    if df is not None:
-        return df
-    return spark.read.parquet(f"{state_dir}/mart/{version_name}/{name}")
-
-
-def _prev_level2(
-    spark: SparkSession,
-    state_dir: str,
-    pyramid: MartPyramid,
-    prev: tuple,
-    l1_name: str,
-    dims: Mapping[str, DataFrame],
-) -> DataFrame:
-    """The level-2 support at the previous version — or, for a state
-    whose stored versions predate the level-2 supports, its full
-    derivation from the previous LEVEL-1 relation (the same
-    +1-transition fold the seed uses), mirroring the ``dims/``
-    fallback instead of failing on the missing path."""
-    rollup = pyramid.rollups[l1_name]
-    path = f"{state_dir}/mart/{prev[3]}/{rollup.l2}"
-    fs, _r, jp = _fs(spark, path)
-    if fs.exists(jp(path)):
-        return spark.read.parquet(path)
-    l1_prev = _read_level1_at(
-        spark, state_dir, pyramid, l1_name, prev[0], prev[3]
-    )
-    return derive_level2(
-        l1_prev, rollup, pyramid.support_keys[rollup.l2], dims
-    )
+        for name in names
+    }
 
 
 def _advance_supports(
@@ -919,75 +813,10 @@ def _advance_supports(
             persist_into=merge_persists,
         )
 
-    _t0 = _time.time()
-    bucketed_l1 = [
-        n
-        for n in pyramid.support_names
-        if n not in l2 and n in pyramid.bucketed
-    ]
-    _run_parallel(
-        [(lambda name=name: build_plan(name)) for name in bucketed_l1]
-    )
-    for name in pyramid.support_names:
-        if name in l2:
-            continue
-        keys = pyramid.support_keys[name]
-        rollup = pyramid.rollups.get(name)
-        trans = None
-        if name in pyramid.bucketed:
-            merged, trans, sup_touched = cow_plans[name]
-
-            def cow_unit(
-                name=name, merged=merged, sup_touched=sup_touched
-            ) -> None:
-                _tu = _time.time()
-                cow_write_merged(
-                    spark, f"{state_dir}/sup_cow/{name}", merged,
-                    pyramid.bucketed[name], n_buckets, nxt, epoch,
-                    sup_touched,
-                )
-                _prof(f"unit {name}", _tu)
-
-            thunks.append(cow_unit)
-        elif rollup is None:
-            plain_simple.append(name)
-        else:
-            # a plain level-1 with a rollup: its merge plan is shared
-            # by the agg write and the l2 thunk on different threads,
-            # so it is built (and persisted) here up front
-            cur = _read_level1_at(
-                spark, state_dir, pyramid, name, prev[0], prev[3]
-            )
-            merged, trans = apply_count_delta_with_transitions(
-                cur, deltas[name], keys, list(rollup.trans_keys),
-                persist_into=merge_persists,
-            )
-            plain_prebuilt[name] = merged
-        if rollup is not None:
-
-            def l2_unit(name=name, rollup=rollup, trans=trans) -> None:
-                _tu = _time.time()
-                with engine_cache_scope():
-                    cur2 = _prev_level2(
-                        spark, state_dir, pyramid, prev, name, dims
-                    )
-                    t = (
-                        rollup.transform(trans, dims)
-                        if rollup.transform is not None
-                        else trans
-                    )
-                    apply_count_delta(
-                        cur2, t, pyramid.support_keys[rollup.l2]
-                    ).write.mode("overwrite").parquet(f"{vdir}/{rollup.l2}")
-                _prof(f"unit {rollup.l2}", _tu)
-
-            thunks.append(l2_unit)
-    _prof("plan supports", _t0)
-
     def agg_unit() -> None:
         _tu = _time.time()
         with engine_cache_scope():
-            prev_plain = _read_plain_l1_supports(
+            prev_plain = _read_agg_supports(
                 spark, state_dir, pyramid, prev[3], plain_simple
             )
             agg_out = {
@@ -1001,11 +830,79 @@ def _advance_supports(
             _write_agg_supports(spark, vdir, agg_out)
         _prof("unit agg", _tu)
 
-    if plain_simple or plain_prebuilt:
-        thunks.append(agg_unit)
-    _t0 = _time.time()
+    # the merge persists register as soon as their plans are built,
+    # so their release also covers a failure while planning
     try:
-        _run_parallel(thunks)
+        _t0 = _time.time()
+        bucketed_l1 = [
+            n
+            for n in pyramid.support_names
+            if n not in l2 and n in pyramid.bucketed
+        ]
+        run_parallel(
+            [(lambda name=name: build_plan(name)) for name in bucketed_l1]
+        )
+        for name in pyramid.support_names:
+            if name in l2:
+                continue
+            keys = pyramid.support_keys[name]
+            rollup = pyramid.rollups.get(name)
+            trans = None
+            if name in pyramid.bucketed:
+                merged, trans, sup_touched = cow_plans[name]
+
+                def cow_unit(
+                    name=name, merged=merged, sup_touched=sup_touched
+                ) -> None:
+                    _tu = _time.time()
+                    cow_write_merged(
+                        spark, f"{state_dir}/sup_cow/{name}", merged,
+                        pyramid.bucketed[name], n_buckets, nxt, epoch,
+                        sup_touched,
+                    )
+                    _prof(f"unit {name}", _tu)
+
+                thunks.append(cow_unit)
+            elif rollup is None:
+                plain_simple.append(name)
+            else:
+                # a plain level-1 with a rollup: its merge plan is
+                # shared by the agg write and the l2 thunk on different
+                # threads, so it is built (and persisted) here up front
+                cur = _read_agg_supports(
+                    spark, state_dir, pyramid, prev[3], [name]
+                )[name]
+                merged, trans = apply_count_delta_with_transitions(
+                    cur, deltas[name], keys, list(rollup.trans_keys),
+                    persist_into=merge_persists,
+                )
+                plain_prebuilt[name] = merged
+            if rollup is not None:
+
+                def l2_unit(name=name, rollup=rollup, trans=trans) -> None:
+                    _tu = _time.time()
+                    with engine_cache_scope():
+                        cur2 = spark.read.parquet(
+                            f"{state_dir}/mart/{prev[3]}/{rollup.l2}"
+                        )
+                        t = (
+                            rollup.transform(trans, dims)
+                            if rollup.transform is not None
+                            else trans
+                        )
+                        apply_count_delta(
+                            cur2, t, pyramid.support_keys[rollup.l2]
+                        ).write.mode("overwrite").parquet(
+                            f"{vdir}/{rollup.l2}"
+                        )
+                    _prof(f"unit {rollup.l2}", _tu)
+
+                thunks.append(l2_unit)
+        _prof("plan supports", _t0)
+        if plain_simple or plain_prebuilt:
+            thunks.append(agg_unit)
+        _t0 = _time.time()
+        run_parallel(thunks)
     finally:
         for df in merge_persists:
             try:
@@ -1024,48 +921,25 @@ def read_supports(
     pyramid: MartPyramid,
     state_dir: str,
     version_name: str,
-    dims: Mapping[str, DataFrame] | None = None,
 ) -> dict[str, DataFrame]:
     """All supports AS OF a committed mart version: plain level-1
-    supports from the version's discriminated ``agg`` union (or, for
-    versions written before the agg layout, the per-name directory),
-    level-2 supports from their per-name directories, facts-scale ones
-    resolved per bucket from their COW stores at that version number.
-    A level-2 support absent at that version (a state seeded before
-    level 2 existed) is re-derived from its level-1 relation at the
-    same version instead of failing — ``dims`` is only consulted for
-    that fallback when the rollup carries a transform."""
+    supports from the version's discriminated ``agg`` union, level-2
+    supports from their per-name directories, facts-scale ones
+    resolved per bucket from their COW stores at that version
+    number."""
     ver = int(version_name[1:].partition("_e")[0])
-    by_l2 = {r.l2: l1 for l1, r in pyramid.rollups.items()}
     out: dict[str, DataFrame] = {}
     for name in pyramid.support_names:
         if name in pyramid.bucketed:
-            out[name] = _read_cow_support(
-                spark, state_dir, name, ver, pyramid.support_keys[name]
+            out[name] = _read_cow_support(spark, state_dir, name, ver)
+        elif name in pyramid.level2:
+            out[name] = spark.read.parquet(
+                f"{state_dir}/mart/{version_name}/{name}"
             )
-            continue
-        if name not in by_l2:
-            agg = _read_agg_support(
-                spark, state_dir, version_name, name,
-                pyramid.support_keys[name],
-            )
-            if agg is not None:
-                out[name] = agg
-                continue
-        path = f"{state_dir}/mart/{version_name}/{name}"
-        if name in by_l2:
-            fs, _r, jp = _fs(spark, path)
-            if not fs.exists(jp(path)):
-                l1_name = by_l2[name]
-                l1 = _read_level1_at(
-                    spark, state_dir, pyramid, l1_name, ver, version_name
-                )
-                out[name] = derive_level2(
-                    l1, pyramid.rollups[l1_name],
-                    pyramid.support_keys[name], dims or {},
-                )
-                continue
-        out[name] = spark.read.parquet(path)
+        else:
+            out[name] = _read_agg_supports(
+                spark, state_dir, pyramid, version_name, [name]
+            )[name]
     return out
 
 
@@ -1118,7 +992,7 @@ def apply_epoch(
         # just-written versions.
         by_store = {st.name: st for st in habitat.stores}
         _t0 = _time.time()
-        _run_parallel(
+        run_parallel(
             [
                 (
                     lambda st=st: cow_apply_images(
@@ -1164,6 +1038,8 @@ def apply_epoch(
         with engine_cache_scope():
             deltas = habitat.deltas(parts, rescans, dim_use)
             _t0 = _time.time()
+            # an exception from any pooled write propagates here,
+            # failing the epoch before its commit marker is written
             _advance_supports(
                 spark, state_dir, deltas, prev, nxt, epoch,
                 habitat, dim_use, n_buckets, touched=touched,
@@ -1222,7 +1098,7 @@ def maintain_stream(
     if latest is None:
         raise RuntimeError(f"{habitat.pyramid.name} mart never materialized")
     return habitat.render(
-        read_supports(spark, habitat.pyramid, state_dir, latest[3], dims),
+        read_supports(spark, habitat.pyramid, state_dir, latest[3]),
         **(render_extra or {}),
     )
 
@@ -1259,7 +1135,7 @@ def maintain_batch(
     )
     latest = _latest_committed(spark, mart_dir)
     return habitat.render(
-        read_supports(spark, habitat.pyramid, state_dir, latest[3], dims),
+        read_supports(spark, habitat.pyramid, state_dir, latest[3]),
         **(render_extra or {}),
     )
 
@@ -1270,7 +1146,6 @@ def read_version(
     state_dir: str,
     version: int | None = None,
     epoch: int | None = None,
-    dims: Mapping[str, DataFrame] | None = None,
     render_extra: Mapping[str, object] | None = None,
 ) -> DataFrame:
     """Time travel over a maintained warehouse mart: render the
@@ -1285,6 +1160,6 @@ def read_version(
     versions = [t for t in _list_versions(spark, mart_dir) if t[2]]
     pick = _pick_version(versions, mart_dir, version, epoch)
     return habitat.render(
-        read_supports(spark, habitat.pyramid, state_dir, pick[3], dims),
+        read_supports(spark, habitat.pyramid, state_dir, pick[3]),
         **(render_extra or {}),
     )

@@ -56,7 +56,6 @@ from .mart_habitat import (
     FactStore,
     MartHabitat,
     Rescan,
-    apply_epoch,
     cow_apply_count_delta,  # noqa: F401 — re-export (tests/tools import here)
     maintain_batch,
     maintain_stream,
@@ -155,24 +154,6 @@ def read_mart_supports(
     spark: SparkSession, state_dir: str, version_name: str
 ) -> dict[str, DataFrame]:
     return read_supports(spark, TAXON_PYRAMID, state_dir, version_name)
-
-
-def apply_taxon_mart_epoch(
-    spark: SparkSession,
-    state_dir: str,
-    batch: DataFrame,               # ONE epoch in unify_changelogs shape
-    epoch: int,
-    protein_proteomes: DataFrame,
-    protein_structures: DataFrame,
-    taxon_ancestors: DataFrame,
-    n_buckets: int = 16,
-    keep_last: int | None = None,
-) -> None:
-    apply_epoch(
-        spark, TAXON_HABITAT, state_dir, batch, epoch,
-        _taxon_dims(protein_proteomes, protein_structures, taxon_ancestors),
-        n_buckets, keep_last,
-    )
 
 
 def maintain_taxon_mart_stream(
@@ -314,32 +295,10 @@ def seed_entry_mart_state(
     )
 
 
-def _entry_dims(pp, ps, pec):
-    return {"pp": pp, "ps": ps, "pec": pec}
-
-
 def read_entry_mart_supports(
     spark: SparkSession, state_dir: str, version_name: str
 ) -> dict[str, DataFrame]:
     return read_supports(spark, ENTRY_PYRAMID, state_dir, version_name)
-
-
-def apply_entry_mart_epoch(
-    spark: SparkSession,
-    state_dir: str,
-    batch: DataFrame,               # ONE epoch in unify_entry_changelogs shape
-    epoch: int,
-    protein_proteomes: DataFrame,
-    protein_structures: DataFrame,
-    protein_ecs: DataFrame,
-    n_buckets: int = 16,
-    keep_last: int | None = None,
-) -> None:
-    apply_epoch(
-        spark, ENTRY_HABITAT, state_dir, batch, epoch,
-        _entry_dims(protein_proteomes, protein_structures, protein_ecs),
-        n_buckets, keep_last,
-    )
 
 
 def maintain_entry_mart_stream(
@@ -355,27 +314,10 @@ def maintain_entry_mart_stream(
 ) -> DataFrame:
     return maintain_stream(
         spark, ENTRY_HABITAT, changes, state_dir,
-        _entry_dims(protein_proteomes, protein_structures, protein_ecs),
-        n_buckets, keep_last, render_extra={"entry_go": entry_go},
-    )
-
-
-def maintain_entry_mart_batch(
-    spark: SparkSession,
-    state_dir: str,
-    delta_pe: DataFrame,
-    delta_p: DataFrame,
-    protein_proteomes: DataFrame,
-    protein_structures: DataFrame,
-    protein_ecs: DataFrame,
-    entry_go: DataFrame | None = None,
-    n_buckets: int = 16,
-    keep_last: int | None = None,
-) -> DataFrame:
-    return maintain_batch(
-        spark, ENTRY_HABITAT, state_dir,
-        {"assign": delta_pe, "protein": delta_p},
-        _entry_dims(protein_proteomes, protein_structures, protein_ecs),
+        {
+            "pp": protein_proteomes, "ps": protein_structures,
+            "pec": protein_ecs,
+        },
         n_buckets, keep_last, render_extra={"entry_go": entry_go},
     )
 

@@ -77,10 +77,16 @@ def _bucket_sources(
     """The manifest resolution: for each bucket (``buckets`` or every
     bucket seen), the newest committed facts version <= ``at_version``
     carrying it — returned grouped as {version_dir_name: buckets it
-    serves}. Pure directory listing; no data read."""
+    serves}. Pure directory listing; no data read. A store with no
+    committed version <= ``at_version`` raises: it is missing, not
+    empty."""
     versions = [
         t for t in _list_versions(spark, facts_dir) if t[2] and t[0] <= at_version
     ]
+    if not versions:
+        raise FileNotFoundError(
+            f"no committed version at or below v{at_version} under {facts_dir!r}"
+        )
     want = set(buckets) if buckets is not None else None
     served: dict[str, set[int]] = {}
     seen: set[int] = set()

@@ -4,6 +4,12 @@ checkpoint of a long changelog, with flat per-epoch cost."""
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from interpro7_dw_spark.domain.mart_ivm import (
@@ -1024,112 +1030,137 @@ def test_proteome_mart_ivm_equals_full_rebuild(spark):
     assert got == want
 
 
-def test_epoch_static_dim_fallback_without_dim_store(spark, tmp_path):
-    """A mart state seeded BEFORE the bucketed dim stores existed
-    (r14) must keep maintaining correctly: with dims/ deleted, the
-    epoch falls back to the caller-passed whole relations and the
-    rendered mart still equals the full rebuild."""
-    import shutil as _sh
+_P_OLD = {f"P{i}": f"N{i % 6}" for i in range(20)}
+_M_OLD = {
+    j: (f"P{j % 20}", f"SIG{j % 9}", f"DB{(j % 9) % 3}") for j in range(50)
+}
 
-    from interpro7_dw_spark.streaming.mart_stream import (
-        maintain_taxon_mart_batch,
-        seed_mart_state,
-    )
 
-    p_old = {f"P{i}": f"N{i % 6}" for i in range(20)}
-    m_old = {j: (f"P{j % 20}", f"SIG{j % 9}", f"DB{(j % 9) % 3}") for j in range(50)}
-    p_new = dict(p_old)
-    p_new["P21"] = "N3"
-    p_new.pop("P2")
-    m_new = dict(m_old)
-    m_new[90] = ("P21", "SIG4", "DB1")
+@pytest.fixture(scope="module")
+def taxon_v0(spark, tmp_path_factory):
+    """One seeded tiny taxon-mart state; tests copy it before changing
+    it."""
+    from interpro7_dw_spark.streaming.mart_stream import seed_mart_state
 
-    state = str(tmp_path / "legacy")
+    state = str(tmp_path_factory.mktemp("taxon_v0") / "state")
     seed_mart_state(
-        spark, _p_df(spark, p_old), _m_df(spark, m_old),
+        spark, _p_df(spark, _P_OLD), _m_df(spark, _M_OLD),
         _pp(spark), _ps(spark), _anc(spark), state, n_buckets=8,
     )
-    _sh.rmtree(f"{state}/dims")  # pre-r14 layout
-    dp = snapshot_delta_images(
-        _p_df(spark, p_old), _p_df(spark, p_new), ["protein_acc"], ["tax_id"]
-    )
-    dm = snapshot_delta_images(
-        _m_df(spark, m_old), _m_df(spark, m_new), ["match_id"],
-        ["protein_acc", "signature_acc", "database"],
-    )
-    out = maintain_taxon_mart_batch(
-        spark, state, dp, dm, _pp(spark), _ps(spark), _anc(spark), n_buckets=8
-    )
-    assert _mart_rows(out) == _mart_rows(_rebuild(spark, p_new, m_new))
+    return state
 
 
-def test_level2_upgrade_fallback_pre_r14_state(spark, tmp_path):
-    """A mart state whose stored versions PREDATE the level-2 supports
-    (pre-r14 layout: no mart/v0/sup_db) must keep working in both
-    directions (r14 ADVICE): the reader re-derives the level-2 from
-    the level-1 COW store at that version, and the next epoch's
-    advance seeds it the same way before folding transitions — render
-    equals the full rebuild either way."""
-    import shutil as _sh
-
+def _taxon_epoch(spark, state):
+    """One batch epoch against a state seeded like ``taxon_v0``: a
+    protein insert and delete plus a match insert."""
     from interpro7_dw_spark.streaming.mart_stream import (
         maintain_taxon_mart_batch,
-        read_mart_supports,
-        seed_mart_state,
     )
 
-    p_old = {f"P{i}": f"N{i % 6}" for i in range(20)}
-    m_old = {j: (f"P{j % 20}", f"SIG{j % 9}", f"DB{(j % 9) % 3}") for j in range(50)}
-    p_new = dict(p_old)
+    p_new = dict(_P_OLD)
     p_new["P21"] = "N3"
     p_new.pop("P2")
-    m_new = dict(m_old)
+    m_new = dict(_M_OLD)
     m_new[90] = ("P21", "SIG4", "DB1")
-    m_new.pop(7)
-
-    state = str(tmp_path / "pre_l2")
-    seed_mart_state(
-        spark, _p_df(spark, p_old), _m_df(spark, m_old),
-        _pp(spark), _ps(spark), _anc(spark), state, n_buckets=8,
-    )
-    # rewrite v0 into the PRE-r14 layout the test simulates: per-name
-    # support directories, no sup_db, no agg union (r16 seeds write
-    # the plain level-1 supports through the discriminated agg store)
-    from interpro7_dw_spark.domain.mart_ivm import TAXON_PYRAMID
-    from interpro7_dw_spark.streaming.mart_habitat import _read_agg_support
-
-    for name in TAXON_PYRAMID.support_names:
-        if name in TAXON_PYRAMID.bucketed or name in TAXON_PYRAMID.level2:
-            continue
-        _read_agg_support(
-            spark, state, "v0", name, TAXON_PYRAMID.support_keys[name]
-        ).write.parquet(f"{state}/mart/v0/{name}")
-    _sh.rmtree(f"{state}/mart/v0/agg")  # pre-level-2 layout
-    _sh.rmtree(f"{state}/mart/v0/sup_db")
-
-    # reader fallback: the seed version still renders the OLD release
-    sup0 = read_mart_supports(spark, state, "v0")
-    got0 = _mart_rows(
-        __import__(
-            "interpro7_dw_spark.domain.mart_ivm", fromlist=["x"]
-        ).taxon_mart_from_supports(sup0)
-    )
-    assert got0 == _mart_rows(_rebuild(spark, p_old, m_old))
-
-    # epoch fallback: the advance derives the previous level 2 from
-    # the level-1 COW store, folds transitions, and the new version
-    # renders the NEW release
     dp = snapshot_delta_images(
-        _p_df(spark, p_old), _p_df(spark, p_new), ["protein_acc"], ["tax_id"]
+        _p_df(spark, _P_OLD), _p_df(spark, p_new), ["protein_acc"], ["tax_id"]
     )
     dm = snapshot_delta_images(
-        _m_df(spark, m_old), _m_df(spark, m_new), ["match_id"],
+        _m_df(spark, _M_OLD), _m_df(spark, m_new), ["match_id"],
         ["protein_acc", "signature_acc", "database"],
     )
-    out = maintain_taxon_mart_batch(
+    return maintain_taxon_mart_batch(
         spark, state, dp, dm, _pp(spark), _ps(spark), _anc(spark), n_buckets=8
     )
-    assert _mart_rows(out) == _mart_rows(_rebuild(spark, p_new, m_new))
+
+
+def _committed(state):
+    mart = os.path.join(state, "mart")
+    return sorted(
+        d for d in os.listdir(mart)
+        if os.path.exists(os.path.join(mart, d, "_SUCCESS"))
+    )
+
+
+def _drop_agg_name(state):
+    art = f"{state}/mart/v0/agg/_schema.json"
+    with open(art) as f:
+        doc = json.load(f)
+    doc["supports"].remove("sup_sig")
+    with open(art, "w") as f:
+        json.dump(doc, f)
+    # the local Hadoop filesystem would reject the edit by checksum
+    os.remove(f"{state}/mart/v0/agg/._schema.json.crc")
+
+
+def _empty_cow_store(state):
+    sup_dir = f"{state}/sup_cow/sup_prot_db"
+    for part in os.listdir(f"{sup_dir}/v0"):
+        if part.startswith("__b="):
+            shutil.rmtree(f"{sup_dir}/v0/{part}")
+    os.remove(f"{sup_dir}/_schema.json")
+
+
+@pytest.mark.parametrize(
+    "remove, read, error",
+    [
+        pytest.param(lambda s: shutil.rmtree(f"{s}/dims"), "epoch",
+                     FileNotFoundError, id="dims"),
+        pytest.param(lambda s: shutil.rmtree(f"{s}/mart/v0/sup_db"),
+                     "supports", AnalysisException, id="sup_db"),
+        pytest.param(lambda s: shutil.rmtree(f"{s}/mart/v0/agg"),
+                     "supports", FileNotFoundError, id="agg"),
+        pytest.param(_drop_agg_name, "supports", KeyError, id="agg_name"),
+        pytest.param(_empty_cow_store, "supports", FileNotFoundError,
+                     id="sup_cow_schema"),
+    ],
+)
+def test_missing_state_piece_raises(
+    spark, taxon_v0, tmp_path, remove, read, error
+):
+    """The habitat reads one on-disk layout: a state missing any piece
+    of it raises instead of serving that piece as empty (or
+    re-deriving it), and an epoch that hits the gap commits no new
+    version."""
+    from interpro7_dw_spark.streaming.mart_stream import read_mart_supports
+
+    state = str(tmp_path / "state")
+    shutil.copytree(taxon_v0, state)
+    remove(state)
+    with pytest.raises(error):
+        if read == "epoch":
+            _taxon_epoch(spark, state)
+        else:
+            read_mart_supports(spark, state, "v0")
+    assert _committed(state) == ["v0"]
+
+
+def test_epoch_releases_merge_persists_when_planning_fails(
+    spark, taxon_v0, tmp_path, monkeypatch
+):
+    """A failure while the epoch still builds its support plans, after
+    a COW merge plan has persisted, fails the epoch without a commit
+    and releases every cached plan it took."""
+    from interpro7_dw_spark.streaming import mart_habitat
+
+    state = str(tmp_path / "state")
+    shutil.copytree(taxon_v0, state)
+    persisted = []
+    plan = mart_habitat.cow_count_merge_plan
+
+    def failing_plan(*args, **kwargs):
+        plan(*args, **kwargs)
+        persisted.extend(kwargs["persist_into"])
+        raise RuntimeError("planning failed")
+
+    monkeypatch.setattr(mart_habitat, "cow_count_merge_plan", failing_plan)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    with pytest.raises(RuntimeError, match="planning failed"):
+        _taxon_epoch(spark, state)
+    assert persisted
+    assert _committed(state) == ["v0"]
+    assert cache.numCachedEntries() == before
 
 
 def test_cow_apply_images_touched_validation(spark, tmp_path):

@@ -284,3 +284,30 @@ def test_orc_scan_pushes_filter_and_prunes_columns(spark, tmp_path):
     assert "n" in plan.split("PushedFilters")[1][:200]
     read_schema = plan.split("ReadSchema:")[1][:200]
     assert "name" not in read_schema, read_schema
+
+
+def test_mart_protein_shared_scan_persist_matches_default(spark, monkeypatch):
+    """With the shared-scan threshold at 0, ``mart_protein`` persists
+    the matches relation its mart body and domorg branch share (the
+    scale-conditional branch local fixtures never reach) and returns
+    the same rows as the default recompute path."""
+    from interpro7_dw_spark.caching import engine_cache_scope
+    from interpro7_dw_spark.plans import proteinq
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def rows():
+        with engine_cache_scope():
+            df = SPECS["mart_protein"].build(spark, SF_SMALL)
+            persisted = cache.numCachedEntries()
+            got = sorted(df.collect(), key=lambda r: r[0])
+        assert len({r[0] for r in got}) == len(got)
+        return got, persisted
+
+    before = cache.numCachedEntries()
+    default, default_cached = rows()
+    monkeypatch.setattr(proteinq, "_SHARED_SCAN_BYTES", 0)
+    shared, shared_cached = rows()
+    assert shared_cached > default_cached
+    assert len(shared) > 0 and shared == default
+    assert cache.numCachedEntries() == before
