@@ -185,16 +185,13 @@ def main() -> None:
             if elapsed < times[name]:
                 times[name] = elapsed
                 if name == "stream_ivm_mart_entry":
-                    from interpro7_dw_spark.plans.marts import (
-                        ENTRY_STREAM_PHASES,
-                    )
+                    from interpro7_dw_spark.plans.marts import STREAM_PHASES
 
                     entry_phases = {
-                        k: round(v, 3)
-                        for k, v in ENTRY_STREAM_PHASES.items()
+                        k: round(v, 3) for k, v in STREAM_PHASES.items()
                     }
                     entry_phases["render_s"] = round(
-                        elapsed - sum(ENTRY_STREAM_PHASES.values()), 3
+                        elapsed - sum(STREAM_PHASES.values()), 3
                     )
     times = {k: round(v, 3) for k, v in times.items()}
 

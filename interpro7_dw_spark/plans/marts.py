@@ -19,6 +19,10 @@ CTEs):
 
 from __future__ import annotations
 
+import shutil
+import time
+from typing import NamedTuple
+
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -29,7 +33,29 @@ from ..domain.marts import (
     structure_xrefs_mart,
     taxon_xrefs_mart,
 )
-from .spec import REGISTRY, QuerySpec, register, t, write_split_fixture
+from ..domain.mart_ivm import maintain_entry_supports, maintain_taxon_supports
+from ..domain.mart_ivm2 import (
+    maintain_clan_supports,
+    maintain_proteome_supports,
+    maintain_structure_supports,
+)
+from ..operators.cdc import snapshot_delta_images
+from ..streaming.mart_habitat import MartHabitat, maintain_stream, seed_state, unify
+from ..streaming.mart_stream import (
+    CLAN_HABITAT,
+    ENTRY_HABITAT,
+    PROTEOME_HABITAT,
+    STRUCT_HABITAT,
+    TAXON_HABITAT,
+)
+from .spec import (
+    REGISTRY,
+    QuerySpec,
+    fixture_dir,
+    register,
+    t,
+    write_split_fixture,
+)
 
 
 def _proteins(spark, sf):
@@ -719,32 +745,47 @@ register(QuerySpec(
 ))
 
 
-def _ivm_mart_taxonomy(spark, sf):
-    """Release-over-release INCREMENTAL rebuild of the taxon-xrefs
-    mart (domain/mart_ivm.py): seed the count-pyramid supports from
-    the OLD release's protein/match snapshots, fold the protein AND
-    match changelogs (snapshot_delta_images) through the bilinear
-    delta rule, render — and the result must equal the full rebuild
-    of the NEW release (the oracle recomputes it in DuckDB). This is
-    the reference's per-release full-DAG pain
-    (/root/reference/interpro7dw/cli.py:101-986, export-entry2xrefs
-    budgeted <=24h/100GB at cli.py:355) replaced by a |delta|-cost
-    merge."""
-    from ..domain.mart_ivm import (
-        maintain_taxon_supports,
-        seed_taxon_supports,
-        taxon_mart_from_supports,
-    )
-    from ..operators.cdc import snapshot_delta_images
+class _Release(NamedTuple):
+    """One release step of a maintained mart, keyed like its habitat:
+    the OLD and NEW snapshots and the changelog between them per
+    changelog arm tag, plus the static dims by ``DimUse`` name (and
+    any render-only relation). A mart's batch IVM spec and its stream
+    spec fold the same one."""
 
-    cust = t(spark, sf, "customer")
+    old: dict
+    new: dict
+    deltas: dict
+    dims: dict
+
+
+def _release(old: dict, new: dict, images: dict, dims: dict) -> _Release:
+    """``images`` gives, per arm tag, the (key columns, image columns)
+    of that arm's ``snapshot_delta_images`` changelog."""
+    return _Release(
+        old,
+        new,
+        {
+            tag: snapshot_delta_images(old[tag], new[tag], keys, cols)
+            for tag, (keys, cols) in images.items()
+        },
+        dims,
+    )
+
+
+_PROTEIN_IMAGES = (["protein_acc"], ["tax_id"])
+_MATCH_IMAGES = (["match_id"], ["protein_acc", "signature_acc", "database"])
+
+
+def _protein_releases(cust):
+    """The OLD/NEW protein-dim snapshots of the mart IVM specs, from
+    the customer table: the new release filters %19 keys out; the old
+    one lacks %17 keys (inserted since), still has the %19 ones
+    (deleted since) and puts %13 keys on a different taxon (moved)."""
     ck = F.col("c_custkey")
     p_new = cust.filter(ck % 19 != 0).select(
         ck.cast("string").alias("protein_acc"),
         F.concat_ws("", F.lit("N"), F.col("c_nationkey")).alias("tax_id"),
     )
-    # the OLD release: some proteins absent (inserted since), some
-    # extra (deleted since), some on a different taxon (moved)
     p_old = cust.filter(ck % 17 != 0).select(
         ck.cast("string").alias("protein_acc"),
         F.concat_ws(
@@ -757,6 +798,14 @@ def _ivm_mart_taxonomy(spark, sf):
             % 25,
         ).alias("tax_id"),
     )
+    return p_old, p_new
+
+
+def _match_releases(spark, sf):
+    """The shared OLD/NEW match snapshots of every xrefs-mart IVM spec:
+    the old release filters %7 keys out and shifts %13 signatures; the
+    new filters %11 — so one release delta carries inserts, deletes
+    AND signature changes."""
     orders = t(spark, sf, "orders")
     ok = F.col("o_orderkey")
     sig_new = ok % 50
@@ -773,21 +822,106 @@ def _ivm_mart_taxonomy(spark, sf):
         F.concat_ws("", F.lit("SIG"), sig_old).alias("signature_acc"),
         F.concat_ws("", F.lit("DB"), sig_old % 4).alias("database"),
     )
-    pp = _protein_proteomes(spark, sf)
-    ps = _protein_structures(spark, sf)
-    anc = _taxon_ancestors(spark, sf)
-    sup0 = seed_taxon_supports(
-        p_old, m_old.drop("match_id"), pp, ps, anc
+    return m_old, m_new
+
+
+def _taxon_release(spark, sf) -> _Release:
+    """The taxon mart's release: protein and match snapshots (the
+    bilinear pair) over the shared pp/ps dims and the taxonomy
+    ancestor closure."""
+    p_old, p_new = _protein_releases(t(spark, sf, "customer"))
+    m_old, m_new = _match_releases(spark, sf)
+    return _release(
+        {"protein": p_old, "match": m_old},
+        {"protein": p_new, "match": m_new},
+        {"protein": _PROTEIN_IMAGES, "match": _MATCH_IMAGES},
+        {
+            "pp": _protein_proteomes(spark, sf),
+            "ps": _protein_structures(spark, sf),
+            "anc": _taxon_ancestors(spark, sf),
+        },
     )
-    dp = snapshot_delta_images(p_old, p_new, ["protein_acc"], ["tax_id"])
-    dm = snapshot_delta_images(
-        m_old, m_new, ["match_id"],
-        ["protein_acc", "signature_acc", "database"],
+
+
+# Phase wall-times of the LAST _stream_mart_spec build — bench.py
+# reports stream_ivm_mart_entry's as its entry_phases field, the
+# r15-verdict-requested seed_s/steady_s split (fixture build vs
+# one-time state seed vs the 3-epoch stream drain). Measurement hook
+# only: timers around existing calls, no behavior change.
+STREAM_PHASES: dict[str, float] = {}
+
+
+def _stream_mart_spec(
+    spark: SparkSession,
+    sf: str,
+    habitat: MartHabitat,
+    fixture_name: str,
+    release,
+    split,
+    render_extra: tuple[str, ...] = (),
+):
+    """The one body of every maintained-mart stream spec: the release
+    changelog of ``release(spark, sf)`` (the fixture the mart's batch
+    IVM spec folds) unified into the habitat's discriminated stream,
+    written as 3 micro-batch files by ``split`` under a fresh
+    ``fixture_dir(fixture_name)``, the COW state seeded from the old
+    release, and the files drained one epoch each. ``render_extra``
+    names release dims the render takes as keyword arguments. Returns
+    the rendered mart at the last committed version — equal to the
+    full rebuild of the new release, because any micro-batch
+    partitioning of the changelog converges to the same supports."""
+    t0 = time.time()
+    rel = release(spark, sf)
+    unified = unify(habitat, rel.deltas)
+    root = fixture_dir(fixture_name, sf)
+    state = root + "_state"
+    for path in (root, state, state + "_chk"):
+        shutil.rmtree(path, ignore_errors=True)
+    # ONE partitionBy write builds all three micro-batch files (r16,
+    # guide §2.4): the full-outer snapshot_delta_images joins run once
+    # with no persist, where the r15 shape ran them once into a cache
+    # plus three filtered single-task write jobs.
+    write_split_fixture(unified, split, 3, f"{root}/changes")
+    t1 = time.time()
+    seed_state(spark, habitat, state, rel.old, rel.dims, n_buckets=16)
+    t2 = time.time()
+    stream = (
+        spark.readStream.schema(unified.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{root}/changes")
     )
+    out = maintain_stream(
+        spark, habitat, stream, state, rel.dims, n_buckets=16,
+        render_extra={k: rel.dims[k] for k in render_extra},
+    )
+    STREAM_PHASES.clear()
+    STREAM_PHASES.update({
+        "fixtures_s": t1 - t0,
+        "seed_s": t2 - t1,
+        "steady_s": time.time() - t2,
+    })
+    return out
+
+
+def _ivm_mart_taxonomy(spark, sf):
+    """Release-over-release INCREMENTAL rebuild of the taxon-xrefs
+    mart (domain/mart_ivm.py): seed the count-pyramid supports from
+    the OLD release's protein/match snapshots, fold the protein AND
+    match changelogs (snapshot_delta_images) through the bilinear
+    delta rule, render — and the result must equal the full rebuild
+    of the NEW release (the oracle recomputes it in DuckDB). This is
+    the reference's per-release full-DAG pain
+    (reference interpro7dw/cli.py:101-986, export-entry2xrefs
+    budgeted <=24h/100GB at cli.py:355) replaced by a |delta|-cost
+    merge."""
+    r = _taxon_release(spark, sf)
+    d = r.dims
     sup1 = maintain_taxon_supports(
-        sup0, dp, dm, p_new, m_old.drop("match_id"), pp, ps, anc
+        TAXON_HABITAT.seed(r.old, d), r.deltas["protein"], r.deltas["match"],
+        r.new["protein"], r.old["match"].drop("match_id"),
+        d["pp"], d["ps"], d["anc"],
     )
-    return taxon_mart_from_supports(sup1)
+    return TAXON_HABITAT.render(sup1)
 
 
 register(QuerySpec(
@@ -870,87 +1004,16 @@ register(QuerySpec(
 
 def _stream_ivm_mart(spark, sf):
     """The SAME release changelog as ivm_mart_taxonomy, drained as a
-    STREAM (streaming/mart_stream.py): protein+match changes
-    interleaved in one discriminated stream over 3 micro-batch files,
-    folded per epoch against COW-stored protein/match state, supports
-    committed as atomic version directories. Final rendered mart must
-    equal the full rebuild of the new release — same oracle as the
-    batch maintainer, because any micro-batch partitioning of the
-    changelog converges to the same supports."""
-    import shutil
-
-    from ..operators.cdc import snapshot_delta_images
-    from ..streaming.mart_stream import (
-        maintain_taxon_mart_stream,
-        seed_mart_state,
-        unify_changelogs,
-    )
-    from .spec import fixture_dir
-
-    cust = t(spark, sf, "customer")
-    ck = F.col("c_custkey")
-    p_new = cust.filter(ck % 19 != 0).select(
-        ck.cast("string").alias("protein_acc"),
-        F.concat_ws("", F.lit("N"), F.col("c_nationkey")).alias("tax_id"),
-    )
-    p_old = cust.filter(ck % 17 != 0).select(
-        ck.cast("string").alias("protein_acc"),
-        F.concat_ws(
-            "",
-            F.lit("N"),
-            (
-                F.col("c_nationkey")
-                + F.when(ck % 13 == 0, F.lit(1)).otherwise(F.lit(0))
-            )
-            % 25,
-        ).alias("tax_id"),
-    )
-    orders = t(spark, sf, "orders")
-    ok = F.col("o_orderkey")
-    sig_new = ok % 50
-    m_new = orders.filter(ok % 11 != 0).select(
-        ok.alias("match_id"),
-        F.col("o_custkey").cast("string").alias("protein_acc"),
-        F.concat_ws("", F.lit("SIG"), sig_new).alias("signature_acc"),
-        F.concat_ws("", F.lit("DB"), sig_new % 4).alias("database"),
-    )
-    sig_old = (ok + F.when(ok % 13 == 0, F.lit(3)).otherwise(F.lit(0))) % 50
-    m_old = orders.filter(ok % 7 != 0).select(
-        ok.alias("match_id"),
-        F.col("o_custkey").cast("string").alias("protein_acc"),
-        F.concat_ws("", F.lit("SIG"), sig_old).alias("signature_acc"),
-        F.concat_ws("", F.lit("DB"), sig_old % 4).alias("database"),
-    )
-    pp = _protein_proteomes(spark, sf)
-    ps = _protein_structures(spark, sf)
-    anc = _taxon_ancestors(spark, sf)
-    dp = snapshot_delta_images(p_old, p_new, ["protein_acc"], ["tax_id"])
-    dm = snapshot_delta_images(
-        m_old, m_new, ["match_id"],
-        ["protein_acc", "signature_acc", "database"],
-    )
-    unified = unify_changelogs(dp, dm)
-    root = fixture_dir("ivm_mart_stream", sf)
-    shutil.rmtree(root, ignore_errors=True)
-    shutil.rmtree(root + "_state", ignore_errors=True)
-    shutil.rmtree(root + "_state_chk", ignore_errors=True)
-    split = F.coalesce(
-        F.col("match_id") % 3, F.ascii(F.col("protein_acc")) % 3
-    )
-    # ONE partitionBy write builds all three micro-batch files (r16,
-    # guide §2.4): the full-outer snapshot_delta_images joins run once
-    # with no persist, where the r15 shape ran them once into a cache
-    # plus three filtered single-task write jobs.
-    write_split_fixture(unified, split, 3, f"{root}/changes")
-    state = root + "_state"
-    seed_mart_state(spark, p_old, m_old, pp, ps, anc, state, n_buckets=16)
-    stream = (
-        spark.readStream.schema(unified.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{root}/changes")
-    )
-    return maintain_taxon_mart_stream(
-        spark, stream, state, pp, ps, anc, n_buckets=16
+    STREAM (the taxon habitat, streaming/mart_stream.py): protein+match
+    changes interleaved in one discriminated stream over 3 micro-batch
+    files, folded per epoch against COW-stored protein/match state,
+    supports committed as atomic version directories. Final rendered
+    mart must equal the full rebuild of the new release — same oracle
+    as the batch maintainer, because any micro-batch partitioning of
+    the changelog converges to the same supports."""
+    return _stream_mart_spec(
+        spark, sf, TAXON_HABITAT, "ivm_mart_stream", _taxon_release,
+        F.coalesce(F.col("match_id") % 3, F.ascii(F.col("protein_acc")) % 3),
     )
 
 
@@ -983,22 +1046,7 @@ def _entry_release_tables(spark, sf) -> dict:
     matching the full-rebuild oracle's CTEs."""
     cust = t(spark, sf, "customer")
     ck = F.col("c_custkey")
-    p_new = cust.filter(ck % 19 != 0).select(
-        ck.cast("string").alias("protein_acc"),
-        F.concat_ws("", F.lit("N"), F.col("c_nationkey")).alias("tax_id"),
-    )
-    p_old = cust.filter(ck % 17 != 0).select(
-        ck.cast("string").alias("protein_acc"),
-        F.concat_ws(
-            "",
-            F.lit("N"),
-            (
-                F.col("c_nationkey")
-                + F.when(ck % 13 == 0, F.lit(1)).otherwise(F.lit(0))
-            )
-            % 25,
-        ).alias("tax_id"),
-    )
+    p_old, p_new = _protein_releases(cust)
     orders = t(spark, sf, "orders")
     ok = F.col("o_orderkey")
     sig_new = ok % 50
@@ -1036,6 +1084,21 @@ def _entry_release_tables(spark, sf) -> dict:
     }
 
 
+def _entry_release(spark, sf) -> _Release:
+    """The entry mart's release (:func:`_entry_release_tables`) keyed
+    like its habitat; the GO dim rides along for the render."""
+    r = _entry_release_tables(spark, sf)
+    return _release(
+        {"assign": r["pe_old"], "protein": r["p_old"]},
+        {"assign": r["pe_new"], "protein": r["p_new"]},
+        {
+            "assign": (["pe_id"], ["protein_acc", "entry_acc"]),
+            "protein": _PROTEIN_IMAGES,
+        },
+        {"pp": r["pp"], "ps": r["ps"], "pec": r["pec"], "entry_go": r["ego"]},
+    )
+
+
 def _ivm_mart_entry(spark, sf):
     """Release-over-release INCREMENTAL rebuild of the entry-xrefs
     mart — the reference's single worst release cost
@@ -1047,28 +1110,14 @@ def _ivm_mart_entry(spark, sf):
     entry_xrefs_mart semantics INCLUDING the EC coverage filter +
     stem fallback (a pure threshold function of maintained counts)
     and GO lists. Oracle: the full rebuild of the NEW release."""
-    from ..domain.mart_ivm import (
-        entry_mart_from_supports,
-        maintain_entry_supports,
-        seed_entry_supports,
-    )
-    from ..operators.cdc import snapshot_delta_images
-
-    r = _entry_release_tables(spark, sf)
-    sup0 = seed_entry_supports(
-        r["pe_old"].drop("pe_id"), r["p_old"], r["pp"], r["ps"], r["pec"]
-    )
-    dpe = snapshot_delta_images(
-        r["pe_old"], r["pe_new"], ["pe_id"], ["protein_acc", "entry_acc"]
-    )
-    dp = snapshot_delta_images(
-        r["p_old"], r["p_new"], ["protein_acc"], ["tax_id"]
-    )
+    r = _entry_release(spark, sf)
+    d = r.dims
     sup1 = maintain_entry_supports(
-        sup0, dpe, dp, r["p_new"], r["pe_old"].drop("pe_id"),
-        r["pp"], r["ps"], r["pec"],
+        ENTRY_HABITAT.seed(r.old, d), r.deltas["assign"], r.deltas["protein"],
+        r.new["protein"], r.old["assign"].drop("pe_id"),
+        d["pp"], d["ps"], d["pec"],
     )
-    return entry_mart_from_supports(sup1, entry_go=r["ego"])
+    return ENTRY_HABITAT.render(sup1, entry_go=d["entry_go"])
 
 
 def _must_replace(s: str, old: str, new: str) -> str:
@@ -1115,80 +1164,21 @@ register(QuerySpec(
 ))
 
 
-# Phase wall-times of the LAST _stream_ivm_mart_entry build — bench.py
-# reports them additively as the r15-verdict-requested seed_s/steady_s
-# split (fixture build vs one-time state seed vs the 3-epoch stream
-# drain). Measurement hook only: timers around existing calls, no
-# behavior change.
-ENTRY_STREAM_PHASES: dict[str, float] = {}
-
-
 def _stream_ivm_mart_entry(spark, sf):
     """The SAME release changelog as z_ivm_mart_entry2xrefs, drained
-    as a STREAM (streaming/mart_stream.py, entry habitat): assignment
-    + protein-dim changes interleaved in one discriminated stream
-    over 3 micro-batch files, folded per epoch against COW-stored
-    protein/assignment state; the three assignment-scale supports
-    advance as COW touched-bucket merges, the two aggregate-sized
-    ones rewrite whole, all committed atomically per version. Final
-    rendered mart must equal the full rebuild of the new release."""
-    import shutil
-    import time as _time
-
-    _t0 = _time.time()
-
-    from ..operators.cdc import snapshot_delta_images
-    from ..streaming.mart_stream import (
-        maintain_entry_mart_stream,
-        seed_entry_mart_state,
-        unify_entry_changelogs,
+    as a STREAM (the entry habitat, streaming/mart_stream.py):
+    assignment + protein-dim changes interleaved in one discriminated
+    stream over 3 micro-batch files, folded per epoch against
+    COW-stored protein/assignment state; the three assignment-scale
+    supports advance as COW touched-bucket merges, the two
+    aggregate-sized ones rewrite whole, all committed atomically per
+    version. Final rendered mart must equal the full rebuild of the
+    new release."""
+    return _stream_mart_spec(
+        spark, sf, ENTRY_HABITAT, "ivm_mart_entry_stream", _entry_release,
+        F.coalesce(F.col("pe_id") % 3, F.ascii(F.col("protein_acc")) % 3),
+        render_extra=("entry_go",),
     )
-    from .spec import fixture_dir
-
-    r = _entry_release_tables(spark, sf)
-    dpe = snapshot_delta_images(
-        r["pe_old"], r["pe_new"], ["pe_id"], ["protein_acc", "entry_acc"]
-    )
-    dp = snapshot_delta_images(
-        r["p_old"], r["p_new"], ["protein_acc"], ["tax_id"]
-    )
-    unified = unify_entry_changelogs(dpe, dp)
-    root = fixture_dir("ivm_mart_entry_stream", sf)
-    shutil.rmtree(root, ignore_errors=True)
-    shutil.rmtree(root + "_state", ignore_errors=True)
-    shutil.rmtree(root + "_state_chk", ignore_errors=True)
-    split = F.coalesce(
-        F.col("pe_id") % 3, F.ascii(F.col("protein_acc")) % 3
-    )
-    # ONE partitionBy write builds all three micro-batch files (r16,
-    # guide §2.4): the full-outer snapshot_delta_images joins run once
-    # with no persist, where the r15 shape ran them once into a cache
-    # plus three filtered single-task write jobs.
-    write_split_fixture(unified, split, 3, f"{root}/changes")
-    _t1 = _time.time()
-    state = root + "_state"
-    seed_entry_mart_state(
-        spark, r["p_old"], r["pe_old"], r["pp"], r["ps"], r["pec"],
-        state, n_buckets=16,
-    )
-    _t2 = _time.time()
-    stream = (
-        spark.readStream.schema(unified.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{root}/changes")
-    )
-    out = maintain_entry_mart_stream(
-        spark, stream, state, r["pp"], r["ps"], r["pec"],
-        entry_go=r["ego"], n_buckets=16,
-    )
-    _t3 = _time.time()
-    ENTRY_STREAM_PHASES.clear()
-    ENTRY_STREAM_PHASES.update({
-        "fixtures_s": _t1 - _t0,
-        "seed_s": _t2 - _t1,
-        "steady_s": _t3 - _t2,
-    })
-    return out
 
 
 def _ivm_count_pyramid(spark, sf):
@@ -1292,30 +1282,6 @@ register(QuerySpec(
 ))
 
 
-def _match_releases(spark, sf):
-    """The shared OLD/NEW match snapshots of every xrefs-mart IVM spec
-    (same derivation as ivm_mart_taxonomy's): the old release filters
-    %7 keys out and shifts %13 signatures; the new filters %11 — so
-    one release delta carries inserts, deletes AND signature changes."""
-    orders = t(spark, sf, "orders")
-    ok = F.col("o_orderkey")
-    sig_new = ok % 50
-    m_new = orders.filter(ok % 11 != 0).select(
-        ok.alias("match_id"),
-        F.col("o_custkey").cast("string").alias("protein_acc"),
-        F.concat_ws("", F.lit("SIG"), sig_new).alias("signature_acc"),
-        F.concat_ws("", F.lit("DB"), sig_new % 4).alias("database"),
-    )
-    sig_old = (ok + F.when(ok % 13 == 0, F.lit(3)).otherwise(F.lit(0))) % 50
-    m_old = orders.filter(ok % 7 != 0).select(
-        ok.alias("match_id"),
-        F.col("o_custkey").cast("string").alias("protein_acc"),
-        F.concat_ws("", F.lit("SIG"), sig_old).alias("signature_acc"),
-        F.concat_ws("", F.lit("DB"), sig_old % 4).alias("database"),
-    )
-    return m_old, m_new
-
-
 def _new_release_oracle(full_mart_name: str) -> str:
     """A full-rebuild oracle of the NEW release: the base mart's
     oracle with its matches CTE filtered to the surviving generation
@@ -1328,32 +1294,39 @@ def _new_release_oracle(full_mart_name: str) -> str:
     )
 
 
+def _clan_release(spark, sf) -> _Release:
+    """The clan mart's release: the match snapshots (its one arm) over
+    the clan, protein-dim and entry->structure dims."""
+    m_old, m_new = _match_releases(spark, sf)
+    return _release(
+        {"match": m_old},
+        {"match": m_new},
+        {"match": _MATCH_IMAGES},
+        {
+            "sc": _signature_clans(spark, sf),
+            "prot": _proteins(spark, sf),
+            "pp": _protein_proteomes(spark, sf),
+            "dom": _domorg_members(spark, sf),
+            "entry_structures": _pdb_matches(spark, sf)
+            .select("signature_acc", "pdb_id")
+            .distinct(),
+        },
+    )
+
+
 def _ivm_mart_clan(spark, sf):
     """Release-over-release INCREMENTAL rebuild of the clan-xrefs
     mart (domain/mart_ivm2.py; reference export-clan2xrefs <=6h/32GB,
     /root/reference/interpro7dw/cli.py:323): seed the clan count
     pyramid from the OLD match snapshot, fold the match changelog,
     render — must equal the full rebuild of the NEW release."""
-    from ..domain.mart_ivm2 import (
-        clan_mart_from_supports,
-        maintain_clan_supports,
-        seed_clan_supports,
+    r = _clan_release(spark, sf)
+    d = r.dims
+    sup1 = maintain_clan_supports(
+        CLAN_HABITAT.seed(r.old, d), r.deltas["match"],
+        d["sc"], d["prot"], d["pp"], d["dom"], d["entry_structures"],
     )
-    from ..operators.cdc import snapshot_delta_images
-
-    m_old, m_new = _match_releases(spark, sf)
-    sc = _signature_clans(spark, sf)
-    prot = _proteins(spark, sf)
-    pp = _protein_proteomes(spark, sf)
-    dom = _domorg_members(spark, sf)
-    es = _pdb_matches(spark, sf).select("signature_acc", "pdb_id").distinct()
-    sup0 = seed_clan_supports(m_old.drop("match_id"), sc, prot, pp, dom, es)
-    dm = snapshot_delta_images(
-        m_old, m_new, ["match_id"],
-        ["protein_acc", "signature_acc", "database"],
-    )
-    sup1 = maintain_clan_supports(sup0, dm, sc, prot, pp, dom, es)
-    return clan_mart_from_supports(sup1)
+    return CLAN_HABITAT.render(sup1)
 
 
 register(QuerySpec(
@@ -1376,20 +1349,9 @@ register(QuerySpec(
 ))
 
 
-def _ivm_mart_proteome(spark, sf):
-    """Release-over-release INCREMENTAL rebuild of the proteome-xrefs
-    mart (domain/mart_ivm2.py; reference export-proteome2xrefs
-    <=6h/100GB, /root/reference/interpro7dw/cli.py:379): seed from
-    the OLD release (perturbed assignment snapshot + old matches),
-    fold BOTH changelogs via the bilinear rule, render — must equal
-    the full rebuild of the NEW release."""
-    from ..domain.mart_ivm2 import (
-        maintain_proteome_supports,
-        proteome_mart_from_supports,
-        seed_proteome_supports,
-    )
-    from ..operators.cdc import snapshot_delta_images
-
+def _proteome_release(spark, sf) -> _Release:
+    """The proteome mart's release: the protein->proteome assignment
+    and match snapshots (the bilinear pair) over the structure dim."""
     m_old, m_new = _match_releases(spark, sf)
     pp_new = _protein_proteomes(spark, sf)
     cust = t(spark, sf, "customer")
@@ -1415,19 +1377,28 @@ def _ivm_mart_proteome(spark, sf):
             )
         )
     )
-    ps = _protein_structures(spark, sf)
-    sup0 = seed_proteome_supports(pp_old, m_old.drop("match_id"), ps)
-    dpp = snapshot_delta_images(
-        pp_old, pp_new, ["protein_acc"], ["proteome_id"]
+    return _release(
+        {"assign": pp_old, "match": m_old},
+        {"assign": pp_new, "match": m_new},
+        {"assign": (["protein_acc"], ["proteome_id"]), "match": _MATCH_IMAGES},
+        {"ps": _protein_structures(spark, sf)},
     )
-    dm = snapshot_delta_images(
-        m_old, m_new, ["match_id"],
-        ["protein_acc", "signature_acc", "database"],
-    )
+
+
+def _ivm_mart_proteome(spark, sf):
+    """Release-over-release INCREMENTAL rebuild of the proteome-xrefs
+    mart (domain/mart_ivm2.py; reference export-proteome2xrefs
+    <=6h/100GB, interpro7dw/cli.py:379): seed from
+    the OLD release (perturbed assignment snapshot + old matches),
+    fold BOTH changelogs via the bilinear rule, render — must equal
+    the full rebuild of the NEW release."""
+    r = _proteome_release(spark, sf)
     sup1 = maintain_proteome_supports(
-        sup0, dpp, dm, pp_new, m_old.drop("match_id"), ps
+        PROTEOME_HABITAT.seed(r.old, r.dims), r.deltas["assign"],
+        r.deltas["match"], r.new["assign"], r.old["match"].drop("match_id"),
+        r.dims["ps"],
     )
-    return proteome_mart_from_supports(sup1)
+    return PROTEOME_HABITAT.render(sup1)
 
 
 register(QuerySpec(
@@ -1448,21 +1419,10 @@ register(QuerySpec(
 ))
 
 
-def _ivm_mart_structure(spark, sf):
-    """Release-over-release INCREMENTAL rebuild of the structure-xrefs
-    mart (domain/mart_ivm2.py; reference export-structure2xrefs,
-    /root/reference/interpro7dw/cli.py:402): two independent
-    changelogs — the pdb-match rows (keyed pm_id) and the
-    protein->structure links (keyed by the composite pair) — fold the
-    release forward; render must equal the full rebuild of the NEW
-    release."""
-    from ..domain.mart_ivm2 import (
-        maintain_structure_supports,
-        seed_structure_supports,
-        structure_mart_from_supports,
-    )
-    from ..operators.cdc import snapshot_delta_images
-
+def _structure_release(spark, sf) -> _Release:
+    """The structure mart's release: two independent arms — pdb-match
+    rows (keyed pm_id) and protein->structure links (keyed by the
+    composite pair, so that changelog is pure insert/delete)."""
     orders = t(spark, sf, "orders")
     ok = F.col("o_orderkey")
     sig_new = ok % 50
@@ -1495,24 +1455,39 @@ def _ivm_mart_structure(spark, sf):
         )
         .distinct()
     )
-    sc = _signature_clans(spark, sf)
-    prot = _proteins(spark, sf)
-    pp = _protein_proteomes(spark, sf)
-    pdm = _domorg_members(spark, sf).select("protein_acc", "dom_id").distinct()
-    sup0 = seed_structure_supports(
-        pm_old.drop("pm_id"), sc, ps_old, prot, pp, pdm
+    return _release(
+        {"pmatch": pm_old, "plink": ps_old},
+        {"pmatch": pm_new, "plink": ps_new},
+        {
+            "pmatch": (["pm_id"], ["pdb_id", "signature_acc", "database"]),
+            "plink": (["protein_acc", "pdb_id"], ["pdb_id"]),
+        },
+        {
+            "sc": _signature_clans(spark, sf),
+            "prot": _proteins(spark, sf),
+            "pp": _protein_proteomes(spark, sf),
+            "pdm": _domorg_members(spark, sf)
+            .select("protein_acc", "dom_id")
+            .distinct(),
+        },
     )
-    dpm = snapshot_delta_images(
-        pm_old, pm_new, ["pm_id"],
-        ["pdb_id", "signature_acc", "database"],
-    )
-    dps = snapshot_delta_images(
-        ps_old, ps_new, ["protein_acc", "pdb_id"], ["pdb_id"]
-    )
+
+
+def _ivm_mart_structure(spark, sf):
+    """Release-over-release INCREMENTAL rebuild of the structure-xrefs
+    mart (domain/mart_ivm2.py; reference export-structure2xrefs,
+    interpro7dw/cli.py:402): two independent
+    changelogs — the pdb-match rows (keyed pm_id) and the
+    protein->structure links (keyed by the composite pair) — fold the
+    release forward; render must equal the full rebuild of the NEW
+    release."""
+    r = _structure_release(spark, sf)
+    d = r.dims
     sup1 = maintain_structure_supports(
-        sup0, dpm, dps, sc, prot, pp, pdm
+        STRUCT_HABITAT.seed(r.old, d), r.deltas["pmatch"], r.deltas["plink"],
+        d["sc"], d["prot"], d["pp"], d["pdm"],
     )
-    return structure_mart_from_supports(sup1)
+    return STRUCT_HABITAT.render(sup1)
 
 
 register(QuerySpec(
@@ -1551,48 +1526,9 @@ def _stream_ivm_mart_clan(spark, sf):
     no rescan exist at all) and folding the sup_c_sig transitions
     through the static entry->structure dim. Final rendered mart must
     equal the full rebuild of the new release."""
-    import shutil
-
-    from ..operators.cdc import snapshot_delta_images
-    from ..streaming.mart_stream import (
-        maintain_clan_mart_stream,
-        seed_clan_mart_state,
-        unify_clan_changelogs,
-    )
-    from .spec import fixture_dir
-
-    m_old, m_new = _match_releases(spark, sf)
-    sc = _signature_clans(spark, sf)
-    prot = _proteins(spark, sf)
-    pp = _protein_proteomes(spark, sf)
-    dom = _domorg_members(spark, sf)
-    es = _pdb_matches(spark, sf).select("signature_acc", "pdb_id").distinct()
-    dm = snapshot_delta_images(
-        m_old, m_new, ["match_id"],
-        ["protein_acc", "signature_acc", "database"],
-    )
-    unified = unify_clan_changelogs(dm)
-    root = fixture_dir("ivm_mart_clan_stream", sf)
-    shutil.rmtree(root, ignore_errors=True)
-    shutil.rmtree(root + "_state", ignore_errors=True)
-    shutil.rmtree(root + "_state_chk", ignore_errors=True)
-    # ONE partitionBy write builds all three micro-batch files (r16,
-    # guide §2.4 — see the taxon stream spec's comment)
-    write_split_fixture(
-        unified, F.col("match_id") % 3, 3, f"{root}/changes"
-    )
-    state = root + "_state"
-    seed_clan_mart_state(
-        spark, m_old.drop("match_id"), sc, prot, pp, dom, es,
-        state, n_buckets=16,
-    )
-    stream = (
-        spark.readStream.schema(unified.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{root}/changes")
-    )
-    return maintain_clan_mart_stream(
-        spark, stream, state, sc, prot, pp, dom, es, n_buckets=16
+    return _stream_mart_spec(
+        spark, sf, CLAN_HABITAT, "ivm_mart_clan_stream", _clan_release,
+        F.col("match_id") % 3,
     )
 
 
@@ -1614,7 +1550,7 @@ register(QuerySpec(
     "micro-batch partitioning of the changelog converges to the same "
     "supports.",
     build=_stream_ivm_mart_clan,
-    oracle=lambda: _new_release_oracle("mart_clan2xrefs"),
+    oracle=REGISTRY["z_ivm_mart_clan2xrefs"].oracle,
 ))
 
 
@@ -1627,68 +1563,10 @@ def _stream_ivm_mart_proteome(spark, sf):
     are partition-pruned bucket reads, and the facts-scale
     sup_p_prot_db COW-merges touched buckets only. Final rendered
     mart must equal the full rebuild of the new release."""
-    import shutil
-
-    from ..operators.cdc import snapshot_delta_images
-    from ..streaming.mart_stream import (
-        maintain_proteome_mart_stream,
-        seed_proteome_mart_state,
-        unify_proteome_changelogs,
-    )
-    from .spec import fixture_dir
-
-    m_old, m_new = _match_releases(spark, sf)
-    pp_new = _protein_proteomes(spark, sf)
-    cust = t(spark, sf, "customer")
-    ck = F.col("c_custkey")
-    pp_old = (
-        cust.filter((F.col("c_acctbal") >= 0) & (ck % 17 != 0))
-        .select(
-            ck.cast("string").alias("protein_acc"),
-            F.when(
-                ck % 13 == 0,
-                F.concat_ws("", F.col("c_mktsegment"), F.lit("_OLD")),
-            )
-            .otherwise(F.col("c_mktsegment"))
-            .alias("proteome_id"),
-        )
-        .unionByName(
-            cust.filter((F.col("c_acctbal") < 0) & (ck % 29 == 0)).select(
-                ck.cast("string").alias("protein_acc"),
-                F.lit("GONE").alias("proteome_id"),
-            )
-        )
-    )
-    ps = _protein_structures(spark, sf)
-    dpp = snapshot_delta_images(
-        pp_old, pp_new, ["protein_acc"], ["proteome_id"]
-    )
-    dm = snapshot_delta_images(
-        m_old, m_new, ["match_id"],
-        ["protein_acc", "signature_acc", "database"],
-    )
-    unified = unify_proteome_changelogs(dpp, dm)
-    root = fixture_dir("ivm_mart_proteome_stream", sf)
-    shutil.rmtree(root, ignore_errors=True)
-    shutil.rmtree(root + "_state", ignore_errors=True)
-    shutil.rmtree(root + "_state_chk", ignore_errors=True)
-    split = F.coalesce(
-        F.col("match_id") % 3, F.ascii(F.col("protein_acc")) % 3
-    )
-    # ONE partitionBy write builds all three micro-batch files (r16,
-    # guide §2.4 — see the taxon stream spec's comment)
-    write_split_fixture(unified, split, 3, f"{root}/changes")
-    state = root + "_state"
-    seed_proteome_mart_state(
-        spark, pp_old, m_old, ps, state, n_buckets=16
-    )
-    stream = (
-        spark.readStream.schema(unified.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{root}/changes")
-    )
-    return maintain_proteome_mart_stream(
-        spark, stream, state, ps, n_buckets=16
+    return _stream_mart_spec(
+        spark, sf, PROTEOME_HABITAT, "ivm_mart_proteome_stream",
+        _proteome_release,
+        F.coalesce(F.col("match_id") % 3, F.ascii(F.col("protein_acc")) % 3),
     )
 
 
@@ -1707,7 +1585,7 @@ register(QuerySpec(
     "Oracle: the full DuckDB rebuild of the new release — identical "
     "to ivm_mart_proteome2xrefs.",
     build=_stream_ivm_mart_proteome,
-    oracle=lambda: _new_release_oracle("z_mart_proteome2xrefs"),
+    oracle=REGISTRY["z_ivm_mart_proteome2xrefs"].oracle,
 ))
 
 
@@ -1720,79 +1598,10 @@ def _stream_ivm_mart_structure(spark, sf):
     fact store; the facts-scale sup_s_prot COW-merges the link arm's
     touched buckets only. Final rendered mart must equal the full
     rebuild of the new release."""
-    import shutil
-
-    from ..operators.cdc import snapshot_delta_images
-    from ..streaming.mart_stream import (
-        maintain_structure_mart_stream,
-        seed_structure_mart_state,
-        unify_structure_changelogs,
-    )
-    from .spec import fixture_dir
-
-    orders = t(spark, sf, "orders")
-    ok = F.col("o_orderkey")
-    sig_new = ok % 50
-    pm_new = orders.filter(ok % 11 != 0).select(
-        ok.alias("pm_id"),
-        F.concat_ws("", F.lit("PDB"), ok % 30).alias("pdb_id"),
-        F.concat_ws("", F.lit("SIG"), sig_new).alias("signature_acc"),
-        F.concat_ws("", F.lit("DB"), sig_new % 4).alias("database"),
-    )
-    sig_old = (ok + F.when(ok % 13 == 0, F.lit(3)).otherwise(F.lit(0))) % 50
-    pm_old = orders.filter(ok % 7 != 0).select(
-        ok.alias("pm_id"),
-        F.concat_ws("", F.lit("PDB"), ok % 30).alias("pdb_id"),
-        F.concat_ws("", F.lit("SIG"), sig_old).alias("signature_acc"),
-        F.concat_ws("", F.lit("DB"), sig_old % 4).alias("database"),
-    )
-    ps_new = _protein_structures(spark, sf)
-    ps_old = (
-        orders.filter(ok % 19 != 0)
-        .select(
-            F.col("o_custkey").cast("string").alias("protein_acc"),
-            F.concat_ws(
-                "",
-                F.lit("PDB"),
-                (ok % 30 + F.when(ok % 23 == 0, F.lit(2)).otherwise(F.lit(0)))
-                % 30,
-            ).alias("pdb_id"),
-        )
-        .distinct()
-    )
-    sc = _signature_clans(spark, sf)
-    prot = _proteins(spark, sf)
-    pp = _protein_proteomes(spark, sf)
-    pdm = _domorg_members(spark, sf).select("protein_acc", "dom_id").distinct()
-    dpm = snapshot_delta_images(
-        pm_old, pm_new, ["pm_id"],
-        ["pdb_id", "signature_acc", "database"],
-    )
-    dps = snapshot_delta_images(
-        ps_old, ps_new, ["protein_acc", "pdb_id"], ["pdb_id"]
-    )
-    unified = unify_structure_changelogs(dpm, dps)
-    root = fixture_dir("ivm_mart_structure_stream", sf)
-    shutil.rmtree(root, ignore_errors=True)
-    shutil.rmtree(root + "_state", ignore_errors=True)
-    shutil.rmtree(root + "_state_chk", ignore_errors=True)
-    split = F.coalesce(
-        F.col("pm_id") % 3, F.ascii(F.col("protein_acc")) % 3
-    )
-    # ONE partitionBy write builds all three micro-batch files (r16,
-    # guide §2.4 — see the taxon stream spec's comment)
-    write_split_fixture(unified, split, 3, f"{root}/changes")
-    state = root + "_state"
-    seed_structure_mart_state(
-        spark, pm_old, sc, ps_old, prot, pp, pdm, state, n_buckets=16
-    )
-    stream = (
-        spark.readStream.schema(unified.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{root}/changes")
-    )
-    return maintain_structure_mart_stream(
-        spark, stream, state, sc, prot, pp, pdm, n_buckets=16
+    return _stream_mart_spec(
+        spark, sf, STRUCT_HABITAT, "ivm_mart_structure_stream",
+        _structure_release,
+        F.coalesce(F.col("pm_id") % 3, F.ascii(F.col("protein_acc")) % 3),
     )
 
 
@@ -1811,10 +1620,5 @@ register(QuerySpec(
     "Oracle: the full DuckDB rebuild of the new release — identical "
     "to z_ivm_mart_structure2xrefs.",
     build=_stream_ivm_mart_structure,
-    oracle=lambda: _must_replace(
-        REGISTRY["z_mart_structure2xrefs"].oracle,
-        "AS db\n    FROM orders\n  ),\n  signature_clans",
-        "AS db\n    FROM orders WHERE o_orderkey % 11 <> 0\n  ),"
-        "\n  signature_clans",
-    ),
+    oracle=REGISTRY["z_ivm_mart_structure2xrefs"].oracle,
 ))

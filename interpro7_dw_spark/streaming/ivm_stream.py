@@ -380,7 +380,7 @@ def _pick_version(
 ) -> tuple[int, int | None, bool, str]:
     """Shared time-travel resolution over committed ``(version,
     applied_epoch, committed, name)`` tuples (this module and
-    ``mart_stream.read_taxon_mart_version``). An as-of-``epoch`` read
+    ``mart_habitat.read_version``). An as-of-``epoch`` read
     with no qualifying epoch-stamped version falls back to the newest
     SEED version (epoch None — batch-built, pre-changelog by
     construction): the seed release is a valid as-of answer for any

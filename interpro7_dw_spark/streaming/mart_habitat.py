@@ -149,12 +149,16 @@ class DimUse:
 class MartHabitat:
     """The full declarative spec of one maintained mart: its count
     pyramid, changelog arms, fact stores, bilinear rescans, static
-    dims, plus the two mart-specific callables — ``deltas(parts,
+    dims, plus the three mart-specific callables — ``seed(old, dims)
+    -> {support: relation}`` (the full aggregation of every support
+    from the old release's snapshots, keyed by arm tag), ``deltas(parts,
     rescans, dims) -> {support: signed delta}`` and
-    ``render(supports, **extra) -> DataFrame``."""
+    ``render(supports, **extra) -> DataFrame``. ``dims`` is always the
+    caller's dict keyed by :class:`DimUse` name."""
 
     pyramid: MartPyramid
     sources: tuple[ChangeSrc, ...]
+    seed: Callable[..., dict[str, DataFrame]]
     deltas: Callable[..., dict[str, DataFrame]]
     render: Callable[..., DataFrame]
     stores: tuple[FactStore, ...] = ()
@@ -411,22 +415,23 @@ def seed_state(
     spark: SparkSession,
     habitat: MartHabitat,
     state_dir: str,
-    store_snapshots: Mapping[str, DataFrame],
+    old: Mapping[str, DataFrame],
     dims: Mapping[str, DataFrame],
-    supports: dict[str, DataFrame],
     n_buckets: int = 16,
 ) -> None:
     """Materialize version 0 of every state piece from the base
     snapshot (the one full rebuild a mart ever needs): the fact COW
-    stores, the protein-keyed static dims in the same bucket layout,
-    and the supports per their storage discipline. Every piece writes
+    stores (each from ``old[store.src]``, the old release keyed by
+    changelog arm tag), the protein-keyed static dims in the same
+    bucket layout, and the supports ``habitat.seed(old, dims)``
+    aggregates, per their storage discipline. Every piece writes
     a DISJOINT path from independent plans (the supports share their
     seed's owned persists, whose blocks the block manager computes
     once under concurrent first readers), so all writes run from one
     driver pool (guide §2.6); the mart root ``_SUCCESS`` still commits
     the supports LAST, after every write returned."""
     def store_thunk(st: FactStore):
-        return lambda: store_snapshots[st.name].withColumn(
+        return lambda: old[st.src].withColumn(
             "__b", _bucket(F.col(st.bucket_col), n_buckets)
         ).write.partitionBy("__b").parquet(f"{state_dir}/{st.name}/v0")
 
@@ -437,7 +442,8 @@ def seed_state(
         if d.prune_src is not None
     ]
     thunks += _seed_support_thunks(
-        spark, state_dir, supports, habitat.pyramid, n_buckets
+        spark, state_dir, habitat.seed(old, dims), habitat.pyramid,
+        n_buckets,
     )
     run_parallel(thunks)
     _commit_marker(spark, f"{state_dir}/mart/v0")

@@ -1,18 +1,28 @@
-"""The five maintained warehouse marts' COW habitats — each one a
-DECLARATIVE :class:`.mart_habitat.MartHabitat` instantiation of the
-shared seed / epoch / stream / batch / time-travel machinery (r14
-verdict items 1 + 5: one code path for every mart, and the
-clan/proteome/structure maintainers get the same touched-bucket
-physical story taxon/entry had).
+"""The five maintained warehouse marts, each DEFINED ONCE as a
+declarative :class:`.mart_habitat.MartHabitat` — the one definition
+the shared seed / epoch / stream / batch / time-travel machinery of
+:mod:`.mart_habitat` consumes (r14 verdict items 1 + 5: one code path
+for every mart, and the clan/proteome/structure maintainers get the
+same touched-bucket physical story taxon/entry had).
 
 Each habitat declares: the discriminated changelog arms, the fact COW
 stores bilinear rescans need (none, when the mart is linear in its
 changelog), the |delta|-pruned rescans, the bucketed static dims, and
-the two mart-specific callables (support deltas, render). The batch
+the three mart-specific callables (seed, support deltas, render).
+Callers pass a habitat constant to the generic functions —
+``seed_state(spark, TAXON_HABITAT, state_dir, old, dims)``,
+``maintain_stream``, ``maintain_batch``, ``unify``, ``read_supports``,
+``read_version`` — with ``old`` and the changelogs keyed by arm tag
+and ``dims`` by :class:`.mart_habitat.DimUse` name. The batch
 maintainer folds one release changelog; the stream drains the same
 changelog as ``trigger(availableNow)`` micro-batches — both through
 the SAME epoch body, so streamed == batched == the full rebuild of
 the final snapshot (each mart's catalog spec oracles exactly that).
+
+The only functions here are the entry habitat's three positional
+entry points (``unify_entry_changelogs``, ``seed_entry_mart_state``,
+``maintain_entry_mart_stream``), which the benchmark's ``mart_stream``
+workload (``prbench/workloads.py``) drives.
 
 Reference release budgets these standing queries replace:
 export-entry2xrefs <=24h/100GB
@@ -56,11 +66,7 @@ from .mart_habitat import (
     FactStore,
     MartHabitat,
     Rescan,
-    cow_apply_count_delta,  # noqa: F401 — re-export (tests/tools import here)
-    maintain_batch,
     maintain_stream,
-    read_supports,
-    read_version,
     seed_state,
     unify,
 )
@@ -104,6 +110,10 @@ TAXON_HABITAT = MartHabitat(
         Rescan("m_old", "matches", "old", "protein", drop=("match_id",)),
     ),
     dims=(DimUse("pp", "protein"), DimUse("ps", "protein"), DimUse("anc")),
+    seed=lambda old, dims: seed_taxon_supports(
+        old["protein"], old["match"].drop("match_id"),
+        dims["pp"], dims["ps"], dims["anc"],
+    ),
     deltas=lambda parts, rescans, dims: taxon_support_deltas(
         parts["protein"], parts["match"], rescans["p_new"], rescans["m_old"],
         dims["pp"], dims["ps"], dims["anc"],
@@ -114,93 +124,6 @@ TAXON_HABITAT = MartHabitat(
     # union of their discovery sets bounds its touched buckets
     sup_touch={"sup_prot_db": ("protein", "match")},
 )
-
-
-def unify_changelogs(delta_p: DataFrame, delta_m: DataFrame) -> DataFrame:
-    """Interleave the protein and match changelogs into the one
-    discriminated stream shape the taxon maintainer consumes."""
-    return unify(TAXON_HABITAT, {"protein": delta_p, "match": delta_m})
-
-
-def seed_mart_state(
-    spark: SparkSession,
-    proteins: DataFrame,            # protein_acc, tax_id
-    matches: DataFrame,             # match_id, protein_acc, signature_acc, database
-    protein_proteomes: DataFrame,
-    protein_structures: DataFrame,
-    taxon_ancestors: DataFrame,
-    state_dir: str,
-    n_buckets: int = 16,
-) -> None:
-    """Materialize version 0 of the taxon-mart state from the base
-    snapshot (the one full rebuild a mart ever needs)."""
-    sup = seed_taxon_supports(
-        proteins, matches.drop("match_id"),
-        protein_proteomes, protein_structures, taxon_ancestors,
-    )
-    seed_state(
-        spark, TAXON_HABITAT, state_dir,
-        store_snapshots={"proteins": proteins, "matches": matches},
-        dims={"pp": protein_proteomes, "ps": protein_structures},
-        supports=sup, n_buckets=n_buckets,
-    )
-
-
-def _taxon_dims(pp, ps, anc):
-    return {"pp": pp, "ps": ps, "anc": anc}
-
-
-def read_mart_supports(
-    spark: SparkSession, state_dir: str, version_name: str
-) -> dict[str, DataFrame]:
-    return read_supports(spark, TAXON_PYRAMID, state_dir, version_name)
-
-
-def maintain_taxon_mart_stream(
-    spark: SparkSession,
-    changes: DataFrame,             # streaming DF in unify_changelogs shape
-    state_dir: str,
-    protein_proteomes: DataFrame,
-    protein_structures: DataFrame,
-    taxon_ancestors: DataFrame,
-    n_buckets: int = 16,
-    keep_last: int | None = None,
-) -> DataFrame:
-    return maintain_stream(
-        spark, TAXON_HABITAT, changes, state_dir,
-        _taxon_dims(protein_proteomes, protein_structures, taxon_ancestors),
-        n_buckets, keep_last,
-    )
-
-
-def maintain_taxon_mart_batch(
-    spark: SparkSession,
-    state_dir: str,
-    delta_p: DataFrame,
-    delta_m: DataFrame,
-    protein_proteomes: DataFrame,
-    protein_structures: DataFrame,
-    taxon_ancestors: DataFrame,
-    n_buckets: int = 16,
-    keep_last: int | None = None,
-) -> DataFrame:
-    return maintain_batch(
-        spark, TAXON_HABITAT, state_dir,
-        {"protein": delta_p, "match": delta_m},
-        _taxon_dims(protein_proteomes, protein_structures, taxon_ancestors),
-        n_buckets, keep_last,
-    )
-
-
-def read_taxon_mart_version(
-    spark: SparkSession,
-    state_dir: str,
-    version: int | None = None,
-    epoch: int | None = None,
-) -> DataFrame:
-    """Time travel over the maintained taxon mart (see
-    :func:`.mart_habitat.read_version`)."""
-    return read_version(spark, TAXON_HABITAT, state_dir, version, epoch)
 
 
 # ------------------------------------------------------------- entry
@@ -247,6 +170,10 @@ ENTRY_HABITAT = MartHabitat(
         DimUse("pp", "assign"), DimUse("ps", "assign"),
         DimUse("pec", "assign"),
     ),
+    seed=lambda old, dims: seed_entry_supports(
+        old["assign"].drop("pe_id"), old["protein"],
+        dims["pp"], dims["ps"], dims["pec"],
+    ),
     deltas=lambda parts, rescans, dims: entry_support_deltas(
         parts["assign"], parts["protein"], rescans["p_new"],
         rescans["pe_old"], dims["pp"], dims["ps"], dims["pec"],
@@ -278,27 +205,12 @@ def seed_entry_mart_state(
     state_dir: str,
     n_buckets: int = 16,
 ) -> None:
-    sup = seed_entry_supports(
-        protein_entries.drop("pe_id"), protein_taxa,
-        protein_proteomes, protein_structures, protein_ecs,
-    )
     seed_state(
         spark, ENTRY_HABITAT, state_dir,
-        store_snapshots={
-            "proteins": protein_taxa, "assignments": protein_entries,
-        },
-        dims={
-            "pp": protein_proteomes, "ps": protein_structures,
-            "pec": protein_ecs,
-        },
-        supports=sup, n_buckets=n_buckets,
+        {"assign": protein_entries, "protein": protein_taxa},
+        {"pp": protein_proteomes, "ps": protein_structures, "pec": protein_ecs},
+        n_buckets,
     )
-
-
-def read_entry_mart_supports(
-    spark: SparkSession, state_dir: str, version_name: str
-) -> dict[str, DataFrame]:
-    return read_supports(spark, ENTRY_PYRAMID, state_dir, version_name)
 
 
 def maintain_entry_mart_stream(
@@ -314,10 +226,7 @@ def maintain_entry_mart_stream(
 ) -> DataFrame:
     return maintain_stream(
         spark, ENTRY_HABITAT, changes, state_dir,
-        {
-            "pp": protein_proteomes, "ps": protein_structures,
-            "pec": protein_ecs,
-        },
+        {"pp": protein_proteomes, "ps": protein_structures, "pec": protein_ecs},
         n_buckets, keep_last, render_extra={"entry_go": entry_go},
     )
 
@@ -342,6 +251,10 @@ CLAN_HABITAT = MartHabitat(
         DimUse("prot", "match"), DimUse("pp", "match"),
         DimUse("dom", "match"), DimUse("sc"), DimUse("entry_structures"),
     ),
+    seed=lambda old, dims: seed_clan_supports(
+        old["match"].drop("match_id"), dims["sc"], dims["prot"], dims["pp"],
+        dims["dom"], dims["entry_structures"],
+    ),
     deltas=lambda parts, rescans, dims: clan_support_deltas(
         parts["match"], dims["sc"], dims["prot"], dims["pp"], dims["dom"],
     ),
@@ -350,84 +263,6 @@ CLAN_HABITAT = MartHabitat(
     # broadcast clan dim — proteins come from dM's images alone
     sup_touch={"sup_c_prot": ("match",)},
 )
-
-
-def _clan_dims(sc, prot, pp, dom, es):
-    return {
-        "sc": sc, "prot": prot, "pp": pp, "dom": dom,
-        "entry_structures": es,
-    }
-
-
-def seed_clan_mart_state(
-    spark: SparkSession,
-    matches: DataFrame,             # protein_acc, signature_acc, database [, match_id]
-    signature_clans: DataFrame,
-    proteins: DataFrame,
-    protein_proteomes: DataFrame,
-    domorg_members: DataFrame,
-    entry_structures: DataFrame,
-    state_dir: str,
-    n_buckets: int = 16,
-) -> None:
-    if "match_id" in matches.columns:
-        matches = matches.drop("match_id")
-    sup = seed_clan_supports(
-        matches, signature_clans, proteins, protein_proteomes,
-        domorg_members, entry_structures,
-    )
-    seed_state(
-        spark, CLAN_HABITAT, state_dir,
-        store_snapshots={},
-        dims={"prot": proteins, "pp": protein_proteomes, "dom": domorg_members},
-        supports=sup, n_buckets=n_buckets,
-    )
-
-
-def maintain_clan_mart_stream(
-    spark: SparkSession,
-    changes: DataFrame,             # streaming match changelog (images shape)
-    state_dir: str,
-    signature_clans: DataFrame,
-    proteins: DataFrame,
-    protein_proteomes: DataFrame,
-    domorg_members: DataFrame,
-    entry_structures: DataFrame,
-    n_buckets: int = 16,
-    keep_last: int | None = None,
-) -> DataFrame:
-    return maintain_stream(
-        spark, CLAN_HABITAT, changes, state_dir,
-        _clan_dims(signature_clans, proteins, protein_proteomes,
-                   domorg_members, entry_structures),
-        n_buckets, keep_last,
-    )
-
-
-def maintain_clan_mart_batch(
-    spark: SparkSession,
-    state_dir: str,
-    delta_m: DataFrame,
-    signature_clans: DataFrame,
-    proteins: DataFrame,
-    protein_proteomes: DataFrame,
-    domorg_members: DataFrame,
-    entry_structures: DataFrame,
-    n_buckets: int = 16,
-    keep_last: int | None = None,
-) -> DataFrame:
-    return maintain_batch(
-        spark, CLAN_HABITAT, state_dir, {"match": delta_m},
-        _clan_dims(signature_clans, proteins, protein_proteomes,
-                   domorg_members, entry_structures),
-        n_buckets, keep_last,
-    )
-
-
-def unify_clan_changelogs(delta_m: DataFrame) -> DataFrame:
-    """The clan habitat's stream shape — one arm, so this is the match
-    changelog itself behind the discriminator column."""
-    return unify(CLAN_HABITAT, {"match": delta_m})
 
 
 # ---------------------------------------------------------- proteome
@@ -469,6 +304,9 @@ PROTEOME_HABITAT = MartHabitat(
         Rescan("m_old", "matches", "old", "assign", drop=("match_id",)),
     ),
     dims=(DimUse("ps", "assign"),),
+    seed=lambda old, dims: seed_proteome_supports(
+        old["assign"], old["match"].drop("match_id"), dims["ps"]
+    ),
     deltas=lambda parts, rescans, dims: proteome_support_deltas(
         parts["assign"], parts["match"], rescans["pp_new"],
         rescans["m_old"], dims["ps"],
@@ -477,63 +315,6 @@ PROTEOME_HABITAT = MartHabitat(
     # sup_p_prot_db's bilinear delta carries proteins from both arms
     sup_touch={"sup_p_prot_db": ("assign", "match")},
 )
-
-
-def unify_proteome_changelogs(
-    delta_pp: DataFrame, delta_m: DataFrame
-) -> DataFrame:
-    return unify(PROTEOME_HABITAT, {"assign": delta_pp, "match": delta_m})
-
-
-def seed_proteome_mart_state(
-    spark: SparkSession,
-    protein_proteomes: DataFrame,   # protein_acc, proteome_id
-    matches: DataFrame,             # match_id, protein_acc, signature_acc, database
-    protein_structures: DataFrame,
-    state_dir: str,
-    n_buckets: int = 16,
-) -> None:
-    sup = seed_proteome_supports(
-        protein_proteomes, matches.drop("match_id"), protein_structures
-    )
-    seed_state(
-        spark, PROTEOME_HABITAT, state_dir,
-        store_snapshots={
-            "assignments": protein_proteomes, "matches": matches,
-        },
-        dims={"ps": protein_structures},
-        supports=sup, n_buckets=n_buckets,
-    )
-
-
-def maintain_proteome_mart_stream(
-    spark: SparkSession,
-    changes: DataFrame,             # streaming DF in unify_proteome_changelogs shape
-    state_dir: str,
-    protein_structures: DataFrame,
-    n_buckets: int = 16,
-    keep_last: int | None = None,
-) -> DataFrame:
-    return maintain_stream(
-        spark, PROTEOME_HABITAT, changes, state_dir,
-        {"ps": protein_structures}, n_buckets, keep_last,
-    )
-
-
-def maintain_proteome_mart_batch(
-    spark: SparkSession,
-    state_dir: str,
-    delta_pp: DataFrame,
-    delta_m: DataFrame,
-    protein_structures: DataFrame,
-    n_buckets: int = 16,
-    keep_last: int | None = None,
-) -> DataFrame:
-    return maintain_batch(
-        spark, PROTEOME_HABITAT, state_dir,
-        {"assign": delta_pp, "match": delta_m},
-        {"ps": protein_structures}, n_buckets, keep_last,
-    )
 
 
 # --------------------------------------------------------- structure
@@ -567,6 +348,10 @@ STRUCT_HABITAT = MartHabitat(
         DimUse("prot", "plink"), DimUse("pp", "plink"),
         DimUse("pdm", "plink"), DimUse("sc"),
     ),
+    seed=lambda old, dims: seed_structure_supports(
+        old["pmatch"].drop("pm_id"), dims["sc"], old["plink"], dims["prot"],
+        dims["pp"], dims["pdm"],
+    ),
     deltas=lambda parts, rescans, dims: structure_support_deltas(
         parts["pmatch"], parts["plink"], dims["sc"], dims["prot"],
         dims["pp"], dims["pdm"],
@@ -575,78 +360,3 @@ STRUCT_HABITAT = MartHabitat(
     # sup_s_prot's delta is the signed link delta — plink rows only
     sup_touch={"sup_s_prot": ("plink",)},
 )
-
-
-def unify_structure_changelogs(
-    delta_pm: DataFrame, delta_ps: DataFrame
-) -> DataFrame:
-    return unify(STRUCT_HABITAT, {"pmatch": delta_pm, "plink": delta_ps})
-
-
-def _structure_dims(sc, prot, pp, pdm):
-    return {"sc": sc, "prot": prot, "pp": pp, "pdm": pdm}
-
-
-def seed_structure_mart_state(
-    spark: SparkSession,
-    pdb_matches: DataFrame,         # pdb_id, signature_acc, database [, pm_id]
-    signature_clans: DataFrame,
-    protein_structures: DataFrame,  # protein_acc, pdb_id (distinct pairs)
-    proteins: DataFrame,
-    protein_proteomes: DataFrame,
-    protein_domorgs: DataFrame,
-    state_dir: str,
-    n_buckets: int = 16,
-) -> None:
-    if "pm_id" in pdb_matches.columns:
-        pdb_matches = pdb_matches.drop("pm_id")
-    sup = seed_structure_supports(
-        pdb_matches, signature_clans, protein_structures, proteins,
-        protein_proteomes, protein_domorgs,
-    )
-    seed_state(
-        spark, STRUCT_HABITAT, state_dir,
-        store_snapshots={},
-        dims={"prot": proteins, "pp": protein_proteomes, "pdm": protein_domorgs},
-        supports=sup, n_buckets=n_buckets,
-    )
-
-
-def maintain_structure_mart_stream(
-    spark: SparkSession,
-    changes: DataFrame,             # streaming DF in unify_structure_changelogs shape
-    state_dir: str,
-    signature_clans: DataFrame,
-    proteins: DataFrame,
-    protein_proteomes: DataFrame,
-    protein_domorgs: DataFrame,
-    n_buckets: int = 16,
-    keep_last: int | None = None,
-) -> DataFrame:
-    return maintain_stream(
-        spark, STRUCT_HABITAT, changes, state_dir,
-        _structure_dims(signature_clans, proteins, protein_proteomes,
-                        protein_domorgs),
-        n_buckets, keep_last,
-    )
-
-
-def maintain_structure_mart_batch(
-    spark: SparkSession,
-    state_dir: str,
-    delta_pm: DataFrame,
-    delta_ps: DataFrame,
-    signature_clans: DataFrame,
-    proteins: DataFrame,
-    protein_proteomes: DataFrame,
-    protein_domorgs: DataFrame,
-    n_buckets: int = 16,
-    keep_last: int | None = None,
-) -> DataFrame:
-    return maintain_batch(
-        spark, STRUCT_HABITAT, state_dir,
-        {"pmatch": delta_pm, "plink": delta_ps},
-        _structure_dims(signature_clans, proteins, protein_proteomes,
-                        protein_domorgs),
-        n_buckets, keep_last,
-    )

@@ -21,6 +21,21 @@ from interpro7_dw_spark.domain.mart_ivm import (
 )
 from interpro7_dw_spark.domain.marts import taxon_xrefs_mart
 from interpro7_dw_spark.operators.cdc import snapshot_delta_images
+from interpro7_dw_spark.streaming.mart_habitat import (
+    maintain_batch,
+    maintain_stream,
+    read_supports,
+    read_version,
+    seed_state,
+    unify,
+)
+from interpro7_dw_spark.streaming.mart_stream import (
+    CLAN_HABITAT,
+    ENTRY_HABITAT,
+    PROTEOME_HABITAT,
+    STRUCT_HABITAT,
+    TAXON_HABITAT,
+)
 
 
 def _anc(spark):
@@ -58,6 +73,28 @@ def _m_df(spark, d, with_id=True):
         rows, "match_id long, protein_acc string, signature_acc string, database string"
     )
     return df if with_id else df.drop("match_id")
+
+
+def _taxon_dims(spark):
+    return {"pp": _pp(spark), "ps": _ps(spark), "anc": _anc(spark)}
+
+
+def _taxon_old(spark, p_d, m_d):
+    """The taxon habitat's seed snapshots, keyed by changelog arm."""
+    return {"protein": _p_df(spark, p_d), "match": _m_df(spark, m_d)}
+
+
+def _taxon_deltas(spark, p_old, p_new, m_old, m_new):
+    """The taxon habitat's release changelogs, keyed by changelog arm."""
+    return {
+        "protein": snapshot_delta_images(
+            _p_df(spark, p_old), _p_df(spark, p_new), ["protein_acc"], ["tax_id"]
+        ),
+        "match": snapshot_delta_images(
+            _m_df(spark, m_old), _m_df(spark, m_new), ["match_id"],
+            ["protein_acc", "signature_acc", "database"],
+        ),
+    }
 
 
 def _mart_rows(df):
@@ -244,11 +281,6 @@ def test_mart_stream_equals_batch_rebuild(spark, tmp_path):
     COW-stored protein/match state; the rendered mart equals the full
     taxon_xrefs_mart rebuild of the final snapshot, and both COW
     stores resolve to the final snapshots."""
-    from interpro7_dw_spark.streaming.mart_stream import (
-        maintain_taxon_mart_stream,
-        seed_mart_state,
-        unify_changelogs,
-    )
     from interpro7_dw_spark.streaming.minmax_stream import (
         _bucket_sources,
         _read_sources,
@@ -269,14 +301,9 @@ def test_mart_stream_equals_batch_rebuild(spark, tmp_path):
     m_new[100] = ("P25", "SIG1", "DB1")
     m_new[101] = ("P3", "SIG2", "DB2")
 
-    dp = snapshot_delta_images(
-        _p_df(spark, p_old), _p_df(spark, p_new), ["protein_acc"], ["tax_id"]
+    unified = unify(
+        TAXON_HABITAT, _taxon_deltas(spark, p_old, p_new, m_old, m_new)
     )
-    dm = snapshot_delta_images(
-        _m_df(spark, m_old), _m_df(spark, m_new), ["match_id"],
-        ["protein_acc", "signature_acc", "database"],
-    )
-    unified = unify_changelogs(dp, dm)
     src = str(tmp_path / "changes")
     # three micro-batch files; rows of BOTH tables interleave in each
     split = F.coalesce(F.col("match_id") % 3, F.ascii(F.col("protein_acc")) % 3)
@@ -285,17 +312,17 @@ def test_mart_stream_equals_batch_rebuild(spark, tmp_path):
 
     state = str(tmp_path / "mart_state")
     n_buckets = 8
-    seed_mart_state(
-        spark, _p_df(spark, p_old), _m_df(spark, m_old),
-        _pp(spark), _ps(spark), _anc(spark), state, n_buckets=n_buckets,
+    seed_state(
+        spark, TAXON_HABITAT, state, _taxon_old(spark, p_old, m_old),
+        _taxon_dims(spark), n_buckets=n_buckets,
     )
     stream = (
         spark.readStream.schema(unified.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    out = maintain_taxon_mart_stream(
-        spark, stream, state, _pp(spark), _ps(spark), _anc(spark),
+    out = maintain_stream(
+        spark, TAXON_HABITAT, stream, state, _taxon_dims(spark),
         n_buckets=n_buckets, keep_last=2,
     )
     assert _mart_rows(out) == _mart_rows(_rebuild(spark, p_new, m_new))
@@ -333,20 +360,13 @@ def test_mart_stream_equals_batch_rebuild(spark, tmp_path):
 
 
 def test_mart_stream_time_travel_renders_old_release(spark, tmp_path):
-    """read_taxon_mart_version: the maintained warehouse mart is
+    """read_version: the maintained warehouse mart is
     readable AS OF any committed version — the seed version renders
     the OLD release's mart exactly (== full rebuild of the old
     snapshot), the latest renders the new one, an as-of-epoch read
     resolves to the newest version applied at or before that epoch,
     and an uncommitted version raises."""
     import pytest as _pytest
-
-    from interpro7_dw_spark.streaming.mart_stream import (
-        maintain_taxon_mart_stream,
-        read_taxon_mart_version,
-        seed_mart_state,
-        unify_changelogs,
-    )
 
     p_old = {f"P{i}": f"N{i % 6}" for i in range(18)}
     m_old = {j: (f"P{j % 18}", f"SIG{j % 9}", f"DB{(j % 9) % 3}") for j in range(40)}
@@ -357,38 +377,36 @@ def test_mart_stream_time_travel_renders_old_release(spark, tmp_path):
     m_new[100] = ("P30", "SIG3", "DB0")
     m_new.pop(7)
 
-    dp = snapshot_delta_images(
-        _p_df(spark, p_old), _p_df(spark, p_new), ["protein_acc"], ["tax_id"]
+    unified = unify(
+        TAXON_HABITAT, _taxon_deltas(spark, p_old, p_new, m_old, m_new)
     )
-    dm = snapshot_delta_images(
-        _m_df(spark, m_old), _m_df(spark, m_new), ["match_id"],
-        ["protein_acc", "signature_acc", "database"],
-    )
-    unified = unify_changelogs(dp, dm)
     src = str(tmp_path / "chg")
     unified.coalesce(1).write.parquet(src)
     state = str(tmp_path / "tt_state")
-    seed_mart_state(
-        spark, _p_df(spark, p_old), _m_df(spark, m_old),
-        _pp(spark), _ps(spark), _anc(spark), state, n_buckets=4,
+    seed_state(
+        spark, TAXON_HABITAT, state, _taxon_old(spark, p_old, m_old),
+        _taxon_dims(spark), n_buckets=4,
     )
     stream = spark.readStream.schema(unified.schema).parquet(src)
-    maintain_taxon_mart_stream(
-        spark, stream, state, _pp(spark), _ps(spark), _anc(spark), n_buckets=4
+    maintain_stream(
+        spark, TAXON_HABITAT, stream, state, _taxon_dims(spark), n_buckets=4
     )
 
-    old_render = _mart_rows(read_taxon_mart_version(spark, state, version=0))
+    def at(**pick):
+        return _mart_rows(read_version(spark, TAXON_HABITAT, state, **pick))
+
+    old_render = at(version=0)
     assert old_render == _mart_rows(_rebuild(spark, p_old, m_old))
-    new_render = _mart_rows(read_taxon_mart_version(spark, state))
+    new_render = at()
     assert new_render == _mart_rows(_rebuild(spark, p_new, m_new))
-    as_of = _mart_rows(read_taxon_mart_version(spark, state, epoch=0))
+    as_of = at(epoch=0)
     assert as_of == new_render  # epoch 0 applied the whole single batch
     # an epoch BEFORE the first applied batch resolves to the seed v0
     # (epoch None) — the seed release is a valid as-of answer
-    pre = _mart_rows(read_taxon_mart_version(spark, state, epoch=-1))
+    pre = at(epoch=-1)
     assert pre == old_render
     with _pytest.raises(KeyError):
-        read_taxon_mart_version(spark, state, version=99)
+        read_version(spark, TAXON_HABITAT, state, version=99)
 
 
 def test_entry_mart_ivm_single_epoch_equals_full_rebuild(spark):
@@ -485,7 +503,7 @@ def test_cow_support_io_tracks_touched_buckets(spark, tmp_path):
     unpruned full merge."""
     import os
 
-    from interpro7_dw_spark.streaming.mart_stream import cow_apply_count_delta
+    from interpro7_dw_spark.streaming.mart_habitat import cow_apply_count_delta
     from interpro7_dw_spark.streaming.minmax_stream import (
         _bucket,
         _bucket_sources,
@@ -562,7 +580,6 @@ def test_entry_mart_stream_equals_batch_rebuild_and_replay(spark, tmp_path):
     from interpro7_dw_spark.domain.marts import entry_xrefs_mart
     from interpro7_dw_spark.streaming.mart_stream import (
         maintain_entry_mart_stream,
-        read_entry_mart_supports,
         seed_entry_mart_state,
         unify_entry_changelogs,
     )
@@ -721,13 +738,6 @@ def test_mart_stream_empty_facts_scale_support(spark, tmp_path):
     reader must serve the support's schema explicitly instead of
     failing. Seed renders, one protein-only micro-batch folds in, and
     both renders equal the full rebuild (empty db_json everywhere)."""
-    from interpro7_dw_spark.streaming.mart_stream import (
-        maintain_taxon_mart_stream,
-        read_taxon_mart_version,
-        seed_mart_state,
-        unify_changelogs,
-    )
-
     p_old = {f"P{i}": f"N{i % 6}" for i in range(10)}
     m_empty: dict = {}
     p_new = dict(p_old)
@@ -735,26 +745,23 @@ def test_mart_stream_empty_facts_scale_support(spark, tmp_path):
     p_new.pop("P3")
 
     state = str(tmp_path / "nofacts")
-    seed_mart_state(
-        spark, _p_df(spark, p_old), _m_df(spark, m_empty),
-        _pp(spark), _ps(spark), _anc(spark), state, n_buckets=4,
+    seed_state(
+        spark, TAXON_HABITAT, state, _taxon_old(spark, p_old, m_empty),
+        _taxon_dims(spark), n_buckets=4,
     )
-    seed_render = _mart_rows(read_taxon_mart_version(spark, state, version=0))
+    seed_render = _mart_rows(
+        read_version(spark, TAXON_HABITAT, state, version=0)
+    )
     assert seed_render == _mart_rows(_rebuild(spark, p_old, m_empty))
 
-    dp = snapshot_delta_images(
-        _p_df(spark, p_old), _p_df(spark, p_new), ["protein_acc"], ["tax_id"]
+    unified = unify(
+        TAXON_HABITAT, _taxon_deltas(spark, p_old, p_new, m_empty, m_empty)
     )
-    dm = snapshot_delta_images(
-        _m_df(spark, m_empty), _m_df(spark, m_empty), ["match_id"],
-        ["protein_acc", "signature_acc", "database"],
-    )
-    unified = unify_changelogs(dp, dm)
     src = str(tmp_path / "chg")
     unified.coalesce(1).write.parquet(src)
     stream = spark.readStream.schema(unified.schema).parquet(src)
-    out = maintain_taxon_mart_stream(
-        spark, stream, state, _pp(spark), _ps(spark), _anc(spark), n_buckets=4
+    out = maintain_stream(
+        spark, TAXON_HABITAT, stream, state, _taxon_dims(spark), n_buckets=4
     )
     assert _mart_rows(out) == _mart_rows(_rebuild(spark, p_new, m_empty))
 
@@ -794,18 +801,13 @@ def test_apply_count_delta_pruned_with_transitions_equals_unpruned(spark):
 
 def test_taxon_mart_batch_epoch_on_cow_store(spark, tmp_path):
     """The one-shot BATCH maintainer pointed at the COW store (r13
-    verdict item 3): maintain_taxon_mart_batch folds a release
-    changelog against seed_mart_state's layout, renders equal to the
+    verdict item 3): maintain_batch folds a release changelog
+    against seed_state's layout, renders equal to the
     full rebuild, and the facts-scale support's new version carries
     ONLY touched bucket partitions (the batch epoch read touched
     buckets once — no second full-support scan branch exists in a
     store-backed merge)."""
     import os
-
-    from interpro7_dw_spark.streaming.mart_stream import (
-        maintain_taxon_mart_batch,
-        seed_mart_state,
-    )
 
     p_old = {f"P{i}": f"N{i % 6}" for i in range(24)}
     m_old = {
@@ -822,20 +824,14 @@ def test_taxon_mart_batch_epoch_on_cow_store(spark, tmp_path):
 
     state = str(tmp_path / "batch_cow")
     n_buckets = 16
-    seed_mart_state(
-        spark, _p_df(spark, p_old), _m_df(spark, m_old),
-        _pp(spark), _ps(spark), _anc(spark), state, n_buckets=n_buckets,
+    seed_state(
+        spark, TAXON_HABITAT, state, _taxon_old(spark, p_old, m_old),
+        _taxon_dims(spark), n_buckets=n_buckets,
     )
-    dp = snapshot_delta_images(
-        _p_df(spark, p_old), _p_df(spark, p_new), ["protein_acc"], ["tax_id"]
-    )
-    dm = snapshot_delta_images(
-        _m_df(spark, m_old), _m_df(spark, m_new), ["match_id"],
-        ["protein_acc", "signature_acc", "database"],
-    )
-    out = maintain_taxon_mart_batch(
-        spark, state, dp, dm, _pp(spark), _ps(spark), _anc(spark),
-        n_buckets=n_buckets,
+    out = maintain_batch(
+        spark, TAXON_HABITAT, state,
+        _taxon_deltas(spark, p_old, p_new, m_old, m_new),
+        _taxon_dims(spark), n_buckets=n_buckets,
     )
     assert _mart_rows(out) == _mart_rows(_rebuild(spark, p_new, m_new))
 
@@ -854,16 +850,10 @@ def test_taxon_mart_batch_epoch_on_cow_store(spark, tmp_path):
 
     # a second batch epoch composes (epoch counter advances past the
     # replay guard)
-    out2 = maintain_taxon_mart_batch(
-        spark, state,
-        snapshot_delta_images(
-            _p_df(spark, p_new), _p_df(spark, p_new), ["protein_acc"], ["tax_id"]
-        ),
-        snapshot_delta_images(
-            _m_df(spark, m_new), _m_df(spark, m_new), ["match_id"],
-            ["protein_acc", "signature_acc", "database"],
-        ),
-        _pp(spark), _ps(spark), _anc(spark), n_buckets=n_buckets,
+    out2 = maintain_batch(
+        spark, TAXON_HABITAT, state,
+        _taxon_deltas(spark, p_new, p_new, m_new, m_new),
+        _taxon_dims(spark), n_buckets=n_buckets,
     )
     assert _mart_rows(out2) == _mart_rows(_rebuild(spark, p_new, m_new))
 
@@ -875,10 +865,6 @@ def test_mart_render_reads_only_aggregate_sized_supports(spark, tmp_path):
     from the maintained level-2 sup_db. With a support 100x the
     aggregate sizes, the render's total stage input records must stay
     far below |sup_prot_db|."""
-    from interpro7_dw_spark.streaming.mart_stream import (
-        read_mart_supports,
-        seed_mart_state,
-    )
     from interpro7_dw_spark.testing import max_job_id, stage_input_records_between
 
     # 4000 proteins x 1 match, 3-level lineage -> sup_prot_db ~= 12k
@@ -894,10 +880,11 @@ def test_mart_render_reads_only_aggregate_sized_supports(spark, tmp_path):
         F.concat_ws("", F.lit("DB"), (F.col("id") % 9) % 3).alias("database"),
     )
     state = str(tmp_path / "render_io")
-    seed_mart_state(
-        spark, p, m, _pp(spark), _ps(spark), _anc(spark), state, n_buckets=8
+    seed_state(
+        spark, TAXON_HABITAT, state, {"protein": p, "match": m},
+        _taxon_dims(spark), n_buckets=8,
     )
-    sup = read_mart_supports(spark, state, "v0")
+    sup = read_supports(spark, TAXON_HABITAT.pyramid, state, "v0")
     n_facts = sup["sup_prot_db"].count()
     assert n_facts > 10_000  # the facts-scale support really is big
 
@@ -1040,12 +1027,10 @@ _M_OLD = {
 def taxon_v0(spark, tmp_path_factory):
     """One seeded tiny taxon-mart state; tests copy it before changing
     it."""
-    from interpro7_dw_spark.streaming.mart_stream import seed_mart_state
-
     state = str(tmp_path_factory.mktemp("taxon_v0") / "state")
-    seed_mart_state(
-        spark, _p_df(spark, _P_OLD), _m_df(spark, _M_OLD),
-        _pp(spark), _ps(spark), _anc(spark), state, n_buckets=8,
+    seed_state(
+        spark, TAXON_HABITAT, state, _taxon_old(spark, _P_OLD, _M_OLD),
+        _taxon_dims(spark), n_buckets=8,
     )
     return state
 
@@ -1053,24 +1038,15 @@ def taxon_v0(spark, tmp_path_factory):
 def _taxon_epoch(spark, state):
     """One batch epoch against a state seeded like ``taxon_v0``: a
     protein insert and delete plus a match insert."""
-    from interpro7_dw_spark.streaming.mart_stream import (
-        maintain_taxon_mart_batch,
-    )
-
     p_new = dict(_P_OLD)
     p_new["P21"] = "N3"
     p_new.pop("P2")
     m_new = dict(_M_OLD)
     m_new[90] = ("P21", "SIG4", "DB1")
-    dp = snapshot_delta_images(
-        _p_df(spark, _P_OLD), _p_df(spark, p_new), ["protein_acc"], ["tax_id"]
-    )
-    dm = snapshot_delta_images(
-        _m_df(spark, _M_OLD), _m_df(spark, m_new), ["match_id"],
-        ["protein_acc", "signature_acc", "database"],
-    )
-    return maintain_taxon_mart_batch(
-        spark, state, dp, dm, _pp(spark), _ps(spark), _anc(spark), n_buckets=8
+    return maintain_batch(
+        spark, TAXON_HABITAT, state,
+        _taxon_deltas(spark, _P_OLD, p_new, _M_OLD, m_new),
+        _taxon_dims(spark), n_buckets=8,
     )
 
 
@@ -1122,8 +1098,6 @@ def test_missing_state_piece_raises(
     of it raises instead of serving that piece as empty (or
     re-deriving it), and an epoch that hits the gap commits no new
     version."""
-    from interpro7_dw_spark.streaming.mart_stream import read_mart_supports
-
     state = str(tmp_path / "state")
     shutil.copytree(taxon_v0, state)
     remove(state)
@@ -1131,7 +1105,7 @@ def test_missing_state_piece_raises(
         if read == "epoch":
             _taxon_epoch(spark, state)
         else:
-            read_mart_supports(spark, state, "v0")
+            read_supports(spark, TAXON_HABITAT.pyramid, state, "v0")
     assert _committed(state) == ["v0"]
 
 
@@ -1224,6 +1198,95 @@ def _clan_fixtures(spark):
     return sc, prot, _pp(spark), dom, es
 
 
+def _entry_seed_inputs(spark):
+    pe = spark.createDataFrame(
+        [(j, f"P{j % 20}", f"IPR{j % 4}") for j in range(30)],
+        "pe_id long, protein_acc string, entry_acc string",
+    )
+    pec = spark.createDataFrame(
+        [(f"P{i}", "1.2.3.4") for i in range(0, 20, 2)],
+        "protein_acc string, ec string",
+    )
+    return (
+        {"assign": pe, "protein": _p_df(spark, _P_OLD)},
+        {"pp": _pp(spark), "ps": _ps(spark), "pec": pec},
+    )
+
+
+def _clan_seed_inputs(spark):
+    sc, prot, pp, dom, es = _clan_fixtures(spark)
+    return (
+        {"match": _m_df(spark, _M_OLD)},
+        {"sc": sc, "prot": prot, "pp": pp, "dom": dom, "entry_structures": es},
+    )
+
+
+def _structure_seed_inputs(spark):
+    sc, prot, pp, dom, _es = _clan_fixtures(spark)
+    pm = spark.createDataFrame(
+        [(j, f"PDB{j % 5}", f"SIG{j % 9}", f"DB{(j % 9) % 3}") for j in range(40)],
+        "pm_id long, pdb_id string, signature_acc string, database string",
+    )
+    return (
+        {"pmatch": pm, "plink": _ps(spark)},
+        {
+            "sc": sc, "prot": prot, "pp": pp,
+            "pdm": dom.select("protein_acc", "dom_id").distinct(),
+        },
+    )
+
+
+@pytest.mark.parametrize(
+    "habitat, seed_inputs",
+    [
+        pytest.param(
+            TAXON_HABITAT,
+            lambda s: (_taxon_old(s, _P_OLD, _M_OLD), _taxon_dims(s)),
+            id="taxon",
+        ),
+        pytest.param(ENTRY_HABITAT, _entry_seed_inputs, id="entry"),
+        pytest.param(CLAN_HABITAT, _clan_seed_inputs, id="clan"),
+        pytest.param(
+            PROTEOME_HABITAT,
+            lambda s: (
+                {"assign": _pp(s), "match": _m_df(s, _M_OLD)}, {"ps": _ps(s)}
+            ),
+            id="proteome",
+        ),
+        pytest.param(STRUCT_HABITAT, _structure_seed_inputs, id="structure"),
+    ],
+)
+def test_habitat_definition_is_consistent(spark, habitat, seed_inputs):
+    """Each maintained mart's MartHabitat is its one definition, so
+    every name it cross-references must resolve: sup_touch names
+    bucketed supports and declared arms, fact stores and rescans
+    name declared arms and stores, pruned dims name declared arms.
+    Its ``seed`` callable, reading only the declared arms and dims,
+    plans exactly the pyramid's supports with their declared key
+    columns (plan only — no Spark action)."""
+    from interpro7_dw_spark.caching import engine_cache_scope
+
+    pyramid = habitat.pyramid
+    tags = {src.tag for src in habitat.sources}
+    stores = {st.name for st in habitat.stores}
+    for sup, arms in habitat.sup_touch.items():
+        assert sup in pyramid.bucketed, sup
+        assert set(arms) <= tags, (sup, arms)
+    assert {st.src for st in habitat.stores} <= tags
+    for r in habitat.rescans:
+        assert r.store in stores and r.prune_src in tags, r
+    assert {d.prune_src for d in habitat.dims} - {None} <= tags
+
+    old, dims = seed_inputs(spark)
+    assert set(old) == tags
+    assert set(dims) == {d.name for d in habitat.dims}
+    with engine_cache_scope():
+        sup = habitat.seed(old, dims)
+        assert sorted(sup) == sorted(pyramid.support_names)
+        for name, df in sup.items():
+            assert set(df.columns) == {*pyramid.support_keys[name], "n"}, name
+
+
 def test_clan_mart_habitat_stream_equals_batch_equals_rebuild(spark, tmp_path):
     """The clan mart's COW habitat (r14 verdict item 1): the SAME
     match changelog folded (a) storeless, (b) as one batch-on-COW
@@ -1234,14 +1297,9 @@ def test_clan_mart_habitat_stream_equals_batch_equals_rebuild(spark, tmp_path):
     import shutil as _sh
 
     from interpro7_dw_spark.domain.marts import clan_xrefs_mart
-    from interpro7_dw_spark.streaming.mart_stream import (
-        maintain_clan_mart_batch,
-        maintain_clan_mart_stream,
-        seed_clan_mart_state,
-        unify_clan_changelogs,
-    )
 
     sc, prot, pp, dom, es = _clan_fixtures(spark)
+    dims = {"sc": sc, "prot": prot, "pp": pp, "dom": dom, "entry_structures": es}
     m_old = {j: (f"P{j % 30}", f"SIG{j % 9}", f"DB{(j % 9) % 3}") for j in range(60)}
     m_new = dict(m_old)
     m_new[200] = ("P3", "SIG2", "DB2")      # insert
@@ -1267,12 +1325,12 @@ def test_clan_mart_habitat_stream_equals_batch_equals_rebuild(spark, tmp_path):
 
     # (b) batch-on-COW
     state_b = str(tmp_path / "clan_batch")
-    seed_clan_mart_state(
-        spark, _m_df(spark, m_old), sc, prot, pp, dom, es,
-        state_b, n_buckets=n_buckets,
+    seed_state(
+        spark, CLAN_HABITAT, state_b, {"match": _m_df(spark, m_old)}, dims,
+        n_buckets=n_buckets,
     )
-    out_b = maintain_clan_mart_batch(
-        spark, state_b, dm, sc, prot, pp, dom, es, n_buckets=n_buckets
+    out_b = maintain_batch(
+        spark, CLAN_HABITAT, state_b, {"match": dm}, dims, n_buckets=n_buckets
     )
     got_b = {r.clan_acc: tuple(r)[1:] for r in out_b.collect()}
     assert got_b == rebuild(m_new)
@@ -1290,14 +1348,14 @@ def test_clan_mart_habitat_stream_equals_batch_equals_rebuild(spark, tmp_path):
     # (c) stream over 3 micro-batches + full replay
     state_s = str(tmp_path / "clan_stream")
     root = str(tmp_path / "clan_changes")
-    unified = unify_clan_changelogs(dm)
+    unified = unify(CLAN_HABITAT, {"match": dm})
     for part in range(3):
         unified.filter(F.col("match_id") % 3 == part).coalesce(1).write.mode(
             "append"
         ).parquet(root)
-    seed_clan_mart_state(
-        spark, _m_df(spark, m_old), sc, prot, pp, dom, es,
-        state_s, n_buckets=n_buckets,
+    seed_state(
+        spark, CLAN_HABITAT, state_s, {"match": _m_df(spark, m_old)}, dims,
+        n_buckets=n_buckets,
     )
 
     def drain():
@@ -1306,9 +1364,8 @@ def test_clan_mart_habitat_stream_equals_batch_equals_rebuild(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(root)
         )
-        return maintain_clan_mart_stream(
-            spark, stream, state_s, sc, prot, pp, dom, es,
-            n_buckets=n_buckets,
+        return maintain_stream(
+            spark, CLAN_HABITAT, stream, state_s, dims, n_buckets=n_buckets
         )
 
     out_s = drain()
@@ -1333,12 +1390,6 @@ def test_proteome_mart_habitat_stream_and_batch(spark, tmp_path):
     import os
 
     from interpro7_dw_spark.domain.marts import proteome_xrefs_mart
-    from interpro7_dw_spark.streaming.mart_stream import (
-        maintain_proteome_mart_batch,
-        maintain_proteome_mart_stream,
-        seed_proteome_mart_state,
-        unify_proteome_changelogs,
-    )
 
     def pp_df(d):
         return spark.createDataFrame(
@@ -1372,14 +1423,14 @@ def test_proteome_mart_habitat_stream_and_batch(spark, tmp_path):
         ["protein_acc", "signature_acc", "database"],
     )
     n_buckets = 8
+    old = {"assign": pp_df(pp_old), "match": _m_df(spark, m_old)}
+    dims = {"ps": _ps(spark)}
 
     state_b = str(tmp_path / "prtm_batch")
-    seed_proteome_mart_state(
-        spark, pp_df(pp_old), _m_df(spark, m_old), _ps(spark),
-        state_b, n_buckets=n_buckets,
-    )
-    out_b = maintain_proteome_mart_batch(
-        spark, state_b, dpp, dm, _ps(spark), n_buckets=n_buckets
+    seed_state(spark, PROTEOME_HABITAT, state_b, old, dims, n_buckets=n_buckets)
+    out_b = maintain_batch(
+        spark, PROTEOME_HABITAT, state_b, {"assign": dpp, "match": dm}, dims,
+        n_buckets=n_buckets,
     )
     got_b = {r.proteome_id: tuple(r)[1:] for r in out_b.collect()}
     assert got_b == rebuild()
@@ -1394,21 +1445,18 @@ def test_proteome_mart_habitat_stream_and_batch(spark, tmp_path):
 
     state_s = str(tmp_path / "prtm_stream")
     root = str(tmp_path / "prtm_changes")
-    unified = unify_proteome_changelogs(dpp, dm)
+    unified = unify(PROTEOME_HABITAT, {"assign": dpp, "match": dm})
     split = F.coalesce(F.col("match_id") % 3, F.ascii(F.col("protein_acc")) % 3)
     for part in range(3):
         unified.filter(split == part).coalesce(1).write.mode("append").parquet(root)
-    seed_proteome_mart_state(
-        spark, pp_df(pp_old), _m_df(spark, m_old), _ps(spark),
-        state_s, n_buckets=n_buckets,
-    )
+    seed_state(spark, PROTEOME_HABITAT, state_s, old, dims, n_buckets=n_buckets)
     stream = (
         spark.readStream.schema(unified.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(root)
     )
-    out_s = maintain_proteome_mart_stream(
-        spark, stream, state_s, _ps(spark), n_buckets=n_buckets
+    out_s = maintain_stream(
+        spark, PROTEOME_HABITAT, stream, state_s, dims, n_buckets=n_buckets
     )
     got_s = {r.proteome_id: tuple(r)[1:] for r in out_s.collect()}
     assert got_s == rebuild()
@@ -1423,15 +1471,10 @@ def test_structure_mart_habitat_stream_and_batch(spark, tmp_path):
     import os
 
     from interpro7_dw_spark.domain.marts import structure_xrefs_mart
-    from interpro7_dw_spark.streaming.mart_stream import (
-        maintain_structure_mart_batch,
-        maintain_structure_mart_stream,
-        seed_structure_mart_state,
-        unify_structure_changelogs,
-    )
 
     sc, prot, pp, dom, _es = _clan_fixtures(spark)
     pdm = dom.select("protein_acc", "dom_id").distinct()
+    dims = {"sc": sc, "prot": prot, "pp": pp, "pdm": pdm}
 
     def pm_df(d, with_id=True):
         rows = sorted((k, *v) for k, v in d.items())
@@ -1471,14 +1514,13 @@ def test_structure_mart_habitat_stream_and_batch(spark, tmp_path):
         ps_df(ps_old), ps_df(ps_new), ["protein_acc", "pdb_id"], ["pdb_id"]
     )
     n_buckets = 8
+    old = {"pmatch": pm_df(pm_old), "plink": ps_df(ps_old)}
 
     state_b = str(tmp_path / "str_batch")
-    seed_structure_mart_state(
-        spark, pm_df(pm_old), sc, ps_df(ps_old), prot, pp, pdm,
-        state_b, n_buckets=n_buckets,
-    )
-    out_b = maintain_structure_mart_batch(
-        spark, state_b, dpm, dps, sc, prot, pp, pdm, n_buckets=n_buckets
+    seed_state(spark, STRUCT_HABITAT, state_b, old, dims, n_buckets=n_buckets)
+    out_b = maintain_batch(
+        spark, STRUCT_HABITAT, state_b, {"pmatch": dpm, "plink": dps}, dims,
+        n_buckets=n_buckets,
     )
     got_b = {r.pdb_id: tuple(r)[1:] for r in out_b.collect()}
     assert got_b == rebuild()
@@ -1492,21 +1534,18 @@ def test_structure_mart_habitat_stream_and_batch(spark, tmp_path):
 
     state_s = str(tmp_path / "str_stream")
     root = str(tmp_path / "str_changes")
-    unified = unify_structure_changelogs(dpm, dps)
+    unified = unify(STRUCT_HABITAT, {"pmatch": dpm, "plink": dps})
     split = F.coalesce(F.col("pm_id") % 3, F.ascii(F.col("protein_acc")) % 3)
     for part in range(3):
         unified.filter(split == part).coalesce(1).write.mode("append").parquet(root)
-    seed_structure_mart_state(
-        spark, pm_df(pm_old), sc, ps_df(ps_old), prot, pp, pdm,
-        state_s, n_buckets=n_buckets,
-    )
+    seed_state(spark, STRUCT_HABITAT, state_s, old, dims, n_buckets=n_buckets)
     stream = (
         spark.readStream.schema(unified.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(root)
     )
-    out_s = maintain_structure_mart_stream(
-        spark, stream, state_s, sc, prot, pp, pdm, n_buckets=n_buckets
+    out_s = maintain_stream(
+        spark, STRUCT_HABITAT, stream, state_s, dims, n_buckets=n_buckets
     )
     got_s = {r.pdb_id: tuple(r)[1:] for r in out_s.collect()}
     assert got_s == rebuild()

@@ -6,7 +6,7 @@ dbs; the entry pyramid's ``sup_ep``/``sup_etp``/``sup_eep`` ≈ the
 assignment table) must not be reshuffled or rewritten whole per
 epoch. Two mechanisms fix it and this audit measures both:
 
-1. **COW bucket store** (``streaming/mart_stream.py::
+1. **COW bucket store** (``streaming/mart_habitat.py::
    cow_apply_count_delta``): the support lives bucketed by protein;
    one epoch reads + rewrites only the delta-touched buckets. The
    measured per-epoch ``input_records`` must track
@@ -43,7 +43,7 @@ def main() -> None:
         apply_count_delta_pruned,
     )
     from interpro7_dw_spark.session import get_spark
-    from interpro7_dw_spark.streaming.mart_stream import cow_apply_count_delta
+    from interpro7_dw_spark.streaming.mart_habitat import cow_apply_count_delta
     from interpro7_dw_spark.streaming.minmax_stream import _bucket
     from interpro7_dw_spark.testing import max_job_id, stage_metrics_between
 
@@ -129,11 +129,11 @@ def main() -> None:
     # 2x|support| scan), and (b) the RENDER (verdict item 1: input
     # records track the aggregate-sized + level-2 supports, never
     # sup_prot_db)
-    from interpro7_dw_spark.streaming.mart_stream import (
-        maintain_taxon_mart_batch,
-        read_mart_supports,
-        seed_mart_state,
+    from interpro7_dw_spark.streaming.mart_habitat import (
+        maintain_batch,
+        seed_state,
     )
+    from interpro7_dw_spark.streaming.mart_stream import TAXON_HABITAT
 
     n_prot = max(n_support // 3, 3_000)  # ~3 ancestors per protein
     proteins = spark.range(n_prot).select(
@@ -165,8 +165,10 @@ def main() -> None:
         ).alias("ancestor"),
     )
     state = f"{tmp}/mart_state"
-    seed_mart_state(
-        spark, proteins, matches, pp, ps, anc, state, n_buckets=n_buckets
+    dims = {"pp": pp, "ps": ps, "anc": anc}
+    seed_state(
+        spark, TAXON_HABITAT, state, {"protein": proteins, "match": matches},
+        dims, n_buckets=n_buckets,
     )
     facts_rows = spark.read.parquet(f"{state}/sup_cow/sup_prot_db/v0").count()
     spark.catalog.clearCache()
@@ -185,8 +187,9 @@ def main() -> None:
         " new_database string",
     )
     j0, t0 = max_job_id(spark), time.time()
-    rendered = maintain_taxon_mart_batch(
-        spark, state, dp, dm, pp, ps, anc, n_buckets=n_buckets
+    rendered = maintain_batch(
+        spark, TAXON_HABITAT, state, {"protein": dp, "match": dm}, dims,
+        n_buckets=n_buckets,
     )
     emit("batch_epoch_on_cow_r14", 9, None, j0, t0,
          note=f"whole epoch incl. dims; sup_prot_db store rows={facts_rows}")
