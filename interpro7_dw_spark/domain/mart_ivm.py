@@ -580,7 +580,7 @@ def taxon_support_deltas(
 
     In continuous operation ``matches_old`` comes from a
     protein-bucketed store (the COW pattern of
-    ``streaming/minmax_stream.py``), so the pruned rescan reads only
+    ``streaming/versions.py``), so the pruned rescan reads only
     touched buckets; ``proteins_new`` is the dimension the changelog
     itself maintains."""
     anc = F.broadcast(taxon_ancestors.select("tax_id", "ancestor"))

@@ -228,6 +228,7 @@ def _stream_ivm(spark, sf):
 
     from ..operators.cdc import snapshot_delta_images
     from ..streaming.ivm_stream import maintain_group_agg_stream
+    from ..streaming.versions import SEED
 
     base = spark.read.parquet(f"{sf}/orders.parquet").select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -261,7 +262,7 @@ def _stream_ivm(spark, sf):
         F.sum(
             F.coalesce(F.col("o_totalprice"), F.lit(0)).cast("decimal(18,4)")
         ).cast("decimal(18,4)").alias("total"),
-    ).write.parquet(f"{root}/mart/v0")
+    ).write.parquet(f"{root}/mart/{SEED}")
     stream = (
         spark.readStream.schema(delta.schema)
         .option("maxFilesPerTrigger", 1)

@@ -36,11 +36,11 @@ facts-scale supports) + the aggregate-sized supports — never
 (`/root/reference/interpro7dw/cli.py:101-986`, export-entry2xrefs
 <=24h/100GB at cli.py:355, export-clan2xrefs <=6h/32GB at cli.py:323,
 export-proteome2xrefs <=6h/100GB at cli.py:379) becomes a standing
-query per mart. Epoch idempotence, ``_SUCCESS`` gating, ``keep_last``
-vacuum and the COW machinery are shared with :mod:`.ivm_stream` /
-:mod:`.minmax_stream`; the streamed result equals the batch maintainer
-on the same total changelog, which equals the full rebuild of the
-final snapshot (each mart's catalog spec oracles exactly that).
+query per mart. Version commit, epoch replay skip, vacuum and the COW
+bucket stores are the shared protocol of :mod:`.versions`; the
+streamed result equals the batch maintainer on the same total
+changelog, which equals the full rebuild of the final snapshot (each
+mart's catalog spec oracles exactly that).
 
 The layout above is the only one the readers accept: a missing piece
 of it raises instead of reading as empty.
@@ -48,7 +48,6 @@ of it raises instead of reading as empty.
 
 from __future__ import annotations
 
-import json
 from collections.abc import Callable, Mapping
 from dataclasses import dataclass, field
 
@@ -64,19 +63,21 @@ from ..domain.mart_ivm import (
     apply_count_delta,
     apply_count_delta_with_transitions,
 )
-from .ivm_stream import (
-    _fs,
-    _latest_committed,
-    _list_versions,
-    _pick_version,
-    _vacuum,
-)
-from .minmax_stream import (
-    _bucket,
-    _bucket_sources,
-    _read_sources,
-    _vacuum_facts,
+from . import versions
+from .versions import (
+    SEED,
+    Version,
+    advance,
+    bucket,
     cow_apply_images,
+    drain,
+    latest_committed,
+    parse_name,
+    read_buckets,
+    read_schema,
+    seed_buckets,
+    write_buckets,
+    write_schema,
 )
 
 
@@ -251,7 +252,7 @@ def discover_touched(
             continue  # unmatched rows yield NULL; explode drops them
         if src.touch == "plain":
             arr = F.array(
-                entry(src.tag, _bucket(F.col(src.touch_col), n_buckets))
+                entry(src.tag, bucket(F.col(src.touch_col), n_buckets))
             )
         else:  # images
             arr = F.filter(
@@ -260,14 +261,14 @@ def discover_touched(
                         ct.isin("delete", "update"),
                         entry(
                             src.tag,
-                            _bucket(F.col(f"old_{src.touch_col}"), n_buckets),
+                            bucket(F.col(f"old_{src.touch_col}"), n_buckets),
                         ),
                     ),
                     F.when(
                         ct.isin("insert", "update"),
                         entry(
                             src.tag,
-                            _bucket(F.col(f"new_{src.touch_col}"), n_buckets),
+                            bucket(F.col(f"new_{src.touch_col}"), n_buckets),
                         ),
                     ),
                 ),
@@ -292,18 +293,6 @@ def discover_touched(
 # ------------------------------------------------------------- seed
 
 
-def _seed_static_dim(
-    state_dir: str, name: str, dim: DataFrame, n_buckets: int
-) -> None:
-    """Write a protein-keyed static dim once, bucketed like the fact
-    stores (``dims/<name>/v0``) — it never advances, so every epoch's
-    delta join against it is a partition-pruned read of the delta's
-    touched buckets."""
-    dim.withColumn(
-        "__b", _bucket(F.col("protein_acc"), n_buckets)
-    ).write.partitionBy("__b").parquet(f"{state_dir}/dims/{name}/v0")
-
-
 def _read_static_dim(
     spark: SparkSession,
     state_dir: str,
@@ -316,45 +305,8 @@ def _read_static_dim(
     of the delta's proteins (rows outside them are dropped by the join
     anyway). No rows in those buckets serve ``fallback``'s typed empty
     relation; a missing dim store raises."""
-    dim_dir = f"{state_dir}/dims/{name}"
-    df = _read_sources(
-        spark, dim_dir, _bucket_sources(spark, dim_dir, 0, buckets)
-    )
+    df = read_buckets(spark, f"{state_dir}/dims/{name}", 0, buckets)
     return df if df is not None else fallback.limit(0)
-
-
-def _write_schema_artifact(
-    spark: SparkSession, sup_dir: str, schema, supports=None
-) -> None:
-    """Persist a store's logical schema (WITHOUT its partition column)
-    beside its data as ``_schema.json``: an emptied store, which has
-    no files to infer from, serves this schema. The agg store's
-    artifact also lists the ``supports`` its version wrote."""
-    art = schema.jsonValue()
-    if supports is not None:
-        art["supports"] = sorted(supports)
-    fs, _root, jp = _fs(spark, sup_dir)
-    out = fs.create(jp(f"{sup_dir}/_schema.json"), True)
-    out.write(bytearray(json.dumps(art).encode("utf-8")))
-    out.close()
-
-
-def _read_schema_artifact(spark: SparkSession, sup_dir: str) -> dict:
-    """The JSON written by :func:`_write_schema_artifact` (a
-    ``StructType`` JSON, plus ``supports`` for an agg store); raises
-    when the store has none."""
-    fs, _root, jp = _fs(spark, sup_dir)
-    p = jp(f"{sup_dir}/_schema.json")
-    if not fs.exists(p):
-        raise FileNotFoundError(f"missing schema artifact {sup_dir}/_schema.json")
-    stream = fs.open(p)
-    try:
-        text = spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-    return json.loads(text)
 
 
 def _seed_support_thunks(
@@ -375,10 +327,8 @@ def _seed_support_thunks(
     commit all."""
     def bucketed(name: str) -> None:
         sup_dir = f"{state_dir}/sup_cow/{name}"
-        sup[name].withColumn(
-            "__b", _bucket(F.col(pyramid.bucketed[name]), n_buckets)
-        ).write.partitionBy("__b").parquet(f"{sup_dir}/v0")
-        _write_schema_artifact(spark, sup_dir, sup[name].schema)
+        seed_buckets(sup_dir, sup[name], pyramid.bucketed[name], n_buckets)
+        write_schema(spark, sup_dir, sup[name].schema)
 
     l2 = pyramid.level2
     plain_names = [
@@ -394,7 +344,7 @@ def _seed_support_thunks(
     thunks += [
         (
             lambda name=name: sup[name].write.parquet(
-                f"{state_dir}/mart/v0/{name}"
+                f"{state_dir}/mart/{SEED}/{name}"
             )
         )
         for name in pyramid.support_names
@@ -404,7 +354,7 @@ def _seed_support_thunks(
         thunks.append(
             lambda: _write_agg_supports(
                 spark,
-                f"{state_dir}/mart/v0",
+                f"{state_dir}/mart/{SEED}",
                 {n: sup[n] for n in plain_names},
             )
         )
@@ -430,14 +380,23 @@ def seed_state(
     once under concurrent first readers), so all writes run from one
     driver pool (guide §2.6); the mart root ``_SUCCESS`` still commits
     the supports LAST, after every write returned."""
-    def store_thunk(st: FactStore):
-        return lambda: old[st.src].withColumn(
-            "__b", _bucket(F.col(st.bucket_col), n_buckets)
-        ).write.partitionBy("__b").parquet(f"{state_dir}/{st.name}/v0")
-
-    thunks = [store_thunk(st) for st in habitat.stores]
+    thunks = [
+        (
+            lambda st=st: seed_buckets(
+                f"{state_dir}/{st.name}", old[st.src], st.bucket_col, n_buckets
+            )
+        )
+        for st in habitat.stores
+    ]
+    # protein-keyed static dims never advance: bucketed once here, every
+    # epoch's delta join reads only the delta's touched buckets
     thunks += [
-        (lambda d=d: _seed_static_dim(state_dir, d.name, dims[d.name], n_buckets))
+        (
+            lambda d=d: seed_buckets(
+                f"{state_dir}/dims/{d.name}", dims[d.name], "protein_acc",
+                n_buckets,
+            )
+        )
         for d in habitat.dims
         if d.prune_src is not None
     ]
@@ -446,81 +405,10 @@ def seed_state(
         n_buckets,
     )
     run_parallel(thunks)
-    _commit_marker(spark, f"{state_dir}/mart/v0")
+    versions.commit(spark, f"{state_dir}/mart/{SEED}")
 
 
 # ---------------------------------------------------- support merges
-
-
-def _commit_marker(spark: SparkSession, version_dir: str) -> None:
-    """The atomic commit for a multi-directory version: the root
-    ``_SUCCESS`` is created LAST, after every support's own write
-    finished — readers (`_list_versions`) gate on it."""
-    fs, _root, jpath_cls = _fs(spark, version_dir)
-    fs.create(jpath_cls(f"{version_dir}/_SUCCESS"), True).close()
-
-
-def cow_apply_count_delta(
-    spark: SparkSession,
-    sup_dir: str,
-    delta: DataFrame,
-    keys: list[str],
-    bucket_col: str,
-    n_buckets: int,
-    prev_version: int,
-    next_version: int,
-    epoch: int,
-    roll_keys: list[str] | None = None,
-    touched: list[int] | None = None,
-    persist_into: list | None = None,
-) -> DataFrame | None:
-    """Merge a SIGNED count delta (``keys`` + ``s``) into a COW-
-    bucketed count support: resolve ONLY the delta-touched buckets at
-    ``prev_version``, run :func:`..domain.mart_ivm.apply_count_delta`
-    on those rows alone, and write them as the new version in ONE
-    ``partitionBy`` action (explicit empty dirs for fully-emptied
-    touched buckets, exactly like ``cow_apply_images``). Untouched
-    buckets are never read, shuffled or rewritten — they stay served
-    by older versions through the same per-bucket manifest resolution
-    as the fact stores — so per-epoch support IO is
-    Θ(|touched buckets|), not Θ(|support|) (the r12 verdict's one
-    scale finding, measured in tests/test_mart_ivm.py +
-    PERF.md r13).
-
-    With ``roll_keys`` the merge runs through
-    ``apply_count_delta_with_transitions`` and RETURNS the enter/exit
-    transitions (``roll_keys`` + ``s``) — the complete signed delta of
-    the level-2 rollup, complete because untouched buckets cannot
-    transition. The transitions branch off the same persisted merge
-    plan the write materializes, so emitting them costs no second
-    bucket read; the caller must consume them inside the same
-    ``engine_cache_scope``.
-
-    ``touched`` (r15) lets a caller that already knows a SUPERSET of
-    the delta's buckets (the habitat's per-arm one-job discovery,
-    unioned per ``MartHabitat.sup_touch``) skip the discovery collect —
-    which would otherwise EXECUTE the full delta plan a second time,
-    once per bucketed support per epoch. Unlike ``cow_apply_images``,
-    a superset here is value-identical: extra buckets' rows pass
-    through the pruned merge unchanged and are rewritten identically
-    at the new version (only a SUBSET would be wrong);
-    ``minmax_stream.VALIDATE_TOUCHED`` cross-checks the superset
-    property in debug sessions.
-
-    ``persist_into`` (r16) forwards to
-    ``apply_count_delta_with_transitions``: a caller that consumes the
-    returned transitions on a different thread (the pooled epoch
-    writes) owns the shared merge persist's release through this list
-    instead of a thread-local cache scope."""
-    merged, transitions, touched = cow_count_merge_plan(
-        spark, sup_dir, delta, keys, bucket_col, n_buckets, prev_version,
-        roll_keys=roll_keys, touched=touched, persist_into=persist_into,
-    )
-    cow_write_merged(
-        spark, sup_dir, merged, bucket_col, n_buckets, next_version,
-        epoch, touched,
-    )
-    return transitions
 
 
 def cow_count_merge_plan(
@@ -535,22 +423,54 @@ def cow_count_merge_plan(
     touched: list[int] | None = None,
     persist_into: list | None = None,
 ) -> tuple[DataFrame, DataFrame | None, list[int]]:
-    """The LAZY half of :func:`cow_apply_count_delta` — build the
-    pruned merge relation (and transitions, with ``roll_keys``)
-    against ``prev_version`` without running any write, so a caller
-    can overlap the COW write with OTHER jobs that consume the
-    transitions (r16: the habitat pools the bucketed writes and the
-    one agg-union write from the same plan set). Runs no Spark action
-    when ``touched`` is supplied (bucket resolution is driver-side
-    file listing); with ``touched=None`` the discovery collect runs
-    here. Returns ``(merged, transitions, touched)``."""
-    from .minmax_stream import VALIDATE_TOUCHED
+    """Plan the merge of a SIGNED count delta (``keys`` + ``s``) into a
+    COW-bucketed count support: resolve ONLY the delta-touched buckets
+    at ``prev_version`` and run
+    :func:`..domain.mart_ivm.apply_count_delta` on those rows alone.
+    Returns ``(merged, transitions, touched)``; the caller writes
+    ``merged`` as the new version with :func:`.versions.write_buckets`
+    over ``touched``. Untouched buckets are never read, shuffled or
+    rewritten — they stay served by older versions through the
+    per-bucket resolution — so per-epoch support IO is
+    Θ(|touched buckets|), not Θ(|support|) (the r12 verdict's one
+    scale finding, measured in tests/test_mart_ivm.py + PERF.md r13).
+
+    The plan is LAZY: no write runs here, so a caller can overlap the
+    COW write with OTHER jobs that consume the transitions (r16: the
+    habitat pools the bucketed writes and the one agg-union write from
+    the same plan set). No Spark action runs when ``touched`` is
+    supplied (bucket resolution is driver-side file listing); with
+    ``touched=None`` the discovery collect runs here.
+
+    With ``roll_keys`` the merge runs through
+    ``apply_count_delta_with_transitions`` and also returns the
+    enter/exit transitions (``roll_keys`` + ``s``) — the complete signed
+    delta of the level-2 rollup, complete because untouched buckets
+    cannot transition. The transitions branch off the same persisted
+    merge plan the write materializes, so emitting them costs no second
+    bucket read; the caller must consume them inside the same
+    ``engine_cache_scope``. ``persist_into`` (r16) forwards to
+    ``apply_count_delta_with_transitions``: a caller that consumes the
+    transitions on a different thread (the pooled epoch writes) owns
+    the shared merge persist's release through this list instead of a
+    thread-local cache scope.
+
+    ``touched`` (r15) lets a caller that already knows a SUPERSET of
+    the delta's buckets (the habitat's per-arm one-job discovery,
+    unioned per ``MartHabitat.sup_touch``) skip the discovery collect —
+    which would otherwise EXECUTE the full delta plan a second time,
+    once per bucketed support per epoch. Unlike ``cow_apply_images``,
+    a superset here is value-identical: extra buckets' rows pass
+    through the pruned merge unchanged and are rewritten identically
+    at the new version (only a SUBSET would be wrong);
+    ``versions.VALIDATE_TOUCHED`` cross-checks the superset property
+    in debug sessions."""
 
     def _discover() -> list[int]:
         return sorted(
             r[0]
             for r in delta.select(
-                _bucket(F.col(bucket_col), n_buckets).alias("b")
+                bucket(F.col(bucket_col), n_buckets).alias("b")
             )
             .distinct()
             .collect()
@@ -560,13 +480,12 @@ def cow_count_merge_plan(
         touched = _discover()
     else:
         touched = sorted(touched)
-        if VALIDATE_TOUCHED and not set(touched) >= set(_discover()):
+        if versions.VALIDATE_TOUCHED and not set(touched) >= set(_discover()):
             raise ValueError(
-                "cow_apply_count_delta: caller-supplied touched buckets "
+                "cow_count_merge_plan: caller-supplied touched buckets "
                 f"{touched} are not a superset of the delta's for {sup_dir}"
             )
-    served = _bucket_sources(spark, sup_dir, prev_version, touched)
-    cur = _read_sources(spark, sup_dir, served)
+    cur = read_buckets(spark, sup_dir, prev_version, touched)
     if cur is None:
         cur = (
             delta.select(*keys)
@@ -583,35 +502,6 @@ def cow_count_merge_plan(
     return merged, transitions, touched
 
 
-def cow_write_merged(
-    spark: SparkSession,
-    sup_dir: str,
-    merged: DataFrame,
-    bucket_col: str,
-    n_buckets: int,
-    next_version: int,
-    epoch: int,
-    touched: list[int],
-) -> None:
-    """The write half of :func:`cow_apply_count_delta`: the merged
-    touched-bucket rows as the new version in ONE ``partitionBy``
-    action, plus explicit empty dirs for fully-emptied touched
-    buckets."""
-    ver = f"{sup_dir}/v{next_version}_e{epoch}"
-    # one file per non-empty bucket (same rationale as
-    # cow_apply_images): without the repartition every merge map task
-    # writes into every bucket dir it touches — 512+ tiny files per
-    # version that every later epoch re-lists (guide §6)
-    merged.withColumn(
-        "__b", _bucket(F.col(bucket_col), n_buckets)
-    ).repartition(n_buckets, F.col("__b")).write.partitionBy("__b").mode(
-        "overwrite"
-    ).parquet(ver)
-    fs, _r, jp = _fs(spark, sup_dir)
-    for b in touched:
-        fs.mkdirs(jp(f"{ver}/__b={b}"))
-
-
 def _read_cow_support(
     spark: SparkSession, state_dir: str, name: str, ver: int
 ) -> DataFrame:
@@ -621,9 +511,9 @@ def _read_cow_support(
     discipline); a LEGITIMATELY EMPTY support serves the schema from
     the ``_schema.json`` artifact the seed wrote beside the store."""
     sup_dir = f"{state_dir}/sup_cow/{name}"
-    df = _read_sources(spark, sup_dir, _bucket_sources(spark, sup_dir, ver))
+    df = read_buckets(spark, sup_dir, ver)
     if df is None:
-        art = _read_schema_artifact(spark, sup_dir)
+        art = read_schema(spark, sup_dir)
         df = spark.createDataFrame([], StructType.fromJson(art))
     return df
 
@@ -688,7 +578,7 @@ def _write_agg_supports(
         return
     u = _agg_union(dfs)
     u.write.partitionBy("__sup").mode("overwrite").parquet(f"{vdir}/agg")
-    _write_schema_artifact(
+    write_schema(
         spark, f"{vdir}/agg", u.drop("__sup").schema, supports=list(dfs)
     )
 
@@ -707,7 +597,7 @@ def _read_agg_supports(
     if not names:
         return {}
     agg = f"{state_dir}/mart/{version_name}/agg"
-    art = _read_schema_artifact(spark, agg)
+    art = read_schema(spark, agg)
     missing = sorted(set(names) - set(art["supports"]))
     if missing:
         raise KeyError(f"{agg} holds no support {missing}")
@@ -731,15 +621,14 @@ def _advance_supports(
     spark: SparkSession,
     state_dir: str,
     deltas: dict[str, DataFrame],
-    prev: tuple,
-    nxt: int,
-    epoch: int,
+    prev: Version,
+    target: Version,
     habitat: MartHabitat,
     dims: Mapping[str, DataFrame],
     n_buckets: int,
     touched: Mapping[str, list[int]] | None = None,
 ) -> None:
-    """Fold one epoch's signed support deltas into version ``nxt``:
+    """Fold one epoch's signed support deltas into version ``target``:
     facts-scale supports COW-merge only their delta-touched buckets;
     every aggregate-sized support (non-bucketed level 1 AND the
     level-2 rollup targets) merges whole against the previous version
@@ -747,8 +636,9 @@ def _advance_supports(
     level-1 support with a registered rollup merges through the
     transitions-emitting variant — its transitions (through the
     rollup's transform, if any) are the ENTIRE delta of the
-    aggregate-sized level-2 support. The mart-root ``_SUCCESS``,
-    written LAST, commits every piece atomically.
+    aggregate-sized level-2 support. The caller's
+    :func:`.versions.advance` commits every piece atomically with the
+    mart-root ``_SUCCESS`` once this returns.
 
     r15: the bucketed COW merges are mutually independent — they read
     disjoint previous state and write disjoint paths — so they run
@@ -784,7 +674,8 @@ def _advance_supports(
 
     pyramid = habitat.pyramid
     l2 = pyramid.level2
-    vdir = f"{state_dir}/mart/v{nxt}_e{epoch}"
+    mart_dir = f"{state_dir}/mart"
+    vdir = target.path(mart_dir)
     merge_persists: list = []
     thunks = []
     plain_simple: list[str] = []          # plain l1, merged in agg_unit
@@ -813,7 +704,7 @@ def _advance_supports(
         cow_plans[name] = cow_count_merge_plan(
             spark, f"{state_dir}/sup_cow/{name}", deltas[name],
             pyramid.support_keys[name],
-            pyramid.bucketed[name], n_buckets, prev[0],
+            pyramid.bucketed[name], n_buckets, prev.ver,
             roll_keys=list(rollup.trans_keys) if rollup else None,
             touched=sup_touched,
             persist_into=merge_persists,
@@ -823,7 +714,7 @@ def _advance_supports(
         _tu = _time.time()
         with engine_cache_scope():
             prev_plain = _read_agg_supports(
-                spark, state_dir, pyramid, prev[3], plain_simple
+                spark, state_dir, pyramid, prev.name, plain_simple
             )
             agg_out = {
                 name: apply_count_delta(
@@ -861,9 +752,9 @@ def _advance_supports(
                     name=name, merged=merged, sup_touched=sup_touched
                 ) -> None:
                     _tu = _time.time()
-                    cow_write_merged(
-                        spark, f"{state_dir}/sup_cow/{name}", merged,
-                        pyramid.bucketed[name], n_buckets, nxt, epoch,
+                    write_buckets(
+                        spark, f"{state_dir}/sup_cow/{name}", target.name,
+                        merged, pyramid.bucketed[name], n_buckets,
                         sup_touched,
                     )
                     _prof(f"unit {name}", _tu)
@@ -876,7 +767,7 @@ def _advance_supports(
                 # shared by the agg write and the l2 thunk on different
                 # threads, so it is built (and persisted) here up front
                 cur = _read_agg_supports(
-                    spark, state_dir, pyramid, prev[3], [name]
+                    spark, state_dir, pyramid, prev.name, [name]
                 )[name]
                 merged, trans = apply_count_delta_with_transitions(
                     cur, deltas[name], keys, list(rollup.trans_keys),
@@ -889,7 +780,7 @@ def _advance_supports(
                     _tu = _time.time()
                     with engine_cache_scope():
                         cur2 = spark.read.parquet(
-                            f"{state_dir}/mart/{prev[3]}/{rollup.l2}"
+                            f"{prev.path(mart_dir)}/{rollup.l2}"
                         )
                         t = (
                             rollup.transform(trans, dims)
@@ -916,7 +807,6 @@ def _advance_supports(
             except Exception:  # noqa: BLE001 — session may be gone
                 pass
     _prof("write supports", _t0)
-    _commit_marker(spark, vdir)
 
 
 # ------------------------------------------------------------ reads
@@ -933,7 +823,7 @@ def read_supports(
     supports from their per-name directories, facts-scale ones
     resolved per bucket from their COW stores at that version
     number."""
-    ver = int(version_name[1:].partition("_e")[0])
+    ver = parse_name(version_name)[0]
     out: dict[str, DataFrame] = {}
     for name in pyramid.support_names:
         if name in pyramid.bucketed:
@@ -952,35 +842,36 @@ def read_supports(
 # ------------------------------------------------------------ epoch
 
 
-def apply_epoch(
+def _bucket_stores(habitat: MartHabitat, state_dir: str) -> list[str]:
+    """Every COW bucket store an epoch advances (vacuumed with the
+    mart's versions)."""
+    return [f"{state_dir}/{st.name}" for st in habitat.stores] + [
+        f"{state_dir}/sup_cow/{name}" for name in habitat.pyramid.bucketed
+    ]
+
+
+def _epoch_step(
     spark: SparkSession,
     habitat: MartHabitat,
     state_dir: str,
     batch: DataFrame,           # ONE epoch in unify() shape
-    epoch: int,
+    prev: Version | None,
+    target: Version,
     dims: Mapping[str, DataFrame],
-    n_buckets: int = 16,
-    keep_last: int | None = None,
+    n_buckets: int,
 ) -> None:
-    """Fold one changelog epoch into the COW-stored mart state — the
-    shared epoch body of the STREAMING habitat (each foreachBatch
-    micro-batch) and the one-shot BATCH habitat
-    (:func:`maintain_batch`). Replay-guarded by ``epoch`` against the
-    last committed version; all bucket discovery runs as ONE driver
-    job (:func:`discover_touched`); every state piece commits behind
-    the mart version root's ``_SUCCESS``."""
-    mart_dir = f"{state_dir}/mart"
-    prev = _latest_committed(spark, mart_dir)
+    """Fold one changelog epoch into the COW-stored mart state as
+    version ``target`` — the :func:`.versions.advance` step of both the
+    STREAMING habitat (each drained micro-batch) and the one-shot
+    BATCH habitat (:func:`maintain_batch`). All bucket discovery runs
+    as ONE driver job (:func:`discover_touched`)."""
     if prev is None:
         raise RuntimeError(
             f"{habitat.pyramid.name}-mart maintenance requires a seeded "
             "v0 (seed_state)"
         )
-    if prev[1] is not None and epoch <= prev[1]:
-        return  # replayed epoch already committed — no-op
     import time as _time
 
-    nxt = prev[0] + 1
     batch = batch.persist()
     try:
         parts = {
@@ -1004,7 +895,8 @@ def apply_epoch(
                     lambda st=st: cow_apply_images(
                         spark, f"{state_dir}/{st.name}", parts[st.src],
                         st.bucket_col, list(st.key_cols), n_buckets,
-                        prev[0], nxt, epoch, touched=touched[st.src],
+                        prev.ver, target.ver, target.epoch,
+                        touched=touched[st.src],
                     )
                 )
                 for st in habitat.stores
@@ -1017,10 +909,10 @@ def apply_epoch(
         rescans: dict[str, DataFrame] = {}
         for r in habitat.rescans:
             st = by_store[r.store]
-            ver = nxt if r.at == "new" else prev[0]
-            sdir = f"{state_dir}/{st.name}"
-            df = _read_sources(
-                spark, sdir, _bucket_sources(spark, sdir, ver, touched[r.prune_src])
+            df = read_buckets(
+                spark, f"{state_dir}/{st.name}",
+                target.ver if r.at == "new" else prev.ver,
+                touched[r.prune_src],
             )
             if df is None:
                 df = spark.createDataFrame([], st.schema)
@@ -1047,24 +939,12 @@ def apply_epoch(
             # an exception from any pooled write propagates here,
             # failing the epoch before its commit marker is written
             _advance_supports(
-                spark, state_dir, deltas, prev, nxt, epoch,
+                spark, state_dir, deltas, prev, target,
                 habitat, dim_use, n_buckets, touched=touched,
             )
             _prof("advance supports", _t0)
     finally:
         batch.unpersist()
-    _t0 = _time.time()
-    _vacuum(spark, mart_dir, nxt, keep_last)
-    keep_floor = None
-    if keep_last is not None:
-        committed = [t for t in _list_versions(spark, mart_dir) if t[2]]
-        if committed:
-            keep_floor = committed[0][0]
-    for st in habitat.stores:
-        _vacuum_facts(spark, f"{state_dir}/{st.name}", keep_floor, nxt)
-    for name in habitat.pyramid.bucketed:
-        _vacuum_facts(spark, f"{state_dir}/sup_cow/{name}", keep_floor, nxt)
-    _prof("vacuum", _t0)
 
 
 def maintain_stream(
@@ -1077,34 +957,25 @@ def maintain_stream(
     keep_last: int | None = None,
     render_extra: Mapping[str, object] | None = None,
 ) -> DataFrame:
-    """Drain the unified changelog with ``trigger(availableNow)``,
-    folding each micro-batch through :func:`apply_epoch` against the
-    COW-stored state; returns the RENDERED mart at the latest
-    committed version. Pruning is physical at both ends: fact-store
-    rescans and static dims are partition-pruned bucket reads, the
-    facts-scale supports COW-merge touched buckets only, and their
-    transitions maintain the level-2 supports the render reads. A
-    replayed epoch (at-least-once foreachBatch) no-ops exactly as in
-    :mod:`.ivm_stream`."""
+    """Drain the unified changelog through :func:`.versions.drain`,
+    folding each micro-batch into the COW-stored state; returns the
+    RENDERED mart at the latest committed version. Pruning is physical
+    at both ends: fact-store rescans and static dims are
+    partition-pruned bucket reads, the facts-scale supports COW-merge
+    touched buckets only, and their transitions maintain the level-2
+    supports the render reads."""
 
-    def step(batch: DataFrame, epoch: int) -> None:
-        apply_epoch(
-            spark, habitat, state_dir, batch, epoch, dims, n_buckets,
-            keep_last,
+    def step(batch: DataFrame, prev: Version | None, target: Version) -> None:
+        _epoch_step(
+            spark, habitat, state_dir, batch, prev, target, dims, n_buckets
         )
 
-    q = (
-        changes.writeStream.foreachBatch(step)
-        .option("checkpointLocation", state_dir + "_chk")
-        .trigger(availableNow=True)
-        .start()
+    latest = drain(
+        spark, changes, f"{state_dir}/mart", state_dir + "_chk", step,
+        keep_last, _bucket_stores(habitat, state_dir),
     )
-    q.awaitTermination()
-    latest = _latest_committed(spark, f"{state_dir}/mart")
-    if latest is None:
-        raise RuntimeError(f"{habitat.pyramid.name} mart never materialized")
     return habitat.render(
-        read_supports(spark, habitat.pyramid, state_dir, latest[3]),
+        read_supports(spark, habitat.pyramid, state_dir, latest.name),
         **(render_extra or {}),
     )
 
@@ -1128,20 +999,18 @@ def maintain_batch(
     changelog folded here or through the stream (in any micro-batch
     partitioning) converges to identical supports."""
     mart_dir = f"{state_dir}/mart"
-    prev = _latest_committed(spark, mart_dir)
-    if prev is None:
-        raise RuntimeError(
-            f"{habitat.pyramid.name}-mart maintenance requires a seeded "
-            "v0 (seed_state)"
-        )
-    epoch = (prev[1] if prev[1] is not None else -1) + 1
-    apply_epoch(
-        spark, habitat, state_dir, unify(habitat, changelogs), epoch,
-        dims, n_buckets, keep_last,
+    last = latest_committed(spark, mart_dir)
+    epoch = (last.epoch if last is not None and last.epoch is not None else -1) + 1
+    batch = unify(habitat, changelogs)
+    latest = advance(
+        spark, mart_dir, epoch,
+        lambda prev, target: _epoch_step(
+            spark, habitat, state_dir, batch, prev, target, dims, n_buckets
+        ),
+        keep_last, _bucket_stores(habitat, state_dir),
     )
-    latest = _latest_committed(spark, mart_dir)
     return habitat.render(
-        read_supports(spark, habitat.pyramid, state_dir, latest[3]),
+        read_supports(spark, habitat.pyramid, state_dir, latest.name),
         **(render_extra or {}),
     )
 
@@ -1162,10 +1031,8 @@ def read_version(
     of supports; the rendered output is the exact mart schema AS OF
     that release point, which is what the reference's per-release
     mart dumps would have been."""
-    mart_dir = f"{state_dir}/mart"
-    versions = [t for t in _list_versions(spark, mart_dir) if t[2]]
-    pick = _pick_version(versions, mart_dir, version, epoch)
+    pick = versions.pick(spark, f"{state_dir}/mart", version, epoch)
     return habitat.render(
-        read_supports(spark, habitat.pyramid, state_dir, pick[3]),
+        read_supports(spark, habitat.pyramid, state_dir, pick.name),
         **(render_extra or {}),
     )

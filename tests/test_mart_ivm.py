@@ -281,10 +281,7 @@ def test_mart_stream_equals_batch_rebuild(spark, tmp_path):
     COW-stored protein/match state; the rendered mart equals the full
     taxon_xrefs_mart rebuild of the final snapshot, and both COW
     stores resolve to the final snapshots."""
-    from interpro7_dw_spark.streaming.minmax_stream import (
-        _bucket_sources,
-        _read_sources,
-    )
+    from interpro7_dw_spark.streaming.versions import read_buckets
 
     p_old = {f"P{i}": f"N{i % 6}" for i in range(24)}
     m_old = {j: (f"P{j % 24}", f"SIG{j % 9}", f"DB{(j % 9) % 3}") for j in range(70)}
@@ -338,20 +335,14 @@ def test_mart_stream_equals_batch_rebuild(spark, tmp_path):
     got_p = sorted(
         map(
             tuple,
-            _read_sources(
-                spark, state + "/proteins",
-                _bucket_sources(spark, state + "/proteins", latest),
-            ).collect(),
+            read_buckets(spark, state + "/proteins", latest).collect(),
         )
     )
     assert got_p == sorted((k, v) for k, v in p_new.items())
     got_m = sorted(
         map(
             tuple,
-            _read_sources(
-                spark, state + "/matches",
-                _bucket_sources(spark, state + "/matches", latest),
-            )
+            read_buckets(spark, state + "/matches", latest)
             .select("match_id", "protein_acc", "signature_acc", "database")
             .collect(),
         )
@@ -503,11 +494,12 @@ def test_cow_support_io_tracks_touched_buckets(spark, tmp_path):
     unpruned full merge."""
     import os
 
-    from interpro7_dw_spark.streaming.mart_habitat import cow_apply_count_delta
-    from interpro7_dw_spark.streaming.minmax_stream import (
-        _bucket,
-        _bucket_sources,
-        _read_sources,
+    from interpro7_dw_spark.streaming.mart_habitat import cow_count_merge_plan
+    from interpro7_dw_spark.streaming.versions import (
+        bucket,
+        read_buckets,
+        version_name,
+        write_buckets,
     )
     from interpro7_dw_spark.testing import max_job_id, stage_input_records_between
 
@@ -521,7 +513,7 @@ def test_cow_support_io_tracks_touched_buckets(spark, tmp_path):
         F.lit(1).cast("long").alias("n"),
     )
     support.withColumn(
-        "__b", _bucket(F.col("protein_acc"), n_buckets)
+        "__b", bucket(F.col("protein_acc"), n_buckets)
     ).write.partitionBy("__b").parquet(f"{sup_dir}/v0")
 
     # 8 proteins: 7 increments + 1 exit-at-zero retraction
@@ -532,14 +524,18 @@ def test_cow_support_io_tracks_touched_buckets(spark, tmp_path):
     touched = {
         r[0]
         for r in delta.select(
-            _bucket(F.col("protein_acc"), n_buckets).alias("b")
+            bucket(F.col("protein_acc"), n_buckets).alias("b")
         ).distinct().collect()
     }
     assert len(touched) <= n_delta
 
     j0 = max_job_id(spark)
-    cow_apply_count_delta(
-        spark, sup_dir, delta, keys, "protein_acc", n_buckets, 0, 1, 0
+    merged, _, merged_buckets = cow_count_merge_plan(
+        spark, sup_dir, delta, keys, "protein_acc", n_buckets, 0
+    )
+    write_buckets(
+        spark, sup_dir, version_name(1, 0), merged, "protein_acc", n_buckets,
+        merged_buckets,
     )
     j1 = max_job_id(spark)
     rec = stage_input_records_between(spark, j0, j1)
@@ -558,9 +554,7 @@ def test_cow_support_io_tracks_touched_buckets(spark, tmp_path):
     assert written == touched, (written, touched)
 
     # correctness: resolved COW store == unpruned full merge
-    resolved = _read_sources(
-        spark, sup_dir, _bucket_sources(spark, sup_dir, 1)
-    )
+    resolved = read_buckets(spark, sup_dir, 1)
     got = sorted(map(tuple, resolved.collect()))
     want = sorted(map(tuple, apply_count_delta(support, delta, keys).collect()))
     assert got == want
@@ -1138,12 +1132,12 @@ def test_epoch_releases_merge_persists_when_planning_fails(
 
 
 def test_cow_apply_images_touched_validation(spark, tmp_path):
-    """minmax_stream.VALIDATE_TOUCHED (r14 ADVICE): a caller-supplied
+    """versions.VALIDATE_TOUCHED (r14 ADVICE): a caller-supplied
     touched list that is NOT exactly the change-type-filtered
     discovery raises instead of silently serving stale buckets."""
     import pytest as _pytest
 
-    from interpro7_dw_spark.streaming import minmax_stream as mm
+    from interpro7_dw_spark.streaming import versions
 
     facts_dir = str(tmp_path / "facts")
     base = spark.createDataFrame(
@@ -1151,7 +1145,7 @@ def test_cow_apply_images_touched_validation(spark, tmp_path):
         "k long, g string, v long",
     )
     base.withColumn(
-        "__b", mm._bucket(F.col("g"), 8)
+        "__b", versions.bucket(F.col("g"), 8)
     ).write.partitionBy("__b").parquet(f"{facts_dir}/v0")
     batch = spark.createDataFrame(
         [(1, "update", "1", 10, "1", 99), (2, "delete", "2", 20, None, None)],
@@ -1160,24 +1154,24 @@ def test_cow_apply_images_touched_validation(spark, tmp_path):
     )
     right = sorted(
         r[0]
-        for r in batch.select(mm._bucket(F.col("old_g"), 8).alias("b"))
+        for r in batch.select(versions.bucket(F.col("old_g"), 8).alias("b"))
         .distinct()
         .collect()
     )
-    mm.VALIDATE_TOUCHED = True
+    versions.VALIDATE_TOUCHED = True
     try:
         # exact set passes
-        mm.cow_apply_images(
+        versions.cow_apply_images(
             spark, facts_dir, batch, "g", ["k"], 8, 0, 1, 0, touched=right
         )
         # a subset (stale-serving hazard) raises loudly
         with _pytest.raises(ValueError, match="touched buckets"):
-            mm.cow_apply_images(
+            versions.cow_apply_images(
                 spark, facts_dir, batch, "g", ["k"], 8, 1, 2, 1,
                 touched=right[:1] if len(right) > 1 else [],
             )
     finally:
-        mm.VALIDATE_TOUCHED = False
+        versions.VALIDATE_TOUCHED = False
 
 
 def _clan_fixtures(spark):
@@ -1564,13 +1558,12 @@ def test_cow_apply_count_delta_superset_touched_equals_discovered(
     support rows at all."""
     import os
 
-    from interpro7_dw_spark.streaming.mart_habitat import (
-        cow_apply_count_delta,
-    )
-    from interpro7_dw_spark.streaming.minmax_stream import (
-        _bucket,
-        _bucket_sources,
-        _read_sources,
+    from interpro7_dw_spark.streaming.mart_habitat import cow_count_merge_plan
+    from interpro7_dw_spark.streaming.versions import (
+        bucket,
+        read_buckets,
+        version_name,
+        write_buckets,
     )
 
     n_buckets = 8
@@ -1586,7 +1579,7 @@ def test_cow_apply_count_delta_superset_touched_equals_discovered(
     exact = sorted(
         r[0]
         for r in delta.select(
-            _bucket(F.col("protein_acc"), n_buckets).alias("b")
+            bucket(F.col("protein_acc"), n_buckets).alias("b")
         ).distinct().collect()
     )
     superset = sorted(set(exact) | {b for b in range(n_buckets)})
@@ -1596,20 +1589,21 @@ def test_cow_apply_count_delta_superset_touched_equals_discovered(
     got_dir = str(tmp_path / "sup_superset")
     for d in (want_dir, got_dir):
         support.withColumn(
-            "__b", _bucket(F.col("protein_acc"), n_buckets)
+            "__b", bucket(F.col("protein_acc"), n_buckets)
         ).write.partitionBy("__b").parquet(f"{d}/v0")
 
     # collect-discovery path (touched=None) vs caller-derived superset
-    cow_apply_count_delta(
-        spark, want_dir, delta, keys, "protein_acc", n_buckets, 0, 1, 0
-    )
-    cow_apply_count_delta(
-        spark, got_dir, delta, keys, "protein_acc", n_buckets, 0, 1, 0,
-        touched=superset,
-    )
+    for d, touched in ((want_dir, None), (got_dir, superset)):
+        merged, _, merged_buckets = cow_count_merge_plan(
+            spark, d, delta, keys, "protein_acc", n_buckets, 0, touched=touched
+        )
+        write_buckets(
+            spark, d, version_name(1, 0), merged, "protein_acc", n_buckets,
+            merged_buckets,
+        )
 
     def resolved(d):
-        df = _read_sources(spark, d, _bucket_sources(spark, d, 1))
+        df = read_buckets(spark, d, 1)
         return sorted(map(tuple, df.collect()))
 
     assert resolved(got_dir) == resolved(want_dir)

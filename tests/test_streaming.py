@@ -3,6 +3,7 @@ the jsonify sink rule."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 GAP = 1_800_000_000  # 30 min in micros
@@ -422,16 +423,22 @@ def _group_agg(df, g="g", v="v"):
     )
 
 
-def test_streaming_ivm_replay_is_idempotent(spark, tmp_path):
-    """foreachBatch is at-least-once: a micro-batch whose merge
-    committed (_SUCCESS written) but whose checkpoint did not is
-    REPLAYED on restart. Simulate the worst case — the ENTIRE
-    changelog replayed against a fully-maintained mart (fresh
-    checkpoint, same state dir) — and assert every replayed epoch is
-    a no-op: same final mart, ZERO new versions."""
-    import os
-    import shutil
+def _two_files(delta, src, cond):
+    """Write ``delta`` as two changelog files (``cond`` and the rest):
+    two micro-batches under maxFilesPerTrigger=1."""
+    delta.filter(cond).coalesce(1).write.mode("append").parquet(src)
+    delta.filter(~F.expr(cond)).coalesce(1).write.mode("append").parquet(src)
 
+
+def _file_stream(spark, schema, src):
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+
+
+def _replay_group_agg(spark, state, src):
     from interpro7_dw_spark.operators.cdc import snapshot_delta_images
     from interpro7_dw_spark.streaming.ivm_stream import maintain_group_agg_stream
 
@@ -439,34 +446,134 @@ def test_streaming_ivm_replay_is_idempotent(spark, tmp_path):
     old = spark.createDataFrame([(1, "g1", 10.0), (2, "g2", 5.0)], schema)
     new = spark.createDataFrame([(1, "g1", 12.0), (3, "g2", 7.0)], schema)
     delta = snapshot_delta_images(old, new, ["k"], ["g", "v"])
-    src = tmp_path / "changes"
-    delta.filter("k <= 1").coalesce(1).write.mode("append").parquet(str(src))
-    delta.filter("k > 1").coalesce(1).write.mode("append").parquet(str(src))
-    state = str(tmp_path / "mart")
+    _two_files(delta, src, "k <= 1")
     _group_agg(old).write.parquet(state + "/v0")  # seed: OLD aggregate
 
     def run():
-        stream = (
-            spark.readStream.schema(delta.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
+        return maintain_group_agg_stream(
+            spark, _file_stream(spark, delta.schema, src), state, "g", "v"
         )
-        return maintain_group_agg_stream(spark, stream, state, "g", "v")
 
-    first = _mart_dict(run())
-    versions_after_first = sorted(os.listdir(state))
+    return run, state, _mart_dict, _mart_dict(_group_agg(new))
+
+
+def _replay_topk(spark, state, src):
+    from interpro7_dw_spark.streaming.ivm_stream import maintain_group_topk_stream
+
+    rows = spark.createDataFrame(
+        [("u", 1, 10.0), ("u", 2, 30.0), ("u", 3, 20.0), ("v", 4, 1.0)],
+        "k string, id long, v double",
+    )
+    _two_files(rows, src, "id <= 2")
+
+    def run():
+        return maintain_group_topk_stream(
+            spark, _file_stream(spark, rows.schema, src), state, "k", "v", "id",
+            k=2,
+        )
+
+    def key(df):
+        return {(r.k, r.rank): (r.id, r.v) for r in df.collect()}
+
+    want = {("u", 1): (2, 30.0), ("u", 2): (3, 20.0), ("v", 1): (4, 1.0)}
+    return run, state, key, want
+
+
+def _replay_join_agg(spark, state, src):
+    from interpro7_dw_spark.operators.cdc import snapshot_delta_images
+    from interpro7_dw_spark.streaming.ivm_stream import maintain_join_agg_stream
+
+    schema = "fk long, k long, v double"
+    fact_old = spark.createDataFrame([(1, 10, 5.0), (2, 20, 7.0)], schema)
+    fact_new = spark.createDataFrame([(1, 20, 6.0), (3, 10, 1.0)], schema)
+    dim = spark.createDataFrame([(10, "g1"), (20, "g2")], "k long, g string")
+    facts_dir = state + "_facts"
+    fact_old.write.parquet(facts_dir)
+    delta = snapshot_delta_images(fact_old, fact_new, ["fk"], ["k", "v"])
+    _two_files(delta, src, "fk <= 1")
+
+    def run():
+        return maintain_join_agg_stream(
+            spark, _file_stream(spark, delta.schema, src), dim, state,
+            facts_dir, "k", "g", "v",
+        )
+
+    want = _mart_dict(_group_agg(fact_new.join(dim, "k")))
+    return run, state, _mart_dict, want
+
+
+def _minmax_dict(df):
+    return {r.g: (r.n_rows, r.min_v, r.max_v) for r in df.collect()}
+
+
+def _minmax_agg(df):
+    return df.groupBy("g").agg(
+        F.count(F.lit(1)).cast("long").alias("n_rows"),
+        F.min("v").alias("min_v"),
+        F.max("v").alias("max_v"),
+    )
+
+
+def _replay_minmax(spark, state, src):
+    from interpro7_dw_spark.operators.cdc import snapshot_delta_images
+    from interpro7_dw_spark.streaming.minmax_stream import (
+        maintain_group_minmax_stream,
+        seed_minmax_state,
+    )
+
+    schema = "k long, g long, v double"
+    old = spark.createDataFrame([(i, i % 3, float(i)) for i in range(9)], schema)
+    new = old.filter("k <> 0").union(
+        spark.createDataFrame([(20, 1, -2.0)], schema)
+    )
+    delta = snapshot_delta_images(old, new, ["k"], ["g", "v"])
+    _two_files(delta, src, "k <= 1")
+    seed_minmax_state(spark, old, state, "g", "v", n_buckets=4)
+
+    def run():
+        return maintain_group_minmax_stream(
+            spark, _file_stream(spark, delta.schema, src), state, "g", "v",
+            ["k"], n_buckets=4,
+        )
+
+    return run, state + "/mart", _minmax_dict, _minmax_dict(_minmax_agg(new))
+
+
+_REPLAY_CASES = {
+    "group_agg": _replay_group_agg,
+    "topk": _replay_topk,
+    "join_agg": _replay_join_agg,
+    "minmax": _replay_minmax,
+}
+
+
+@pytest.mark.parametrize("maintainer", list(_REPLAY_CASES))
+def test_streaming_ivm_replay_is_idempotent(spark, tmp_path, maintainer):
+    """foreachBatch is at-least-once: a micro-batch whose merge
+    committed (_SUCCESS written) but whose checkpoint did not is
+    REPLAYED on restart. Simulate the worst case — the ENTIRE
+    changelog replayed against a fully-maintained mart (fresh
+    checkpoint, same state dir) — and assert every replayed epoch is
+    a no-op for every maintainer: same final mart, ZERO new
+    versions."""
+    import os
+    import shutil
+
+    state = str(tmp_path / "mart")
+    run, versions_dir, key, want = _REPLAY_CASES[maintainer](
+        spark, state, str(tmp_path / "changes")
+    )
+    first = key(run())
+    versions_after_first = sorted(os.listdir(versions_dir))
     # drop the checkpoint: the rerun replays every epoch from scratch,
     # exactly what an at-least-once retry of a committed merge looks like
     shutil.rmtree(state + "_chk")
-    second = _mart_dict(run())
-    assert second == first == _mart_dict(_group_agg(new))
-    assert sorted(os.listdir(state)) == versions_after_first
+    second = key(run())
+    assert second == first == want
+    assert sorted(os.listdir(versions_dir)) == versions_after_first
 
 
-def test_streaming_ivm_half_write_ignored_and_vacuumed(spark, tmp_path):
-    """A crashed half-write (version dir without _SUCCESS) must never
-    be read as a parent and must be swept by the post-epoch vacuum;
-    keep_last=1 retains only the newest committed version."""
+def _half_write_group_agg(spark, state, src, keep_last):
     import os
 
     from interpro7_dw_spark.operators.cdc import snapshot_delta_images
@@ -476,10 +583,7 @@ def test_streaming_ivm_half_write_ignored_and_vacuumed(spark, tmp_path):
     old = spark.createDataFrame([(1, "g1", 10.0)], schema)
     new = spark.createDataFrame([(1, "g1", 11.0), (2, "g2", 3.0)], schema)
     delta = snapshot_delta_images(old, new, ["k"], ["g", "v"])
-    src = tmp_path / "changes"
-    delta.filter("k = 1").coalesce(1).write.mode("append").parquet(str(src))
-    delta.filter("k = 2").coalesce(1).write.mode("append").parquet(str(src))
-    state = str(tmp_path / "mart")
+    _two_files(delta, src, "k = 1")
     # seed v0 with the OLD aggregate, then fake a crashed half-write at
     # v1 with POISONED numbers (if it were ever read as a parent, the
     # final totals would be wrong) and no _SUCCESS
@@ -490,20 +594,73 @@ def test_streaming_ivm_half_write_ignored_and_vacuumed(spark, tmp_path):
         "g", "n_rows", F.col("total").cast("decimal(18,4)").alias("total")
     ).write.parquet(state + "/v1_e9")
     os.remove(os.path.join(state, "v1_e9", "_SUCCESS"))
-
-    stream = (
-        spark.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
     got = _mart_dict(
-        maintain_group_agg_stream(spark, stream, state, "g", "v", keep_last=1)
+        maintain_group_agg_stream(
+            spark, _file_stream(spark, delta.schema, src), state, "g", "v",
+            keep_last=keep_last,
+        )
     )
-    assert got == _mart_dict(_group_agg(new))
-    names = sorted(p for p in os.listdir(state) if p.startswith("v"))
-    # half-write swept; keep_last=1 leaves exactly the newest committed
+    return got, _mart_dict(_group_agg(new)), state
+
+
+def _half_write_minmax(spark, state, src, keep_last):
+    import os
+
+    from interpro7_dw_spark.operators.cdc import snapshot_delta_images
+    from interpro7_dw_spark.streaming.minmax_stream import (
+        maintain_group_minmax_stream,
+        seed_minmax_state,
+    )
+
+    schema = "k long, g long, v double"
+    old = spark.createDataFrame([(1, 1, 10.0), (3, 2, 4.0)], schema)
+    new = spark.createDataFrame([(1, 1, 11.0), (2, 2, 3.0), (3, 2, 4.0)], schema)
+    delta = snapshot_delta_images(old, new, ["k"], ["g", "v"])
+    _two_files(delta, src, "k = 1")
+    seed_minmax_state(spark, old, state, "g", "v", n_buckets=4)
+    # a crashed mart half-write with POISONED extrema and no _SUCCESS
+    spark.createDataFrame(
+        [(1, 999, -999.0, 999.0)],
+        "g long, n_rows long, min_v double, max_v double",
+    ).write.parquet(state + "/mart/v1_e9")
+    os.remove(os.path.join(state, "mart", "v1_e9", "_SUCCESS"))
+    got = _minmax_dict(
+        maintain_group_minmax_stream(
+            spark, _file_stream(spark, delta.schema, src), state, "g", "v",
+            ["k"], n_buckets=4, keep_last=keep_last,
+        )
+    )
+    return got, _minmax_dict(_minmax_agg(new)), state + "/mart"
+
+
+@pytest.mark.parametrize(
+    "half_write, keep_last",
+    [
+        pytest.param(_half_write_group_agg, 1, id="group_agg"),
+        pytest.param(_half_write_minmax, None, id="minmax"),
+    ],
+)
+def test_streaming_ivm_half_write_ignored_and_vacuumed(
+    spark, tmp_path, half_write, keep_last
+):
+    """A crashed half-write (version dir without _SUCCESS) must never
+    be read as a parent and must be swept by the post-epoch vacuum,
+    with or without ``keep_last``; keep_last=1 retains only the newest
+    committed version, keep_last=None every committed one."""
+    import os
+
+    got, want, versions_dir = half_write(
+        spark, str(tmp_path / "mart"), str(tmp_path / "changes"), keep_last
+    )
+    assert got == want
+    names = sorted(p for p in os.listdir(versions_dir) if p.startswith("v"))
+    # half-write swept
     assert "v1_e9" not in names
-    assert len(names) == 1 and names[0].startswith("v2")
+    if keep_last == 1:
+        # keep_last=1 leaves exactly the newest committed
+        assert len(names) == 1 and names[0].startswith("v2")
+    else:
+        assert names == ["v0", "v1_e0", "v2_e1"]
 
 
 def test_streaming_ivm_many_epochs_cost_tracks_delta(spark, tmp_path):
@@ -705,9 +862,9 @@ def test_streaming_minmax_ivm_copy_on_write(spark, tmp_path):
     from interpro7_dw_spark.operators.cdc import snapshot_delta_images
     from interpro7_dw_spark.streaming.minmax_stream import (
         maintain_group_minmax_stream,
-        resolve_facts,
         seed_minmax_state,
     )
+    from interpro7_dw_spark.streaming.versions import read_buckets
 
     n_buckets = 8
     schema = "k long, g long, v double"
@@ -765,7 +922,7 @@ def test_streaming_minmax_ivm_copy_on_write(spark, tmp_path):
         if p.startswith("v")
     )
     resolved = sorted(
-        map(tuple, resolve_facts(spark, state, latest, n_buckets).collect())
+        map(tuple, read_buckets(spark, state + "/facts", latest).collect())
     )
     assert resolved == sorted(map(tuple, new.collect()))
     # version-major layout: facts/<v..>/__b=<i>/ — committed version
@@ -1160,7 +1317,12 @@ def test_read_mart_version_time_travel(spark, tmp_path):
 
     import pytest
 
-    from interpro7_dw_spark.streaming.ivm_stream import read_mart_version
+    from interpro7_dw_spark.streaming.versions import pick
+
+    def read_mart_version(spark, state_dir, version=None, epoch=None):
+        return spark.read.parquet(
+            pick(spark, state_dir, version, epoch).path(state_dir)
+        )
 
     state = str(tmp_path / "mart")
     for ver, ep, n in (("v0", None, 1), ("v1_e3", 3, 2), ("v2_e7", 7, 3)):

@@ -7,9 +7,10 @@ assignment table) must not be reshuffled or rewritten whole per
 epoch. Two mechanisms fix it and this audit measures both:
 
 1. **COW bucket store** (``streaming/mart_habitat.py::
-   cow_apply_count_delta``): the support lives bucketed by protein;
-   one epoch reads + rewrites only the delta-touched buckets. The
-   measured per-epoch ``input_records`` must track
+   cow_count_merge_plan`` + ``streaming/versions.py::write_buckets``):
+   the support lives bucketed by protein; one epoch reads + rewrites
+   only the delta-touched buckets. The measured per-epoch
+   ``input_records`` must track
    |touched buckets| × rows-per-bucket, not |support|.
 2. **Pruned plan-level merge** (``domain/mart_ivm.py::
    apply_count_delta_pruned``, the one-shot batch maintainer's half):
@@ -43,8 +44,12 @@ def main() -> None:
         apply_count_delta_pruned,
     )
     from interpro7_dw_spark.session import get_spark
-    from interpro7_dw_spark.streaming.mart_habitat import cow_apply_count_delta
-    from interpro7_dw_spark.streaming.minmax_stream import _bucket
+    from interpro7_dw_spark.streaming.mart_habitat import cow_count_merge_plan
+    from interpro7_dw_spark.streaming.versions import (
+        bucket,
+        version_name,
+        write_buckets,
+    )
     from interpro7_dw_spark.testing import max_job_id, stage_metrics_between
 
     n_support = int(sys.argv[1]) if len(sys.argv) > 1 else 256_000
@@ -69,7 +74,7 @@ def main() -> None:
     tmp = tempfile.mkdtemp(prefix="mart_io_audit_")
     sup_dir = f"{tmp}/sup"
     support_df().withColumn(
-        "__b", _bucket(F.col("protein_acc"), n_buckets)
+        "__b", bucket(F.col("protein_acc"), n_buckets)
     ).write.partitionBy("__b").parquet(f"{sup_dir}/v0")
 
     def emit(path: str, n_rows: int, touched, j0: int, t0: float, note: str = ""):
@@ -91,14 +96,17 @@ def main() -> None:
     for n_rows in (1, 64, 1024):
         d = delta_for(n_rows)
         touched = (
-            d.select(_bucket(F.col("protein_acc"), n_buckets).alias("b"))
+            d.select(bucket(F.col("protein_acc"), n_buckets).alias("b"))
             .distinct()
             .count()
         )
         j0, t0 = max_job_id(spark), time.time()
-        cow_apply_count_delta(
-            spark, sup_dir, d, keys, "protein_acc", n_buckets,
-            ver, ver + 1, ver + 1,
+        merged, _, merged_buckets = cow_count_merge_plan(
+            spark, sup_dir, d, keys, "protein_acc", n_buckets, ver
+        )
+        write_buckets(
+            spark, sup_dir, version_name(ver + 1, ver + 1), merged,
+            "protein_acc", n_buckets, merged_buckets,
         )
         ver += 1
         emit("cow_touched_buckets", n_rows, touched, j0, t0)
