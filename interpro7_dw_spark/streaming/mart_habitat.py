@@ -13,22 +13,33 @@ physical story:
                                             by protein so bilinear
                                             rescans read only touched
                                             proteins' buckets)
-    state_dir/dims/<name>/v0/__b=<i>/       protein-keyed STATIC dims,
+    state_dir/dims/v0/__b=<i>/              the protein-keyed STATIC
+                                            dims: ONE union store
+                                            (rows tagged ``__dim``),
                                             bucketed once at seed so
-                                            epoch delta joins read
-                                            only touched buckets
-    state_dir/mart/v<n>_e<e>/<support>/     aggregate-sized supports,
-                                            rewritten whole per
-                                            version, committed
+                                            each epoch reads only
+                                            touched buckets, once
+    state_dir/sup_cow/v<n>_e<e>/__b=<i>/    the FACTS-SCALE supports:
+                                            ONE union store (rows
+                                            tagged ``__sup``) in the
+                                            same COW bucket layout —
+                                            only touched buckets are
+                                            read, merged and rewritten
+                                            per epoch, in one write
+    state_dir/mart/v<n>_e<e>/agg/__sup=<name>/
+                                            the plain aggregate-sized
+                                            supports, one union
+                                            rewritten whole per version
+    state_dir/mart/v<n>_e<e>/<support>/     the level-2 supports, one
+                                            directory each; the
+                                            version is committed
                                             atomically by ONE _SUCCESS
-                                            at the version root
-                                            written LAST
-    state_dir/sup_cow/<support>/v<n>_e<e>/__b=<i>/
-                                            FACTS-SCALE supports in
-                                            the same COW bucket
-                                            layout: only delta-touched
-                                            buckets are read, merged
-                                            and rewritten per epoch
+                                            at its root written LAST
+
+Every bucket store and the agg union carry a ``_schema.json`` that
+every read of them passes to Spark (the level-2 reads still infer
+theirs); the union stores' artifacts list their members
+(:mod:`.versions`).
 
 Per-epoch cost: |micro-batch| + touched COW buckets (facts AND
 facts-scale supports) + the aggregate-sized supports — never
@@ -51,7 +62,6 @@ from __future__ import annotations
 from collections.abc import Callable, Mapping
 from dataclasses import dataclass, field
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -74,8 +84,11 @@ from .versions import (
     latest_committed,
     parse_name,
     read_buckets,
+    read_members,
     read_schema,
+    require_members,
     seed_buckets,
+    tagged_union,
     write_buckets,
     write_schema,
 )
@@ -109,13 +122,13 @@ class ChangeSrc:
 class FactStore:
     """A COW bucket store of one source's maintained snapshot —
     needed exactly when some OTHER source's bilinear delta rescans
-    this relation (dV = dF |><| D_new + F_old |><| dD). ``schema`` is
-    the stored-row DDL, served when a pruned read finds no rows."""
+    this relation (dV = dF |><| D_new + F_old |><| dD). Its rows keep
+    the seed relation's schema, which the store's ``_schema.json``
+    records for every read."""
 
     name: str
     src: str
     key_cols: tuple[str, ...]
-    schema: str
     bucket_col: str = "protein_acc"
 
 
@@ -136,11 +149,13 @@ class Rescan:
 @dataclass(frozen=True)
 class DimUse:
     """A static dimension the delta computation joins. With
-    ``prune_src`` set the dim is protein-keyed and seeded into the
-    bucketed ``dims/`` store, so each epoch reads only the buckets
-    that source's delta touched (a correct superset of its join
-    keys); with ``prune_src=None`` the caller-passed relation is used
-    whole (broadcast-small dims like signature->clan)."""
+    ``prune_src`` set the dim is protein-keyed and seeded as a member
+    of the one bucketed ``dims/`` union store, so each epoch reads
+    only the buckets its pruned dims' sources touched (a correct
+    superset of every join key), projected to the caller-passed
+    relation's columns; with ``prune_src=None`` the caller-passed
+    relation is used whole (broadcast-small dims like
+    signature->clan)."""
 
     name: str
     prune_src: str | None = None
@@ -165,17 +180,17 @@ class MartHabitat:
     stores: tuple[FactStore, ...] = ()
     rescans: tuple[Rescan, ...] = ()
     dims: tuple[DimUse, ...] = ()
-    # r15 (guide §1.2/§2.4 — remove whole passes): for each BUCKETED
+    # r15 (guide §1.2/§2.4 — remove whole passes): for EVERY bucketed
     # support, the changelog arms whose rows can contribute to its
     # delta. The union of those arms' one-job discovery sets is a
     # SUPERSET of the delta's touched buckets (each delta builder
     # derives its rows' protein keys from exactly these arms' images),
-    # so the COW merge can skip its own touched-bucket collect — which
-    # otherwise EXECUTES the full delta plan once per bucketed support
-    # per epoch, on top of the merge's own execution. A superset is
-    # value-identical: extra buckets' rows pass through the pruned
-    # merge unchanged and are rewritten identically at the new version
-    # (tests/test_mart_ivm.py::
+    # so the COW merge skips its own touched-bucket collect — which
+    # would EXECUTE the full delta plan once more per epoch. The union
+    # support store is rewritten over the union of every member's set;
+    # a superset is value-identical: extra buckets' rows pass through
+    # the pruned merge unchanged and are rewritten identically at the
+    # new version (tests/test_mart_ivm.py::
     # test_cow_apply_count_delta_superset_touched_equals_discovered).
     sup_touch: Mapping[str, tuple[str, ...]] = field(default_factory=dict)
 
@@ -293,20 +308,11 @@ def discover_touched(
 # ------------------------------------------------------------- seed
 
 
-def _read_static_dim(
-    spark: SparkSession,
-    state_dir: str,
-    name: str,
-    buckets: list[int],
-    fallback: DataFrame,
-) -> DataFrame:
-    """The bucketed static dim pruned to ``buckets`` — correct for any
-    delta join keyed by protein, because the pruned set is a superset
-    of the delta's proteins (rows outside them are dropped by the join
-    anyway). No rows in those buckets serve ``fallback``'s typed empty
-    relation; a missing dim store raises."""
-    df = read_buckets(spark, f"{state_dir}/dims/{name}", 0, buckets)
-    return df if df is not None else fallback.limit(0)
+def _sup_bucket_col(pyramid: MartPyramid) -> str:
+    """The bucket column of the mart's union support store: every
+    facts-scale support of a mart buckets by the same one
+    (tests/test_mart_ivm.py::test_habitat_definition_is_consistent)."""
+    return next(iter(pyramid.bucketed.values()))
 
 
 def _seed_support_thunks(
@@ -316,20 +322,13 @@ def _seed_support_thunks(
     pyramid: MartPyramid,
     n_buckets: int,
 ) -> list:
-    """One write thunk per FACTS-SCALE support of the v0 state (each a
-    bucketed COW store with a ``_schema.json`` artifact so an emptied
-    or seed-empty store can still be served with its REAL schema) and
-    per LEVEL-2 support (plain parquet under the mart version root),
-    plus ONE thunk writing every plain level-1 support through the
-    discriminated ``mart/v0/agg`` union (r16 — one action instead of
-    one per support). The caller runs them (concurrently — they write
-    disjoint paths) and writes the mart root ``_SUCCESS`` LAST to
-    commit all."""
-    def bucketed(name: str) -> None:
-        sup_dir = f"{state_dir}/sup_cow/{name}"
-        seed_buckets(sup_dir, sup[name], pyramid.bucketed[name], n_buckets)
-        write_schema(spark, sup_dir, sup[name].schema)
-
+    """The write thunks of the v0 supports: ONE for every FACTS-SCALE
+    support through the bucketed ``sup_cow`` union store, one per
+    LEVEL-2 support (plain parquet under the mart version root), and
+    ONE for every plain level-1 support through the discriminated
+    ``mart/v0/agg`` union (r16 — one action instead of one per
+    support). The caller runs them (concurrently — they write disjoint
+    paths) and writes the mart root ``_SUCCESS`` LAST to commit all."""
     l2 = pyramid.level2
     plain_names = [
         n
@@ -337,11 +336,6 @@ def _seed_support_thunks(
         if n not in pyramid.bucketed and n not in l2
     ]
     thunks = [
-        (lambda name=name: bucketed(name))
-        for name in pyramid.support_names
-        if name in pyramid.bucketed
-    ]
-    thunks += [
         (
             lambda name=name: sup[name].write.parquet(
                 f"{state_dir}/mart/{SEED}/{name}"
@@ -350,6 +344,15 @@ def _seed_support_thunks(
         for name in pyramid.support_names
         if name in l2 and name not in pyramid.bucketed
     ]
+    if pyramid.bucketed:
+        thunks.append(
+            lambda: seed_buckets(
+                f"{state_dir}/sup_cow",
+                tagged_union("__sup", {n: sup[n] for n in pyramid.bucketed}),
+                _sup_bucket_col(pyramid), n_buckets,
+                members=list(pyramid.bucketed),
+            )
+        )
     if plain_names:
         thunks.append(
             lambda: _write_agg_supports(
@@ -372,10 +375,10 @@ def seed_state(
     """Materialize version 0 of every state piece from the base
     snapshot (the one full rebuild a mart ever needs): the fact COW
     stores (each from ``old[store.src]``, the old release keyed by
-    changelog arm tag), the protein-keyed static dims in the same
-    bucket layout, and the supports ``habitat.seed(old, dims)``
-    aggregates, per their storage discipline. Every piece writes
-    a DISJOINT path from independent plans (the supports share their
+    changelog arm tag), the protein-keyed static dims as one union
+    store in the same bucket layout, and the supports
+    ``habitat.seed(old, dims)`` aggregates, per their storage
+    discipline. Every piece writes a DISJOINT path from independent plans (the supports share their
     seed's owned persists, whose blocks the block manager computes
     once under concurrent first readers), so all writes run from one
     driver pool (guide §2.6); the mart root ``_SUCCESS`` still commits
@@ -390,16 +393,16 @@ def seed_state(
     ]
     # protein-keyed static dims never advance: bucketed once here, every
     # epoch's delta join reads only the delta's touched buckets
-    thunks += [
-        (
-            lambda d=d: seed_buckets(
-                f"{state_dir}/dims/{d.name}", dims[d.name], "protein_acc",
-                n_buckets,
+    pruned = {
+        d.name: dims[d.name] for d in habitat.dims if d.prune_src is not None
+    }
+    if pruned:
+        thunks.append(
+            lambda: seed_buckets(
+                f"{state_dir}/dims", tagged_union("__dim", pruned),
+                "protein_acc", n_buckets, members=list(pruned),
             )
         )
-        for d in habitat.dims
-        if d.prune_src is not None
-    ]
     thunks += _seed_support_thunks(
         spark, state_dir, habitat.seed(old, dims), habitat.pyramid,
         n_buckets,
@@ -414,22 +417,24 @@ def seed_state(
 def cow_count_merge_plan(
     spark: SparkSession,
     sup_dir: str,
-    delta: DataFrame,
-    keys: list[str],
+    deltas: Mapping[str, DataFrame],
+    keys: Mapping[str, list[str]],
     bucket_col: str,
     n_buckets: int,
     prev_version: int,
-    roll_keys: list[str] | None = None,
+    roll_keys: Mapping[str, list[str]] | None = None,
     touched: list[int] | None = None,
     persist_into: list | None = None,
-) -> tuple[DataFrame, DataFrame | None, list[int]]:
-    """Plan the merge of a SIGNED count delta (``keys`` + ``s``) into a
-    COW-bucketed count support: resolve ONLY the delta-touched buckets
-    at ``prev_version`` and run
-    :func:`..domain.mart_ivm.apply_count_delta` on those rows alone.
-    Returns ``(merged, transitions, touched)``; the caller writes
-    ``merged`` as the new version with :func:`.versions.write_buckets`
-    over ``touched``. Untouched buckets are never read, shuffled or
+) -> tuple[DataFrame, dict[str, DataFrame], list[int]]:
+    """Plan the merge of SIGNED count deltas (``keys[name]`` + ``s``)
+    into the members of a COW-bucketed union count store (rows tagged
+    ``__sup``; ``deltas`` names every member): resolve ONLY the touched
+    buckets at ``prev_version`` in ONE read, split it per member and run
+    :func:`..domain.mart_ivm.apply_count_delta` on each member's rows
+    alone. Returns ``(rows, transitions, touched)``: ``rows`` is the
+    tagged union of every member's merged rows, which the caller writes
+    as the new version with :func:`.versions.write_buckets` over
+    ``touched``. Untouched buckets are never read, shuffled or
     rewritten — they stay served by older versions through the
     per-bucket resolution — so per-epoch support IO is
     Θ(|touched buckets|), not Θ(|support|) (the r12 verdict's one
@@ -437,44 +442,44 @@ def cow_count_merge_plan(
 
     The plan is LAZY: no write runs here, so a caller can overlap the
     COW write with OTHER jobs that consume the transitions (r16: the
-    habitat pools the bucketed writes and the one agg-union write from
-    the same plan set). No Spark action runs when ``touched`` is
-    supplied (bucket resolution is driver-side file listing); with
+    habitat pools the bucketed write, the level-2 writes and the one
+    agg-union write from the same plan set). No Spark action runs when
+    ``touched`` is supplied (bucket resolution is driver-side file
+    listing and the read passes the store's recorded schema); with
     ``touched=None`` the discovery collect runs here.
 
-    With ``roll_keys`` the merge runs through
-    ``apply_count_delta_with_transitions`` and also returns the
-    enter/exit transitions (``roll_keys`` + ``s``) — the complete signed
-    delta of the level-2 rollup, complete because untouched buckets
-    cannot transition. The transitions branch off the same persisted
-    merge plan the write materializes, so emitting them costs no second
-    bucket read; the caller must consume them inside the same
-    ``engine_cache_scope``. ``persist_into`` (r16) forwards to
+    A member named in ``roll_keys`` merges through
+    ``apply_count_delta_with_transitions`` and also returns its
+    enter/exit transitions (``roll_keys[name]`` + ``s``) — the
+    complete signed delta of its level-2 rollup, complete because
+    untouched buckets cannot transition. The transitions branch off the
+    same persisted merge plan the write materializes, so emitting them
+    costs no second bucket read; the caller must consume them inside
+    the same ``engine_cache_scope``. ``persist_into`` (r16) forwards to
     ``apply_count_delta_with_transitions``: a caller that consumes the
     transitions on a different thread (the pooled epoch writes) owns
-    the shared merge persist's release through this list instead of a
+    the shared merge persists' release through this list instead of a
     thread-local cache scope.
 
     ``touched`` (r15) lets a caller that already knows a SUPERSET of
-    the delta's buckets (the habitat's per-arm one-job discovery,
+    the deltas' buckets (the habitat's per-arm one-job discovery,
     unioned per ``MartHabitat.sup_touch``) skip the discovery collect —
-    which would otherwise EXECUTE the full delta plan a second time,
-    once per bucketed support per epoch. Unlike ``cow_apply_images``,
-    a superset here is value-identical: extra buckets' rows pass
-    through the pruned merge unchanged and are rewritten identically
-    at the new version (only a SUBSET would be wrong);
-    ``versions.VALIDATE_TOUCHED`` cross-checks the superset property
-    in debug sessions."""
+    which would otherwise EXECUTE the full delta plans a second time.
+    Unlike ``cow_apply_images``, a superset here is value-identical:
+    extra buckets' rows pass through the pruned merge unchanged and are
+    rewritten identically at the new version (only a SUBSET would be
+    wrong); ``versions.VALIDATE_TOUCHED`` cross-checks the superset
+    property in debug sessions."""
 
     def _discover() -> list[int]:
-        return sorted(
-            r[0]
-            for r in delta.select(
-                bucket(F.col(bucket_col), n_buckets).alias("b")
-            )
-            .distinct()
-            .collect()
-        )
+        parts = [
+            d.select(bucket(F.col(bucket_col), n_buckets).alias("b"))
+            for d in deltas.values()
+        ]
+        union = parts[0]
+        for p in parts[1:]:
+            union = union.unionByName(p)
+        return sorted(r[0] for r in union.distinct().collect())
 
     if touched is None:
         touched = _discover()
@@ -483,39 +488,23 @@ def cow_count_merge_plan(
         if versions.VALIDATE_TOUCHED and not set(touched) >= set(_discover()):
             raise ValueError(
                 "cow_count_merge_plan: caller-supplied touched buckets "
-                f"{touched} are not a superset of the delta's for {sup_dir}"
+                f"{touched} are not a superset of the deltas' for {sup_dir}"
             )
-    cur = read_buckets(spark, sup_dir, prev_version, touched)
-    if cur is None:
-        cur = (
-            delta.select(*keys)
-            .limit(0)
-            .withColumn("n", F.lit(0).cast("long"))
-        )
-    transitions = None
-    if roll_keys is None:
-        merged = apply_count_delta(cur, delta, keys)
-    else:
-        merged, transitions = apply_count_delta_with_transitions(
-            cur, delta, keys, roll_keys, persist_into=persist_into
-        )
-    return merged, transitions, touched
-
-
-def _read_cow_support(
-    spark: SparkSession, state_dir: str, name: str, ver: int
-) -> DataFrame:
-    """A facts-scale support resolved per bucket from its COW store at
-    a version number (a bucket not rewritten at v_n is served by the
-    newest older version carrying it — the fact-store manifest
-    discipline); a LEGITIMATELY EMPTY support serves the schema from
-    the ``_schema.json`` artifact the seed wrote beside the store."""
-    sup_dir = f"{state_dir}/sup_cow/{name}"
-    df = read_buckets(spark, sup_dir, ver)
-    if df is None:
-        art = read_schema(spark, sup_dir)
-        df = spark.createDataFrame([], StructType.fromJson(art))
-    return df
+    cur = read_members(
+        spark, sup_dir, "__sup", {n: [*keys[n], "n"] for n in deltas},
+        prev_version, touched,
+    )
+    merged: dict[str, DataFrame] = {}
+    transitions: dict[str, DataFrame] = {}
+    for name, delta in deltas.items():
+        if roll_keys is None or name not in roll_keys:
+            merged[name] = apply_count_delta(cur[name], delta, keys[name])
+        else:
+            merged[name], transitions[name] = apply_count_delta_with_transitions(
+                cur[name], delta, keys[name], roll_keys[name],
+                persist_into=persist_into,
+            )
+    return tagged_union("__sup", merged), transitions, touched
 
 
 # ------------------------------------------- aggregate-sized supports
@@ -538,35 +527,6 @@ def _read_cow_support(
 # the round-trip is column-identical to the per-name files.
 
 
-def _agg_union(dfs: "dict[str, DataFrame]") -> DataFrame:
-    """The discriminated union of the aggregate-sized supports: every
-    support padded to the superset column set with typed NULLs, tagged
-    by ``__sup``."""
-    cols: list[tuple[str, object]] = []
-    seen: set[str] = set()
-    for df in dfs.values():
-        for f in df.schema.fields:
-            if f.name not in seen:
-                seen.add(f.name)
-                cols.append((f.name, f.dataType))
-    parts = []
-    for name, df in dfs.items():
-        own = set(df.columns)
-        parts.append(
-            df.select(
-                F.lit(name).alias("__sup"),
-                *[
-                    (F.col(c) if c in own else F.lit(None).cast(t)).alias(c)
-                    for c, t in cols
-                ],
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 def _write_agg_supports(
     spark: SparkSession, vdir: str, dfs: "dict[str, DataFrame]"
 ) -> None:
@@ -576,11 +536,9 @@ def _write_agg_supports(
     serve typed empty supports."""
     if not dfs:
         return
-    u = _agg_union(dfs)
+    u = tagged_union("__sup", dfs)
     u.write.partitionBy("__sup").mode("overwrite").parquet(f"{vdir}/agg")
-    write_schema(
-        spark, f"{vdir}/agg", u.drop("__sup").schema, supports=list(dfs)
-    )
+    write_schema(spark, f"{vdir}/agg", u.drop("__sup").schema, members=list(dfs))
 
 
 def _read_agg_supports(
@@ -590,25 +548,19 @@ def _read_agg_supports(
     version_name: str,
     names: list[str],
 ) -> dict[str, DataFrame]:
-    """Every requested plain level-1 support at a version through ONE
-    read of the version's agg store (one file listing + footer pass,
-    then per-name partition-pruned filters off the same relation). A
-    name the version's artifact does not list raises."""
+    """Every plain level-1 support of a version through ONE read of the
+    version's agg store with the schema its artifact records (no Spark
+    job; a version whose supports were all emptied holds no files and
+    reads as typed-empty), split per name. ``names`` must be exactly
+    the supports the artifact lists."""
     if not names:
         return {}
     agg = f"{state_dir}/mart/{version_name}/agg"
     art = read_schema(spark, agg)
-    missing = sorted(set(names) - set(art["supports"]))
-    if missing:
-        raise KeyError(f"{agg} holds no support {missing}")
-    try:
-        df = spark.read.parquet(agg)
-    except AnalysisException:
-        # every support emptied at this version: partitionBy wrote no
-        # files — serve typed empties from the artifact
-        df = spark.createDataFrame([], StructType.fromJson(art)).withColumn(
-            "__sup", F.lit(None).cast("string")
-        )
+    require_members(art, names, agg)
+    df = spark.read.schema(
+        StructType.fromJson(art).add("__sup", "string")
+    ).parquet(agg)
     return {
         name: df.filter(F.col("__sup") == name).select(
             *pyramid.support_keys[name], "n"
@@ -626,46 +578,30 @@ def _advance_supports(
     habitat: MartHabitat,
     dims: Mapping[str, DataFrame],
     n_buckets: int,
-    touched: Mapping[str, list[int]] | None = None,
+    touched: Mapping[str, list[int]],
 ) -> None:
     """Fold one epoch's signed support deltas into version ``target``:
-    facts-scale supports COW-merge only their delta-touched buckets;
-    every aggregate-sized support (non-bucketed level 1 AND the
-    level-2 rollup targets) merges whole against the previous version
-    and rewrites through the ONE discriminated ``agg`` union write. A
-    level-1 support with a registered rollup merges through the
-    transitions-emitting variant — its transitions (through the
+    the facts-scale supports COW-merge only the touched buckets of
+    their union store (the union of every member's ``sup_touch`` arms'
+    discovered sets) and rewrite them in ONE write; every
+    aggregate-sized support (non-bucketed level 1 AND the level-2
+    rollup targets) merges whole against the previous version, the
+    plain level-1 ones through the ONE discriminated ``agg`` union
+    write. A level-1 support with a registered rollup merges through
+    the transitions-emitting variant — its transitions (through the
     rollup's transform, if any) are the ENTIRE delta of the
     aggregate-sized level-2 support. The caller's
     :func:`.versions.advance` commits every piece atomically with the
     mart-root ``_SUCCESS`` once this returns.
 
-    r15: the bucketed COW merges are mutually independent — they read
-    disjoint previous state and write disjoint paths — so they run
-    CONCURRENTLY from a small driver pool (guide §2.6). A bucketed
-    support declared in ``habitat.sup_touch`` derives its touched
-    buckets from the one-job discovery (union of its arms' sets)
-    instead of collecting them from the delta plan.
-
-    r16 (guide §1.2/§2.6): two changes to the same end — fewer driver
-    jobs per epoch WITHOUT serializing anything new. (a) The plain
-    level-1 supports merge and write through the single
-    ``partitionBy("__sup")`` agg-union action (one job instead of one
-    per support), with the previous version's plain supports resolved
-    by ONE read of the prev agg store inside that thunk. (b) The
-    level-2 writes are their own pooled thunks instead of running
-    serialized after their level-1's COW write inside one unit —
-    their inputs (the transitions, branching off the persisted COW
-    merge plans built up front on this thread; plan building runs no
-    Spark action because the habitat always supplies ``touched``) are
-    lazy, so nothing forces that ordering. Every write then runs
-    CONCURRENTLY from the driver pool and the critical path drops to
-    the slowest SINGLE write (measured: a serialized
-    all-in-one-agg-after-COW shape cost +2.3 s/epoch at sf0.1, and
-    one monolithic agg job holding the level-2 merges ran ~3.5 s —
-    longer than the COW writes it waited on). The shared merge
-    relations (each consumed by a COW write AND, via transitions, by
-    an l2 thunk on a different thread) persist through
+    Every merge plan is built here on the calling thread — no Spark
+    action runs: the touched sets are supplied and every state read
+    passes its recorded schema — and every write is its own pooled
+    thunk (guide §2.6), so the critical path is the slowest SINGLE
+    write (measured r16: a serialized all-in-one-agg-after-COW shape
+    cost +2.3 s/epoch at sf0.1). The level-2 writes consume
+    transitions that branch off the persisted merge plans another
+    thunk writes; those shared relations persist through
     ``persist_into`` and are released here after ALL writes returned —
     a per-unit thread-local scope would drop them before the other
     thread's consumer ran; the block manager deduplicates the racing
@@ -676,128 +612,86 @@ def _advance_supports(
     l2 = pyramid.level2
     mart_dir = f"{state_dir}/mart"
     vdir = target.path(mart_dir)
+    plain = [
+        n
+        for n in pyramid.support_names
+        if n not in l2 and n not in pyramid.bucketed
+    ]
     merge_persists: list = []
     thunks = []
-    plain_simple: list[str] = []          # plain l1, merged in agg_unit
-    plain_prebuilt: dict[str, DataFrame] = {}  # plain l1 with a rollup
+    transitions: dict[str, DataFrame] = {}
 
-    # the COW merge plans build CONCURRENTLY (r16): each resolves its
-    # store's touched buckets at the previous version — a directory
-    # listing plus one spark.read footer pass per contributing version
-    # dir, ~0.3 s each serialized — and they touch disjoint stores, so
-    # the pool overlaps the footer passes (guide §2.6). No Spark
-    # action runs (the habitat supplies touched); dict/list writes
-    # from the pool threads are single bytecode appends.
-    cow_plans: dict[str, tuple] = {}
-
-    def build_plan(name: str) -> None:
-        rollup = pyramid.rollups.get(name)
-        sup_touched = None
-        if touched is not None and name in habitat.sup_touch:
-            sup_touched = sorted(
-                {
-                    b
-                    for tag in habitat.sup_touch[name]
-                    for b in touched[tag]
-                }
-            )
-        cow_plans[name] = cow_count_merge_plan(
-            spark, f"{state_dir}/sup_cow/{name}", deltas[name],
-            pyramid.support_keys[name],
-            pyramid.bucketed[name], n_buckets, prev.ver,
-            roll_keys=list(rollup.trans_keys) if rollup else None,
-            touched=sup_touched,
-            persist_into=merge_persists,
-        )
-
-    def agg_unit() -> None:
+    def l2_unit(rollup, trans) -> None:
         _tu = _time.time()
         with engine_cache_scope():
-            prev_plain = _read_agg_supports(
-                spark, state_dir, pyramid, prev.name, plain_simple
+            cur2 = spark.read.parquet(f"{prev.path(mart_dir)}/{rollup.l2}")
+            t = (
+                rollup.transform(trans, dims)
+                if rollup.transform is not None
+                else trans
             )
-            agg_out = {
-                name: apply_count_delta(
-                    prev_plain[name], deltas[name],
-                    pyramid.support_keys[name],
-                )
-                for name in plain_simple
-            }
-            agg_out.update(plain_prebuilt)
-            _write_agg_supports(spark, vdir, agg_out)
-        _prof("unit agg", _tu)
+            apply_count_delta(
+                cur2, t, pyramid.support_keys[rollup.l2]
+            ).write.mode("overwrite").parquet(f"{vdir}/{rollup.l2}")
+        _prof(f"unit {rollup.l2}", _tu)
 
     # the merge persists register as soon as their plans are built,
     # so their release also covers a failure while planning
     try:
         _t0 = _time.time()
-        bucketed_l1 = [
-            n
-            for n in pyramid.support_names
-            if n not in l2 and n in pyramid.bucketed
-        ]
-        run_parallel(
-            [(lambda name=name: build_plan(name)) for name in bucketed_l1]
+        if pyramid.bucketed:
+            sup_dir = f"{state_dir}/sup_cow"
+            bucket_col = _sup_bucket_col(pyramid)
+            rows, transitions, sup_touched = cow_count_merge_plan(
+                spark, sup_dir, {n: deltas[n] for n in pyramid.bucketed},
+                {n: pyramid.support_keys[n] for n in pyramid.bucketed},
+                bucket_col, n_buckets, prev.ver,
+                roll_keys={
+                    n: list(pyramid.rollups[n].trans_keys)
+                    for n in pyramid.bucketed
+                    if n in pyramid.rollups
+                },
+                touched=sorted(
+                    {
+                        b
+                        for name in pyramid.bucketed
+                        for tag in habitat.sup_touch[name]
+                        for b in touched[tag]
+                    }
+                ),
+                persist_into=merge_persists,
+            )
+            thunks.append(
+                lambda: write_buckets(
+                    spark, sup_dir, target.name, rows, bucket_col, n_buckets,
+                    sup_touched,
+                )
+            )
+        prev_plain = _read_agg_supports(
+            spark, state_dir, pyramid, prev.name, plain
         )
-        for name in pyramid.support_names:
-            if name in l2:
-                continue
+        agg_out: dict[str, DataFrame] = {}
+        for name in plain:
             keys = pyramid.support_keys[name]
             rollup = pyramid.rollups.get(name)
-            trans = None
-            if name in pyramid.bucketed:
-                merged, trans, sup_touched = cow_plans[name]
-
-                def cow_unit(
-                    name=name, merged=merged, sup_touched=sup_touched
-                ) -> None:
-                    _tu = _time.time()
-                    write_buckets(
-                        spark, f"{state_dir}/sup_cow/{name}", target.name,
-                        merged, pyramid.bucketed[name], n_buckets,
-                        sup_touched,
-                    )
-                    _prof(f"unit {name}", _tu)
-
-                thunks.append(cow_unit)
-            elif rollup is None:
-                plain_simple.append(name)
-            else:
-                # a plain level-1 with a rollup: its merge plan is
-                # shared by the agg write and the l2 thunk on different
-                # threads, so it is built (and persisted) here up front
-                cur = _read_agg_supports(
-                    spark, state_dir, pyramid, prev.name, [name]
-                )[name]
-                merged, trans = apply_count_delta_with_transitions(
-                    cur, deltas[name], keys, list(rollup.trans_keys),
-                    persist_into=merge_persists,
+            if rollup is None:
+                agg_out[name] = apply_count_delta(
+                    prev_plain[name], deltas[name], keys
                 )
-                plain_prebuilt[name] = merged
-            if rollup is not None:
-
-                def l2_unit(name=name, rollup=rollup, trans=trans) -> None:
-                    _tu = _time.time()
-                    with engine_cache_scope():
-                        cur2 = spark.read.parquet(
-                            f"{prev.path(mart_dir)}/{rollup.l2}"
-                        )
-                        t = (
-                            rollup.transform(trans, dims)
-                            if rollup.transform is not None
-                            else trans
-                        )
-                        apply_count_delta(
-                            cur2, t, pyramid.support_keys[rollup.l2]
-                        ).write.mode("overwrite").parquet(
-                            f"{vdir}/{rollup.l2}"
-                        )
-                    _prof(f"unit {rollup.l2}", _tu)
-
-                thunks.append(l2_unit)
+            else:
+                agg_out[name], transitions[name] = (
+                    apply_count_delta_with_transitions(
+                        prev_plain[name], deltas[name], keys,
+                        list(rollup.trans_keys), persist_into=merge_persists,
+                    )
+                )
+        if agg_out:
+            thunks.append(lambda: _write_agg_supports(spark, vdir, agg_out))
+        thunks += [
+            (lambda r=rollup, t=transitions[name]: l2_unit(r, t))
+            for name, rollup in pyramid.rollups.items()
+        ]
         _prof("plan supports", _t0)
-        if plain_simple or plain_prebuilt:
-            thunks.append(agg_unit)
         _t0 = _time.time()
         run_parallel(thunks)
     finally:
@@ -818,25 +712,30 @@ def read_supports(
     state_dir: str,
     version_name: str,
 ) -> dict[str, DataFrame]:
-    """All supports AS OF a committed mart version: plain level-1
-    supports from the version's discriminated ``agg`` union, level-2
-    supports from their per-name directories, facts-scale ones
-    resolved per bucket from their COW stores at that version
-    number."""
-    ver = parse_name(version_name)[0]
-    out: dict[str, DataFrame] = {}
-    for name in pyramid.support_names:
-        if name in pyramid.bucketed:
-            out[name] = _read_cow_support(spark, state_dir, name, ver)
-        elif name in pyramid.level2:
-            out[name] = spark.read.parquet(
-                f"{state_dir}/mart/{version_name}/{name}"
+    """All supports AS OF a committed mart version: the plain level-1
+    supports from ONE read of the version's ``agg`` union, the
+    facts-scale ones from ONE read of the ``sup_cow`` union store
+    resolved per bucket at that version number, and the level-2
+    supports from their per-name directories."""
+    out = _read_agg_supports(
+        spark, state_dir, pyramid, version_name,
+        [
+            n
+            for n in pyramid.support_names
+            if n not in pyramid.bucketed and n not in pyramid.level2
+        ],
+    )
+    if pyramid.bucketed:
+        out.update(
+            read_members(
+                spark, f"{state_dir}/sup_cow", "__sup",
+                {n: [*pyramid.support_keys[n], "n"] for n in pyramid.bucketed},
+                parse_name(version_name)[0],
             )
-        else:
-            out[name] = _read_agg_supports(
-                spark, state_dir, pyramid, version_name, [name]
-            )[name]
-    return out
+        )
+    for name in pyramid.level2:
+        out[name] = spark.read.parquet(f"{state_dir}/mart/{version_name}/{name}")
+    return {name: out[name] for name in pyramid.support_names}
 
 
 # ------------------------------------------------------------ epoch
@@ -845,9 +744,8 @@ def read_supports(
 def _bucket_stores(habitat: MartHabitat, state_dir: str) -> list[str]:
     """Every COW bucket store an epoch advances (vacuumed with the
     mart's versions)."""
-    return [f"{state_dir}/{st.name}" for st in habitat.stores] + [
-        f"{state_dir}/sup_cow/{name}" for name in habitat.pyramid.bucketed
-    ]
+    stores = [f"{state_dir}/{st.name}" for st in habitat.stores]
+    return stores + ([f"{state_dir}/sup_cow"] if habitat.pyramid.bucketed else [])
 
 
 def _epoch_step(
@@ -887,7 +785,6 @@ def _epoch_step(
         # disjoint paths from disjoint changelog arms — concurrent
         # driver jobs (guide §2.6), joined before any rescan reads the
         # just-written versions.
-        by_store = {st.name: st for st in habitat.stores}
         _t0 = _time.time()
         run_parallel(
             [
@@ -908,28 +805,27 @@ def _epoch_step(
         # reads of the stores at the declared version
         rescans: dict[str, DataFrame] = {}
         for r in habitat.rescans:
-            st = by_store[r.store]
             df = read_buckets(
-                spark, f"{state_dir}/{st.name}",
+                spark, f"{state_dir}/{r.store}",
                 target.ver if r.at == "new" else prev.ver,
                 touched[r.prune_src],
             )
-            if df is None:
-                df = spark.createDataFrame([], st.schema)
             rescans[r.alias] = df.drop(*r.drop) if r.drop else df
 
         # the protein-keyed static dims join their source's delta on
-        # protein, so only that delta's touched buckets can contribute
-        # — partition-pruned reads of the seed-time bucketed stores
-        dim_use: dict[str, DataFrame] = {}
-        for d in habitat.dims:
-            if d.prune_src is None:
-                dim_use[d.name] = dims[d.name]
-            else:
-                dim_use[d.name] = _read_static_dim(
-                    spark, state_dir, d.name, touched[d.prune_src],
-                    dims[d.name],
+        # protein, so only the touched buckets can contribute — ONE
+        # pruned read of the seed-time dims union store (the union of
+        # the pruned dims' touched sets is a superset of each one's)
+        dim_use = {d.name: dims[d.name] for d in habitat.dims if d.prune_src is None}
+        pruned = [d for d in habitat.dims if d.prune_src is not None]
+        if pruned:
+            dim_use.update(
+                read_members(
+                    spark, f"{state_dir}/dims", "__dim",
+                    {d.name: dims[d.name].columns for d in pruned}, 0,
+                    sorted({b for d in pruned for b in touched[d.prune_src]}),
                 )
+            )
 
         # the delta computation's owned persists are epoch-scoped: the
         # scope releases them once every support consumed them

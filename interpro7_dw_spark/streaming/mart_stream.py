@@ -92,15 +92,8 @@ TAXON_HABITAT = MartHabitat(
         ),
     ),
     stores=(
-        FactStore(
-            "proteins", "protein", ("protein_acc",),
-            "protein_acc string, tax_id string",
-        ),
-        FactStore(
-            "matches", "match", ("match_id",),
-            "match_id long, protein_acc string, signature_acc string,"
-            " database string",
-        ),
+        FactStore("proteins", "protein", ("protein_acc",)),
+        FactStore("matches", "match", ("match_id",)),
     ),
     rescans=(
         # bilinear rule: P_new under dM's proteins (just-written
@@ -153,14 +146,8 @@ ENTRY_HABITAT = MartHabitat(
         ),
     ),
     stores=(
-        FactStore(
-            "proteins", "protein", ("protein_acc",),
-            "protein_acc string, tax_id string",
-        ),
-        FactStore(
-            "assignments", "assign", ("pe_id",),
-            "pe_id long, protein_acc string, entry_acc string",
-        ),
+        FactStore("proteins", "protein", ("protein_acc",)),
+        FactStore("assignments", "assign", ("pe_id",)),
     ),
     rescans=(
         Rescan("p_new", "proteins", "new", "assign"),
@@ -287,15 +274,8 @@ PROTEOME_HABITAT = MartHabitat(
         ),
     ),
     stores=(
-        FactStore(
-            "assignments", "assign", ("protein_acc",),
-            "protein_acc string, proteome_id string",
-        ),
-        FactStore(
-            "matches", "match", ("match_id",),
-            "match_id long, protein_acc string, signature_acc string,"
-            " database string",
-        ),
+        FactStore("assignments", "assign", ("protein_acc",)),
+        FactStore("matches", "match", ("match_id",)),
     ),
     rescans=(
         # bilinear rule: PP_new under dM's proteins, M_old under

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructType
 
 from ..operators.cdc import ivm_apply_group_minmax
 from .versions import (
@@ -34,6 +35,7 @@ from .versions import (
     Version,
     cow_apply_images,
     drain,
+    read_schema,
     seed_buckets,
 )
 
@@ -47,8 +49,8 @@ def seed_minmax_state(
     n_buckets: int = 16,
 ) -> None:
     """Materialize version 0: the bucketed facts (one partitioned
-    write — every bucket with rows gets a ``__b=i`` partition) plus
-    the mart."""
+    write — every bucket with rows gets a ``__b=i`` partition — and
+    the store's ``_schema.json``) plus the mart."""
     seed_buckets(f"{state_dir}/facts", facts, group_col, n_buckets)
     facts.groupBy(group_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
@@ -97,27 +99,17 @@ def maintain_group_minmax_stream(
             )
             # every extremum-retracted group changed in this batch, so
             # its bucket was just written — the rescan facts are
-            # exactly the new version's partitions (explicit schema:
-            # a fully-emptied version has no files to infer from)
-            from pyspark.sql.types import IntegerType, StructField, StructType
-
-            data_cols = [c[4:] for c in batch.columns if c.startswith("new_")]
-            fact_cols = key_cols + [c for c in data_cols if c not in key_cols]
-            bfields = {f.name: f for f in batch.schema.fields}
-            read_schema = StructType(
-                [
-                    StructField(
-                        c,
-                        bfields[c].dataType
-                        if c in bfields
-                        else bfields[f"new_{c}"].dataType,
-                    )
-                    for c in fact_cols
-                ]
-                + [StructField("__b", IntegerType())]
-            )
+            # exactly the new version's partitions, read with the
+            # store's recorded schema (a fully-emptied version has no
+            # files to infer from)
             rescan_facts = (
-                spark.read.schema(read_schema).parquet(facts_ver).drop("__b")
+                spark.read.schema(
+                    StructType.fromJson(read_schema(spark, facts_dir)).add(
+                        "__b", IntegerType()
+                    )
+                )
+                .parquet(facts_ver)
+                .drop("__b")
             )
             mart = spark.read.parquet(prev.path(mart_dir))
             out = ivm_apply_group_minmax(

@@ -39,38 +39,54 @@ Bucket stores. A copy-on-write store keeps a relation bucketed by
 ``hash(bucket_col) % n_buckets`` (:func:`bucket`) in the same version
 naming (the Delta/Iceberg idea in one directory tree):
 
+    store_dir/_schema.json             the store's logical schema
     store_dir/v<n>_e<epoch>/__b=<i>/   bucket i's rows, written at
                                        version n
 
-An epoch writes ONLY the buckets its changelog touched, all in ONE
-``partitionBy("__b")`` action (:func:`write_buckets`), so its job count
-is constant in the number of touched buckets and the version's
+Every write (the seed's and each epoch's) shuffles its rows by bucket
+first, so a version carries ONE file per non-empty bucket, in ONE
+``partitionBy("__b")`` action (:func:`write_buckets`): the job count is
+constant in the number of touched buckets and the version's
 ``_SUCCESS`` commits every touched bucket at once; a touched bucket
 whose rows were all deleted gets an explicit empty partition directory,
 so resolution never resurrects older rows. A reader resolves each
-bucket's newest committed version ``<=`` the one it wants: the
-directory tree IS the manifest (:func:`read_buckets`). Per-epoch cost
-is |delta| + the touched buckets' data, never |store|. Retention is
+bucket's newest committed version ``<=`` the one it wants (the
+directory tree IS the manifest) and reads the resolved bucket
+directories as ONE relation (:func:`read_buckets`). Per-epoch cost is
+|delta| + the touched buckets' data, never |store|. Retention is
 reference-counted at PARTITION granularity (:func:`vacuum_buckets`),
 like an object-store table format's vacuum: bucket ``i`` of version v
 is deleted once a newer committed version at or below the keep floor
 also carries it (v can no longer resolve bucket i for any retained
 version), and a version directory goes with its last partition.
 
-``_schema.json`` beside a store (:func:`write_schema`) holds its
-logical schema, served when a store has no rows left to infer one
-from.
+``_schema.json`` beside every bucket store (:func:`write_schema`,
+written by :func:`seed_buckets`) is passed to every read: no read
+infers a schema (which costs a Spark job per read), an emptied bucket
+reads as typed-empty, and a missing store, artifact or resolved
+directory raises instead of reading as empty.
+
+Union stores. Small relations that share a bucket column and an
+access pattern live in ONE store, so their per-file metadata is paid
+once per bucket instead of once per relation and bucket: the rows of
+each member are tagged by a string column (:func:`tagged_union` pads
+every member to the superset schema with typed NULLs), the store's
+artifact lists its members, and :func:`read_members` reads the store
+once and splits it per member. A reader names exactly the listed
+members (:func:`require_members`): a name outside the list raises
+instead of reading as empty, and a rewrite of a bucket carries every
+member's rows.
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterable, Mapping, Sequence
 from typing import NamedTuple
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 class Version(NamedTuple):
     """One ``v<n>[_e<epoch>]`` directory: ``epoch`` is None for a
@@ -204,6 +220,13 @@ def vacuum(
     return floor
 
 
+def _check_keep_last(keep_last: int | None) -> None:
+    """``keep_last`` counts retained committed versions: None (all) or
+    at least 1 (the version just committed)."""
+    if keep_last is not None and keep_last < 1:
+        raise ValueError(f"keep_last must be None or >= 1, got {keep_last}")
+
+
 def advance(
     spark: SparkSession,
     versions_dir: str,
@@ -219,7 +242,9 @@ def advance(
     version to write, at ``target.path(versions_dir)``, and every
     bucket store's version of the same name — then commit ``target``,
     vacuum ``versions_dir`` and each of ``bucket_stores`` at the keep
-    floor. Returns the latest committed version afterwards."""
+    floor. Returns the latest committed version afterwards. Raises
+    ValueError, before any write, for ``keep_last < 1``."""
+    _check_keep_last(keep_last)
     prev = latest_committed(spark, versions_dir)
     if prev is not None and prev.epoch is not None and epoch <= prev.epoch:
         return prev  # replayed epoch whose merge already committed
@@ -245,7 +270,9 @@ def drain(
     """Drain the streaming DataFrame ``changes`` with
     ``trigger(availableNow)``, folding each micro-batch through
     :func:`advance` as ``step(batch, prev, target)``. Returns the
-    latest committed version; raises if there is none."""
+    latest committed version; raises if there is none, and ValueError,
+    before the stream starts, for ``keep_last < 1``."""
+    _check_keep_last(keep_last)
 
     def batch_step(batch: DataFrame, epoch: int) -> None:
         advance(
@@ -278,13 +305,17 @@ def bucket(col, n_buckets: int):
 
 
 def seed_buckets(
-    store_dir: str, df: DataFrame, bucket_col: str, n_buckets: int
+    store_dir: str,
+    df: DataFrame,
+    bucket_col: str,
+    n_buckets: int,
+    members: Sequence[str] | None = None,
 ) -> None:
-    """Write ``df`` as the store's seed version, one ``partitionBy``
-    action (every bucket with rows gets a ``__b=i`` partition)."""
-    df.withColumn("__b", bucket(F.col(bucket_col), n_buckets)).write.partitionBy(
-        "__b"
-    ).parquet(f"{store_dir}/{SEED}")
+    """Write ``df`` as the store's seed version (:func:`write_buckets`:
+    one file per non-empty bucket) and its ``_schema.json``, listing
+    ``members`` for a union store."""
+    write_buckets(df.sparkSession, store_dir, SEED, df, bucket_col, n_buckets, [])
+    write_schema(df.sparkSession, store_dir, df.schema, members)
 
 
 def _version_buckets(spark: SparkSession, store_dir: str, name: str) -> set[int]:
@@ -336,32 +367,62 @@ def _bucket_sources(
     return served
 
 
+def _read_resolved(
+    spark: SparkSession,
+    store_dir: str,
+    schema: StructType,
+    at_version: int,
+    buckets: list[int] | None,
+) -> DataFrame:
+    """The resolved bucket directories as one relation read with
+    ``schema``: no Spark job, an empty bucket directory reads as no
+    rows, a missing one raises."""
+    paths = [
+        f"{store_dir}/{name}/__b={b}"
+        for name, bs in _bucket_sources(spark, store_dir, at_version, buckets).items()
+        for b in sorted(bs)
+    ]
+    if not paths:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*paths)
+
+
 def read_buckets(
     spark: SparkSession,
     store_dir: str,
     at_version: int,
     buckets: list[int] | None = None,
-) -> DataFrame | None:
+) -> DataFrame:
     """The store as of ``at_version`` (restricted to ``buckets`` when
-    given): the union of the resolved bucket partitions, one
-    partition-pruned read per contributing version directory, ``__b``
-    dropped. None when the resolved buckets hold no rows. A version
-    directory holding only EMPTY bucket partitions (every row of its
-    touched buckets was deleted) has no files to infer a schema from —
-    it serves zero rows by construction, so it is skipped."""
-    parts: list[DataFrame] = []
-    for name, bs in _bucket_sources(spark, store_dir, at_version, buckets).items():
-        try:
-            df = spark.read.parquet(f"{store_dir}/{name}")
-        except AnalysisException:
-            continue
-        parts.append(df.filter(F.col("__b").isin([int(b) for b in bs])).drop("__b"))
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    given), with the schema its ``_schema.json`` records: ONE read of
+    the resolved bucket directories, whichever versions serve them,
+    running no Spark job. Resolved buckets that hold no rows read as
+    typed-empty; a missing store, schema artifact or resolved bucket
+    directory raises."""
+    schema = StructType.fromJson(read_schema(spark, store_dir))
+    return _read_resolved(spark, store_dir, schema, at_version, buckets)
+
+
+def read_members(
+    spark: SparkSession,
+    store_dir: str,
+    tag: str,
+    cols: Mapping[str, Sequence[str]],
+    at_version: int,
+    buckets: list[int] | None = None,
+) -> dict[str, DataFrame]:
+    """Every member of the union store ``store_dir`` (rows tagged by
+    ``tag``), projected to its own columns ``cols[name]``: ONE
+    :func:`read_buckets`-style read, split per member. ``cols`` must
+    name exactly the members the store's artifact lists."""
+    art = read_schema(spark, store_dir)
+    require_members(art, cols, store_dir)
+    df = _read_resolved(
+        spark, store_dir, StructType.fromJson(art), at_version, buckets
+    )
+    return {
+        name: df.filter(F.col(tag) == name).select(*c) for name, c in cols.items()
+    }
 
 
 def write_buckets(
@@ -379,13 +440,13 @@ def write_buckets(
     rows. Returns the version directory."""
     ver_dir = f"{store_dir}/{name}"
     # repartition by bucket before the partitioned write: without it
-    # every map task of the merge writes its own file into every
-    # bucket dir it holds rows for — measured 512-947 files per
-    # version dir vs 16 at seed (guide §6 small files; each later
-    # epoch then lists/opens them all). One deterministic shuffle of
-    # delta-bounded rows buys exactly one file per non-empty bucket —
-    # the layout every pruned read wants. n_buckets is the scale knob:
-    # the shuffle moves only touched-bucket rows, never |store|.
+    # every map task writes its own file into every bucket dir it
+    # holds rows for — measured 512-947 files per epoch version dir
+    # (guide §6 small files; each later epoch then lists/opens them
+    # all), and a seeded union store gets one file per member plan
+    # and bucket. One deterministic shuffle buys exactly one file per
+    # non-empty bucket — the layout every pruned read wants. An
+    # epoch's shuffle moves only touched-bucket rows, never |store|.
     rows.withColumn("__b", bucket(F.col(bucket_col), n_buckets)).repartition(
         n_buckets, F.col("__b")
     ).write.partitionBy("__b").mode("overwrite").parquet(ver_dir)
@@ -512,21 +573,16 @@ def cow_apply_images(
         *key_cols,
         *[F.col(f"new_{c}").alias(c) for c in fact_cols if c not in key_cols],
     )
-    if cur is None:
-        merged = incoming
-    else:
-        # (r15 measured: an F.broadcast hint here is NEGATIVE — the
-        # per-epoch broadcast build + driver roundtrip costs more than
-        # the tiny co-keyed shuffle it removes; AQE already converts
-        # when profitable. See OPTIMIZATION_r15.)
-        changed_keys = batch.select(
-            *[F.col(k).alias(k) for k in key_cols]
-        ).distinct()
-        on = cur[key_cols[0]].eqNullSafe(changed_keys[key_cols[0]])
-        for k in key_cols[1:]:
-            on = on & cur[k].eqNullSafe(changed_keys[k])
-        survivors = cur.join(changed_keys, on, "left_anti")
-        merged = survivors.select(*fact_cols).unionByName(incoming)
+    # (r15 measured: an F.broadcast hint here is NEGATIVE — the
+    # per-epoch broadcast build + driver roundtrip costs more than the
+    # tiny co-keyed shuffle it removes; AQE already converts when
+    # profitable. See OPTIMIZATION_r15.)
+    changed_keys = batch.select(*[F.col(k).alias(k) for k in key_cols]).distinct()
+    on = cur[key_cols[0]].eqNullSafe(changed_keys[key_cols[0]])
+    for k in key_cols[1:]:
+        on = on & cur[k].eqNullSafe(changed_keys[k])
+    survivors = cur.join(changed_keys, on, "left_anti")
+    merged = survivors.select(*fact_cols).unionByName(incoming)
     return write_buckets(
         spark, store_dir, version_name(next_version, epoch), merged,
         bucket_col, n_buckets, touched,
@@ -537,15 +593,17 @@ def cow_apply_images(
 
 
 def write_schema(
-    spark: SparkSession, store_dir: str, schema, supports=None
+    spark: SparkSession,
+    store_dir: str,
+    schema: StructType,
+    members: Sequence[str] | None = None,
 ) -> None:
     """Persist a store's logical schema (WITHOUT its partition column)
-    beside its data as ``_schema.json``: an emptied store, which has
-    no files to infer from, serves this schema. A mart's agg store
-    also lists the ``supports`` its version wrote."""
+    beside its data as ``_schema.json``, plus the ``members`` of a
+    union store."""
     art = schema.jsonValue()
-    if supports is not None:
-        art["supports"] = sorted(supports)
+    if members is not None:
+        art["members"] = sorted(members)
     fs, _root, jpath_cls = _fs(spark, store_dir)
     out = fs.create(jpath_cls(f"{store_dir}/_schema.json"), True)
     out.write(bytearray(json.dumps(art).encode("utf-8")))
@@ -554,7 +612,7 @@ def write_schema(
 
 def read_schema(spark: SparkSession, store_dir: str) -> dict:
     """The JSON written by :func:`write_schema` (a ``StructType`` JSON,
-    plus ``supports`` for an agg store); raises when the store has
+    plus ``members`` for a union store); raises when the store has
     none."""
     fs, _root, jpath_cls = _fs(spark, store_dir)
     p = jpath_cls(f"{store_dir}/_schema.json")
@@ -566,3 +624,44 @@ def read_schema(spark: SparkSession, store_dir: str) -> dict:
     finally:
         stream.close()
     return json.loads(text)
+
+
+def require_members(art: dict, names: Iterable[str], store_dir: str) -> None:
+    """Raise KeyError unless ``names`` are exactly the members the union
+    store's artifact lists: a name outside the list is missing, not
+    empty, and a reader that left a member out would drop its rows
+    from any rewrite of the buckets it read."""
+    want, have = set(names), set(art.get("members", ()))
+    if want != have:
+        raise KeyError(
+            f"{store_dir} holds members {sorted(have)}, not {sorted(want)}"
+        )
+
+
+def tagged_union(tag: str, dfs: Mapping[str, DataFrame]) -> DataFrame:
+    """The discriminated union of ``dfs``: every member padded to the
+    superset column set with typed NULLs and tagged by its name in
+    column ``tag``."""
+    cols: list[tuple[str, object]] = []
+    seen: set[str] = set()
+    for df in dfs.values():
+        for f in df.schema.fields:
+            if f.name not in seen:
+                seen.add(f.name)
+                cols.append((f.name, f.dataType))
+    parts = []
+    for name, df in dfs.items():
+        own = set(df.columns)
+        parts.append(
+            df.select(
+                F.lit(name).alias(tag),
+                *[
+                    (F.col(c) if c in own else F.lit(None).cast(t)).alias(c)
+                    for c, t in cols
+                ],
+            )
+        )
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out

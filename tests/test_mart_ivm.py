@@ -497,7 +497,9 @@ def test_cow_support_io_tracks_touched_buckets(spark, tmp_path):
     from interpro7_dw_spark.streaming.mart_habitat import cow_count_merge_plan
     from interpro7_dw_spark.streaming.versions import (
         bucket,
-        read_buckets,
+        read_members,
+        seed_buckets,
+        tagged_union,
         version_name,
         write_buckets,
     )
@@ -512,9 +514,10 @@ def test_cow_support_io_tracks_touched_buckets(spark, tmp_path):
         F.col("id").cast("string").alias("protein_acc"),
         F.lit(1).cast("long").alias("n"),
     )
-    support.withColumn(
-        "__b", bucket(F.col("protein_acc"), n_buckets)
-    ).write.partitionBy("__b").parquet(f"{sup_dir}/v0")
+    seed_buckets(
+        sup_dir, tagged_union("__sup", {"sup": support}), "protein_acc",
+        n_buckets, members=["sup"],
+    )
 
     # 8 proteins: 7 increments + 1 exit-at-zero retraction
     delta = spark.createDataFrame(
@@ -531,7 +534,8 @@ def test_cow_support_io_tracks_touched_buckets(spark, tmp_path):
 
     j0 = max_job_id(spark)
     merged, _, merged_buckets = cow_count_merge_plan(
-        spark, sup_dir, delta, keys, "protein_acc", n_buckets, 0
+        spark, sup_dir, {"sup": delta}, {"sup": keys}, "protein_acc",
+        n_buckets, 0,
     )
     write_buckets(
         spark, sup_dir, version_name(1, 0), merged, "protein_acc", n_buckets,
@@ -554,8 +558,8 @@ def test_cow_support_io_tracks_touched_buckets(spark, tmp_path):
     assert written == touched, (written, touched)
 
     # correctness: resolved COW store == unpruned full merge
-    resolved = read_buckets(spark, sup_dir, 1)
-    got = sorted(map(tuple, resolved.collect()))
+    resolved = read_members(spark, sup_dir, "__sup", {"sup": [*keys, "n"]}, 1)
+    got = sorted(map(tuple, resolved["sup"].collect()))
     want = sorted(map(tuple, apply_count_delta(support, delta, keys).collect()))
     assert got == want
 
@@ -659,7 +663,7 @@ def test_entry_mart_stream_equals_batch_rebuild_and_replay(spark, tmp_path):
     # the store dir also carries the _schema.json artifact (+ local-FS
     # .crc sibling) beside the version directories
     sup_versions_before = sorted(
-        v for v in os.listdir(state + "/sup_cow/sup_etp")
+        v for v in os.listdir(state + "/sup_cow")
         if v.startswith("v")
     )
     # checkpoint loss: every epoch is REDELIVERED — the epoch guard
@@ -669,7 +673,7 @@ def test_entry_mart_stream_equals_batch_rebuild_and_replay(spark, tmp_path):
     assert got_replay == got
     assert sorted(os.listdir(state + "/mart")) == versions_before
     assert sorted(
-        v for v in os.listdir(state + "/sup_cow/sup_etp")
+        v for v in os.listdir(state + "/sup_cow")
         if v.startswith("v")
     ) == sup_versions_before
 
@@ -682,7 +686,7 @@ def test_entry_mart_stream_equals_batch_rebuild_and_replay(spark, tmp_path):
     for v in sup_versions_before:
         if v == "v0":
             continue
-        parts = [p for p in os.listdir(f"{state}/sup_cow/sup_etp/{v}") if p.startswith("__b=")]
+        parts = [p for p in os.listdir(f"{state}/sup_cow/{v}") if p.startswith("__b=")]
         assert len(parts) < 8, (v, parts)
         post_seed_parts += parts
     assert post_seed_parts
@@ -831,13 +835,13 @@ def test_taxon_mart_batch_epoch_on_cow_store(spark, tmp_path):
 
     # the COW support advanced by touched buckets only
     v1 = [
-        d for d in os.listdir(f"{state}/sup_cow/sup_prot_db")
+        d for d in os.listdir(f"{state}/sup_cow")
         if d.startswith("v1")
     ]
     assert len(v1) == 1
     parts = [
         p
-        for p in os.listdir(f"{state}/sup_cow/sup_prot_db/{v1[0]}")
+        for p in os.listdir(f"{state}/sup_cow/{v1[0]}")
         if p.startswith("__b=")
     ]
     assert 0 < len(parts) < n_buckets, parts
@@ -1056,7 +1060,7 @@ def _drop_agg_name(state):
     art = f"{state}/mart/v0/agg/_schema.json"
     with open(art) as f:
         doc = json.load(f)
-    doc["supports"].remove("sup_sig")
+    doc["members"].remove("sup_sig")
     with open(art, "w") as f:
         json.dump(doc, f)
     # the local Hadoop filesystem would reject the edit by checksum
@@ -1064,7 +1068,7 @@ def _drop_agg_name(state):
 
 
 def _empty_cow_store(state):
-    sup_dir = f"{state}/sup_cow/sup_prot_db"
+    sup_dir = f"{state}/sup_cow"
     for part in os.listdir(f"{sup_dir}/v0"):
         if part.startswith("__b="):
             shutil.rmtree(f"{sup_dir}/v0/{part}")
@@ -1144,9 +1148,7 @@ def test_cow_apply_images_touched_validation(spark, tmp_path):
         [(i, str(i), i * 10) for i in range(32)],
         "k long, g string, v long",
     )
-    base.withColumn(
-        "__b", versions.bucket(F.col("g"), 8)
-    ).write.partitionBy("__b").parquet(f"{facts_dir}/v0")
+    versions.seed_buckets(facts_dir, base, "g", 8)
     batch = spark.createDataFrame(
         [(1, "update", "1", 10, "1", 99), (2, "delete", "2", 20, None, None)],
         "k long, change_type string, old_g string, old_v long,"
@@ -1263,6 +1265,10 @@ def test_habitat_definition_is_consistent(spark, habitat, seed_inputs):
     pyramid = habitat.pyramid
     tags = {src.tag for src in habitat.sources}
     stores = {st.name for st in habitat.stores}
+    # the union support store is rewritten in one write over every
+    # member's touched set, bucketed by one column
+    assert set(habitat.sup_touch) == set(pyramid.bucketed)
+    assert len(set(pyramid.bucketed.values())) == 1
     for sup, arms in habitat.sup_touch.items():
         assert sup in pyramid.bucketed, sup
         assert set(arms) <= tags, (sup, arms)
@@ -1279,6 +1285,92 @@ def test_habitat_definition_is_consistent(spark, habitat, seed_inputs):
         assert sorted(sup) == sorted(pyramid.support_names)
         for name, df in sup.items():
             assert set(df.columns) == {*pyramid.support_keys[name], "n"}, name
+
+
+def test_entry_union_support_store_superset_rewrite(spark, tmp_path):
+    """The entry mart's facts-scale supports share ONE union store,
+    rewritten in ONE write over the union of every member's touched
+    set. A protein-arm change (a taxon move) touches a bucket no
+    assignment change touches: sup_etp's delta needs that bucket and
+    sup_ep's does not, so sup_ep's rows there are rewritten unchanged
+    (identical at v0 and v1) and the rendered mart equals the full
+    rebuild."""
+    from interpro7_dw_spark.domain.marts import entry_xrefs_mart
+    from interpro7_dw_spark.streaming.versions import bucket, read_members
+
+    n_buckets = 8
+    accs = [f"P{i}" for i in range(24)]
+    b_of = {
+        r.p: r.b
+        for r in spark.createDataFrame([(a,) for a in accs], "p string")
+        .select("p", bucket(F.col("p"), n_buckets).alias("b"))
+        .collect()
+    }
+    moved = "P1"
+    p_old = {a: f"N{i % 6}" for i, a in enumerate(accs)}
+    p_new = dict(p_old)
+    p_new[moved] = "N5"
+    pe_old = {j: (accs[j % 24], f"IPR{j % 4}") for j in range(48)}
+    pe_new = dict(pe_old)
+    outside = [a for a in accs if b_of[a] != b_of[moved]]
+    pe_new[100] = (outside[0], "IPR2")
+    pe_new.pop(next(j for j, (p, _e) in pe_old.items() if p in outside))
+
+    def pe_df(d, with_id=True):
+        df = spark.createDataFrame(
+            sorted((k, *v) for k, v in d.items()),
+            "pe_id long, protein_acc string, entry_acc string",
+        )
+        return df if with_id else df.drop("pe_id")
+
+    pec = spark.createDataFrame(
+        [(a, "1.2.3.4") for a in accs[::2]], "protein_acc string, ec string"
+    )
+    dims = {"pp": _pp(spark), "ps": _ps(spark), "pec": pec}
+    state = str(tmp_path / "entry_union")
+    seed_state(
+        spark, ENTRY_HABITAT, state,
+        {"assign": pe_df(pe_old), "protein": _p_df(spark, p_old)}, dims,
+        n_buckets=n_buckets,
+    )
+    out = maintain_batch(
+        spark, ENTRY_HABITAT, state,
+        {
+            "assign": snapshot_delta_images(
+                pe_df(pe_old), pe_df(pe_new), ["pe_id"],
+                ["protein_acc", "entry_acc"],
+            ),
+            "protein": snapshot_delta_images(
+                _p_df(spark, p_old), _p_df(spark, p_new), ["protein_acc"],
+                ["tax_id"],
+            ),
+        },
+        dims, n_buckets=n_buckets,
+    )
+
+    def rows(df):
+        return {r.entry_acc: tuple(r)[1:] for r in df.collect()}
+
+    assert rows(out) == rows(
+        entry_xrefs_mart(
+            pe_df(pe_new, with_id=False), _p_df(spark, p_new),
+            _pp(spark), _ps(spark), protein_ecs=pec,
+        )
+    )
+    assert os.path.isdir(f"{state}/sup_cow/v1_e0/__b={b_of[moved]}")
+    cols = {
+        n: [*ENTRY_HABITAT.pyramid.support_keys[n], "n"]
+        for n in ENTRY_HABITAT.pyramid.bucketed
+    }
+
+    def sup_ep_in_bucket(ver):
+        df = read_members(
+            spark, f"{state}/sup_cow", "__sup", cols, ver, [b_of[moved]]
+        )["sup_ep"]
+        return sorted(map(tuple, df.collect()))
+
+    assert sup_ep_in_bucket(0)
+    assert sup_ep_in_bucket(1) == sup_ep_in_bucket(0)
 
 
 def test_clan_mart_habitat_stream_equals_batch_equals_rebuild(spark, tmp_path):
@@ -1329,10 +1421,10 @@ def test_clan_mart_habitat_stream_equals_batch_equals_rebuild(spark, tmp_path):
     got_b = {r.clan_acc: tuple(r)[1:] for r in out_b.collect()}
     assert got_b == rebuild(m_new)
     # COW support advanced by touched buckets only
-    v1 = [d for d in os.listdir(f"{state_b}/sup_cow/sup_c_prot") if d.startswith("v1")]
+    v1 = [d for d in os.listdir(f"{state_b}/sup_cow") if d.startswith("v1")]
     assert len(v1) == 1
     parts = [
-        p for p in os.listdir(f"{state_b}/sup_cow/sup_c_prot/{v1[0]}")
+        p for p in os.listdir(f"{state_b}/sup_cow/{v1[0]}")
         if p.startswith("__b=")
     ]
     assert 0 < len(parts) < n_buckets, parts
@@ -1428,7 +1520,7 @@ def test_proteome_mart_habitat_stream_and_batch(spark, tmp_path):
     )
     got_b = {r.proteome_id: tuple(r)[1:] for r in out_b.collect()}
     assert got_b == rebuild()
-    for store in ("assignments", "matches", "sup_cow/sup_p_prot_db"):
+    for store in ("assignments", "matches", "sup_cow"):
         v1 = [d for d in os.listdir(f"{state_b}/{store}") if d.startswith("v1")]
         assert len(v1) == 1, store
         parts = [
@@ -1518,10 +1610,10 @@ def test_structure_mart_habitat_stream_and_batch(spark, tmp_path):
     )
     got_b = {r.pdb_id: tuple(r)[1:] for r in out_b.collect()}
     assert got_b == rebuild()
-    v1 = [d for d in os.listdir(f"{state_b}/sup_cow/sup_s_prot") if d.startswith("v1")]
+    v1 = [d for d in os.listdir(f"{state_b}/sup_cow") if d.startswith("v1")]
     assert len(v1) == 1
     parts = [
-        p for p in os.listdir(f"{state_b}/sup_cow/sup_s_prot/{v1[0]}")
+        p for p in os.listdir(f"{state_b}/sup_cow/{v1[0]}")
         if p.startswith("__b=")
     ]
     assert 0 < len(parts) < n_buckets, parts
@@ -1562,6 +1654,8 @@ def test_cow_apply_count_delta_superset_touched_equals_discovered(
     from interpro7_dw_spark.streaming.versions import (
         bucket,
         read_buckets,
+        seed_buckets,
+        tagged_union,
         version_name,
         write_buckets,
     )
@@ -1588,14 +1682,16 @@ def test_cow_apply_count_delta_superset_touched_equals_discovered(
     want_dir = str(tmp_path / "sup_discovered")
     got_dir = str(tmp_path / "sup_superset")
     for d in (want_dir, got_dir):
-        support.withColumn(
-            "__b", bucket(F.col("protein_acc"), n_buckets)
-        ).write.partitionBy("__b").parquet(f"{d}/v0")
+        seed_buckets(
+            d, tagged_union("__sup", {"sup": support}), "protein_acc",
+            n_buckets, members=["sup"],
+        )
 
     # collect-discovery path (touched=None) vs caller-derived superset
     for d, touched in ((want_dir, None), (got_dir, superset)):
         merged, _, merged_buckets = cow_count_merge_plan(
-            spark, d, delta, keys, "protein_acc", n_buckets, 0, touched=touched
+            spark, d, {"sup": delta}, {"sup": keys}, "protein_acc", n_buckets,
+            0, touched=touched,
         )
         write_buckets(
             spark, d, version_name(1, 0), merged, "protein_acc", n_buckets,

@@ -663,6 +663,95 @@ def test_streaming_ivm_half_write_ignored_and_vacuumed(
         assert names == ["v0", "v1_e0", "v2_e1"]
 
 
+@pytest.mark.parametrize("keep_last", [0, -1])
+def test_streaming_ivm_rejects_keep_last_below_one(spark, tmp_path, keep_last):
+    """``keep_last`` counts the committed versions a vacuum retains:
+    0 would index the OLDEST version and silently keep all, -1 would
+    delete v0 after the first epoch. Both raise before any write, and
+    the state is left as it was."""
+    import os
+
+    from interpro7_dw_spark.operators.cdc import snapshot_delta_images
+    from interpro7_dw_spark.streaming.ivm_stream import maintain_group_agg_stream
+
+    schema = "k long, g string, v double"
+    old = spark.createDataFrame([(1, "g1", 10.0)], schema)
+    new = spark.createDataFrame([(1, "g1", 11.0), (2, "g2", 3.0)], schema)
+    delta = snapshot_delta_images(old, new, ["k"], ["g", "v"])
+    src, state = str(tmp_path / "changes"), str(tmp_path / "mart")
+    _two_files(delta, src, "k = 1")
+    _group_agg(old).write.parquet(state + "/v0")
+
+    def tree():
+        return sorted(
+            os.path.relpath(os.path.join(d, f), tmp_path)
+            for d, _dirs, files in os.walk(tmp_path)
+            for f in files
+        )
+
+    before = tree()
+    with pytest.raises(ValueError, match="keep_last"):
+        maintain_group_agg_stream(
+            spark, _file_stream(spark, delta.schema, src), state, "g", "v",
+            keep_last=keep_last,
+        )
+    assert tree() == before
+
+
+def test_read_buckets_runs_no_spark_job(spark, tmp_path, monkeypatch):
+    """Every bucket-store read passes the store's recorded schema, so
+    it runs no Spark job however its buckets resolve — a full read, a
+    read served by a version whose touched buckets were all emptied,
+    and a read of buckets no version carries — and each returns the
+    store's schema. A resolved version directory that is gone by the
+    time of the read makes it raise, not read as empty."""
+    import shutil
+
+    from pyspark.errors import AnalysisException
+
+    from interpro7_dw_spark.streaming import versions
+    from interpro7_dw_spark.testing import max_job_id
+
+    store = str(tmp_path / "store")
+    df = spark.createDataFrame(
+        [(f"P{i}", i) for i in range(5)], "protein_acc string, n long"
+    )
+    versions.seed_buckets(store, df, "protein_acc", 8)
+    seeded = sorted(versions._version_buckets(spark, store, "v0"))
+    emptied = seeded[:1]
+    never = sorted(set(range(8)) - set(seeded))
+    assert never  # 5 rows cannot fill 8 buckets
+    # version 1 deletes every row of the bucket it touches
+    versions.write_buckets(
+        spark, store, "v1_e0", df.limit(0), "protein_acc", 8, emptied
+    )
+    versions.commit(spark, f"{store}/v1_e0")
+    gone = {tuple(r) for r in versions.read_buckets(spark, store, 0, emptied).collect()}
+    assert gone
+
+    for buckets, want in (
+        (None, {tuple(r) for r in df.collect()} - gone),
+        (emptied, set()),
+        (never, set()),
+    ):
+        j0 = max_job_id(spark)
+        read = versions.read_buckets(spark, store, 1, buckets)
+        assert max_job_id(spark) == j0, buckets
+        assert read.schema.simpleString() == df.schema.simpleString()
+        assert {tuple(r) for r in read.collect()} == want, buckets
+
+    resolve = versions._bucket_sources
+
+    def resolve_then_lose(*args, **kwargs):
+        served = resolve(*args, **kwargs)
+        shutil.rmtree(f"{store}/{next(iter(served))}")
+        return served
+
+    monkeypatch.setattr(versions, "_bucket_sources", resolve_then_lose)
+    with pytest.raises(AnalysisException):
+        versions.read_buckets(spark, store, 1)
+
+
 def test_streaming_ivm_many_epochs_cost_tracks_delta(spark, tmp_path):
     """Multi-epoch stressor: ~40 changelog epochs of interleaved
     inserts/updates/deletes folded one file per micro-batch; maintained

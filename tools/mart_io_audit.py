@@ -8,8 +8,9 @@ epoch. Two mechanisms fix it and this audit measures both:
 
 1. **COW bucket store** (``streaming/mart_habitat.py::
    cow_count_merge_plan`` + ``streaming/versions.py::write_buckets``):
-   the support lives bucketed by protein; one epoch reads + rewrites
-   only the delta-touched buckets. The measured per-epoch
+   the support lives bucketed by protein, as a member of a union
+   store tagged ``__sup``; one epoch reads + rewrites only the
+   delta-touched buckets. The measured per-epoch
    ``input_records`` must track
    |touched buckets| × rows-per-bucket, not |support|.
 2. **Pruned plan-level merge** (``domain/mart_ivm.py::
@@ -28,12 +29,13 @@ Usage:
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
@@ -47,6 +49,9 @@ def main() -> None:
     from interpro7_dw_spark.streaming.mart_habitat import cow_count_merge_plan
     from interpro7_dw_spark.streaming.versions import (
         bucket,
+        read_members,
+        seed_buckets,
+        tagged_union,
         version_name,
         write_buckets,
     )
@@ -73,9 +78,10 @@ def main() -> None:
 
     tmp = tempfile.mkdtemp(prefix="mart_io_audit_")
     sup_dir = f"{tmp}/sup"
-    support_df().withColumn(
-        "__b", bucket(F.col("protein_acc"), n_buckets)
-    ).write.partitionBy("__b").parquet(f"{sup_dir}/v0")
+    seed_buckets(
+        sup_dir, tagged_union("__sup", {"sup": support_df()}), "protein_acc",
+        n_buckets, members=["sup"],
+    )
 
     def emit(path: str, n_rows: int, touched, j0: int, t0: float, note: str = ""):
         m = stage_metrics_between(spark, j0, max_job_id(spark))
@@ -102,7 +108,8 @@ def main() -> None:
         )
         j0, t0 = max_job_id(spark), time.time()
         merged, _, merged_buckets = cow_count_merge_plan(
-            spark, sup_dir, d, keys, "protein_acc", n_buckets, ver
+            spark, sup_dir, {"sup": d}, {"sup": keys}, "protein_acc",
+            n_buckets, ver,
         )
         write_buckets(
             spark, sup_dir, version_name(ver + 1, ver + 1), merged,
@@ -115,7 +122,9 @@ def main() -> None:
     # plan-level baselines on the UNSTORED support (one-shot batch
     # maintainer shape): r12's unpruned full-outer merge vs the r13
     # pruned merge — same scan, delta-sized vs support-sized shuffle
-    base = spark.read.parquet(f"{sup_dir}/v0").drop("__b")
+    base = read_members(
+        spark, sup_dir, "__sup", {"sup": [*keys, "n"]}, 0
+    )["sup"]
     d = delta_for(64)
     j0, t0 = max_job_id(spark), time.time()
     apply_count_delta(base, d, keys).write.mode("overwrite").parquet(
@@ -178,7 +187,11 @@ def main() -> None:
         spark, TAXON_HABITAT, state, {"protein": proteins, "match": matches},
         dims, n_buckets=n_buckets,
     )
-    facts_rows = spark.read.parquet(f"{state}/sup_cow/sup_prot_db/v0").count()
+    facts_rows = read_members(
+        spark, f"{state}/sup_cow", "__sup",
+        {"sup_prot_db": [*TAXON_HABITAT.pyramid.support_keys["sup_prot_db"], "n"]},
+        0,
+    )["sup_prot_db"].count()
     spark.catalog.clearCache()
 
     # (a) one batch epoch: an 8-protein changelog (taxon moves + one
