@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.cdc import ivm_apply_group_agg
-from .versions import SEED, Version, drain, latest_committed
+from .versions import SEED, Version, drain, latest_committed, write_state
 
 
 def _empty_mart(
@@ -71,7 +71,7 @@ def maintain_group_agg_stream(
         out = ivm_apply_group_agg(
             mart, batch, group_col, value_col, n_col=n_col, total_col=total_col
         )
-        out.write.mode("overwrite").parquet(target.path(state_dir))
+        write_state(out, target.path(state_dir))
 
     latest = drain(spark, changes, state_dir, state_dir + "_chk", step, keep_last)
     return spark.read.parquet(latest.path(state_dir))
@@ -133,7 +133,7 @@ def maintain_group_topk_stream(
                     local.select(key_col, id_col, value_col)
                 )
             )
-        merged.write.mode("overwrite").parquet(target.path(state_dir))
+        write_state(merged, target.path(state_dir))
 
     latest = drain(spark, rows, state_dir, state_dir + "_chk", step, keep_last)
     return spark.read.parquet(latest.path(state_dir))
@@ -176,7 +176,7 @@ def maintain_join_agg_stream(
         # derived from, and a shared lineage would trip Spark's
         # ambiguous-self-join analysis
         fact_old = spark.read.parquet(fact_old_path)
-        (
+        write_state(
             fact_old.join(dim, join_key, "inner")
             .groupBy(group_col)
             .agg(
@@ -184,9 +184,8 @@ def maintain_join_agg_stream(
                 F.sum(
                     F.coalesce(F.col(value_col), F.lit(0)).cast("decimal(18,4)")
                 ).cast("decimal(18,4)").alias(total_col),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{state_dir}/{SEED}")
+            ),
+            f"{state_dir}/{SEED}",
         )
 
     def step(batch: DataFrame, prev: Version | None, target: Version) -> None:
@@ -206,7 +205,7 @@ def maintain_join_agg_stream(
             mart, empty_fact_old, batch, dim, empty_dim_delta,
             join_key, group_col, value_col, n_col=n_col, total_col=total_col,
         )
-        out.write.mode("overwrite").parquet(target.path(state_dir))
+        write_state(out, target.path(state_dir))
 
     latest = drain(
         spark, fact_changes, state_dir, state_dir + "_chk", step, keep_last

@@ -37,9 +37,16 @@ physical story:
                                             at its root written LAST
 
 Every bucket store and the agg union carry a ``_schema.json`` that
-every read of them passes to Spark (the level-2 reads still infer
-theirs); the union stores' artifacts list their members
-(:mod:`.versions`).
+every read of them passes to Spark; the union stores' artifacts list
+their members, and a version's agg artifact also records its level-2
+supports' schemas (:mod:`.versions`). Every state file is zstd
+parquet sorted in schema order (:func:`.versions.write_state`).
+
+Every unit of work — discovery, each fact-store advance, each state
+write, each seed piece — runs its Spark jobs under the job description
+``<mart>.<unit>`` (e.g. ``entry.sup_cow``, ``entry.seed.agg``), so a
+status-store reader can attribute every job, AQE's stage jobs
+included.
 
 Per-epoch cost: |micro-batch| + touched COW buckets (facts AND
 facts-scale supports) + the aggregate-sized supports — never
@@ -91,6 +98,7 @@ from .versions import (
     tagged_union,
     write_buckets,
     write_schema,
+    write_state,
 )
 
 
@@ -194,23 +202,28 @@ class MartHabitat:
     # test_cow_apply_count_delta_superset_touched_equals_discovered).
     sup_touch: Mapping[str, tuple[str, ...]] = field(default_factory=dict)
 
-    def source(self, tag: str) -> ChangeSrc:
-        for s in self.sources:
-            if s.tag == tag:
-                return s
-        raise KeyError(tag)
 
+def _run_units(
+    spark: SparkSession, mart: str, units: Mapping[str, Callable[[], object]]
+) -> list:
+    """Run ``units`` concurrently (:func:`..parallel.run_parallel`),
+    each one's Spark jobs — AQE's stage jobs included — under the job
+    description ``<mart>.<unit>``, restoring its thread's previous
+    description afterwards. Returns their results in order."""
+    sc = spark.sparkContext
 
-def _prof(label: str, t0: float) -> None:
-    """Opt-in phase timing (SPARK_GRAFT_PROF=1): one stderr line per
-    labeled epoch phase — measurement hook only, no behavior."""
-    import os
-    import sys
-    import time
+    def labeled(label: str, fn: Callable[[], object]) -> Callable[[], object]:
+        def run():
+            old = sc.getLocalProperty("spark.job.description")
+            sc.setJobDescription(label)
+            try:
+                return fn()
+            finally:
+                sc.setLocalProperty("spark.job.description", old)
 
-    if os.environ.get("SPARK_GRAFT_PROF"):
-        print(f"[prof] {label:32s} {time.time() - t0:6.2f}s",
-              file=sys.stderr, flush=True)
+        return run
+
+    return run_parallel([labeled(f"{mart}.{u}", fn) for u, fn in units.items()])
 
 
 # ------------------------------------------------------------ unify
@@ -315,55 +328,6 @@ def _sup_bucket_col(pyramid: MartPyramid) -> str:
     return next(iter(pyramid.bucketed.values()))
 
 
-def _seed_support_thunks(
-    spark: SparkSession,
-    state_dir: str,
-    sup: dict[str, DataFrame],
-    pyramid: MartPyramid,
-    n_buckets: int,
-) -> list:
-    """The write thunks of the v0 supports: ONE for every FACTS-SCALE
-    support through the bucketed ``sup_cow`` union store, one per
-    LEVEL-2 support (plain parquet under the mart version root), and
-    ONE for every plain level-1 support through the discriminated
-    ``mart/v0/agg`` union (r16 — one action instead of one per
-    support). The caller runs them (concurrently — they write disjoint
-    paths) and writes the mart root ``_SUCCESS`` LAST to commit all."""
-    l2 = pyramid.level2
-    plain_names = [
-        n
-        for n in pyramid.support_names
-        if n not in pyramid.bucketed and n not in l2
-    ]
-    thunks = [
-        (
-            lambda name=name: sup[name].write.parquet(
-                f"{state_dir}/mart/{SEED}/{name}"
-            )
-        )
-        for name in pyramid.support_names
-        if name in l2 and name not in pyramid.bucketed
-    ]
-    if pyramid.bucketed:
-        thunks.append(
-            lambda: seed_buckets(
-                f"{state_dir}/sup_cow",
-                tagged_union("__sup", {n: sup[n] for n in pyramid.bucketed}),
-                _sup_bucket_col(pyramid), n_buckets,
-                members=list(pyramid.bucketed),
-            )
-        )
-    if plain_names:
-        thunks.append(
-            lambda: _write_agg_supports(
-                spark,
-                f"{state_dir}/mart/{SEED}",
-                {n: sup[n] for n in plain_names},
-            )
-        )
-    return thunks
-
-
 def seed_state(
     spark: SparkSession,
     habitat: MartHabitat,
@@ -377,38 +341,56 @@ def seed_state(
     stores (each from ``old[store.src]``, the old release keyed by
     changelog arm tag), the protein-keyed static dims as one union
     store in the same bucket layout, and the supports
-    ``habitat.seed(old, dims)`` aggregates, per their storage
-    discipline. Every piece writes a DISJOINT path from independent plans (the supports share their
-    seed's owned persists, whose blocks the block manager computes
-    once under concurrent first readers), so all writes run from one
-    driver pool (guide §2.6); the mart root ``_SUCCESS`` still commits
-    the supports LAST, after every write returned."""
-    thunks = [
-        (
-            lambda st=st: seed_buckets(
-                f"{state_dir}/{st.name}", old[st.src], st.bucket_col, n_buckets
-            )
+    ``habitat.seed(old, dims)`` aggregates: the facts-scale ones as the
+    ``sup_cow`` union store, each level-2 one as plain parquet under
+    the mart version root, and the plain level-1 ones as ONE
+    discriminated ``mart/v0/agg`` union whose artifact also records the
+    level-2 schemas. Every piece writes a DISJOINT path from
+    independent plans (the supports share their seed's owned persists,
+    whose blocks the block manager computes once under concurrent
+    first readers), so all writes run from one driver pool (guide
+    §2.6); the mart root ``_SUCCESS`` still commits the supports LAST,
+    after every write returned."""
+    pyramid = habitat.pyramid
+    units = {
+        f"seed.{st.name}": lambda st=st: seed_buckets(
+            f"{state_dir}/{st.name}", old[st.src], st.bucket_col, n_buckets
         )
         for st in habitat.stores
-    ]
+    }
     # protein-keyed static dims never advance: bucketed once here, every
     # epoch's delta join reads only the delta's touched buckets
     pruned = {
         d.name: dims[d.name] for d in habitat.dims if d.prune_src is not None
     }
     if pruned:
-        thunks.append(
-            lambda: seed_buckets(
-                f"{state_dir}/dims", tagged_union("__dim", pruned),
-                "protein_acc", n_buckets, members=list(pruned),
-            )
+        units["seed.dims"] = lambda: seed_buckets(
+            f"{state_dir}/dims", tagged_union("__dim", pruned),
+            "protein_acc", n_buckets, members=list(pruned),
         )
-    thunks += _seed_support_thunks(
-        spark, state_dir, habitat.seed(old, dims), habitat.pyramid,
-        n_buckets,
+    sup = habitat.seed(old, dims)
+    vdir = f"{state_dir}/mart/{SEED}"
+    l2 = [n for n in pyramid.support_names if n in pyramid.level2]
+    for name in l2:
+        units[f"seed.{name}"] = lambda name=name: write_state(
+            sup[name], f"{vdir}/{name}"
+        )
+    if pyramid.bucketed:
+        units["seed.sup_cow"] = lambda: seed_buckets(
+            f"{state_dir}/sup_cow",
+            tagged_union("__sup", {n: sup[n] for n in pyramid.bucketed}),
+            _sup_bucket_col(pyramid), n_buckets, members=list(pyramid.bucketed),
+        )
+    plain = {
+        n: sup[n]
+        for n in pyramid.support_names
+        if n not in pyramid.bucketed and n not in pyramid.level2
+    }
+    units["seed.agg"] = lambda: _write_agg_supports(
+        spark, vdir, plain, {n: sup[n].schema for n in l2}
     )
-    run_parallel(thunks)
-    versions.commit(spark, f"{state_dir}/mart/{SEED}")
+    _run_units(spark, pyramid.name, units)
+    versions.commit(spark, vdir)
 
 
 # ---------------------------------------------------- support merges
@@ -429,57 +411,50 @@ def cow_count_merge_plan(
     """Plan the merge of SIGNED count deltas (``keys[name]`` + ``s``)
     into the members of a COW-bucketed union count store (rows tagged
     ``__sup``; ``deltas`` names every member): resolve ONLY the touched
-    buckets at ``prev_version`` in ONE read, split it per member and run
-    :func:`..domain.mart_ivm.apply_count_delta` on each member's rows
-    alone. Returns ``(rows, transitions, touched)``: ``rows`` is the
-    tagged union of every member's merged rows, which the caller writes
-    as the new version with :func:`.versions.write_buckets` over
-    ``touched``. Untouched buckets are never read, shuffled or
-    rewritten — they stay served by older versions through the
-    per-bucket resolution — so per-epoch support IO is
-    Θ(|touched buckets|), not Θ(|support|) (the r12 verdict's one
-    scale finding, measured in tests/test_mart_ivm.py + PERF.md r13).
+    buckets at ``prev_version`` in ONE read and merge the tagged union
+    of the deltas into it ONCE with
+    :func:`..domain.mart_ivm.apply_count_delta`, keyed by ``__sup`` plus
+    every member's key columns (the NULL padding of the columns a
+    member lacks matches null-safely on both sides). Returns ``(rows,
+    transitions, touched)``: ``rows`` is the merged union in the
+    store's column order, which the caller writes as the new version
+    with :func:`.versions.write_buckets` over ``touched``. Untouched
+    buckets are never read, shuffled or rewritten — older versions keep
+    serving them — so per-epoch support IO is Θ(|touched buckets|), not
+    Θ(|support|) (measured in tests/test_mart_ivm.py + PERF.md r13).
 
-    The plan is LAZY: no write runs here, so a caller can overlap the
-    COW write with OTHER jobs that consume the transitions (r16: the
-    habitat pools the bucketed write, the level-2 writes and the one
-    agg-union write from the same plan set). No Spark action runs when
-    ``touched`` is supplied (bucket resolution is driver-side file
-    listing and the read passes the store's recorded schema); with
-    ``touched=None`` the discovery collect runs here.
+    The plan is LAZY: no write runs here, so the caller can pool the
+    COW write with the jobs that consume the transitions. No Spark
+    action runs when ``touched`` is supplied (bucket resolution is
+    driver-side file listing and the read passes the store's recorded
+    schema); with ``touched=None`` the discovery collect runs here.
 
-    A member named in ``roll_keys`` merges through
-    ``apply_count_delta_with_transitions`` and also returns its
-    enter/exit transitions (``roll_keys[name]`` + ``s``) — the
-    complete signed delta of its level-2 rollup, complete because
-    untouched buckets cannot transition. The transitions branch off the
-    same persisted merge plan the write materializes, so emitting them
-    costs no second bucket read; the caller must consume them inside
-    the same ``engine_cache_scope``. ``persist_into`` (r16) forwards to
-    ``apply_count_delta_with_transitions``: a caller that consumes the
-    transitions on a different thread (the pooled epoch writes) owns
-    the shared merge persists' release through this list instead of a
-    thread-local cache scope.
+    When any member is named in ``roll_keys`` the union merges through
+    ``apply_count_delta_with_transitions``, and each such member gets
+    its enter/exit transitions (``roll_keys[name]`` + ``s``, the
+    union's transitions filtered by tag) — the complete signed delta
+    of its level-2 rollup, complete because untouched buckets cannot
+    transition. They branch off the same persisted merge the write
+    materializes, so they cost no second bucket read; the persist is
+    released by the calling thread's ``engine_cache_scope``, or by a
+    caller that consumes them on other threads through the
+    ``persist_into`` list.
 
-    ``touched`` (r15) lets a caller that already knows a SUPERSET of
-    the deltas' buckets (the habitat's per-arm one-job discovery,
-    unioned per ``MartHabitat.sup_touch``) skip the discovery collect —
-    which would otherwise EXECUTE the full delta plans a second time.
-    Unlike ``cow_apply_images``, a superset here is value-identical:
-    extra buckets' rows pass through the pruned merge unchanged and are
-    rewritten identically at the new version (only a SUBSET would be
-    wrong); ``versions.VALIDATE_TOUCHED`` cross-checks the superset
-    property in debug sessions."""
+    ``touched`` lets a caller that already knows a SUPERSET of the
+    deltas' buckets (the habitat's per-arm one-job discovery, unioned
+    per ``MartHabitat.sup_touch``) skip the discovery collect, which
+    would EXECUTE the delta plans a second time. Unlike
+    ``cow_apply_images``, a superset here is value-identical: extra
+    buckets' rows pass through the merge unchanged and are rewritten
+    identically (only a SUBSET would be wrong);
+    ``versions.VALIDATE_TOUCHED`` cross-checks it in debug sessions."""
+    delta = tagged_union(
+        "__sup", {n: d.select(*keys[n], "s") for n, d in deltas.items()}
+    )
 
     def _discover() -> list[int]:
-        parts = [
-            d.select(bucket(F.col(bucket_col), n_buckets).alias("b"))
-            for d in deltas.values()
-        ]
-        union = parts[0]
-        for p in parts[1:]:
-            union = union.unionByName(p)
-        return sorted(r[0] for r in union.distinct().collect())
+        b = bucket(F.col(bucket_col), n_buckets).alias("b")
+        return sorted(r[0] for r in delta.select(b).distinct().collect())
 
     if touched is None:
         touched = _discover()
@@ -490,21 +465,20 @@ def cow_count_merge_plan(
                 "cow_count_merge_plan: caller-supplied touched buckets "
                 f"{touched} are not a superset of the deltas' for {sup_dir}"
             )
-    cur = read_members(
-        spark, sup_dir, "__sup", {n: [*keys[n], "n"] for n in deltas},
-        prev_version, touched,
+    cur = read_buckets(spark, sup_dir, prev_version, touched, members=deltas)
+    ukeys = ["__sup", *dict.fromkeys(k for n in deltas for k in keys[n])]
+    rolled = {n: roll_keys[n] for n in deltas if n in (roll_keys or {})}
+    if not rolled:
+        merged = apply_count_delta(cur, delta, ukeys)
+        return merged.select(*cur.columns), {}, touched
+    merged, trans = apply_count_delta_with_transitions(
+        cur, delta, ukeys, ukeys, persist_into=persist_into
     )
-    merged: dict[str, DataFrame] = {}
-    transitions: dict[str, DataFrame] = {}
-    for name, delta in deltas.items():
-        if roll_keys is None or name not in roll_keys:
-            merged[name] = apply_count_delta(cur[name], delta, keys[name])
-        else:
-            merged[name], transitions[name] = apply_count_delta_with_transitions(
-                cur[name], delta, keys[name], roll_keys[name],
-                persist_into=persist_into,
-            )
-    return tagged_union("__sup", merged), transitions, touched
+    transitions = {
+        n: trans.filter(F.col("__sup") == n).select(*rk, "s")
+        for n, rk in rolled.items()
+    }
+    return merged.select(*cur.columns), transitions, touched
 
 
 # ------------------------------------------- aggregate-sized supports
@@ -521,24 +495,31 @@ def cow_count_merge_plan(
 # transitions feed it (see :func:`_advance_supports`). Inside the
 # union an emptied support has no ``__sup`` partition, so the store's
 # ``_schema.json`` lists the supports the version wrote and a reader
-# raises on a name outside that list instead of serving it as empty.
-# The union pads each support to the superset schema with typed NULLs
-# and a reader re-projects exactly the support's own ``keys + n``, so
-# the round-trip is column-identical to the per-name files.
+# raises on a name outside that list instead of serving it as empty;
+# it also records each level-2 support's schema, which the level-2
+# reads pass (no file, no inference job of their own). The union pads
+# each support to the superset schema with typed NULLs and a reader
+# re-projects exactly the support's own ``keys + n``, so the
+# round-trip is column-identical to the per-name files.
 
 
 def _write_agg_supports(
-    spark: SparkSession, vdir: str, dfs: "dict[str, DataFrame]"
+    spark: SparkSession,
+    vdir: str,
+    dfs: Mapping[str, DataFrame],
+    level2: Mapping[str, StructType],
 ) -> None:
     """ONE write action for every aggregate-sized support of a version
     (``{vdir}/agg/__sup=<name>/``), plus the schema artifact that
-    lists the written supports and lets an all-empty version still
-    serve typed empty supports."""
-    if not dfs:
-        return
+    lists the written supports, lets an all-empty version still serve
+    typed empty supports, and records the schemas of the ``level2``
+    supports the version writes beside it."""
     u = tagged_union("__sup", dfs)
-    u.write.partitionBy("__sup").mode("overwrite").parquet(f"{vdir}/agg")
-    write_schema(spark, f"{vdir}/agg", u.drop("__sup").schema, members=list(dfs))
+    write_state(u, f"{vdir}/agg", "__sup")
+    write_schema(
+        spark, f"{vdir}/agg", u.drop("__sup").schema, members=list(dfs),
+        level2=level2,
+    )
 
 
 def _read_agg_supports(
@@ -546,27 +527,36 @@ def _read_agg_supports(
     state_dir: str,
     pyramid: MartPyramid,
     version_name: str,
-    names: list[str],
 ) -> dict[str, DataFrame]:
-    """Every plain level-1 support of a version through ONE read of the
-    version's agg store with the schema its artifact records (no Spark
-    job; a version whose supports were all emptied holds no files and
-    reads as typed-empty), split per name. ``names`` must be exactly
-    the supports the artifact lists."""
-    if not names:
-        return {}
-    agg = f"{state_dir}/mart/{version_name}/agg"
-    art = read_schema(spark, agg)
-    require_members(art, names, agg)
+    """Every aggregate-sized support of a version, each read with the
+    schema the version's agg artifact records (no Spark job): the plain
+    level-1 supports through ONE read of the agg store (a version whose
+    supports were all emptied holds no files there and reads as
+    typed-empty), split per name, and each level-2 support from its
+    own directory. The artifact must list exactly the plain supports;
+    a missing level-2 schema or directory raises."""
+    vdir = f"{state_dir}/mart/{version_name}"
+    art = read_schema(spark, f"{vdir}/agg")
+    plain = [
+        n
+        for n in pyramid.support_names
+        if n not in pyramid.bucketed and n not in pyramid.level2
+    ]
+    require_members(art, plain, f"{vdir}/agg")
     df = spark.read.schema(
         StructType.fromJson(art).add("__sup", "string")
-    ).parquet(agg)
-    return {
+    ).parquet(f"{vdir}/agg")
+    out = {
         name: df.filter(F.col("__sup") == name).select(
             *pyramid.support_keys[name], "n"
         )
-        for name in names
+        for name in plain
     }
+    for name in pyramid.level2:
+        out[name] = spark.read.schema(
+            StructType.fromJson(art["level2"][name])
+        ).parquet(f"{vdir}/{name}")
+    return out
 
 
 def _advance_supports(
@@ -584,61 +574,33 @@ def _advance_supports(
     the facts-scale supports COW-merge only the touched buckets of
     their union store (the union of every member's ``sup_touch`` arms'
     discovered sets) and rewrite them in ONE write; every
-    aggregate-sized support (non-bucketed level 1 AND the level-2
-    rollup targets) merges whole against the previous version, the
-    plain level-1 ones through the ONE discriminated ``agg`` union
-    write. A level-1 support with a registered rollup merges through
-    the transitions-emitting variant — its transitions (through the
-    rollup's transform, if any) are the ENTIRE delta of the
-    aggregate-sized level-2 support. The caller's
-    :func:`.versions.advance` commits every piece atomically with the
-    mart-root ``_SUCCESS`` once this returns.
+    aggregate-sized support merges whole against the previous version,
+    the plain level-1 ones through the ONE ``agg`` union write. A
+    level-1 support with a rollup merges through the
+    transitions-emitting variant, whose transitions (through the
+    rollup's transform, if any) are the ENTIRE delta of its level-2
+    support. The caller's :func:`.versions.advance` commits every piece
+    atomically with the mart-root ``_SUCCESS`` once this returns.
 
-    Every merge plan is built here on the calling thread — no Spark
-    action runs: the touched sets are supplied and every state read
-    passes its recorded schema — and every write is its own pooled
-    thunk (guide §2.6), so the critical path is the slowest SINGLE
-    write (measured r16: a serialized all-in-one-agg-after-COW shape
-    cost +2.3 s/epoch at sf0.1). The level-2 writes consume
-    transitions that branch off the persisted merge plans another
-    thunk writes; those shared relations persist through
-    ``persist_into`` and are released here after ALL writes returned —
-    a per-unit thread-local scope would drop them before the other
-    thread's consumer ran; the block manager deduplicates the racing
-    first computes."""
-    import time as _time
-
+    Every merge plan is built here on the calling thread without a
+    Spark action (the touched sets are supplied and every state read
+    passes its recorded schema), and every write is its own pooled unit
+    (guide §2.6), so the critical path is the slowest SINGLE write
+    (measured r16: a serialized all-in-one-agg-after-COW shape cost
+    +2.3 s/epoch at sf0.1). The level-2 writes consume transitions that
+    branch off merges another unit writes; those shared relations
+    persist through ``persist_into`` and are released here after ALL
+    writes returned (the block manager deduplicates the racing first
+    computes)."""
     pyramid = habitat.pyramid
-    l2 = pyramid.level2
-    mart_dir = f"{state_dir}/mart"
-    vdir = target.path(mart_dir)
-    plain = [
-        n
-        for n in pyramid.support_names
-        if n not in l2 and n not in pyramid.bucketed
-    ]
+    vdir = target.path(f"{state_dir}/mart")
     merge_persists: list = []
-    thunks = []
+    units: dict[str, Callable[[], object]] = {}
     transitions: dict[str, DataFrame] = {}
-
-    def l2_unit(rollup, trans) -> None:
-        _tu = _time.time()
-        with engine_cache_scope():
-            cur2 = spark.read.parquet(f"{prev.path(mart_dir)}/{rollup.l2}")
-            t = (
-                rollup.transform(trans, dims)
-                if rollup.transform is not None
-                else trans
-            )
-            apply_count_delta(
-                cur2, t, pyramid.support_keys[rollup.l2]
-            ).write.mode("overwrite").parquet(f"{vdir}/{rollup.l2}")
-        _prof(f"unit {rollup.l2}", _tu)
 
     # the merge persists register as soon as their plans are built,
     # so their release also covers a failure while planning
     try:
-        _t0 = _time.time()
         if pyramid.bucketed:
             sup_dir = f"{state_dir}/sup_cow"
             bucket_col = _sup_bucket_col(pyramid)
@@ -661,46 +623,48 @@ def _advance_supports(
                 ),
                 persist_into=merge_persists,
             )
-            thunks.append(
-                lambda: write_buckets(
-                    spark, sup_dir, target.name, rows, bucket_col, n_buckets,
-                    sup_touched,
-                )
+            units["sup_cow"] = lambda: write_buckets(
+                spark, sup_dir, target.name, rows, bucket_col, n_buckets,
+                sup_touched,
             )
-        prev_plain = _read_agg_supports(
-            spark, state_dir, pyramid, prev.name, plain
-        )
+        cur = _read_agg_supports(spark, state_dir, pyramid, prev.name)
         agg_out: dict[str, DataFrame] = {}
-        for name in plain:
+        for name in pyramid.support_names:
+            if name in pyramid.bucketed or name in pyramid.level2:
+                continue
             keys = pyramid.support_keys[name]
             rollup = pyramid.rollups.get(name)
             if rollup is None:
-                agg_out[name] = apply_count_delta(
-                    prev_plain[name], deltas[name], keys
-                )
+                agg_out[name] = apply_count_delta(cur[name], deltas[name], keys)
             else:
                 agg_out[name], transitions[name] = (
                     apply_count_delta_with_transitions(
-                        prev_plain[name], deltas[name], keys,
+                        cur[name], deltas[name], keys,
                         list(rollup.trans_keys), persist_into=merge_persists,
                     )
                 )
-        if agg_out:
-            thunks.append(lambda: _write_agg_supports(spark, vdir, agg_out))
-        thunks += [
-            (lambda r=rollup, t=transitions[name]: l2_unit(r, t))
-            for name, rollup in pyramid.rollups.items()
-        ]
-        _prof("plan supports", _t0)
-        _t0 = _time.time()
-        run_parallel(thunks)
+        l2_out = {
+            r.l2: apply_count_delta(
+                cur[r.l2],
+                r.transform(transitions[name], dims)
+                if r.transform is not None
+                else transitions[name],
+                pyramid.support_keys[r.l2],
+            )
+            for name, r in pyramid.rollups.items()
+        }
+        units["agg"] = lambda: _write_agg_supports(
+            spark, vdir, agg_out, {n: df.schema for n, df in l2_out.items()}
+        )
+        for name, df in l2_out.items():
+            units[name] = lambda name=name, df=df: write_state(df, f"{vdir}/{name}")
+        _run_units(spark, pyramid.name, units)
     finally:
         for df in merge_persists:
             try:
                 df.unpersist()
             except Exception:  # noqa: BLE001 — session may be gone
                 pass
-    _prof("write supports", _t0)
 
 
 # ------------------------------------------------------------ reads
@@ -712,19 +676,13 @@ def read_supports(
     state_dir: str,
     version_name: str,
 ) -> dict[str, DataFrame]:
-    """All supports AS OF a committed mart version: the plain level-1
-    supports from ONE read of the version's ``agg`` union, the
-    facts-scale ones from ONE read of the ``sup_cow`` union store
-    resolved per bucket at that version number, and the level-2
-    supports from their per-name directories."""
-    out = _read_agg_supports(
-        spark, state_dir, pyramid, version_name,
-        [
-            n
-            for n in pyramid.support_names
-            if n not in pyramid.bucketed and n not in pyramid.level2
-        ],
-    )
+    """All supports AS OF a committed mart version, each read with its
+    recorded schema (no Spark job): the plain level-1 supports from ONE
+    read of the version's ``agg`` union, the level-2 supports from
+    their per-name directories, and the facts-scale ones from ONE read
+    of the ``sup_cow`` union store resolved per bucket at that version
+    number."""
+    out = _read_agg_supports(spark, state_dir, pyramid, version_name)
     if pyramid.bucketed:
         out.update(
             read_members(
@@ -733,8 +691,6 @@ def read_supports(
                 parse_name(version_name)[0],
             )
         )
-    for name in pyramid.level2:
-        out[name] = spark.read.parquet(f"{state_dir}/mart/{version_name}/{name}")
     return {name: out[name] for name in pyramid.support_names}
 
 
@@ -763,43 +719,39 @@ def _epoch_step(
     STREAMING habitat (each drained micro-batch) and the one-shot
     BATCH habitat (:func:`maintain_batch`). All bucket discovery runs
     as ONE driver job (:func:`discover_touched`)."""
+    mart = habitat.pyramid.name
     if prev is None:
         raise RuntimeError(
-            f"{habitat.pyramid.name}-mart maintenance requires a seeded "
-            "v0 (seed_state)"
+            f"{mart}-mart maintenance requires a seeded v0 (seed_state)"
         )
-    import time as _time
-
     batch = batch.persist()
     try:
         parts = {
             src.tag: batch.filter(F.col("src") == src.tag).select(*src.cols)
             for src in habitat.sources
         }
-        _t0 = _time.time()
-        touched = discover_touched(batch, habitat, n_buckets)
-        _prof("discover", _t0)
+        (touched,) = _run_units(
+            spark, mart,
+            {"discover": lambda: discover_touched(batch, habitat, n_buckets)},
+        )
 
         # advance the fact COW stores (one partitioned write each; the
         # exact touched sets were discovered above). The stores write
         # disjoint paths from disjoint changelog arms — concurrent
         # driver jobs (guide §2.6), joined before any rescan reads the
         # just-written versions.
-        _t0 = _time.time()
-        run_parallel(
-            [
-                (
-                    lambda st=st: cow_apply_images(
-                        spark, f"{state_dir}/{st.name}", parts[st.src],
-                        st.bucket_col, list(st.key_cols), n_buckets,
-                        prev.ver, target.ver, target.epoch,
-                        touched=touched[st.src],
-                    )
+        _run_units(
+            spark, mart,
+            {
+                st.name: lambda st=st: cow_apply_images(
+                    spark, f"{state_dir}/{st.name}", parts[st.src],
+                    st.bucket_col, list(st.key_cols), n_buckets,
+                    prev.ver, target.ver, target.epoch,
+                    touched=touched[st.src],
                 )
                 for st in habitat.stores
-            ]
+            },
         )
-        _prof("store advances", _t0)
 
         # pruned bilinear rescan sources — partition-pruned bucket
         # reads of the stores at the declared version
@@ -831,14 +783,12 @@ def _epoch_step(
         # scope releases them once every support consumed them
         with engine_cache_scope():
             deltas = habitat.deltas(parts, rescans, dim_use)
-            _t0 = _time.time()
             # an exception from any pooled write propagates here,
             # failing the epoch before its commit marker is written
             _advance_supports(
                 spark, state_dir, deltas, prev, target,
                 habitat, dim_use, n_buckets, touched=touched,
             )
-            _prof("advance supports", _t0)
     finally:
         batch.unpersist()
 

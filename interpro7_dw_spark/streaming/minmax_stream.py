@@ -37,6 +37,7 @@ from .versions import (
     drain,
     read_schema,
     seed_buckets,
+    write_state,
 )
 
 
@@ -52,11 +53,14 @@ def seed_minmax_state(
     write — every bucket with rows gets a ``__b=i`` partition — and
     the store's ``_schema.json``) plus the mart."""
     seed_buckets(f"{state_dir}/facts", facts, group_col, n_buckets)
-    facts.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.min(value_col).alias("min_v"),
-        F.max(value_col).alias("max_v"),
-    ).write.parquet(f"{state_dir}/mart/{SEED}")
+    write_state(
+        facts.groupBy(group_col).agg(
+            F.count(F.lit(1)).cast("long").alias("n_rows"),
+            F.min(value_col).alias("min_v"),
+            F.max(value_col).alias("max_v"),
+        ),
+        f"{state_dir}/mart/{SEED}",
+    )
 
 
 def maintain_group_minmax_stream(
@@ -115,7 +119,7 @@ def maintain_group_minmax_stream(
             out = ivm_apply_group_minmax(
                 mart, batch, rescan_facts, group_col, value_col
             )
-            out.write.mode("overwrite").parquet(target.path(mart_dir))
+            write_state(out, target.path(mart_dir))
         finally:
             batch.unpersist()
 

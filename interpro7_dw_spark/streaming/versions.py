@@ -47,7 +47,11 @@ Every write (the seed's and each epoch's) shuffles its rows by bucket
 first, so a version carries ONE file per non-empty bucket, in ONE
 ``partitionBy("__b")`` action (:func:`write_buckets`): the job count is
 constant in the number of touched buckets and the version's
-``_SUCCESS`` commits every touched bucket at once; a touched bucket
+``_SUCCESS`` commits every touched bucket at once. Each file is zstd
+parquet with its rows sorted by its columns in schema order
+(:func:`write_state`, the writer of every versioned-state file, mart
+versions included), the shape of the reference's sorted, compressed
+key-value bucket files; a touched bucket
 whose rows were all deleted gets an explicit empty partition directory,
 so resolution never resurrects older rows. A reader resolves each
 bucket's newest committed version ``<=`` the one it wants (the
@@ -71,11 +75,15 @@ access pattern live in ONE store, so their per-file metadata is paid
 once per bucket instead of once per relation and bucket: the rows of
 each member are tagged by a string column (:func:`tagged_union` pads
 every member to the superset schema with typed NULLs), the store's
-artifact lists its members, and :func:`read_members` reads the store
-once and splits it per member. A reader names exactly the listed
-members (:func:`require_members`): a name outside the list raises
-instead of reading as empty, and a rewrite of a bucket carries every
-member's rows.
+artifact lists its members, and :func:`read_buckets` reads the store
+once. The tag column leads the schema, so each member's rows are
+contiguous in every file. A count store is merged as ONE relation
+keyed by the tag plus every member's key columns (the NULL padding
+matches null-safely); :func:`read_members` splits a read per member
+instead. A reader names exactly the listed members
+(:func:`require_members`): a name outside the list raises instead of
+reading as empty, and a rewrite of a bucket carries every member's
+rows.
 """
 
 from __future__ import annotations
@@ -367,16 +375,24 @@ def _bucket_sources(
     return served
 
 
-def _read_resolved(
+def read_buckets(
     spark: SparkSession,
     store_dir: str,
-    schema: StructType,
     at_version: int,
-    buckets: list[int] | None,
+    buckets: list[int] | None = None,
+    members: Iterable[str] | None = None,
 ) -> DataFrame:
-    """The resolved bucket directories as one relation read with
-    ``schema``: no Spark job, an empty bucket directory reads as no
-    rows, a missing one raises."""
+    """The store as of ``at_version`` (restricted to ``buckets`` when
+    given), with the schema its ``_schema.json`` records: ONE read of
+    the resolved bucket directories, whichever versions serve them,
+    running no Spark job. Resolved buckets that hold no rows read as
+    typed-empty; a missing store, schema artifact or resolved bucket
+    directory raises. A union store's reader passes ``members``, which
+    must be exactly the members its artifact lists."""
+    art = read_schema(spark, store_dir)
+    if members is not None:
+        require_members(art, members, store_dir)
+    schema = StructType.fromJson(art)
     paths = [
         f"{store_dir}/{name}/__b={b}"
         for name, bs in _bucket_sources(spark, store_dir, at_version, buckets).items()
@@ -385,22 +401,6 @@ def _read_resolved(
     if not paths:
         return spark.createDataFrame([], schema)
     return spark.read.schema(schema).parquet(*paths)
-
-
-def read_buckets(
-    spark: SparkSession,
-    store_dir: str,
-    at_version: int,
-    buckets: list[int] | None = None,
-) -> DataFrame:
-    """The store as of ``at_version`` (restricted to ``buckets`` when
-    given), with the schema its ``_schema.json`` records: ONE read of
-    the resolved bucket directories, whichever versions serve them,
-    running no Spark job. Resolved buckets that hold no rows read as
-    typed-empty; a missing store, schema artifact or resolved bucket
-    directory raises."""
-    schema = StructType.fromJson(read_schema(spark, store_dir))
-    return _read_resolved(spark, store_dir, schema, at_version, buckets)
 
 
 def read_members(
@@ -413,13 +413,10 @@ def read_members(
 ) -> dict[str, DataFrame]:
     """Every member of the union store ``store_dir`` (rows tagged by
     ``tag``), projected to its own columns ``cols[name]``: ONE
-    :func:`read_buckets`-style read, split per member. ``cols`` must
-    name exactly the members the store's artifact lists."""
-    art = read_schema(spark, store_dir)
-    require_members(art, cols, store_dir)
-    df = _read_resolved(
-        spark, store_dir, StructType.fromJson(art), at_version, buckets
-    )
+    :func:`read_buckets`, split per member by a filter on the tag.
+    ``cols`` must name exactly the members the store's artifact
+    lists."""
+    df = read_buckets(spark, store_dir, at_version, buckets, members=cols)
     return {
         name: df.filter(F.col(tag) == name).select(*c) for name, c in cols.items()
     }
@@ -435,9 +432,10 @@ def write_buckets(
     touched: list[int],
 ) -> str:
     """Write the merged rows of the ``touched`` buckets as store
-    version ``name`` in ONE ``partitionBy`` action, plus an explicit
-    empty partition directory for each touched bucket left without
-    rows. Returns the version directory."""
+    version ``name`` in ONE ``partitionBy`` action
+    (:func:`write_state`), plus an explicit empty partition directory
+    for each touched bucket left without rows. Returns the version
+    directory."""
     ver_dir = f"{store_dir}/{name}"
     # repartition by bucket before the partitioned write: without it
     # every map task writes its own file into every bucket dir it
@@ -447,13 +445,30 @@ def write_buckets(
     # and bucket. One deterministic shuffle buys exactly one file per
     # non-empty bucket — the layout every pruned read wants. An
     # epoch's shuffle moves only touched-bucket rows, never |store|.
-    rows.withColumn("__b", bucket(F.col(bucket_col), n_buckets)).repartition(
-        n_buckets, F.col("__b")
-    ).write.partitionBy("__b").mode("overwrite").parquet(ver_dir)
+    rows = rows.withColumn("__b", bucket(F.col(bucket_col), n_buckets))
+    write_state(rows.repartition(n_buckets, F.col("__b")), ver_dir, "__b")
     fs, _root, jpath_cls = _fs(spark, store_dir)
     for b in touched:
         fs.mkdirs(jpath_cls(f"{ver_dir}/__b={b}"))
     return ver_dir
+
+
+STATE_CODEC = "zstd"  # of every versioned-state file
+
+
+def write_state(df: DataFrame, path: str, partition_col: str | None = None) -> None:
+    """Overwrite ``path`` with ``df`` as :data:`STATE_CODEC` parquet,
+    each task's rows sorted by ``partition_col`` (the ``partitionBy``
+    column, if any), then by every other column in schema order. A
+    partitioned write sorts by its partition column anyway; a sort led
+    by it extends that sort instead of being replaced by it, so the
+    ordering costs no extra shuffle or job."""
+    lead = [partition_col] if partition_col else []
+    rest = [c for c in df.columns if c != partition_col]
+    w = df.sortWithinPartitions(*lead, *rest).write.mode("overwrite")
+    if partition_col:
+        w = w.partitionBy(partition_col)
+    w.option("compression", STATE_CODEC).parquet(path)
 
 
 def vacuum_buckets(
@@ -597,13 +612,17 @@ def write_schema(
     store_dir: str,
     schema: StructType,
     members: Sequence[str] | None = None,
+    level2: Mapping[str, StructType] | None = None,
 ) -> None:
     """Persist a store's logical schema (WITHOUT its partition column)
     beside its data as ``_schema.json``, plus the ``members`` of a
-    union store."""
+    union store and the ``level2`` schemas of the relations a mart
+    version writes beside it, by name."""
     art = schema.jsonValue()
     if members is not None:
         art["members"] = sorted(members)
+    if level2 is not None:
+        art["level2"] = {n: s.jsonValue() for n, s in level2.items()}
     fs, _root, jpath_cls = _fs(spark, store_dir)
     out = fs.create(jpath_cls(f"{store_dir}/_schema.json"), True)
     out.write(bytearray(json.dumps(art).encode("utf-8")))
@@ -612,8 +631,8 @@ def write_schema(
 
 def read_schema(spark: SparkSession, store_dir: str) -> dict:
     """The JSON written by :func:`write_schema` (a ``StructType`` JSON,
-    plus ``members`` for a union store); raises when the store has
-    none."""
+    plus ``members`` for a union store and ``level2`` for a mart
+    version's agg store); raises when the store has none."""
     fs, _root, jpath_cls = _fs(spark, store_dir)
     p = jpath_cls(f"{store_dir}/_schema.json")
     if not fs.exists(p):

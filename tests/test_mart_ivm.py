@@ -1711,3 +1711,172 @@ def test_cow_apply_count_delta_superset_touched_equals_discovered(
         if p.startswith("__b=")
     }
     assert written == set(superset), (written, superset)
+
+
+def _nulls_first(row):
+    return tuple((v is not None, v) for v in row)
+
+
+def test_union_count_merge_scans_store_once(spark, tmp_path):
+    """A union count store merges as ONE relation: the executed plan of
+    the merged rows holds exactly one file scan of the store, however
+    many members it has. Rows and transitions equal a per-member merge
+    of the same touched buckets, including a member whose key column
+    holds NULLs and a member whose touched rows all exit."""
+    from interpro7_dw_spark.domain.mart_ivm import (
+        apply_count_delta_with_transitions,
+    )
+    from interpro7_dw_spark.streaming.mart_habitat import cow_count_merge_plan
+    from interpro7_dw_spark.streaming.versions import (
+        read_members,
+        seed_buckets,
+        tagged_union,
+    )
+
+    n_buckets = 8
+    keys = {
+        "sup_t": ["tax_id", "protein_acc"],
+        "sup_e": ["entry_acc", "protein_acc"],
+        "sup_c": ["ec", "protein_acc"],
+    }
+    roll_keys = {"sup_t": ["tax_id"], "sup_c": ["ec"]}
+    sup = {
+        # every third protein has no taxon: a NULL in a member key
+        "sup_t": spark.createDataFrame(
+            [(None if i % 3 == 0 else f"N{i % 4}", f"P{i}", 1 + i % 2)
+             for i in range(24)],
+            "tax_id string, protein_acc string, n long",
+        ),
+        "sup_e": spark.createDataFrame(
+            [(f"IPR{i % 5}", f"P{i}", 1) for i in range(24)],
+            "entry_acc string, protein_acc string, n long",
+        ),
+        "sup_c": spark.createDataFrame(
+            [("1.1.1.1", f"P{i}", 2) for i in range(0, 24, 6)],
+            "ec string, protein_acc string, n long",
+        ),
+    }
+    deltas = {
+        "sup_t": spark.createDataFrame(
+            [(None, "P0", -1), (None, "P3", 1), ("N1", "P1", -2),
+             ("N2", "P30", 1)],
+            "tax_id string, protein_acc string, s long",
+        ),
+        "sup_e": spark.createDataFrame(
+            [("IPR1", "P1", 1), ("IPR9", "P7", 1)],
+            "entry_acc string, protein_acc string, s long",
+        ),
+        # every sup_c row leaves
+        "sup_c": spark.createDataFrame(
+            [("1.1.1.1", f"P{i}", -2) for i in range(0, 24, 6)],
+            "ec string, protein_acc string, s long",
+        ),
+    }
+    sup_dir = str(tmp_path / "sup_cow")
+    seed_buckets(
+        sup_dir, tagged_union("__sup", sup), "protein_acc", n_buckets,
+        members=list(sup),
+    )
+
+    persists: list = []
+    try:
+        rows, trans, touched = cow_count_merge_plan(
+            spark, sup_dir, deltas, keys, "protein_acc", n_buckets, 0,
+            roll_keys=roll_keys, persist_into=persists,
+        )
+        # the physical plan before execution: once run, AQE prints both
+        # its final and its initial plan, each scan twice
+        plan = rows._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan parquet") == 1, plan
+        got_rows = rows.collect()
+        got_trans = {n: t.collect() for n, t in trans.items()}
+    finally:
+        for df in persists:
+            df.unpersist()
+    assert sorted(trans) == sorted(roll_keys)
+
+    cur = read_members(
+        spark, sup_dir, "__sup", {n: [*k, "n"] for n, k in keys.items()}, 0,
+        touched,
+    )
+    for name, k in keys.items():
+        want_rows, want_trans = apply_count_delta_with_transitions(
+            cur[name], deltas[name], k, roll_keys.get(name, k),
+            persist_into=persists,
+        )
+        try:
+            mine = [
+                tuple(r[c] for c in [*k, "n"])
+                for r in got_rows if r["__sup"] == name
+            ]
+            assert sorted(mine, key=_nulls_first) == sorted(
+                map(tuple, want_rows.collect()), key=_nulls_first
+            ), name
+            if name in roll_keys:
+                assert sorted(map(tuple, got_trans[name]), key=_nulls_first) == (
+                    sorted(map(tuple, want_trans.collect()), key=_nulls_first)
+                ), name
+        finally:
+            while persists:
+                persists.pop().unpersist()
+    # the all-exit member leaves no rows and one exit per touched row
+    assert not [r for r in got_rows if r["__sup"] == "sup_c"]
+    assert sorted(tuple(r) for r in got_trans["sup_c"]) == [("1.1.1.1", -1)] * 4
+    # a NULL-keyed row merged null-safely: P0's entry left, P3's count grew
+    t_rows = {(r["tax_id"], r["protein_acc"]): r["n"]
+              for r in got_rows if r["__sup"] == "sup_t"}
+    assert (None, "P0") not in t_rows and t_rows[(None, "P3")] == 3
+
+
+def test_state_files_are_sorted_zstd(spark, tmp_path):
+    """Every file of a seeded habitat state advanced by one epoch is
+    zstd parquet whose rows are sorted by its columns in schema order,
+    and the committed version's supports read back with their recorded
+    schemas without running a Spark job."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from interpro7_dw_spark.testing import max_job_id
+
+    sc, prot, pp, dom, es = _clan_fixtures(spark)
+    dims = {"sc": sc, "prot": prot, "pp": pp, "dom": dom, "entry_structures": es}
+    m_new = dict(_M_OLD)
+    m_new[200] = ("P3", "SIG2", "DB2")
+    m_new.pop(11)
+    m_new[14] = (m_new[14][0], "SIG7", "DB1")
+    state = str(tmp_path / "state")
+    seed_state(
+        spark, CLAN_HABITAT, state, {"match": _m_df(spark, _M_OLD)}, dims,
+        n_buckets=8,
+    )
+    maintain_batch(
+        spark, CLAN_HABITAT, state,
+        {
+            "match": snapshot_delta_images(
+                _m_df(spark, _M_OLD), _m_df(spark, m_new), ["match_id"],
+                ["protein_acc", "signature_acc", "database"],
+            )
+        },
+        dims, n_buckets=8,
+    )
+
+    files = glob.glob(f"{state}/**/*.parquet", recursive=True)
+    assert any("/sup_cow/v1_e0/__b=" in f for f in files)
+    assert any("/mart/v1_e0/agg/__sup=" in f for f in files)
+    written = 0
+    for f in files:
+        meta = pq.ParquetFile(f).metadata
+        for g in range(meta.num_row_groups):
+            group = meta.row_group(g)
+            for c in range(group.num_columns):
+                assert group.column(c).compression == "ZSTD", f
+        rows = list(zip(*pq.read_table(f).to_pydict().values()))
+        assert rows == sorted(rows, key=_nulls_first), f
+        written += len(rows)
+    assert written
+
+    j0 = max_job_id(spark)
+    sup = read_supports(spark, CLAN_HABITAT.pyramid, state, "v1_e0")
+    assert max_job_id(spark) == j0
+    assert sorted(sup) == sorted(CLAN_HABITAT.pyramid.support_names)
