@@ -314,7 +314,6 @@ def apply_count_delta_with_transitions(
     delta: DataFrame,
     keys: list[str],
     roll_keys: list[str],
-    persist_into: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The count merge that ALSO emits the NEXT pyramid level's signed
     delta: a support row ENTERING (count 0 → >0) contributes +1 and a
@@ -334,19 +333,7 @@ def apply_count_delta_with_transitions(
     Returns ``(new_support, transitions)`` where transitions has
     columns ``roll_keys`` + ``s`` (±1 rows, ready for another
     :func:`apply_count_delta`). Same negative-count loud failure as
-    the plain merge.
-
-    ``persist_into`` (r16): by default the shared merge relation is an
-    ``owned_persist`` released by the calling thread's innermost
-    ``engine_cache_scope``; a caller that consumes ``transitions`` on
-    a DIFFERENT thread than the one that ran the merge (the COW
-    habitat's pooled epoch writes) passes a list instead — the
-    persisted relation is appended to it and the CALLER unpersists
-    after the last consumer, because a thread-local scope on the
-    merge thread would release the cache before the other thread's
-    consumer ran."""
-    from ..caching import owned_persist
-
+    the plain merge."""
     sup = support.alias("__sup")
     d = (
         delta.groupBy(*keys)
@@ -383,11 +370,7 @@ def apply_count_delta_with_transitions(
         n_old.alias("__n_old"),
         n_new.alias("__n_new"),
     )
-    if persist_into is None:
-        merged = owned_persist(merged)
-    else:
-        merged = merged.persist()
-        persist_into.append(merged)
+    merged = owned_persist(merged)
     new_support = merged.filter(F.col("__n_new") > 0).select(
         *keys, F.col("__n_new").alias("n")
     )

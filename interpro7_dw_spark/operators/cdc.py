@@ -289,6 +289,26 @@ def snapshot_delta_images(
     )
 
 
+def _checked_count(n, group, who: str):
+    """The merged count ``n`` of ``group``, raising at execution time
+    when it goes negative: ``n == 0`` is the legitimate exit of a group,
+    ``n < 0`` only a double-applied or inconsistent changelog — the
+    same loud failure as ``domain/mart_ivm.py::apply_count_delta``."""
+    return F.when(
+        n < 0,
+        F.raise_error(
+            F.concat_ws(
+                " ",
+                F.lit(
+                    f"{who}: negative maintained count (double-applied or"
+                    " inconsistent changelog) for group"
+                ),
+                F.coalesce(group.cast("string"), F.lit("NULL")),
+            )
+        ).cast("long"),
+    ).otherwise(n)
+
+
 def ivm_apply_group_agg(
     base_agg: DataFrame,
     delta: DataFrame,
@@ -310,7 +330,7 @@ def ivm_apply_group_agg(
     ``sum(coalesce(value, 0))``; counts count rows). Groups whose
     maintained count reaches zero leave the mart, so the result equals
     a full re-aggregation of the new snapshot — the machine-checked
-    contract.
+    contract; a count going negative raises.
 
     Scale: one |delta|-sized map-side contribution explode, one
     group-keyed partial aggregate over the delta, one null-safe outer
@@ -341,11 +361,13 @@ def ivm_apply_group_agg(
     )
     on = base_agg[group_col].eqNullSafe(d[group_col])
     zero = F.lit(0).cast("decimal(18,4)")
+    group = F.coalesce(base_agg[group_col], d[group_col])
+    n = (
+        F.coalesce(base_agg[n_col], F.lit(0)) + F.coalesce(d["__dn"], F.lit(0))
+    ).cast("long")
     merged = base_agg.join(d, on, "full_outer").select(
-        F.coalesce(base_agg[group_col], d[group_col]).alias(group_col),
-        (
-            F.coalesce(base_agg[n_col], F.lit(0)) + F.coalesce(d["__dn"], F.lit(0))
-        ).cast("long").alias(n_col),
+        group.alias(group_col),
+        _checked_count(n, group, "ivm_apply_group_agg").alias(n_col),
         (
             F.coalesce(base_agg[total_col].cast("decimal(18,4)"), zero)
             + F.coalesce(d["__dv"], zero)
@@ -413,8 +435,8 @@ def ivm_apply_group_minmax(
       data, never |facts|.
 
     ``n_rows`` counts all rows; min/max ignore nulls (SQL semantics).
-    Groups whose maintained count reaches zero leave the mart. The
-    result equals a full re-aggregation of the new snapshot — the
+    Groups whose maintained count reaches zero leave the mart; a count
+    going negative raises. The result equals a full re-aggregation of the new snapshot — the
     machine-checked contract (tests + the z_ivm_minmax oracle).
     """
     ret = delta.filter(F.col("change_type").isin("delete", "update")).select(
@@ -437,12 +459,13 @@ def ivm_apply_group_minmax(
         F.max("__av").alias("__add_max"),
     )
     on = base_agg[group_col].eqNullSafe(d[group_col])
+    group = F.coalesce(base_agg[group_col], d[group_col])
+    n = (
+        F.coalesce(base_agg[n_col], F.lit(0)) + F.coalesce(d["__dn"], F.lit(0))
+    ).cast("long")
     merged = base_agg.join(d, on, "full_outer").select(
-        F.coalesce(base_agg[group_col], d[group_col]).alias(group_col),
-        (
-            F.coalesce(base_agg[n_col], F.lit(0))
-            + F.coalesce(d["__dn"], F.lit(0))
-        ).cast("long").alias(n_col),
+        group.alias(group_col),
+        _checked_count(n, group, "ivm_apply_group_minmax").alias(n_col),
         base_agg[min_col].alias("__base_min"),
         base_agg[max_col].alias("__base_max"),
         "__ret_min",
@@ -520,7 +543,8 @@ def ivm_apply_join_agg(
 
     ``total`` is maintained in DECIMAL(18,4) (exact,
     order-independent; null fact values contribute 0); groups whose
-    maintained count reaches zero leave the mart. Maintained ==
+    maintained count reaches zero leave the mart, and a count going
+    negative raises. Maintained ==
     full re-aggregation of the new snapshots, the machine-checked
     contract. Inner-join semantics throughout: a fact whose new join
     key has no dim row simply stops contributing, and SQL-standard
@@ -590,11 +614,13 @@ def ivm_apply_join_agg(
     )
     on = base_agg[group_col].eqNullSafe(d[group_col])
     zero = F.lit(0).cast("decimal(18,4)")
+    group = F.coalesce(base_agg[group_col], d[group_col])
+    n = (
+        F.coalesce(base_agg[n_col], F.lit(0)) + F.coalesce(d["__dn"], F.lit(0))
+    ).cast("long")
     merged = base_agg.join(d, on, "full_outer").select(
-        F.coalesce(base_agg[group_col], d[group_col]).alias(group_col),
-        (
-            F.coalesce(base_agg[n_col], F.lit(0)) + F.coalesce(d["__dn"], F.lit(0))
-        ).cast("long").alias(n_col),
+        group.alias(group_col),
+        _checked_count(n, group, "ivm_apply_join_agg").alias(n_col),
         (
             F.coalesce(base_agg[total_col].cast("decimal(18,4)"), zero)
             + F.coalesce(d["__dv"], zero)

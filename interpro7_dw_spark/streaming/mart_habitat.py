@@ -9,42 +9,42 @@ into a DECLARATIVE spec (:class:`MartHabitat`) consumed by shared
 machinery, so all five marts — and any future pyramid — get the same
 physical story:
 
-    state_dir/<store>/v<n>_e<e>/__b=<i>/    fact COW stores (bucketed
-                                            by protein so bilinear
-                                            rescans read only touched
-                                            proteins' buckets)
+    state_dir/cow/v<n>_e<e>/__b=<i>/        ONE copy-on-write union
+                                            store (rows tagged ``__m``)
+                                            of every fact relation a
+                                            bilinear rescan needs AND
+                                            every facts-scale support,
+                                            bucketed by protein: an
+                                            epoch reads its touched
+                                            buckets once, merges every
+                                            member and rewrites them in
+                                            ONE write
     state_dir/dims/v0/__b=<i>/              the protein-keyed STATIC
                                             dims: ONE union store
                                             (rows tagged ``__dim``),
                                             bucketed once at seed so
                                             each epoch reads only
                                             touched buckets, once
-    state_dir/sup_cow/v<n>_e<e>/__b=<i>/    the FACTS-SCALE supports:
-                                            ONE union store (rows
-                                            tagged ``__sup``) in the
-                                            same COW bucket layout —
-                                            only touched buckets are
-                                            read, merged and rewritten
-                                            per epoch, in one write
-    state_dir/mart/v<n>_e<e>/agg/__sup=<name>/
-                                            the plain aggregate-sized
-                                            supports, one union
-                                            rewritten whole per version
-    state_dir/mart/v<n>_e<e>/<support>/     the level-2 supports, one
-                                            directory each; the
-                                            version is committed
-                                            atomically by ONE _SUCCESS
-                                            at its root written LAST
+    state_dir/mart/v<n>_e<e>/part-*.parquet ONE sorted file of every
+                                            aggregate-sized support,
+                                            level-1 and level-2 (rows
+                                            tagged ``__sup``),
+                                            rewritten whole per
+                                            version; the version is
+                                            committed atomically by ONE
+                                            _SUCCESS at its root,
+                                            written LAST
 
-Every bucket store and the agg union carry a ``_schema.json`` that
-every read of them passes to Spark; the union stores' artifacts list
-their members, and a version's agg artifact also records its level-2
-supports' schemas (:mod:`.versions`). Every state file is zstd
-parquet sorted in schema order (:func:`.versions.write_state`).
+So an epoch makes two state writes, whatever the mart declares. Both
+stores and the mart file carry a ``_schema.json`` that every read of
+them passes to Spark, listing each member with its own columns; the
+mart file's also names its one data file (:mod:`.versions`). Every
+state file is zstd parquet sorted in schema order, tag first
+(:func:`.versions.write_state`).
 
-Every unit of work — discovery, each fact-store advance, each state
-write, each seed piece — runs its Spark jobs under the job description
-``<mart>.<unit>`` (e.g. ``entry.sup_cow``, ``entry.seed.agg``), so a
+Every unit of work — discovery, each state write, each seed piece —
+runs its Spark jobs under the job description ``<mart>.<unit>``
+(e.g. ``entry.cow``, ``entry.seed.mart``), so a
 status-store reader can attribute every job, AQE's stage jobs
 included.
 
@@ -73,7 +73,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..caching import engine_cache_scope
+from ..caching import engine_cache_scope, owned_persist
 from ..parallel import run_parallel
 from ..domain.mart_ivm import (
     MartPyramid,
@@ -85,8 +85,9 @@ from .versions import (
     SEED,
     Version,
     advance,
+    apply_images,
     bucket,
-    cow_apply_images,
+    data_files,
     drain,
     latest_committed,
     parse_name,
@@ -95,6 +96,7 @@ from .versions import (
     read_schema,
     require_members,
     seed_buckets,
+    split_members,
     tagged_union,
     write_buckets,
     write_schema,
@@ -128,24 +130,26 @@ class ChangeSrc:
 
 @dataclass(frozen=True)
 class FactStore:
-    """A COW bucket store of one source's maintained snapshot —
-    needed exactly when some OTHER source's bilinear delta rescans
-    this relation (dV = dF |><| D_new + F_old |><| dD). Its rows keep
-    the seed relation's schema, which the store's ``_schema.json``
-    records for every read."""
+    """One source's maintained snapshot as a member of the habitat's
+    ``cow`` union store — needed exactly when some OTHER source's
+    bilinear delta rescans this relation (dV = dF |><| D_new + F_old
+    |><| dD). Its rows keep the seed relation's columns, which the
+    store's ``_schema.json`` records for the member, and bucket by the
+    store's one bucket column, the facts-scale supports'."""
 
     name: str
     src: str
     key_cols: tuple[str, ...]
-    bucket_col: str = "protein_acc"
 
 
 @dataclass(frozen=True)
 class Rescan:
-    """A |delta|-pruned read of a fact store one epoch needs: the
-    store at the ``"new"`` (just-written) or ``"old"`` (previous)
-    version, partition-pruned to the buckets ``prune_src``'s rows
-    touched — both sides of the bilinear rule are these."""
+    """A |delta|-pruned view of a fact member one epoch needs, cut
+    from the epoch's ONE read of the union store's touched buckets:
+    at ``"new"`` the member's merged rows of this epoch, at ``"old"``
+    its previous version's rows, each filtered to the buckets
+    ``prune_src``'s rows touched — both sides of the bilinear rule are
+    these."""
 
     alias: str
     store: str
@@ -195,10 +199,11 @@ class MartHabitat:
     # derives its rows' protein keys from exactly these arms' images),
     # so the COW merge skips its own touched-bucket collect — which
     # would EXECUTE the full delta plan once more per epoch. The union
-    # support store is rewritten over the union of every member's set;
-    # a superset is value-identical: extra buckets' rows pass through
-    # the pruned merge unchanged and are rewritten identically at the
-    # new version (tests/test_mart_ivm.py::
+    # store is rewritten over the union of every member's set (these
+    # arms, each fact member's arm and each rescan's prune arm); a
+    # superset is value-identical: extra buckets' rows pass through
+    # the merges unchanged and are rewritten identically at the new
+    # version (tests/test_mart_ivm.py::
     # test_cow_apply_count_delta_superset_touched_equals_discovered).
     sup_touch: Mapping[str, tuple[str, ...]] = field(default_factory=dict)
 
@@ -320,12 +325,19 @@ def discover_touched(
 
 # ------------------------------------------------------------- seed
 
+_COW_TAG = "__m"    # the member tag of the cow union store
+_MART_TAG = "__sup"  # the member tag of a mart version's file
 
-def _sup_bucket_col(pyramid: MartPyramid) -> str:
-    """The bucket column of the mart's union support store: every
-    facts-scale support of a mart buckets by the same one
+
+def _cow_bucket_col(pyramid: MartPyramid) -> str:
+    """The one bucket column of the mart's union store: every
+    facts-scale support buckets by it, and every fact member carries it
     (tests/test_mart_ivm.py::test_habitat_definition_is_consistent)."""
     return next(iter(pyramid.bucketed.values()))
+
+
+def _columns(dfs: Mapping[str, DataFrame]) -> dict[str, list[str]]:
+    return {name: df.columns for name, df in dfs.items()}
 
 
 def seed_state(
@@ -337,26 +349,26 @@ def seed_state(
     n_buckets: int = 16,
 ) -> None:
     """Materialize version 0 of every state piece from the base
-    snapshot (the one full rebuild a mart ever needs): the fact COW
-    stores (each from ``old[store.src]``, the old release keyed by
-    changelog arm tag), the protein-keyed static dims as one union
-    store in the same bucket layout, and the supports
-    ``habitat.seed(old, dims)`` aggregates: the facts-scale ones as the
-    ``sup_cow`` union store, each level-2 one as plain parquet under
-    the mart version root, and the plain level-1 ones as ONE
-    discriminated ``mart/v0/agg`` union whose artifact also records the
-    level-2 schemas. Every piece writes a DISJOINT path from
-    independent plans (the supports share their seed's owned persists,
-    whose blocks the block manager computes once under concurrent
-    first readers), so all writes run from one driver pool (guide
-    §2.6); the mart root ``_SUCCESS`` still commits the supports LAST,
-    after every write returned."""
+    snapshot (the one full rebuild a mart ever needs): the ``cow``
+    union store of the fact relations (each from ``old[store.src]``,
+    the old release keyed by changelog arm tag) and the facts-scale
+    supports ``habitat.seed(old, dims)`` aggregates, the protein-keyed
+    static dims as one union store in the same bucket layout, and every
+    aggregate-sized support in the ONE file of ``mart/v0``. The three
+    pieces write DISJOINT paths from independent plans (the supports
+    share their seed's owned persists, whose blocks the block manager
+    computes once under concurrent first readers), so they run from
+    one driver pool (guide §2.6); the mart root ``_SUCCESS`` still
+    commits the version LAST, after every write returned."""
     pyramid = habitat.pyramid
+    sup = habitat.seed(old, dims)
+    cow = {st.name: old[st.src] for st in habitat.stores}
+    cow.update({n: sup[n] for n in pyramid.bucketed})
     units = {
-        f"seed.{st.name}": lambda st=st: seed_buckets(
-            f"{state_dir}/{st.name}", old[st.src], st.bucket_col, n_buckets
+        "seed.cow": lambda: seed_buckets(
+            f"{state_dir}/cow", tagged_union(_COW_TAG, cow),
+            _cow_bucket_col(pyramid), n_buckets, members=_columns(cow),
         )
-        for st in habitat.stores
     }
     # protein-keyed static dims never advance: bucketed once here, every
     # epoch's delta join reads only the delta's touched buckets
@@ -366,28 +378,12 @@ def seed_state(
     if pruned:
         units["seed.dims"] = lambda: seed_buckets(
             f"{state_dir}/dims", tagged_union("__dim", pruned),
-            "protein_acc", n_buckets, members=list(pruned),
+            "protein_acc", n_buckets, members=_columns(pruned),
         )
-    sup = habitat.seed(old, dims)
+    agg = {n: sup[n] for n in pyramid.support_names if n not in pyramid.bucketed}
     vdir = f"{state_dir}/mart/{SEED}"
-    l2 = [n for n in pyramid.support_names if n in pyramid.level2]
-    for name in l2:
-        units[f"seed.{name}"] = lambda name=name: write_state(
-            sup[name], f"{vdir}/{name}"
-        )
-    if pyramid.bucketed:
-        units["seed.sup_cow"] = lambda: seed_buckets(
-            f"{state_dir}/sup_cow",
-            tagged_union("__sup", {n: sup[n] for n in pyramid.bucketed}),
-            _sup_bucket_col(pyramid), n_buckets, members=list(pyramid.bucketed),
-        )
-    plain = {
-        n: sup[n]
-        for n in pyramid.support_names
-        if n not in pyramid.bucketed and n not in pyramid.level2
-    }
-    units["seed.agg"] = lambda: _write_agg_supports(
-        spark, vdir, plain, {n: sup[n].schema for n in l2}
+    units["seed.mart"] = lambda: _write_mart(
+        spark, vdir, tagged_union(_MART_TAG, agg), _columns(agg)
     )
     _run_units(spark, pyramid.name, units)
     versions.commit(spark, vdir)
@@ -396,275 +392,94 @@ def seed_state(
 # ---------------------------------------------------- support merges
 
 
-def cow_count_merge_plan(
-    spark: SparkSession,
-    sup_dir: str,
+def count_merge_plan(
+    cur: DataFrame,
     deltas: Mapping[str, DataFrame],
     keys: Mapping[str, list[str]],
-    bucket_col: str,
-    n_buckets: int,
-    prev_version: int,
+    tag: str,
     roll_keys: Mapping[str, list[str]] | None = None,
-    touched: list[int] | None = None,
-    persist_into: list | None = None,
-) -> tuple[DataFrame, dict[str, DataFrame], list[int]]:
+) -> tuple[DataFrame, dict[str, DataFrame]]:
     """Plan the merge of SIGNED count deltas (``keys[name]`` + ``s``)
-    into the members of a COW-bucketed union count store (rows tagged
-    ``__sup``; ``deltas`` names every member): resolve ONLY the touched
-    buckets at ``prev_version`` in ONE read and merge the tagged union
-    of the deltas into it ONCE with
-    :func:`..domain.mart_ivm.apply_count_delta`, keyed by ``__sup`` plus
-    every member's key columns (the NULL padding of the columns a
-    member lacks matches null-safely on both sides). Returns ``(rows,
-    transitions, touched)``: ``rows`` is the merged union in the
-    store's column order, which the caller writes as the new version
-    with :func:`.versions.write_buckets` over ``touched``. Untouched
-    buckets are never read, shuffled or rewritten — older versions keep
-    serving them — so per-epoch support IO is Θ(|touched buckets|), not
-    Θ(|support|) (measured in tests/test_mart_ivm.py + PERF.md r13).
-
-    The plan is LAZY: no write runs here, so the caller can pool the
-    COW write with the jobs that consume the transitions. No Spark
-    action runs when ``touched`` is supplied (bucket resolution is
-    driver-side file listing and the read passes the store's recorded
-    schema); with ``touched=None`` the discovery collect runs here.
+    into the count members ``deltas`` names of the union relation
+    ``cur`` (rows tagged by ``tag``; its other members' rows are left
+    out): the tagged union of the deltas merges into those members'
+    rows ONCE with :func:`..domain.mart_ivm.apply_count_delta`, keyed
+    by ``tag`` plus every member's key columns (the NULL padding of
+    the columns a member lacks matches null-safely on both sides).
+    Returns ``(rows, transitions)``; ``rows`` holds ``tag``, the union
+    of the key columns and ``n``. The plan is LAZY: no Spark action
+    runs here.
 
     When any member is named in ``roll_keys`` the union merges through
     ``apply_count_delta_with_transitions``, and each such member gets
     its enter/exit transitions (``roll_keys[name]`` + ``s``, the
     union's transitions filtered by tag) — the complete signed delta
-    of its level-2 rollup, complete because untouched buckets cannot
-    transition. They branch off the same persisted merge the write
-    materializes, so they cost no second bucket read; the persist is
-    released by the calling thread's ``engine_cache_scope``, or by a
-    caller that consumes them on other threads through the
-    ``persist_into`` list.
-
-    ``touched`` lets a caller that already knows a SUPERSET of the
-    deltas' buckets (the habitat's per-arm one-job discovery, unioned
-    per ``MartHabitat.sup_touch``) skip the discovery collect, which
-    would EXECUTE the delta plans a second time. Unlike
-    ``cow_apply_images``, a superset here is value-identical: extra
-    buckets' rows pass through the merge unchanged and are rewritten
-    identically (only a SUBSET would be wrong);
-    ``versions.VALIDATE_TOUCHED`` cross-checks it in debug sessions."""
+    of its level-2 rollup, complete because rows the deltas do not
+    touch cannot transition. They branch off the same merge, persisted until
+    the calling thread's ``engine_cache_scope`` exits, so they cost no
+    second read of ``cur``."""
     delta = tagged_union(
-        "__sup", {n: d.select(*keys[n], "s") for n, d in deltas.items()}
+        tag, {n: d.select(*keys[n], "s") for n, d in deltas.items()}
     )
-
-    def _discover() -> list[int]:
-        b = bucket(F.col(bucket_col), n_buckets).alias("b")
-        return sorted(r[0] for r in delta.select(b).distinct().collect())
-
-    if touched is None:
-        touched = _discover()
-    else:
-        touched = sorted(touched)
-        if versions.VALIDATE_TOUCHED and not set(touched) >= set(_discover()):
-            raise ValueError(
-                "cow_count_merge_plan: caller-supplied touched buckets "
-                f"{touched} are not a superset of the deltas' for {sup_dir}"
-            )
-    cur = read_buckets(spark, sup_dir, prev_version, touched, members=deltas)
-    ukeys = ["__sup", *dict.fromkeys(k for n in deltas for k in keys[n])]
+    ukeys = [tag, *dict.fromkeys(k for n in deltas for k in keys[n])]
+    cur = cur.filter(F.col(tag).isin(list(deltas))).select(*ukeys, "n")
     rolled = {n: roll_keys[n] for n in deltas if n in (roll_keys or {})}
     if not rolled:
-        merged = apply_count_delta(cur, delta, ukeys)
-        return merged.select(*cur.columns), {}, touched
-    merged, trans = apply_count_delta_with_transitions(
-        cur, delta, ukeys, ukeys, persist_into=persist_into
-    )
-    transitions = {
-        n: trans.filter(F.col("__sup") == n).select(*rk, "s")
-        for n, rk in rolled.items()
+        return apply_count_delta(cur, delta, ukeys), {}
+    rows, trans = apply_count_delta_with_transitions(cur, delta, ukeys, ukeys)
+    return rows, {
+        n: trans.filter(F.col(tag) == n).select(*rk, "s") for n, rk in rolled.items()
     }
-    return merged.select(*cur.columns), transitions, touched
+
+
+def _union_as(schema: StructType, dfs: list[DataFrame]) -> DataFrame:
+    """The union of ``dfs`` by column name, in ``schema``'s column
+    order; a column a part lacks reads as a typed NULL."""
+    out = dfs[0]
+    for df in dfs[1:]:
+        out = out.unionByName(df, allowMissingColumns=True)
+    return out.select(*schema.fieldNames())
 
 
 # ------------------------------------------- aggregate-sized supports
-# r16 (guide §1.2/§2.6 — fewer driver jobs per epoch): the PLAIN
-# level-1 supports of a version are written as ONE discriminated
-# relation under ``mart/v*/agg/__sup=<name>/`` in a single
-# ``partitionBy`` action, instead of one plan+write+commit cycle per
-# support. The per-epoch driver-job count is what dominates the
-# standing queries' warm epochs at bench scale (r15 phase profile:
-# ~5.4 s/epoch of planning + per-state-piece commit against
-# millisecond data), and at cluster scale fewer commits is strictly
-# less driver work. Level-2 supports stay per-name: each is written by
-# its own pooled thunk, concurrently with the COW writes whose
-# transitions feed it (see :func:`_advance_supports`). Inside the
-# union an emptied support has no ``__sup`` partition, so the store's
-# ``_schema.json`` lists the supports the version wrote and a reader
-# raises on a name outside that list instead of serving it as empty;
-# it also records each level-2 support's schema, which the level-2
-# reads pass (no file, no inference job of their own). The union pads
-# each support to the superset schema with typed NULLs and a reader
-# re-projects exactly the support's own ``keys + n``, so the
-# round-trip is column-identical to the per-name files.
+# Every aggregate-sized support of a version, level-1 and level-2,
+# lives in ONE file at the version root: a tagged union written by one
+# unpartitioned write (one task, so one file), sorted tag first so each
+# support's rows are contiguous. Its artifact lists every support with
+# its own columns (an emptied support has no rows, so the artifact,
+# not the data, says which supports the version holds) and names the
+# file, so a reader passes the schema and the exact path — no
+# inference job, no listing, and a missing file raises. The root
+# ``_SUCCESS`` is the version's commit marker, so the write leaves none
+# of its own and the caller commits after the last write.
 
 
-def _write_agg_supports(
+def _write_mart(
     spark: SparkSession,
     vdir: str,
-    dfs: Mapping[str, DataFrame],
-    level2: Mapping[str, StructType],
+    rows: DataFrame,
+    members: Mapping[str, list[str]],
 ) -> None:
-    """ONE write action for every aggregate-sized support of a version
-    (``{vdir}/agg/__sup=<name>/``), plus the schema artifact that
-    lists the written supports, lets an all-empty version still serve
-    typed empty supports, and records the schemas of the ``level2``
-    supports the version writes beside it."""
-    u = tagged_union("__sup", dfs)
-    write_state(u, f"{vdir}/agg", "__sup")
-    write_schema(
-        spark, f"{vdir}/agg", u.drop("__sup").schema, members=list(dfs),
-        level2=level2,
+    """Write ``rows`` (every aggregate-sized support, tagged
+    ``__sup``) as the ONE data file of mart version ``vdir``, and its
+    artifact."""
+    write_state(rows.coalesce(1), vdir, commit=False)
+    (file,) = data_files(spark, vdir)
+    write_schema(spark, vdir, rows.schema, members=members, file=file)
+
+
+def _read_mart(
+    spark: SparkSession, vdir: str, pyramid: MartPyramid
+) -> tuple[DataFrame, dict]:
+    """The ONE file of mart version ``vdir`` with the schema its
+    artifact records (no Spark job), and the artifact, which must list
+    exactly the pyramid's aggregate-sized supports."""
+    art = read_schema(spark, vdir)
+    require_members(
+        art, [n for n in pyramid.support_names if n not in pyramid.bucketed], vdir
     )
-
-
-def _read_agg_supports(
-    spark: SparkSession,
-    state_dir: str,
-    pyramid: MartPyramid,
-    version_name: str,
-) -> dict[str, DataFrame]:
-    """Every aggregate-sized support of a version, each read with the
-    schema the version's agg artifact records (no Spark job): the plain
-    level-1 supports through ONE read of the agg store (a version whose
-    supports were all emptied holds no files there and reads as
-    typed-empty), split per name, and each level-2 support from its
-    own directory. The artifact must list exactly the plain supports;
-    a missing level-2 schema or directory raises."""
-    vdir = f"{state_dir}/mart/{version_name}"
-    art = read_schema(spark, f"{vdir}/agg")
-    plain = [
-        n
-        for n in pyramid.support_names
-        if n not in pyramid.bucketed and n not in pyramid.level2
-    ]
-    require_members(art, plain, f"{vdir}/agg")
-    df = spark.read.schema(
-        StructType.fromJson(art).add("__sup", "string")
-    ).parquet(f"{vdir}/agg")
-    out = {
-        name: df.filter(F.col("__sup") == name).select(
-            *pyramid.support_keys[name], "n"
-        )
-        for name in plain
-    }
-    for name in pyramid.level2:
-        out[name] = spark.read.schema(
-            StructType.fromJson(art["level2"][name])
-        ).parquet(f"{vdir}/{name}")
-    return out
-
-
-def _advance_supports(
-    spark: SparkSession,
-    state_dir: str,
-    deltas: dict[str, DataFrame],
-    prev: Version,
-    target: Version,
-    habitat: MartHabitat,
-    dims: Mapping[str, DataFrame],
-    n_buckets: int,
-    touched: Mapping[str, list[int]],
-) -> None:
-    """Fold one epoch's signed support deltas into version ``target``:
-    the facts-scale supports COW-merge only the touched buckets of
-    their union store (the union of every member's ``sup_touch`` arms'
-    discovered sets) and rewrite them in ONE write; every
-    aggregate-sized support merges whole against the previous version,
-    the plain level-1 ones through the ONE ``agg`` union write. A
-    level-1 support with a rollup merges through the
-    transitions-emitting variant, whose transitions (through the
-    rollup's transform, if any) are the ENTIRE delta of its level-2
-    support. The caller's :func:`.versions.advance` commits every piece
-    atomically with the mart-root ``_SUCCESS`` once this returns.
-
-    Every merge plan is built here on the calling thread without a
-    Spark action (the touched sets are supplied and every state read
-    passes its recorded schema), and every write is its own pooled unit
-    (guide §2.6), so the critical path is the slowest SINGLE write
-    (measured r16: a serialized all-in-one-agg-after-COW shape cost
-    +2.3 s/epoch at sf0.1). The level-2 writes consume transitions that
-    branch off merges another unit writes; those shared relations
-    persist through ``persist_into`` and are released here after ALL
-    writes returned (the block manager deduplicates the racing first
-    computes)."""
-    pyramid = habitat.pyramid
-    vdir = target.path(f"{state_dir}/mart")
-    merge_persists: list = []
-    units: dict[str, Callable[[], object]] = {}
-    transitions: dict[str, DataFrame] = {}
-
-    # the merge persists register as soon as their plans are built,
-    # so their release also covers a failure while planning
-    try:
-        if pyramid.bucketed:
-            sup_dir = f"{state_dir}/sup_cow"
-            bucket_col = _sup_bucket_col(pyramid)
-            rows, transitions, sup_touched = cow_count_merge_plan(
-                spark, sup_dir, {n: deltas[n] for n in pyramid.bucketed},
-                {n: pyramid.support_keys[n] for n in pyramid.bucketed},
-                bucket_col, n_buckets, prev.ver,
-                roll_keys={
-                    n: list(pyramid.rollups[n].trans_keys)
-                    for n in pyramid.bucketed
-                    if n in pyramid.rollups
-                },
-                touched=sorted(
-                    {
-                        b
-                        for name in pyramid.bucketed
-                        for tag in habitat.sup_touch[name]
-                        for b in touched[tag]
-                    }
-                ),
-                persist_into=merge_persists,
-            )
-            units["sup_cow"] = lambda: write_buckets(
-                spark, sup_dir, target.name, rows, bucket_col, n_buckets,
-                sup_touched,
-            )
-        cur = _read_agg_supports(spark, state_dir, pyramid, prev.name)
-        agg_out: dict[str, DataFrame] = {}
-        for name in pyramid.support_names:
-            if name in pyramid.bucketed or name in pyramid.level2:
-                continue
-            keys = pyramid.support_keys[name]
-            rollup = pyramid.rollups.get(name)
-            if rollup is None:
-                agg_out[name] = apply_count_delta(cur[name], deltas[name], keys)
-            else:
-                agg_out[name], transitions[name] = (
-                    apply_count_delta_with_transitions(
-                        cur[name], deltas[name], keys,
-                        list(rollup.trans_keys), persist_into=merge_persists,
-                    )
-                )
-        l2_out = {
-            r.l2: apply_count_delta(
-                cur[r.l2],
-                r.transform(transitions[name], dims)
-                if r.transform is not None
-                else transitions[name],
-                pyramid.support_keys[r.l2],
-            )
-            for name, r in pyramid.rollups.items()
-        }
-        units["agg"] = lambda: _write_agg_supports(
-            spark, vdir, agg_out, {n: df.schema for n, df in l2_out.items()}
-        )
-        for name, df in l2_out.items():
-            units[name] = lambda name=name, df=df: write_state(df, f"{vdir}/{name}")
-        _run_units(spark, pyramid.name, units)
-    finally:
-        for df in merge_persists:
-            try:
-                df.unpersist()
-            except Exception:  # noqa: BLE001 — session may be gone
-                pass
+    df = spark.read.schema(StructType.fromJson(art)).parquet(f"{vdir}/{art['file']}")
+    return df, art
 
 
 # ------------------------------------------------------------ reads
@@ -677,31 +492,47 @@ def read_supports(
     version_name: str,
 ) -> dict[str, DataFrame]:
     """All supports AS OF a committed mart version, each read with its
-    recorded schema (no Spark job): the plain level-1 supports from ONE
-    read of the version's ``agg`` union, the level-2 supports from
-    their per-name directories, and the facts-scale ones from ONE read
-    of the ``sup_cow`` union store resolved per bucket at that version
-    number."""
-    out = _read_agg_supports(spark, state_dir, pyramid, version_name)
-    if pyramid.bucketed:
-        out.update(
-            read_members(
-                spark, f"{state_dir}/sup_cow", "__sup",
-                {n: [*pyramid.support_keys[n], "n"] for n in pyramid.bucketed},
-                parse_name(version_name)[0],
-            )
-        )
+    recorded schema (no Spark job): the aggregate-sized ones from the
+    version's ONE file, the facts-scale ones from ONE read of the
+    ``cow`` union store resolved per bucket at that version number."""
+    df, art = _read_mart(spark, f"{state_dir}/mart/{version_name}", pyramid)
+    out = split_members(df, _MART_TAG, art["members"])
+    cow = read_members(
+        spark, f"{state_dir}/cow", _COW_TAG, parse_name(version_name)[0]
+    )
+    out.update({n: cow[n] for n in pyramid.bucketed})
     return {name: out[name] for name in pyramid.support_names}
 
 
 # ------------------------------------------------------------ epoch
 
 
-def _bucket_stores(habitat: MartHabitat, state_dir: str) -> list[str]:
-    """Every COW bucket store an epoch advances (vacuumed with the
-    mart's versions)."""
-    stores = [f"{state_dir}/{st.name}" for st in habitat.stores]
-    return stores + ([f"{state_dir}/sup_cow"] if habitat.pyramid.bucketed else [])
+def _check_touched(
+    habitat: MartHabitat,
+    parts: Mapping[str, DataFrame],
+    deltas: Mapping[str, DataFrame],
+    rewritten: list[int],
+    n_buckets: int,
+) -> None:
+    """``versions.VALIDATE_TOUCHED``: every member's own buckets — a
+    fact member's changelog images, a support's delta rows — must lie
+    inside the union store's rewritten set. A superset is
+    value-identical (the extra buckets' rows of every member pass
+    through unchanged); a subset would serve stale rows."""
+    col = _cow_bucket_col(habitat.pyramid)
+    own = {
+        st.name: versions.image_buckets(parts[st.src], col, n_buckets)
+        for st in habitat.stores
+    }
+    for name in habitat.pyramid.bucketed:
+        b = bucket(F.col(col), n_buckets).alias("b")
+        own[name] = [r[0] for r in deltas[name].select(b).distinct().collect()]
+    for name, bs in own.items():
+        if not set(bs) <= set(rewritten):
+            raise ValueError(
+                f"union store rewrites buckets {rewritten}, not a superset "
+                f"of member {name}'s {sorted(bs)}"
+            )
 
 
 def _epoch_step(
@@ -717,13 +548,24 @@ def _epoch_step(
     """Fold one changelog epoch into the COW-stored mart state as
     version ``target`` — the :func:`.versions.advance` step of both the
     STREAMING habitat (each drained micro-batch) and the one-shot
-    BATCH habitat (:func:`maintain_batch`). All bucket discovery runs
-    as ONE driver job (:func:`discover_touched`)."""
-    mart = habitat.pyramid.name
+    BATCH habitat (:func:`maintain_batch`) — in TWO writes: the
+    ``cow`` union store's touched buckets, then the mart file. All
+    bucket discovery runs as ONE driver job (:func:`discover_touched`);
+    the union store's previous version is read ONCE, over the union of
+    the buckets its members need, and persisted for the epoch: the
+    fact members' merges (:func:`.versions.apply_images`), both sides
+    of the bilinear rescans and the support merge all branch off it.
+    Every merge plan is built on this thread without a Spark action;
+    the caller's :func:`.versions.advance` commits both writes
+    atomically with the mart-root ``_SUCCESS`` once this returns."""
+    pyramid = habitat.pyramid
     if prev is None:
         raise RuntimeError(
-            f"{mart}-mart maintenance requires a seeded v0 (seed_state)"
+            f"{pyramid.name}-mart maintenance requires a seeded v0 (seed_state)"
         )
+    keys = pyramid.support_keys
+    cow_dir = f"{state_dir}/cow"
+    bucket_col = _cow_bucket_col(pyramid)
     batch = batch.persist()
     try:
         parts = {
@@ -731,63 +573,105 @@ def _epoch_step(
             for src in habitat.sources
         }
         (touched,) = _run_units(
-            spark, mart,
+            spark, pyramid.name,
             {"discover": lambda: discover_touched(batch, habitat, n_buckets)},
         )
-
-        # advance the fact COW stores (one partitioned write each; the
-        # exact touched sets were discovered above). The stores write
-        # disjoint paths from disjoint changelog arms — concurrent
-        # driver jobs (guide §2.6), joined before any rescan reads the
-        # just-written versions.
-        _run_units(
-            spark, mart,
-            {
-                st.name: lambda st=st: cow_apply_images(
-                    spark, f"{state_dir}/{st.name}", parts[st.src],
-                    st.bucket_col, list(st.key_cols), n_buckets,
-                    prev.ver, target.ver, target.epoch,
-                    touched=touched[st.src],
-                )
-                for st in habitat.stores
-            },
+        arms = {
+            *(st.src for st in habitat.stores),
+            *(r.prune_src for r in habitat.rescans),
+            *(a for ts in habitat.sup_touch.values() for a in ts),
+        }
+        rewritten = sorted({b for a in arms for b in touched[a]})
+        art = read_schema(spark, cow_dir)
+        require_members(
+            art, [*(st.name for st in habitat.stores), *pyramid.bucketed], cow_dir
         )
 
-        # pruned bilinear rescan sources — partition-pruned bucket
-        # reads of the stores at the declared version
-        rescans: dict[str, DataFrame] = {}
-        for r in habitat.rescans:
-            df = read_buckets(
-                spark, f"{state_dir}/{r.store}",
-                target.ver if r.at == "new" else prev.ver,
-                touched[r.prune_src],
-            )
-            rescans[r.alias] = df.drop(*r.drop) if r.drop else df
+        # every persist of the epoch (the store read, the delta
+        # computation's, the merges') is released once both writes ran
+        with engine_cache_scope():
+            cur = owned_persist(read_buckets(spark, cow_dir, prev.ver, rewritten))
+            old = split_members(cur, _COW_TAG, art["members"])
+            new = {
+                st.name: apply_images(
+                    old[st.name], parts[st.src], list(st.key_cols)
+                ).select(*art["members"][st.name])
+                for st in habitat.stores
+            }
+            rescans: dict[str, DataFrame] = {}
+            for r in habitat.rescans:
+                df = (new if r.at == "new" else old)[r.store].filter(
+                    bucket(F.col(bucket_col), n_buckets).isin(touched[r.prune_src])
+                )
+                rescans[r.alias] = df.drop(*r.drop) if r.drop else df
 
-        # the protein-keyed static dims join their source's delta on
-        # protein, so only the touched buckets can contribute — ONE
-        # pruned read of the seed-time dims union store (the union of
-        # the pruned dims' touched sets is a superset of each one's)
-        dim_use = {d.name: dims[d.name] for d in habitat.dims if d.prune_src is None}
-        pruned = [d for d in habitat.dims if d.prune_src is not None]
-        if pruned:
-            dim_use.update(
-                read_members(
-                    spark, f"{state_dir}/dims", "__dim",
-                    {d.name: dims[d.name].columns for d in pruned}, 0,
+            # the protein-keyed static dims join their source's delta on
+            # protein, so only the touched buckets can contribute — ONE
+            # pruned read of the seed-time dims union store (the union
+            # of the pruned dims' touched sets is a superset of each one's)
+            dim_use = {
+                d.name: dims[d.name] for d in habitat.dims if d.prune_src is None
+            }
+            pruned = [d for d in habitat.dims if d.prune_src is not None]
+            if pruned:
+                got = read_members(
+                    spark, f"{state_dir}/dims", "__dim", 0,
                     sorted({b for d in pruned for b in touched[d.prune_src]}),
                 )
-            )
+                dim_use.update({d.name: got[d.name] for d in pruned})
 
-        # the delta computation's owned persists are epoch-scoped: the
-        # scope releases them once every support consumed them
-        with engine_cache_scope():
             deltas = habitat.deltas(parts, rescans, dim_use)
-            # an exception from any pooled write propagates here,
-            # failing the epoch before its commit marker is written
-            _advance_supports(
-                spark, state_dir, deltas, prev, target,
-                habitat, dim_use, n_buckets, touched=touched,
+            if versions.VALIDATE_TOUCHED:
+                _check_touched(habitat, parts, deltas, rewritten, n_buckets)
+            roll = {n: list(r.trans_keys) for n, r in pyramid.rollups.items()}
+            sup_rows, trans = count_merge_plan(
+                cur, {n: deltas[n] for n in pyramid.bucketed}, keys, _COW_TAG, roll
+            )
+            tagged = [df.select(F.lit(n).alias(_COW_TAG), "*") for n, df in new.items()]
+            cow_rows = _union_as(StructType.fromJson(art), [*tagged, sup_rows])
+
+            # the aggregate-sized supports: one keyed merge of the plain
+            # level-1 members (emitting the transitions of those with a
+            # rollup), then one of the level-2 members, whose whole
+            # delta is the transitions (through the rollup's transform)
+            mart_dir = f"{state_dir}/mart"
+            mart_cur, mart_art = _read_mart(spark, prev.path(mart_dir), pyramid)
+            plain = [n for n in mart_art["members"] if n not in pyramid.level2]
+            plain_rows, plain_trans = count_merge_plan(
+                mart_cur, {n: deltas[n] for n in plain}, keys, _MART_TAG, roll
+            )
+            trans.update(plain_trans)
+            l2_rows, _ = count_merge_plan(
+                mart_cur,
+                {
+                    r.l2: r.transform(trans[n], dim_use) if r.transform else trans[n]
+                    for n, r in pyramid.rollups.items()
+                },
+                keys, _MART_TAG,
+            )
+            mart_rows = _union_as(StructType.fromJson(mart_art), [plain_rows, l2_rows])
+
+            # the union-store write runs first and materializes every
+            # relation both writes share (the store read, the delta
+            # persists, the support merge), so the mart-file write only
+            # reads them back: an exception in either fails the epoch
+            # before its commit marker is written
+            _run_units(
+                spark, pyramid.name,
+                {
+                    "cow": lambda: write_buckets(
+                        spark, cow_dir, target.name, cow_rows, bucket_col,
+                        n_buckets, rewritten,
+                    )
+                },
+            )
+            _run_units(
+                spark, pyramid.name,
+                {
+                    "mart": lambda: _write_mart(
+                        spark, target.path(mart_dir), mart_rows, mart_art["members"]
+                    )
+                },
             )
     finally:
         batch.unpersist()
@@ -818,7 +702,7 @@ def maintain_stream(
 
     latest = drain(
         spark, changes, f"{state_dir}/mart", state_dir + "_chk", step,
-        keep_last, _bucket_stores(habitat, state_dir),
+        keep_last, [f"{state_dir}/cow"],
     )
     return habitat.render(
         read_supports(spark, habitat.pyramid, state_dir, latest.name),
@@ -853,7 +737,7 @@ def maintain_batch(
         lambda prev, target: _epoch_step(
             spark, habitat, state_dir, batch, prev, target, dims, n_buckets
         ),
-        keep_last, _bucket_stores(habitat, state_dir),
+        keep_last, [f"{state_dir}/cow"],
     )
     return habitat.render(
         read_supports(spark, habitat.pyramid, state_dir, latest.name),

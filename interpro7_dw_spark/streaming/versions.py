@@ -16,9 +16,11 @@ A version is COMMITTED once its root ``_SUCCESS`` exists, and readers
 (:func:`list_versions`, so every parent lookup and time-travel read)
 see committed versions only: a crashed half-write is never served.
 :func:`advance` writes the marker LAST, after the step's every write
-returned, so a version spanning several directories (a mart's
-supports) commits atomically; a single parquet write already carries
-Spark's own ``_SUCCESS`` and re-creating it is a no-op.
+returned, so a version spanning several writes (a mart's supports and
+its union store) commits atomically: a write into the version root
+itself leaves no ``_SUCCESS`` of its own (:func:`write_state` with
+``commit=False``). A version that is ONE parquet write already carries
+Spark's own ``_SUCCESS``, and re-creating it is a no-op.
 
 Exactly-once per epoch is earned, not assumed: ``foreachBatch`` is
 at-least-once, so a micro-batch whose merge committed but whose
@@ -47,7 +49,8 @@ Every write (the seed's and each epoch's) shuffles its rows by bucket
 first, so a version carries ONE file per non-empty bucket, in ONE
 ``partitionBy("__b")`` action (:func:`write_buckets`): the job count is
 constant in the number of touched buckets and the version's
-``_SUCCESS`` commits every touched bucket at once. Each file is zstd
+``_SUCCESS``, written after its last bucket directory, commits every
+touched bucket at once. Each file is zstd
 parquet with its rows sorted by its columns in schema order
 (:func:`write_state`, the writer of every versioned-state file, mart
 versions included), the shape of the reference's sorted, compressed
@@ -70,20 +73,22 @@ infers a schema (which costs a Spark job per read), an emptied bucket
 reads as typed-empty, and a missing store, artifact or resolved
 directory raises instead of reading as empty.
 
-Union stores. Small relations that share a bucket column and an
-access pattern live in ONE store, so their per-file metadata is paid
-once per bucket instead of once per relation and bucket: the rows of
-each member are tagged by a string column (:func:`tagged_union` pads
-every member to the superset schema with typed NULLs), the store's
-artifact lists its members, and :func:`read_buckets` reads the store
-once. The tag column leads the schema, so each member's rows are
-contiguous in every file. A count store is merged as ONE relation
-keyed by the tag plus every member's key columns (the NULL padding
-matches null-safely); :func:`read_members` splits a read per member
-instead. A reader names exactly the listed members
-(:func:`require_members`): a name outside the list raises instead of
-reading as empty, and a rewrite of a bucket carries every member's
-rows.
+Union stores. Relations that share a bucket column and an access
+pattern live in ONE store, so their per-file metadata is paid once per
+bucket instead of once per relation and bucket: the rows of each
+member are tagged by a string column (:func:`tagged_union` pads every
+member to the superset schema with typed NULLs), and the store's
+artifact lists each member with its own columns. The tag column leads
+the schema, so each member's rows are contiguous in every file. A
+maintainer reads the touched buckets ONCE for every member and splits
+the read by tag (:func:`split_members`; :func:`read_members` does both
+for a reader); a count member merges keyed by the tag plus every
+count member's key columns (the NULL padding matches null-safely), a
+fact member by :func:`apply_images`, and every member's merged rows go
+back in ONE :func:`write_buckets`. A maintainer names exactly the
+listed members (:func:`require_members`), so a rewrite of a bucket
+carries every member's rows; a reader asking for a name outside the
+list gets a KeyError instead of an empty relation.
 """
 
 from __future__ import annotations
@@ -317,11 +322,11 @@ def seed_buckets(
     df: DataFrame,
     bucket_col: str,
     n_buckets: int,
-    members: Sequence[str] | None = None,
+    members: Mapping[str, Sequence[str]] | None = None,
 ) -> None:
     """Write ``df`` as the store's seed version (:func:`write_buckets`:
     one file per non-empty bucket) and its ``_schema.json``, listing
-    ``members`` for a union store."""
+    ``members`` (each with its own columns) for a union store."""
     write_buckets(df.sparkSession, store_dir, SEED, df, bucket_col, n_buckets, [])
     write_schema(df.sparkSession, store_dir, df.schema, members)
 
@@ -403,23 +408,30 @@ def read_buckets(
     return spark.read.schema(schema).parquet(*paths)
 
 
+def split_members(
+    df: DataFrame, tag: str, members: Mapping[str, Sequence[str]]
+) -> dict[str, DataFrame]:
+    """Each member of the union relation ``df`` (rows tagged by
+    ``tag``) projected to its own columns, as an artifact's
+    ``members`` records them: lazy filters on the tag, no Spark job."""
+    return {
+        name: df.filter(F.col(tag) == name).select(*cols)
+        for name, cols in members.items()
+    }
+
+
 def read_members(
     spark: SparkSession,
     store_dir: str,
     tag: str,
-    cols: Mapping[str, Sequence[str]],
     at_version: int,
     buckets: list[int] | None = None,
 ) -> dict[str, DataFrame]:
-    """Every member of the union store ``store_dir`` (rows tagged by
-    ``tag``), projected to its own columns ``cols[name]``: ONE
-    :func:`read_buckets`, split per member by a filter on the tag.
-    ``cols`` must name exactly the members the store's artifact
-    lists."""
-    df = read_buckets(spark, store_dir, at_version, buckets, members=cols)
-    return {
-        name: df.filter(F.col(tag) == name).select(*c) for name, c in cols.items()
-    }
+    """Every member the union store ``store_dir`` lists (rows tagged by
+    ``tag``), projected to its recorded columns: ONE
+    :func:`read_buckets`, split by :func:`split_members`."""
+    df = read_buckets(spark, store_dir, at_version, buckets)
+    return split_members(df, tag, read_schema(spark, store_dir)["members"])
 
 
 def write_buckets(
@@ -434,8 +446,8 @@ def write_buckets(
     """Write the merged rows of the ``touched`` buckets as store
     version ``name`` in ONE ``partitionBy`` action
     (:func:`write_state`), plus an explicit empty partition directory
-    for each touched bucket left without rows. Returns the version
-    directory."""
+    for each touched bucket left without rows, then commit it. Returns
+    the version directory."""
     ver_dir = f"{store_dir}/{name}"
     # repartition by bucket before the partitioned write: without it
     # every map task writes its own file into every bucket dir it
@@ -446,29 +458,50 @@ def write_buckets(
     # non-empty bucket — the layout every pruned read wants. An
     # epoch's shuffle moves only touched-bucket rows, never |store|.
     rows = rows.withColumn("__b", bucket(F.col(bucket_col), n_buckets))
-    write_state(rows.repartition(n_buckets, F.col("__b")), ver_dir, "__b")
+    write_state(
+        rows.repartition(n_buckets, F.col("__b")), ver_dir, "__b", commit=False
+    )
     fs, _root, jpath_cls = _fs(spark, store_dir)
     for b in touched:
         fs.mkdirs(jpath_cls(f"{ver_dir}/__b={b}"))
+    commit(spark, ver_dir)
     return ver_dir
 
 
 STATE_CODEC = "zstd"  # of every versioned-state file
 
 
-def write_state(df: DataFrame, path: str, partition_col: str | None = None) -> None:
+def write_state(
+    df: DataFrame,
+    path: str,
+    partition_col: str | None = None,
+    commit: bool = True,
+) -> None:
     """Overwrite ``path`` with ``df`` as :data:`STATE_CODEC` parquet,
     each task's rows sorted by ``partition_col`` (the ``partitionBy``
     column, if any), then by every other column in schema order. A
     partitioned write sorts by its partition column anyway; a sort led
     by it extends that sort instead of being replaced by it, so the
-    ordering costs no extra shuffle or job."""
+    ordering costs no extra shuffle or job. With ``commit=False`` the
+    write leaves no ``_SUCCESS`` in ``path``: it is one piece of a
+    version its caller commits (:func:`commit`) after the last one."""
     lead = [partition_col] if partition_col else []
     rest = [c for c in df.columns if c != partition_col]
     w = df.sortWithinPartitions(*lead, *rest).write.mode("overwrite")
     if partition_col:
         w = w.partitionBy(partition_col)
+    if not commit:
+        w = w.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
     w.option("compression", STATE_CODEC).parquet(path)
+
+
+def data_files(spark: SparkSession, path: str) -> list[str]:
+    """Names of the data files directly under ``path`` (filesystem
+    metadata only): everything but the ``_``- and ``.``-prefixed
+    markers and checksums, which Spark's readers skip too."""
+    fs, _root, jpath_cls = _fs(spark, path)
+    names = [st.getPath().getName() for st in fs.listStatus(jpath_cls(path))]
+    return sorted(n for n in names if not n.startswith(("_", ".")))
 
 
 def vacuum_buckets(
@@ -511,10 +544,61 @@ def vacuum_buckets(
 # serve stale rows for the missing buckets (their changelog rows merge
 # into a version whose bucket partitions resolution never reads for
 # them), a superset would pin untouched buckets to the new version.
-# The habitat's count merges check that their touched list is a
-# superset of the delta's buckets. Off by default (the check costs one
-# extra job per epoch); tests and debugging sessions flip it on.
+# The mart habitat's union-store epoch checks that the buckets it
+# rewrites are a superset of every member's own (a superset is
+# value-identical there: every member's rows are rewritten anyway).
+# Off by default (the check costs extra jobs per epoch); tests and
+# debugging sessions flip it on.
 VALIDATE_TOUCHED = False
+
+
+def image_buckets(batch: DataFrame, bucket_col: str, n_buckets: int) -> list[int]:
+    """The buckets a both-images changelog touches (one collect): the
+    old images' of deletes and updates, the new images' of inserts and
+    updates. When ``bucket_col`` is itself a key column (a dimension
+    store keyed and bucketed by the same id), the changelog carries it
+    unprefixed and both images bucket on it directly."""
+    if f"old_{bucket_col}" in batch.columns:
+        old_b = bucket(F.col(f"old_{bucket_col}"), n_buckets)
+        new_b = bucket(F.col(f"new_{bucket_col}"), n_buckets)
+    else:
+        old_b = new_b = bucket(F.col(bucket_col), n_buckets)
+    ct = F.col("change_type")
+    return sorted(
+        r[0]
+        for r in batch.filter(ct.isin("delete", "update"))
+        .select(old_b.alias("b"))
+        .unionByName(batch.filter(ct.isin("insert", "update")).select(new_b.alias("b")))
+        .distinct()
+        .collect()
+    )
+
+
+def apply_images(cur: DataFrame, batch: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Plan the merge of ONE both-images changelog micro-batch into the
+    current rows ``cur`` of a fact relation (rows identified by
+    ``key_cols``): anti-join the changed keys out and union the
+    incoming new images, in the columns ``key_cols`` + the changelog's
+    ``new_`` columns. Rows under keys the batch never changed pass
+    through, so ``cur`` may hold more buckets than the batch touched."""
+    data_cols = [c[4:] for c in batch.columns if c.startswith("new_")]
+    fact_cols = key_cols + [c for c in data_cols if c not in key_cols]
+    incoming = batch.filter(
+        F.col("change_type").isin("insert", "update")
+    ).select(
+        *key_cols,
+        *[F.col(f"new_{c}").alias(c) for c in fact_cols if c not in key_cols],
+    )
+    # (r15 measured: an F.broadcast hint here is NEGATIVE — the
+    # per-epoch broadcast build + driver roundtrip costs more than the
+    # tiny co-keyed shuffle it removes; AQE already converts when
+    # profitable. See OPTIMIZATION_r15.)
+    changed_keys = batch.select(*[F.col(k).alias(k) for k in key_cols]).distinct()
+    on = cur[key_cols[0]].eqNullSafe(changed_keys[key_cols[0]])
+    for k in key_cols[1:]:
+        on = on & cur[k].eqNullSafe(changed_keys[k])
+    survivors = cur.join(changed_keys, on, "left_anti")
+    return survivors.select(*fact_cols).unionByName(incoming)
 
 
 def cow_apply_images(
@@ -532,75 +616,30 @@ def cow_apply_images(
     """Merge ONE both-images changelog micro-batch into a COW bucket
     store (bucket = hash(``bucket_col``) % n_buckets; rows identified
     by ``key_cols``): resolve the touched buckets' current rows at
-    ``prev_version``, anti-join the changed keys out, union the
-    incoming new images, and write every touched bucket as version
-    ``v<next_version>_e<epoch>`` (:func:`write_buckets`). Returns the
-    written version directory. The caller's :func:`advance` owns the
-    replay guard, commit and vacuum — this is the shared facts-maintenance
-    primitive of the MIN/MAX maintainer and the warehouse-mart habitat.
-    When ``bucket_col`` is itself a key column (a dimension store keyed
-    and bucketed by the same id), the changelog carries it unprefixed
-    and both images bucket on it directly. ``touched`` lets a caller
-    that already discovered the EXACT touched-bucket set (e.g. the
-    habitat's one-job combined discovery over the unified changelog)
-    skip the discovery job; it must equal what the discovery would
+    ``prev_version``, merge them by :func:`apply_images`, and write
+    every touched bucket as version ``v<next_version>_e<epoch>``
+    (:func:`write_buckets`). Returns the written version directory.
+    The caller's :func:`advance` owns the replay guard, commit and
+    vacuum. ``touched`` lets a caller that already discovered the
+    EXACT touched-bucket set skip the discovery job
+    (:func:`image_buckets`); it must equal what the discovery would
     compute — a superset would rewrite (and pin to this version)
     buckets the epoch never changed."""
-    if f"old_{bucket_col}" in batch.columns:
-        old_b = bucket(F.col(f"old_{bucket_col}"), n_buckets)
-        new_b = bucket(F.col(f"new_{bucket_col}"), n_buckets)
-    else:
-        old_b = new_b = bucket(F.col(bucket_col), n_buckets)
-
-    def _discover() -> list[int]:
-        return sorted(
-            r[0]
-            for r in batch.filter(
-                F.col("change_type").isin("delete", "update")
-            )
-            .select(old_b.alias("b"))
-            .unionByName(
-                batch.filter(
-                    F.col("change_type").isin("insert", "update")
-                ).select(new_b.alias("b"))
-            )
-            .distinct()
-            .collect()
-        )
-
     if touched is None:
-        touched = _discover()
+        touched = image_buckets(batch, bucket_col, n_buckets)
     else:
         touched = sorted(touched)
         if VALIDATE_TOUCHED:
-            expect = _discover()
+            expect = image_buckets(batch, bucket_col, n_buckets)
             if touched != expect:
                 raise ValueError(
                     f"cow_apply_images: caller-supplied touched buckets "
                     f"{touched} != discovered {expect} for {store_dir}"
                 )
-    data_cols = [c[4:] for c in batch.columns if c.startswith("new_")]
-    fact_cols = key_cols + [c for c in data_cols if c not in key_cols]
     cur = read_buckets(spark, store_dir, prev_version, touched)
-    incoming = batch.filter(
-        F.col("change_type").isin("insert", "update")
-    ).select(
-        *key_cols,
-        *[F.col(f"new_{c}").alias(c) for c in fact_cols if c not in key_cols],
-    )
-    # (r15 measured: an F.broadcast hint here is NEGATIVE — the
-    # per-epoch broadcast build + driver roundtrip costs more than the
-    # tiny co-keyed shuffle it removes; AQE already converts when
-    # profitable. See OPTIMIZATION_r15.)
-    changed_keys = batch.select(*[F.col(k).alias(k) for k in key_cols]).distinct()
-    on = cur[key_cols[0]].eqNullSafe(changed_keys[key_cols[0]])
-    for k in key_cols[1:]:
-        on = on & cur[k].eqNullSafe(changed_keys[k])
-    survivors = cur.join(changed_keys, on, "left_anti")
-    merged = survivors.select(*fact_cols).unionByName(incoming)
     return write_buckets(
-        spark, store_dir, version_name(next_version, epoch), merged,
-        bucket_col, n_buckets, touched,
+        spark, store_dir, version_name(next_version, epoch),
+        apply_images(cur, batch, key_cols), bucket_col, n_buckets, touched,
     )
 
 
@@ -611,18 +650,18 @@ def write_schema(
     spark: SparkSession,
     store_dir: str,
     schema: StructType,
-    members: Sequence[str] | None = None,
-    level2: Mapping[str, StructType] | None = None,
+    members: Mapping[str, Sequence[str]] | None = None,
+    file: str | None = None,
 ) -> None:
     """Persist a store's logical schema (WITHOUT its partition column)
     beside its data as ``_schema.json``, plus the ``members`` of a
-    union store and the ``level2`` schemas of the relations a mart
-    version writes beside it, by name."""
+    union store, each with its own columns, and the name of the one
+    data ``file`` a single-file version holds."""
     art = schema.jsonValue()
     if members is not None:
-        art["members"] = sorted(members)
-    if level2 is not None:
-        art["level2"] = {n: s.jsonValue() for n, s in level2.items()}
+        art["members"] = {n: list(cols) for n, cols in sorted(members.items())}
+    if file is not None:
+        art["file"] = file
     fs, _root, jpath_cls = _fs(spark, store_dir)
     out = fs.create(jpath_cls(f"{store_dir}/_schema.json"), True)
     out.write(bytearray(json.dumps(art).encode("utf-8")))
@@ -631,8 +670,8 @@ def write_schema(
 
 def read_schema(spark: SparkSession, store_dir: str) -> dict:
     """The JSON written by :func:`write_schema` (a ``StructType`` JSON,
-    plus ``members`` for a union store and ``level2`` for a mart
-    version's agg store); raises when the store has none."""
+    plus ``members`` for a union store and ``file`` for a single-file
+    version); raises when the store has none."""
     fs, _root, jpath_cls = _fs(spark, store_dir)
     p = jpath_cls(f"{store_dir}/_schema.json")
     if not fs.exists(p):

@@ -279,9 +279,9 @@ def test_mart_stream_equals_batch_rebuild(spark, tmp_path):
     standing query: protein + match changelogs interleaved in one
     discriminated stream, drained over three micro-batches against
     COW-stored protein/match state; the rendered mart equals the full
-    taxon_xrefs_mart rebuild of the final snapshot, and both COW
-    stores resolve to the final snapshots."""
-    from interpro7_dw_spark.streaming.versions import read_buckets
+    taxon_xrefs_mart rebuild of the final snapshot, and both fact
+    members of the union store resolve to the final snapshots."""
+    from interpro7_dw_spark.streaming.versions import read_members
 
     p_old = {f"P{i}": f"N{i % 6}" for i in range(24)}
     m_old = {j: (f"P{j % 24}", f"SIG{j % 9}", f"DB{(j % 9) % 3}") for j in range(70)}
@@ -324,7 +324,7 @@ def test_mart_stream_equals_batch_rebuild(spark, tmp_path):
     )
     assert _mart_rows(out) == _mart_rows(_rebuild(spark, p_new, m_new))
 
-    # the COW stores resolve to the final snapshots
+    # the fact members resolve to the final snapshots
     import os
 
     latest = max(
@@ -332,17 +332,13 @@ def test_mart_stream_equals_batch_rebuild(spark, tmp_path):
         for p in os.listdir(state + "/mart")
         if p.startswith("v")
     )
-    got_p = sorted(
-        map(
-            tuple,
-            read_buckets(spark, state + "/proteins", latest).collect(),
-        )
-    )
+    facts = read_members(spark, state + "/cow", "__m", latest)
+    got_p = sorted(map(tuple, facts["proteins"].collect()))
     assert got_p == sorted((k, v) for k, v in p_new.items())
     got_m = sorted(
         map(
             tuple,
-            read_buckets(spark, state + "/matches", latest)
+            facts["matches"]
             .select("match_id", "protein_acc", "signature_acc", "database")
             .collect(),
         )
@@ -494,9 +490,10 @@ def test_cow_support_io_tracks_touched_buckets(spark, tmp_path):
     unpruned full merge."""
     import os
 
-    from interpro7_dw_spark.streaming.mart_habitat import cow_count_merge_plan
+    from interpro7_dw_spark.streaming.mart_habitat import count_merge_plan
     from interpro7_dw_spark.streaming.versions import (
         bucket,
+        read_buckets,
         read_members,
         seed_buckets,
         tagged_union,
@@ -516,7 +513,7 @@ def test_cow_support_io_tracks_touched_buckets(spark, tmp_path):
     )
     seed_buckets(
         sup_dir, tagged_union("__sup", {"sup": support}), "protein_acc",
-        n_buckets, members=["sup"],
+        n_buckets, members={"sup": support.columns},
     )
 
     # 8 proteins: 7 increments + 1 exit-at-zero retraction
@@ -533,13 +530,13 @@ def test_cow_support_io_tracks_touched_buckets(spark, tmp_path):
     assert len(touched) <= n_delta
 
     j0 = max_job_id(spark)
-    merged, _, merged_buckets = cow_count_merge_plan(
-        spark, sup_dir, {"sup": delta}, {"sup": keys}, "protein_acc",
-        n_buckets, 0,
+    merged, _ = count_merge_plan(
+        read_buckets(spark, sup_dir, 0, sorted(touched)), {"sup": delta},
+        {"sup": keys}, "__sup",
     )
     write_buckets(
         spark, sup_dir, version_name(1, 0), merged, "protein_acc", n_buckets,
-        merged_buckets,
+        sorted(touched),
     )
     j1 = max_job_id(spark)
     rec = stage_input_records_between(spark, j0, j1)
@@ -558,7 +555,7 @@ def test_cow_support_io_tracks_touched_buckets(spark, tmp_path):
     assert written == touched, (written, touched)
 
     # correctness: resolved COW store == unpruned full merge
-    resolved = read_members(spark, sup_dir, "__sup", {"sup": [*keys, "n"]}, 1)
+    resolved = read_members(spark, sup_dir, "__sup", 1)
     got = sorted(map(tuple, resolved["sup"].collect()))
     want = sorted(map(tuple, apply_count_delta(support, delta, keys).collect()))
     assert got == want
@@ -662,8 +659,8 @@ def test_entry_mart_stream_equals_batch_rebuild_and_replay(spark, tmp_path):
     versions_before = sorted(os.listdir(state + "/mart"))
     # the store dir also carries the _schema.json artifact (+ local-FS
     # .crc sibling) beside the version directories
-    sup_versions_before = sorted(
-        v for v in os.listdir(state + "/sup_cow")
+    cow_versions_before = sorted(
+        v for v in os.listdir(state + "/cow")
         if v.startswith("v")
     )
     # checkpoint loss: every epoch is REDELIVERED — the epoch guard
@@ -673,20 +670,19 @@ def test_entry_mart_stream_equals_batch_rebuild_and_replay(spark, tmp_path):
     assert got_replay == got
     assert sorted(os.listdir(state + "/mart")) == versions_before
     assert sorted(
-        v for v in os.listdir(state + "/sup_cow")
+        v for v in os.listdir(state + "/cow")
         if v.startswith("v")
-    ) == sup_versions_before
+    ) == cow_versions_before
 
-    # the COW support stores advanced by TOUCHED buckets only: every
-    # post-seed version of sup_etp carries fewer partitions than the
-    # bucket count (an epoch whose micro-batch produced no sup_etp
-    # delta legally writes ZERO partitions), and at least one epoch
-    # actually advanced buckets
+    # the union store advanced by TOUCHED buckets only: every post-seed
+    # version carries fewer partitions than the bucket count (an epoch
+    # whose micro-batch touched nothing legally writes ZERO
+    # partitions), and at least one epoch actually advanced buckets
     post_seed_parts = []
-    for v in sup_versions_before:
+    for v in cow_versions_before:
         if v == "v0":
             continue
-        parts = [p for p in os.listdir(f"{state}/sup_cow/{v}") if p.startswith("__b=")]
+        parts = [p for p in os.listdir(f"{state}/cow/{v}") if p.startswith("__b=")]
         assert len(parts) < 8, (v, parts)
         post_seed_parts += parts
     assert post_seed_parts
@@ -833,15 +829,15 @@ def test_taxon_mart_batch_epoch_on_cow_store(spark, tmp_path):
     )
     assert _mart_rows(out) == _mart_rows(_rebuild(spark, p_new, m_new))
 
-    # the COW support advanced by touched buckets only
+    # the union store advanced by touched buckets only
     v1 = [
-        d for d in os.listdir(f"{state}/sup_cow")
+        d for d in os.listdir(f"{state}/cow")
         if d.startswith("v1")
     ]
     assert len(v1) == 1
     parts = [
         p
-        for p in os.listdir(f"{state}/sup_cow/{v1[0]}")
+        for p in os.listdir(f"{state}/cow/{v1[0]}")
         if p.startswith("__b=")
     ]
     assert 0 < len(parts) < n_buckets, parts
@@ -1056,23 +1052,30 @@ def _committed(state):
     )
 
 
+def _mart_artifact(state):
+    with open(f"{state}/mart/v0/_schema.json") as f:
+        return json.load(f)
+
+
 def _drop_agg_name(state):
-    art = f"{state}/mart/v0/agg/_schema.json"
-    with open(art) as f:
-        doc = json.load(f)
-    doc["members"].remove("sup_sig")
-    with open(art, "w") as f:
+    doc = _mart_artifact(state)
+    del doc["members"]["sup_sig"]
+    with open(f"{state}/mart/v0/_schema.json", "w") as f:
         json.dump(doc, f)
     # the local Hadoop filesystem would reject the edit by checksum
-    os.remove(f"{state}/mart/v0/agg/._schema.json.crc")
+    os.remove(f"{state}/mart/v0/._schema.json.crc")
+
+
+def _remove_mart_file(state):
+    os.remove(f"{state}/mart/v0/{_mart_artifact(state)['file']}")
 
 
 def _empty_cow_store(state):
-    sup_dir = f"{state}/sup_cow"
-    for part in os.listdir(f"{sup_dir}/v0"):
+    cow_dir = f"{state}/cow"
+    for part in os.listdir(f"{cow_dir}/v0"):
         if part.startswith("__b="):
-            shutil.rmtree(f"{sup_dir}/v0/{part}")
-    os.remove(f"{sup_dir}/_schema.json")
+            shutil.rmtree(f"{cow_dir}/v0/{part}")
+    os.remove(f"{cow_dir}/_schema.json")
 
 
 @pytest.mark.parametrize(
@@ -1080,13 +1083,13 @@ def _empty_cow_store(state):
     [
         pytest.param(lambda s: shutil.rmtree(f"{s}/dims"), "epoch",
                      FileNotFoundError, id="dims"),
-        pytest.param(lambda s: shutil.rmtree(f"{s}/mart/v0/sup_db"),
-                     "supports", AnalysisException, id="sup_db"),
-        pytest.param(lambda s: shutil.rmtree(f"{s}/mart/v0/agg"),
+        pytest.param(_remove_mart_file, "supports", AnalysisException,
+                     id="mart_file"),
+        pytest.param(lambda s: os.remove(f"{s}/mart/v0/_schema.json"),
                      "supports", FileNotFoundError, id="agg"),
         pytest.param(_drop_agg_name, "supports", KeyError, id="agg_name"),
         pytest.param(_empty_cow_store, "supports", FileNotFoundError,
-                     id="sup_cow_schema"),
+                     id="cow_schema"),
     ],
 )
 def test_missing_state_piece_raises(
@@ -1111,26 +1114,27 @@ def test_epoch_releases_merge_persists_when_planning_fails(
     spark, taxon_v0, tmp_path, monkeypatch
 ):
     """A failure while the epoch still builds its support plans, after
-    a COW merge plan has persisted, fails the epoch without a commit
-    and releases every cached plan it took."""
+    the union-store read and a merge plan have persisted, fails the
+    epoch without a commit and releases every cached plan it took."""
     from interpro7_dw_spark.streaming import mart_habitat
 
     state = str(tmp_path / "state")
     shutil.copytree(taxon_v0, state)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
     persisted = []
-    plan = mart_habitat.cow_count_merge_plan
+    plan = mart_habitat.count_merge_plan
 
     def failing_plan(*args, **kwargs):
         plan(*args, **kwargs)
-        persisted.extend(kwargs["persist_into"])
+        persisted.append(cache.numCachedEntries() - before)
         raise RuntimeError("planning failed")
 
-    monkeypatch.setattr(mart_habitat, "cow_count_merge_plan", failing_plan)
-    cache = spark._jsparkSession.sharedState().cacheManager()
-    before = cache.numCachedEntries()
+    monkeypatch.setattr(mart_habitat, "count_merge_plan", failing_plan)
     with pytest.raises(RuntimeError, match="planning failed"):
         _taxon_epoch(spark, state)
-    assert persisted
+    # the store read and the transitions-emitting merge
+    assert persisted and persisted[0] >= 2
     assert _committed(state) == ["v0"]
     assert cache.numCachedEntries() == before
 
@@ -1279,6 +1283,9 @@ def test_habitat_definition_is_consistent(spark, habitat, seed_inputs):
 
     old, dims = seed_inputs(spark)
     assert set(old) == tags
+    # the fact members share the union store, so they bucket by its column
+    for st in habitat.stores:
+        assert next(iter(pyramid.bucketed.values())) in old[st.src].columns, st
     assert set(dims) == {d.name for d in habitat.dims}
     with engine_cache_scope():
         sup = habitat.seed(old, dims)
@@ -1288,13 +1295,13 @@ def test_habitat_definition_is_consistent(spark, habitat, seed_inputs):
 
 
 def test_entry_union_support_store_superset_rewrite(spark, tmp_path):
-    """The entry mart's facts-scale supports share ONE union store,
-    rewritten in ONE write over the union of every member's touched
-    set. A protein-arm change (a taxon move) touches a bucket no
-    assignment change touches: sup_etp's delta needs that bucket and
-    sup_ep's does not, so sup_ep's rows there are rewritten unchanged
-    (identical at v0 and v1) and the rendered mart equals the full
-    rebuild."""
+    """The entry mart's fact relations and facts-scale supports share
+    ONE union store, rewritten in ONE write over the union of every
+    arm's touched set. A protein-arm change (a taxon move) touches a
+    bucket no assignment change touches: sup_etp's delta and the
+    proteins member need that bucket, sup_ep and the assignments member
+    do not, so their rows there are rewritten unchanged (identical at
+    v0 and v1) and the rendered mart equals the full rebuild."""
     from interpro7_dw_spark.domain.marts import entry_xrefs_mart
     from interpro7_dw_spark.streaming.versions import bucket, read_members
 
@@ -1357,20 +1364,16 @@ def test_entry_union_support_store_superset_rewrite(spark, tmp_path):
             _pp(spark), _ps(spark), protein_ecs=pec,
         )
     )
-    assert os.path.isdir(f"{state}/sup_cow/v1_e0/__b={b_of[moved]}")
-    cols = {
-        n: [*ENTRY_HABITAT.pyramid.support_keys[n], "n"]
-        for n in ENTRY_HABITAT.pyramid.bucketed
-    }
+    assert os.path.isdir(f"{state}/cow/v1_e0/__b={b_of[moved]}")
 
-    def sup_ep_in_bucket(ver):
-        df = read_members(
-            spark, f"{state}/sup_cow", "__sup", cols, ver, [b_of[moved]]
-        )["sup_ep"]
-        return sorted(map(tuple, df.collect()))
+    def in_bucket(member, ver):
+        df = read_members(spark, f"{state}/cow", "__m", ver, [b_of[moved]])
+        return sorted(map(tuple, df[member].collect()))
 
-    assert sup_ep_in_bucket(0)
-    assert sup_ep_in_bucket(1) == sup_ep_in_bucket(0)
+    for member in ("sup_ep", "assignments"):
+        assert in_bucket(member, 0), member
+        assert in_bucket(member, 1) == in_bucket(member, 0), member
+    assert in_bucket("proteins", 1) != in_bucket("proteins", 0)
 
 
 def test_clan_mart_habitat_stream_equals_batch_equals_rebuild(spark, tmp_path):
@@ -1420,16 +1423,17 @@ def test_clan_mart_habitat_stream_equals_batch_equals_rebuild(spark, tmp_path):
     )
     got_b = {r.clan_acc: tuple(r)[1:] for r in out_b.collect()}
     assert got_b == rebuild(m_new)
-    # COW support advanced by touched buckets only
-    v1 = [d for d in os.listdir(f"{state_b}/sup_cow") if d.startswith("v1")]
+    # the union store advanced by touched buckets only
+    v1 = [d for d in os.listdir(f"{state_b}/cow") if d.startswith("v1")]
     assert len(v1) == 1
     parts = [
-        p for p in os.listdir(f"{state_b}/sup_cow/{v1[0]}")
+        p for p in os.listdir(f"{state_b}/cow/{v1[0]}")
         if p.startswith("__b=")
     ]
     assert 0 < len(parts) < n_buckets, parts
-    # no fact store exists (the clan mart is linear — nothing rescans)
-    assert not os.path.exists(f"{state_b}/matches")
+    # no fact member exists (the clan mart is linear — nothing rescans)
+    with open(f"{state_b}/cow/_schema.json") as f:
+        assert list(json.load(f)["members"]) == ["sup_c_prot"]
 
     # (c) stream over 3 micro-batches + full replay
     state_s = str(tmp_path / "clan_stream")
@@ -1471,8 +1475,9 @@ def test_proteome_mart_habitat_stream_and_batch(spark, tmp_path):
     """The proteome mart's COW habitat: BOTH changelogs (assignment +
     matches, the bilinear pair) interleaved in one discriminated
     stream over 3 micro-batches == one batch-on-COW epoch == the full
-    proteome_xrefs_mart rebuild; both fact stores and the facts-scale
-    sup_p_prot_db store advance by touched buckets only."""
+    proteome_xrefs_mart rebuild; the union store of both fact members
+    and the facts-scale sup_p_prot_db advances by touched buckets
+    only."""
     import os
 
     from interpro7_dw_spark.domain.marts import proteome_xrefs_mart
@@ -1520,14 +1525,13 @@ def test_proteome_mart_habitat_stream_and_batch(spark, tmp_path):
     )
     got_b = {r.proteome_id: tuple(r)[1:] for r in out_b.collect()}
     assert got_b == rebuild()
-    for store in ("assignments", "matches", "sup_cow"):
-        v1 = [d for d in os.listdir(f"{state_b}/{store}") if d.startswith("v1")]
-        assert len(v1) == 1, store
-        parts = [
-            p for p in os.listdir(f"{state_b}/{store}/{v1[0]}")
-            if p.startswith("__b=")
-        ]
-        assert 0 < len(parts) < n_buckets, (store, parts)
+    v1 = [d for d in os.listdir(f"{state_b}/cow") if d.startswith("v1")]
+    assert len(v1) == 1
+    parts = [
+        p for p in os.listdir(f"{state_b}/cow/{v1[0]}")
+        if p.startswith("__b=")
+    ]
+    assert 0 < len(parts) < n_buckets, parts
 
     state_s = str(tmp_path / "prtm_stream")
     root = str(tmp_path / "prtm_changes")
@@ -1610,10 +1614,10 @@ def test_structure_mart_habitat_stream_and_batch(spark, tmp_path):
     )
     got_b = {r.pdb_id: tuple(r)[1:] for r in out_b.collect()}
     assert got_b == rebuild()
-    v1 = [d for d in os.listdir(f"{state_b}/sup_cow") if d.startswith("v1")]
+    v1 = [d for d in os.listdir(f"{state_b}/cow") if d.startswith("v1")]
     assert len(v1) == 1
     parts = [
-        p for p in os.listdir(f"{state_b}/sup_cow/{v1[0]}")
+        p for p in os.listdir(f"{state_b}/cow/{v1[0]}")
         if p.startswith("__b=")
     ]
     assert 0 < len(parts) < n_buckets, parts
@@ -1640,17 +1644,17 @@ def test_structure_mart_habitat_stream_and_batch(spark, tmp_path):
 def test_cow_apply_count_delta_superset_touched_equals_discovered(
     spark, tmp_path
 ):
-    """r15 optimization: the habitat derives each bucketed support's
+    """r15 optimization: the habitat derives the union store's
     touched-bucket list from the one-job changelog discovery instead of
     collecting it from the (expensive) support-delta plan. The derived
     list is a SUPERSET of the delta's actual buckets — this pins the
     extra buckets' identical rows to the new version, which must be
-    value-identical to the collect-discovered merge, including the
-    extra buckets' pass-through rows and an extra bucket with no
-    support rows at all."""
+    value-identical to the merge over the delta's exact buckets,
+    including the extra buckets' pass-through rows and an extra bucket
+    with no support rows at all."""
     import os
 
-    from interpro7_dw_spark.streaming.mart_habitat import cow_count_merge_plan
+    from interpro7_dw_spark.streaming.mart_habitat import count_merge_plan
     from interpro7_dw_spark.streaming.versions import (
         bucket,
         read_buckets,
@@ -1684,18 +1688,18 @@ def test_cow_apply_count_delta_superset_touched_equals_discovered(
     for d in (want_dir, got_dir):
         seed_buckets(
             d, tagged_union("__sup", {"sup": support}), "protein_acc",
-            n_buckets, members=["sup"],
+            n_buckets, members={"sup": support.columns},
         )
 
-    # collect-discovery path (touched=None) vs caller-derived superset
-    for d, touched in ((want_dir, None), (got_dir, superset)):
-        merged, _, merged_buckets = cow_count_merge_plan(
-            spark, d, {"sup": delta}, {"sup": keys}, "protein_acc", n_buckets,
-            0, touched=touched,
+    # the delta's exact buckets vs a caller-derived superset
+    for d, touched in ((want_dir, exact), (got_dir, superset)):
+        merged, _ = count_merge_plan(
+            read_buckets(spark, d, 0, touched), {"sup": delta}, {"sup": keys},
+            "__sup",
         )
         write_buckets(
             spark, d, version_name(1, 0), merged, "protein_acc", n_buckets,
-            merged_buckets,
+            touched,
         )
 
     def resolved(d):
@@ -1723,11 +1727,14 @@ def test_union_count_merge_scans_store_once(spark, tmp_path):
     many members it has. Rows and transitions equal a per-member merge
     of the same touched buckets, including a member whose key column
     holds NULLs and a member whose touched rows all exit."""
+    from interpro7_dw_spark.caching import engine_cache_scope
     from interpro7_dw_spark.domain.mart_ivm import (
         apply_count_delta_with_transitions,
     )
-    from interpro7_dw_spark.streaming.mart_habitat import cow_count_merge_plan
+    from interpro7_dw_spark.streaming.mart_habitat import count_merge_plan
     from interpro7_dw_spark.streaming.versions import (
+        bucket,
+        read_buckets,
         read_members,
         seed_buckets,
         tagged_union,
@@ -1775,14 +1782,20 @@ def test_union_count_merge_scans_store_once(spark, tmp_path):
     sup_dir = str(tmp_path / "sup_cow")
     seed_buckets(
         sup_dir, tagged_union("__sup", sup), "protein_acc", n_buckets,
-        members=list(sup),
+        members={n: df.columns for n, df in sup.items()},
+    )
+    touched = sorted(
+        {
+            r[0]
+            for d in deltas.values()
+            for r in d.select(bucket(F.col("protein_acc"), n_buckets)).collect()
+        }
     )
 
-    persists: list = []
-    try:
-        rows, trans, touched = cow_count_merge_plan(
-            spark, sup_dir, deltas, keys, "protein_acc", n_buckets, 0,
-            roll_keys=roll_keys, persist_into=persists,
+    with engine_cache_scope():
+        rows, trans = count_merge_plan(
+            read_buckets(spark, sup_dir, 0, touched), deltas, keys, "__sup",
+            roll_keys=roll_keys,
         )
         # the physical plan before execution: once run, AQE prints both
         # its final and its initial plan, each scan twice
@@ -1790,21 +1803,14 @@ def test_union_count_merge_scans_store_once(spark, tmp_path):
         assert plan.count("FileScan parquet") == 1, plan
         got_rows = rows.collect()
         got_trans = {n: t.collect() for n, t in trans.items()}
-    finally:
-        for df in persists:
-            df.unpersist()
     assert sorted(trans) == sorted(roll_keys)
 
-    cur = read_members(
-        spark, sup_dir, "__sup", {n: [*k, "n"] for n, k in keys.items()}, 0,
-        touched,
-    )
+    cur = read_members(spark, sup_dir, "__sup", 0, touched)
     for name, k in keys.items():
-        want_rows, want_trans = apply_count_delta_with_transitions(
-            cur[name], deltas[name], k, roll_keys.get(name, k),
-            persist_into=persists,
-        )
-        try:
+        with engine_cache_scope():
+            want_rows, want_trans = apply_count_delta_with_transitions(
+                cur[name], deltas[name], k, roll_keys.get(name, k)
+            )
             mine = [
                 tuple(r[c] for c in [*k, "n"])
                 for r in got_rows if r["__sup"] == name
@@ -1816,9 +1822,6 @@ def test_union_count_merge_scans_store_once(spark, tmp_path):
                 assert sorted(map(tuple, got_trans[name]), key=_nulls_first) == (
                     sorted(map(tuple, want_trans.collect()), key=_nulls_first)
                 ), name
-        finally:
-            while persists:
-                persists.pop().unpersist()
     # the all-exit member leaves no rows and one exit per touched row
     assert not [r for r in got_rows if r["__sup"] == "sup_c"]
     assert sorted(tuple(r) for r in got_trans["sup_c"]) == [("1.1.1.1", -1)] * 4
@@ -1862,8 +1865,8 @@ def test_state_files_are_sorted_zstd(spark, tmp_path):
     )
 
     files = glob.glob(f"{state}/**/*.parquet", recursive=True)
-    assert any("/sup_cow/v1_e0/__b=" in f for f in files)
-    assert any("/mart/v1_e0/agg/__sup=" in f for f in files)
+    assert any("/cow/v1_e0/__b=" in f for f in files)
+    assert any("/mart/v1_e0/part-" in f for f in files)
     written = 0
     for f in files:
         meta = pq.ParquetFile(f).metadata
@@ -1880,3 +1883,240 @@ def test_state_files_are_sorted_zstd(spark, tmp_path):
     sup = read_supports(spark, CLAN_HABITAT.pyramid, state, "v1_e0")
     assert max_job_id(spark) == j0
     assert sorted(sup) == sorted(CLAN_HABITAT.pyramid.support_names)
+
+
+def _entry_release(spark):
+    """A small entry-mart release in which every protein has a taxon,
+    assignments and an EC, so every bucket holds every member of the
+    union store, and the changelog between it and the next release (a
+    taxon move, a protein delete, an assignment insert and delete).
+    Returns ``(old, dims, deltas, rebuild)``: the seed snapshots, the
+    dims, the changelogs keyed by arm, and the full rebuild of the
+    new release (``old=True``: of the old one)."""
+    from interpro7_dw_spark.domain.marts import entry_xrefs_mart
+
+    accs = [f"P{i}" for i in range(24)]
+
+    def pe_df(d, with_id=True):
+        df = spark.createDataFrame(
+            sorted((k, *v) for k, v in d.items()),
+            "pe_id long, protein_acc string, entry_acc string",
+        )
+        return df if with_id else df.drop("pe_id")
+
+    p_old = {a: f"N{i % 6}" for i, a in enumerate(accs)}
+    p_new = dict(p_old)
+    p_new["P1"] = "N5"
+    p_new.pop("P2")
+    pe_old = {j: (accs[j % 24], f"IPR{j % 4}") for j in range(48)}
+    pe_new = dict(pe_old)
+    pe_new[100] = ("P7", "IPR2")
+    pe_new.pop(5)
+    dims = {
+        "pp": _pp(spark),
+        "ps": _ps(spark),
+        "pec": spark.createDataFrame(
+            [(a, f"1.2.3.{i % 2}") for i, a in enumerate(accs)],
+            "protein_acc string, ec string",
+        ),
+    }
+    deltas = {
+        "assign": snapshot_delta_images(
+            pe_df(pe_old), pe_df(pe_new), ["pe_id"], ["protein_acc", "entry_acc"]
+        ),
+        "protein": snapshot_delta_images(
+            _p_df(spark, p_old), _p_df(spark, p_new), ["protein_acc"], ["tax_id"]
+        ),
+    }
+
+    def rebuild(old=False):
+        pe, p = (pe_old, p_old) if old else (pe_new, p_new)
+        return {
+            r.entry_acc: tuple(r)[1:]
+            for r in entry_xrefs_mart(
+                pe_df(pe, with_id=False), _p_df(spark, p), dims["pp"],
+                dims["ps"], protein_ecs=dims["pec"],
+            ).collect()
+        }
+
+    old = {"assign": pe_df(pe_old), "protein": _p_df(spark, p_old)}
+    return old, dims, deltas, rebuild
+
+
+def _entry_rows(df):
+    return {r.entry_acc: tuple(r)[1:] for r in df.collect()}
+
+
+def _executed_file_scans(spark, first_execution, path):
+    """The file scans of ``path`` that ran in the SQL executions after
+    ``first_execution``: one id per scan node that read files, however
+    many plans share it through a cache."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    scans = set()
+    for i in range(execs.size()):
+        eid = execs.apply(i).executionId()
+        if eid <= first_execution:
+            continue
+        values = {}
+        it = store.executionMetrics(eid).iterator()
+        while it.hasNext():
+            kv = it.next()
+            values[int(kv._1())] = str(kv._2())
+        nodes = store.planGraph(eid).allNodes()
+        for k in range(nodes.size()):
+            node = nodes.apply(k)
+            if not node.name().startswith("Scan parquet") or path not in node.desc():
+                continue
+            metrics = node.metrics()
+            for m in range(metrics.size()):
+                acc = int(metrics.apply(m).accumulatorId())
+                if metrics.apply(m).name() == "number of files read" and (
+                    int(values.get(acc, "0") or 0) > 0
+                ):
+                    scans.add(acc)
+    return scans
+
+
+def _last_execution(spark):
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return max(
+        [int(execs.apply(i).executionId()) for i in range(execs.size())],
+        default=-1,
+    )
+
+
+def test_entry_epoch_writes_one_store_and_one_mart_file(spark, tmp_path, monkeypatch):
+    """The entry habitat (fact members, dims and rollups), seed plus one
+    batch epoch: the epoch writes exactly one union-store version and
+    one mart file, every rewritten bucket file carries every member's
+    rows, the executed epoch plans scan the store's previous version
+    once, and the render equals the full rebuild. With
+    VALIDATE_TOUCHED on, the union store's rewritten buckets — a
+    superset of each fact member's own — pass."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from interpro7_dw_spark.streaming import versions
+
+    monkeypatch.setattr(versions, "VALIDATE_TOUCHED", True)
+    old, dims, deltas, rebuild = _entry_release(spark)
+    state = str(tmp_path / "state")
+    seed_state(spark, ENTRY_HABITAT, state, old, dims, n_buckets=8)
+    seeded = set(glob.glob(f"{state}/**", recursive=True))
+    # scan nodes name every path they read (the default cuts it at 100)
+    length = spark.conf.get("spark.sql.maxMetadataStringLength")
+    spark.conf.set("spark.sql.maxMetadataStringLength", "100000")
+    try:
+        e0 = _last_execution(spark)
+        out = maintain_batch(spark, ENTRY_HABITAT, state, deltas, dims, n_buckets=8)
+        scans = _executed_file_scans(spark, e0, f"{state}/cow/v0/")
+    finally:
+        spark.conf.set("spark.sql.maxMetadataStringLength", length)
+    assert len(scans) == 1, scans
+    assert _entry_rows(out) == rebuild()
+
+    written = set(glob.glob(f"{state}/**", recursive=True)) - seeded
+    assert written
+    assert all(
+        p.startswith((f"{state}/cow/v1_e0", f"{state}/mart/v1_e0")) for p in written
+    ), sorted(written)
+    assert versions.data_files(spark, f"{state}/mart/v1_e0") == [
+        versions.read_schema(spark, f"{state}/mart/v1_e0")["file"]
+    ]
+    members = set(versions.read_schema(spark, f"{state}/cow")["members"])
+    assert members == {"proteins", "assignments", "sup_ep", "sup_etp", "sup_eep"}
+    bucket_files = glob.glob(f"{state}/cow/v1_e0/__b=*/*.parquet")
+    assert 0 < len(bucket_files) < 8
+    for f in bucket_files:
+        assert set(pq.read_table(f, columns=["__m"])["__m"].to_pylist()) == members, f
+
+
+def test_union_store_rejects_a_subset_of_touched_buckets(
+    spark, taxon_v0, tmp_path, monkeypatch
+):
+    """With VALIDATE_TOUCHED on, an epoch whose rewritten buckets miss
+    one a member's changelog images or support delta touch raises
+    before any write and commits nothing; the true discovered sets
+    then pass."""
+    from interpro7_dw_spark.streaming import mart_habitat, versions
+
+    state = str(tmp_path / "state")
+    shutil.copytree(taxon_v0, state)
+    monkeypatch.setattr(versions, "VALIDATE_TOUCHED", True)
+    discover = mart_habitat.discover_touched
+
+    def missing_one(batch, habitat, n_buckets):
+        found = discover(batch, habitat, n_buckets)
+        gone = max(b for bs in found.values() for b in bs)
+        return {t: [b for b in bs if b != gone] for t, bs in found.items()}
+
+    monkeypatch.setattr(mart_habitat, "discover_touched", missing_one)
+    with pytest.raises(ValueError, match="not a superset"):
+        _taxon_epoch(spark, state)
+    assert _committed(state) == ["v0"]
+    assert sorted(os.listdir(f"{state}/cow")) == ["._schema.json.crc", "_schema.json", "v0"]
+
+    monkeypatch.setattr(mart_habitat, "discover_touched", discover)
+    p_new = dict(_P_OLD)
+    p_new["P21"] = "N3"
+    p_new.pop("P2")
+    m_new = dict(_M_OLD)
+    m_new[90] = ("P21", "SIG4", "DB1")
+    assert _mart_rows(_taxon_epoch(spark, state)) == _mart_rows(
+        _rebuild(spark, p_new, m_new)
+    )
+
+
+def test_entry_stream_crash_between_the_two_writes(spark, tmp_path, monkeypatch):
+    """A crash inside the mart-file write, after the epoch's union-store
+    version is written, leaves a version no reader resolves; restarting
+    the drain on the same state and checkpoint replaces the half-written
+    version, commits every epoch and ends equal to the full rebuild."""
+    from interpro7_dw_spark.streaming import mart_habitat, versions
+
+    old, dims, deltas, rebuild = _entry_release(spark)
+    unified = unify(ENTRY_HABITAT, deltas)
+    src = str(tmp_path / "changes")
+    split = F.coalesce(F.col("pe_id") % 2, F.ascii(F.col("protein_acc")) % 2)
+    for part in range(2):
+        unified.filter(split == part).coalesce(1).write.mode("append").parquet(src)
+    state = str(tmp_path / "state")
+    seed_state(spark, ENTRY_HABITAT, state, old, dims, n_buckets=8)
+
+    def drain():
+        stream = (
+            spark.readStream.schema(unified.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        return maintain_stream(spark, ENTRY_HABITAT, stream, state, dims, n_buckets=8)
+
+    def crash(*_args, **_kwargs):
+        raise RuntimeError("crashed before the mart artifact")
+
+    monkeypatch.setattr(mart_habitat, "write_schema", crash)
+    with pytest.raises(Exception, match="crashed before the mart artifact"):
+        drain()
+    half = f"{state}/mart/v1_e0"
+    assert versions.data_files(spark, half)
+    assert not os.path.exists(f"{half}/_SUCCESS")
+    assert os.path.exists(f"{state}/cow/v1_e0/_SUCCESS")
+    assert versions.latest_committed(spark, f"{state}/mart").name == "v0"
+    assert _entry_rows(read_version(spark, ENTRY_HABITAT, state)) == rebuild(old=True)
+    with pytest.raises(KeyError):
+        read_version(spark, ENTRY_HABITAT, state, version=1)
+
+    monkeypatch.setattr(mart_habitat, "write_schema", versions.write_schema)
+    assert _entry_rows(drain()) == rebuild()
+    mart_versions = versions.list_versions(spark, f"{state}/mart")
+    assert [v.name for v in mart_versions] == ["v0", "v1_e0", "v2_e1"]
+    assert all(v.committed for v in mart_versions)
+    assert [v.name for v in versions.list_versions(spark, f"{state}/cow")] == [
+        "v0", "v1_e0", "v2_e1"
+    ]
+    # the replayed epoch replaced the half-written file, not added to it
+    assert versions.data_files(spark, half) == [
+        versions.read_schema(spark, half)["file"]
+    ]

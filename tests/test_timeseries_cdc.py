@@ -5,6 +5,7 @@ the catalog's normalized event-time unit."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from interpro7_dw_spark.operators.cdc import scd2_history
@@ -823,3 +824,55 @@ def test_ivm_join_agg_plan_prunes_fact_rescan(spark, tmp_path):
     assert "LeftSemi" in plan, plan
     got = {r.g: (r.n_rows, float(r.total)) for r in out.collect()}
     assert got == {"g1": (3, 35.0), "g2": (1, 25.0)}
+
+
+def _double_applied_delete(spark, maintainer):
+    """Fold a changelog that deletes the only row of group g1 into the
+    mart TWICE through ``maintainer``; returns the second fold."""
+    from interpro7_dw_spark.operators.cdc import (
+        ivm_apply_group_agg,
+        ivm_apply_group_minmax,
+        ivm_apply_join_agg,
+        snapshot_delta_images,
+    )
+
+    old = spark.createDataFrame(
+        [(1, "g1", 10, 4.0), (2, "g2", 20, 6.0)], "k long, g string, j long, v double"
+    )
+    new = old.filter(F.col("k") != 1)
+    delta = snapshot_delta_images(old, new, ["k"], ["g", "j", "v"])
+    n_rows = F.count(F.lit(1)).cast("long").alias("n_rows")
+    total = F.sum(F.col("v").cast("decimal(18,4)")).cast("decimal(18,4)").alias("total")
+    if maintainer == "group_agg":
+        fold = lambda mart: ivm_apply_group_agg(mart, delta, "g", "v")
+        mart = old.groupBy("g").agg(n_rows, total)
+    elif maintainer == "minmax":
+        fold = lambda mart: ivm_apply_group_minmax(mart, delta, new, "g", "v")
+        mart = old.groupBy("g").agg(
+            n_rows, F.min("v").alias("min_v"), F.max("v").alias("max_v")
+        )
+    else:
+        # facts keyed k, joined on j to a static dim j -> g
+        dim = old.select("j", "g")
+        no_dim_change = snapshot_delta_images(dim, dim, ["j"], ["g"])
+        fold = lambda mart: ivm_apply_join_agg(
+            mart, old.select("k", "j", "v"),
+            snapshot_delta_images(
+                old.select("k", "j", "v"), new.select("k", "j", "v"), ["k"], ["j", "v"]
+            ),
+            dim, no_dim_change, "j", "g", "v",
+        )
+        mart = old.groupBy("g").agg(n_rows, total)
+    once = fold(mart)
+    assert sorted(r.g for r in once.collect()) == ["g2"]
+    return fold(once)
+
+
+@pytest.mark.parametrize("maintainer", ["group_agg", "minmax", "join_agg"])
+def test_ivm_merge_double_applied_delete_raises(spark, maintainer):
+    """A delete folded twice drives its group's count below zero: the
+    group-agg, MIN/MAX and join-agg merges raise instead of silently
+    dropping the group like a legitimate exit at zero."""
+    twice = _double_applied_delete(spark, maintainer)
+    with pytest.raises(Exception, match="negative maintained count"):
+        twice.collect()

@@ -7,7 +7,7 @@ assignment table) must not be reshuffled or rewritten whole per
 epoch. Two mechanisms fix it and this audit measures both:
 
 1. **COW bucket store** (``streaming/mart_habitat.py::
-   cow_count_merge_plan`` + ``streaming/versions.py::write_buckets``):
+   count_merge_plan`` + ``streaming/versions.py::write_buckets``):
    the support lives bucketed by protein, as a member of a union
    store tagged ``__sup``; one epoch reads + rewrites only the
    delta-touched buckets. The measured per-epoch
@@ -46,9 +46,10 @@ def main() -> None:
         apply_count_delta_pruned,
     )
     from interpro7_dw_spark.session import get_spark
-    from interpro7_dw_spark.streaming.mart_habitat import cow_count_merge_plan
+    from interpro7_dw_spark.streaming.mart_habitat import count_merge_plan
     from interpro7_dw_spark.streaming.versions import (
         bucket,
+        read_buckets,
         read_members,
         seed_buckets,
         tagged_union,
@@ -80,7 +81,7 @@ def main() -> None:
     sup_dir = f"{tmp}/sup"
     seed_buckets(
         sup_dir, tagged_union("__sup", {"sup": support_df()}), "protein_acc",
-        n_buckets, members=["sup"],
+        n_buckets, members={"sup": [*keys, "n"]},
     )
 
     def emit(path: str, n_rows: int, touched, j0: int, t0: float, note: str = ""):
@@ -101,30 +102,29 @@ def main() -> None:
     ver = 0
     for n_rows in (1, 64, 1024):
         d = delta_for(n_rows)
-        touched = (
-            d.select(bucket(F.col("protein_acc"), n_buckets).alias("b"))
-            .distinct()
-            .count()
-        )
         j0, t0 = max_job_id(spark), time.time()
-        merged, _, merged_buckets = cow_count_merge_plan(
-            spark, sup_dir, {"sup": d}, {"sup": keys}, "protein_acc",
-            n_buckets, ver,
+        touched = sorted(
+            r[0]
+            for r in d.select(bucket(F.col("protein_acc"), n_buckets).alias("b"))
+            .distinct()
+            .collect()
+        )
+        merged, _ = count_merge_plan(
+            read_buckets(spark, sup_dir, ver, touched), {"sup": d},
+            {"sup": keys}, "__sup",
         )
         write_buckets(
             spark, sup_dir, version_name(ver + 1, ver + 1), merged,
-            "protein_acc", n_buckets, merged_buckets,
+            "protein_acc", n_buckets, touched,
         )
         ver += 1
-        emit("cow_touched_buckets", n_rows, touched, j0, t0)
+        emit("cow_touched_buckets", n_rows, len(touched), j0, t0)
         spark.catalog.clearCache()
 
     # plan-level baselines on the UNSTORED support (one-shot batch
     # maintainer shape): r12's unpruned full-outer merge vs the r13
     # pruned merge — same scan, delta-sized vs support-sized shuffle
-    base = read_members(
-        spark, sup_dir, "__sup", {"sup": [*keys, "n"]}, 0
-    )["sup"]
+    base = read_members(spark, sup_dir, "__sup", 0)["sup"]
     d = delta_for(64)
     j0, t0 = max_job_id(spark), time.time()
     apply_count_delta(base, d, keys).write.mode("overwrite").parquet(
@@ -187,11 +187,9 @@ def main() -> None:
         spark, TAXON_HABITAT, state, {"protein": proteins, "match": matches},
         dims, n_buckets=n_buckets,
     )
-    facts_rows = read_members(
-        spark, f"{state}/sup_cow", "__sup",
-        {"sup_prot_db": [*TAXON_HABITAT.pyramid.support_keys["sup_prot_db"], "n"]},
-        0,
-    )["sup_prot_db"].count()
+    facts_rows = read_members(spark, f"{state}/cow", "__m", 0)[
+        "sup_prot_db"
+    ].count()
     spark.catalog.clearCache()
 
     # (a) one batch epoch: an 8-protein changelog (taxon moves + one
